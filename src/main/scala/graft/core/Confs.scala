@@ -196,8 +196,8 @@ object Confs {
 
   val ClaimsRequireAtomicKey = "spark.graft.claims.requireAtomic"
 
-  /** Capability posture for the flow executor's claim markers (run-id
-    * allocation + ingestion claims), whose cross-process atomicity comes
+  /** Capability posture for the lake's claim markers (all five kinds,
+    * [[graft.core.Lake.tryClaim]]), whose cross-process atomicity comes
     * from the store's create-fails-if-exists primitive. S3-class flat
     * object stores don't provide it (create(overwrite=false) is a
     * HEAD-then-PUT, not conditional), so on those stores cross-process

@@ -659,87 +659,61 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
   }
 
   // ---------------------------------------------------------------------
-  // Compaction claim
+  // Claims
   // ---------------------------------------------------------------------
+  //
+  // A claim is a marker file taken with create-no-overwrite. That is atomic
+  // on HDFS and ABFS; the local FS's create is check-then-act, so a
+  // JVM-wide registry ([[Lake.claims]]) arbitrates same-process races;
+  // S3-class stores are capability-gated ([[Lake.gateClaimStore]]). The
+  // reference gets the same exclusion from DuckDB's transactions. Five
+  // kinds share the protocol below (README "Claims"):
+  //   run-id      metadata/.run_ids/<id>                  permanent
+  //   ingestion   metadata/.flow_claims/<source>__<sha1>  kept on success
+  //   flow        metadata/.flow_claims/__flow__<source>  scoped, waits
+  //   load        <layer>/.claims/<table>_graft_loading   scoped, waits
+  //   compaction  <layer>/<table>/_graft_compacting       scoped, no wait
+  // All but compaction's live in side dirs: a marker inside a table dir
+  // would make exists() true for a table with no data yet, and
+  // truncate-and-load deletes a staging table's dir, marker included.
 
-  private def compactClaimPath(layer: String, name: String): Path =
-    new Path(tablePath(layer, name), Lake.CompactClaim)
+  /** Run-id marker: one per run id ever allocated, never released. */
+  private[graft] def runIdClaimPath(id: Long): Path =
+    new Path(tablePath("metadata", ".run_ids"), f"$id%020d")
 
-  /** Atomically claim the table for a generation-writing operation
-    * (compact/rebucket/expire); false when another holds it. Same
-    * primitive + hygiene as the flow executor's ingestion claims
-    * (create-no-overwrite, JVM registry for same-process determinism,
-    * capability-gated on S3-class stores). */
-  def tryCompactionClaim(layer: String, name: String): Boolean =
-    tryClaimMarker(compactClaimPath(layer, name), "compaction")
+  /** Ingestion marker for one (source table, file); its body is the path. */
+  private[graft] def ingestionClaimPath(sourceTable: String, filePath: String): Path = {
+    val digest = java.security.MessageDigest.getInstance("SHA-1")
+      .digest(filePath.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    new Path(tablePath("metadata", ".flow_claims"), s"${sourceTable}__$digest")
+  }
 
-  /** Release the compaction claim — also the operator escape hatch for a
-    * claim a CRASHED compaction left behind (the same recovery posture as
-    * the flow executor's stale ingestion claims). */
-  def releaseCompactionClaim(layer: String, name: String): Unit =
-    releaseClaimMarker(compactClaimPath(layer, name))
+  private[graft] def flowClaimPath(sourceTable: String): Path =
+    new Path(tablePath("metadata", ".flow_claims"), s"__flow__$sourceTable")
 
-  // ---------------------------------------------------------------------
-  // Per-table LOAD claim (r19 verdict #1)
-  // ---------------------------------------------------------------------
-
-  /** Load-claim marker in a SIDE directory (`<layer>/.claims/`), NOT the
-    * table dir: a marker inside the table dir would materialize the dir
-    * and flip `exists()` true for a table that has no data yet — the
-    * first flow's probe would then scan an empty dir instead of taking
-    * the absent-table path (and a forced-open prune gate would reference
-    * a partition column no file carries). Dot-prefix → hidden. */
-  private def loadClaimPath(layer: String, name: String): Path =
+  private[graft] def loadClaimPath(layer: String, name: String): Path =
     new Path(tablePath(layer, ".claims"), s"$name${Lake.LoadClaim}")
 
-  /** Atomically claim the table for one incremental LOAD (anti-join/delta
-    * probe + append); false when another loader holds it. Why it exists:
-    * an incremental load's dedup guarantee is "probe the existing keys,
-    * insert only the new ones" — two PROCESSES loading different files into
-    * the same hub can both probe before either appends and both insert the
-    * same business key. The reference is immune only because DuckDB
-    * serializes its transactions; this claim is the Spark-side serializer.
-    * Same primitive + hygiene as the compaction claim (create-no-overwrite
-    * marker, JVM registry for same-process determinism, capability-gated
-    * advisory mode on S3-class stores). Distinct marker from the
-    * compaction claim on purpose: loads never block compaction (the
-    * compact's commit-time source-unchanged guard already aborts it loudly
-    * if an append lands mid-stage), and compaction never blocks loads. */
-  def tryLoadClaim(layer: String, name: String): Boolean =
-    tryClaimMarker(loadClaimPath(layer, name), "load")
+  private[graft] def compactClaimPath(layer: String, name: String): Path =
+    new Path(tablePath(layer, name), Lake.CompactClaim)
 
-  /** Release the load claim — also the operator escape hatch for a marker a
-    * crashed loader left behind (the refusal message names it). */
-  def releaseLoadClaim(layer: String, name: String): Unit =
-    releaseClaimMarker(loadClaimPath(layer, name))
-
-  /** One create-no-overwrite claim take at an explicit marker path — THE
-    * single claim-protocol implementation (compaction claim, per-table
-    * load claim, and the flow executor's per-source flow claim, whose
-    * marker cannot live in the stg table dir: truncate-and-load deletes
-    * that dir wholesale, and a deleted marker would silently hand the
-    * claim to a second process mid-hold). `gateLabel` names the claim
-    * kind in capability-gate diagnostics so an operator investigating an
-    * S3 advisory warning looks at the right marker family. mkdirs(parent)
-    * because side-dir markers (metadata/.flow_claims, <layer>/.claims)
-    * may precede their directory — equivalent to fs.create's own implicit
-    * parent creation, made explicit. */
-  private[graft] def tryClaimMarker(p: Path, gateLabel: String): Boolean = {
+  /** Take the claim marker `p`, writing `body` into it; false when another
+    * holder has it. `kind` names the marker family in capability-gate
+    * diagnostics. Any failure removes the registry entry (else a transient
+    * error would block the marker in this JVM for good), and a failure
+    * after our own create deletes our half-written marker (else it would
+    * stand in for a holder that does not exist). */
+  private[graft] def tryClaim(p: Path, kind: String, body: Array[Byte] = Array.emptyByteArray): Boolean = {
     val fs = fsOf(p)
-    graft.etl.FlowExecutor.gateClaimStore(fs, spark.conf, gateLabel)
-    // qualified key: the JVM registry must arbitrate across Lake instances
-    // whose roots spell this directory differently (see qualifiedKey)
-    val key = fs.makeQualified(p).toString
-    if (Lake.localClaims.putIfAbsent(key, java.lang.Boolean.TRUE) != null) return false
+    Lake.gateClaimStore(fs, spark.conf, kind) // before the registry insert: a throw leaves no entry
+    val key = fs.makeQualified(p).toString // one key however a root is spelled (qualifiedKey)
+    if (!Lake.claims.add(key)) return false
     try {
-      if (p.getParent != null) fs.mkdirs(p.getParent)
+      fs.mkdirs(p.getParent)
       val out = fs.create(p, /* overwrite = */ false) // the atomic arbiter
-      // a failure AFTER our create succeeded (close flushing on an object
-      // store) must delete OUR half-claim before propagating, or the
-      // orphaned marker wedges every later claimant behind the full wait
-      // (the FlowExecutor.tryClaim hygiene — r20 review finding)
-      try out.close()
-      catch {
+      try {
+        try out.write(body) finally out.close()
+      } catch {
         case scala.util.control.NonFatal(e) =>
           scala.util.Try(fs.delete(p, false)) // our own half-claim, not a holder's
           throw e
@@ -747,50 +721,72 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       true
     } catch {
       case scala.util.control.NonFatal(e) =>
-        Lake.localClaims.remove(key)
+        Lake.claims.remove(key)
         if (scala.util.Try(fs.exists(p)).getOrElse(false)) false else throw e
     }
   }
 
-  private[graft] def releaseClaimMarker(p: Path): Unit = {
+  /** Release the claim marker `p` — also the operator's route for a marker
+    * a crashed holder left. The registry entry goes first: if the delete
+    * throws, later takes resolve through the marker still on disk (a typed
+    * refusal, as for a crashed holder), not through a stale entry. */
+  private[graft] def releaseClaim(p: Path): Unit = {
     val fs = fsOf(p)
-    Lake.localClaims.remove(fs.makeQualified(p).toString)
+    Lake.claims.remove(fs.makeQualified(p).toString)
     fs.delete(p, false)
     ()
   }
 
-  /** [[withLoadClaim]]'s engine at an explicit marker path: bounded-wait
-    * acquire (poll [[Confs.loadClaimWaitMillis]], then a typed Concurrency
-    * refusal naming the marker), per-thread reentrancy, `onAcquire` run
-    * under the claim before `body` (cache refresh hooks). */
-  private[graft] def withClaimedMarker[A](
-      p: Path, what: String, gateLabel: String = "load")(onAcquire: => Unit)(body: => A): A = {
+  /** Run `body` holding the claim at `p`. A held marker is retried for up
+    * to `waitMs` (0 = one try), then refused with a typed Concurrency error
+    * carrying `refusal`, which names the marker and its release route.
+    * Reentrant per thread: a marker this thread already holds runs `body`
+    * directly. `onAcquire` runs under a fresh take, before `body`. The
+    * claim is released on every exit. */
+  private[graft] def withClaim[A](
+      p: Path, kind: String, waitMs: Long, refusal: => String,
+      onAcquire: => Unit = ())(body: => A): A = {
     val key = fsOf(p).makeQualified(p).toString
-    val held = Lake.heldLoadClaims.get()
+    val held = Lake.heldClaims.get()
     if (held.contains(key)) return body
-    val waitMs = Confs.loadClaimWaitMillis(spark.conf)
     val deadline = System.currentTimeMillis() + waitMs
-    var claimed = tryClaimMarker(p, gateLabel)
+    var claimed = tryClaim(p, kind)
     while (!claimed && System.currentTimeMillis() < deadline) {
-      Thread.sleep(200L)
-      claimed = tryClaimMarker(p, gateLabel)
+      Thread.sleep(math.min(200L, waitMs))
+      claimed = tryClaim(p, kind)
     }
-    if (!claimed)
-      throw new DvException(DvError.Concurrency(
-        s"$what: another loader holds the claim marker $p after ${waitMs} ms " +
-          s"(${Confs.LoadClaimWaitMillisKey}) — a concurrent flow/stream is loading, or a " +
-          s"crashed loader left a stale marker. Wait it out, raise the conf, or clear a " +
-          s"stale marker (releaseLoadClaim for a table's ${Lake.LoadClaim}; delete the " +
-          s"marker file otherwise)."))
-    held.add(key)
+    if (!claimed) throw new DvException(DvError.Concurrency(refusal))
+    held += key
     try {
       onAcquire
       body
     } finally {
-      held.remove(key)
-      releaseClaimMarker(p)
+      held -= key
+      releaseClaim(p)
     }
   }
+
+  /** Claim the table for a generation-writing operation
+    * (compact/rebucket/expire); false when another holds it. */
+  def tryCompactionClaim(layer: String, name: String): Boolean =
+    tryClaim(compactClaimPath(layer, name), "compaction")
+
+  def releaseCompactionClaim(layer: String, name: String): Unit =
+    releaseClaim(compactClaimPath(layer, name))
+
+  /** Claim the table for one incremental LOAD (anti-join/delta probe +
+    * append); false when another loader holds it. An incremental load's
+    * dedup guarantee is "probe the existing keys, insert only the new
+    * ones": two processes loading different files into one hub could both
+    * probe before either appends and both insert a business key. Distinct
+    * from the compaction claim on purpose: loads never block compaction
+    * (its commit-time source-unchanged guard aborts it loudly if an append
+    * lands mid-stage), and compaction never blocks loads. */
+  def tryLoadClaim(layer: String, name: String): Boolean =
+    tryClaim(loadClaimPath(layer, name), "load")
+
+  def releaseLoadClaim(layer: String, name: String): Unit =
+    releaseClaim(loadClaimPath(layer, name))
 
   /** Run one table's incremental load under its load claim. The claimed
     * span MUST cover probe CONSTRUCTION, not just the append: Spark pins a
@@ -800,26 +796,34 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * the table's caches are refreshed (resolution + Spark's file-listing
     * cache) so the probe lists fresh — that is what makes the claim close
     * the cross-process double-insert, where the winner's own post-append
-    * refresh only fixed its JVM. Reentrant per thread (a sat_full load
-    * claims once around both its append phases and the inner counted
-    * appends must not self-deadlock); the loser polls for
-    * [[Confs.loadClaimWaitMillis]] then refuses with a typed Concurrency
-    * error. Cost when uncontended: one create + one delete of a marker
-    * file per table per load — noise against the load's own jobs. */
+    * refresh only fixed its JVM. Waits [[Confs.loadClaimWaitMillis]].
+    * Cost when uncontended: one create + one delete of a marker file per
+    * table per load — noise against the load's own jobs. */
   def withLoadClaim[A](layer: String, name: String, what: String)(body: => A): A =
-    withClaimedMarker(loadClaimPath(layer, name), s"$what($layer.$name)") {
-      refresh(layer, name)
-    }(body)
+    withLoaderClaim(loadClaimPath(layer, name), "load", s"$what($layer.$name)", refresh(layer, name))(body)
 
-  private def withCompactionClaim[A](layer: String, name: String, what: String)(body: => A): A = {
-    if (!tryCompactionClaim(layer, name))
-      throw new DvException(DvError.Concurrency(
-        s"$what($layer.$name): another compact/rebucket/expireSuperseded holds this " +
-          s"table's claim (${Lake.CompactClaim}) — concurrent generation writers would " +
-          s"delete each other's staged data. If a crashed run left the claim behind, " +
-          s"clear it with releaseCompactionClaim."))
-    try body finally releaseCompactionClaim(layer, name)
+  /** Per-source flow claim around a flow's staging + loads: staging is
+    * truncate-and-load, so a second flow of the same source would swap the
+    * data under the first flow's lazily-evaluated hash view. */
+  private[graft] def withFlowClaim[A](sourceTable: String)(body: => A): A =
+    withLoaderClaim(flowClaimPath(sourceTable), "flow", s"executeFlow($sourceTable)", ())(body)
+
+  private def withLoaderClaim[A](p: Path, kind: String, what: String, onAcquire: => Unit)(body: => A): A = {
+    val waitMs = Confs.loadClaimWaitMillis(spark.conf)
+    withClaim(p, kind, waitMs,
+      s"$what: another loader holds the claim marker $p after ${waitMs} ms " +
+        s"(${Confs.LoadClaimWaitMillisKey}) — a concurrent flow/stream is loading, or a " +
+        s"crashed loader left a stale marker. Wait it out, raise the conf, or clear a " +
+        s"stale marker (releaseLoadClaim for a table's ${Lake.LoadClaim}; delete the " +
+        s"marker file otherwise).", onAcquire)(body)
   }
+
+  private[graft] def withCompactionClaim[A](layer: String, name: String, what: String)(body: => A): A =
+    withClaim(compactClaimPath(layer, name), "compaction", waitMs = 0L,
+      s"$what($layer.$name): another compact/rebucket/expireSuperseded holds this " +
+        s"table's claim (${Lake.CompactClaim}) — concurrent generation writers would " +
+        s"delete each other's staged data. If a crashed run left the claim behind, " +
+        s"clear it with releaseCompactionClaim.")(body)
 
   /** Fail instead of committing when the SOURCE directory's parquet leaves
     * changed between the rewrite's input snapshot and the commit point —
@@ -1443,21 +1447,57 @@ object Lake {
   private val resolutionCache =
     new java.util.concurrent.ConcurrentHashMap[String, Resolution]()
 
-  /** JVM-wide compaction/load-claim registry (same role as the flow
-    * executor's ingestion-claim registry: deterministic same-process
-    * arbitration on stores whose create-no-overwrite is check-then-act
-    * locally). Keyed by the qualified MARKER path, so the compaction and
-    * load claims of one table never collide. */
-  private val localClaims =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  /** JVM-wide claim registry: qualified marker paths taken in this JVM
+    * ([[Lake.tryClaim]]). Makes same-process races deterministic where the
+    * store's create-no-overwrite is check-then-act (the local FS) and costs
+    * nothing where create is the atomic arbiter. */
+  private[graft] val claims = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Load-claim keys held by the CURRENT thread — [[Lake.withLoadClaim]]
-    * reentrancy (a sat_full load claims once around both append phases). */
-  private val heldLoadClaims =
-    new ThreadLocal[scala.collection.mutable.Set[String]] {
-      override def initialValue(): scala.collection.mutable.Set[String] =
-        scala.collection.mutable.Set.empty
+  /** Claim keys held by the CURRENT thread — [[Lake.withClaim]] reentrancy
+    * (a sat_full load claims once around both append phases). */
+  private val heldClaims =
+    ThreadLocal.withInitial[scala.collection.mutable.Set[String]](() => scala.collection.mutable.Set.empty)
+
+  /** Filesystem schemes whose plain create() is NOT a conditional write —
+    * flat object stores where two processes can both "create" the same
+    * marker and both believe they won (S3-class: create(overwrite=false)
+    * is HEAD-then-PUT). HDFS, local file (plus the JVM registry), and
+    * hierarchical-namespace stores (abfs/ADLS Gen2) ARE atomic. Hadoop
+    * exposes no path capability for this (checked CommonPathCapabilities,
+    * Hadoop 3.4), so the gate is a scheme list; unknown schemes are
+    * assumed atomic and documented in README's deployment notes. */
+  private val nonAtomicCreateSchemes =
+    Set("s3", "s3a", "s3n", "wasb", "wasbs", "swift", "oss", "cos", "obs")
+
+  /** Schemes already warned about in this JVM (warn once, not per claim). */
+  private val warnedSchemes = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Capability gate for claim markers ([[Confs.claimsRequireAtomic]]
+    * doc): on a store whose create is not conditional, either fail fast
+    * (requireAtomic=true — typed Configuration error naming the conf) or
+    * warn once per scheme and proceed with ADVISORY cross-process claims
+    * (same-JVM arbitration via [[claims]] is unaffected). */
+  private[graft] def gateClaimStore(
+      fs: org.apache.hadoop.fs.FileSystem,
+      conf: org.apache.spark.sql.RuntimeConfig,
+      what: String): Unit = {
+    val scheme = Option(fs.getUri.getScheme).getOrElse("file").toLowerCase
+    if (nonAtomicCreateSchemes(scheme)) {
+      if (Confs.claimsRequireAtomic(conf))
+        throw new DvException(DvError.Configuration(
+          s"$what claim markers are on '$scheme', whose create() is not a conditional " +
+            s"write — cross-process claim arbitration would be advisory. Host the lake's " +
+            s"metadata layer on an atomic-create store (HDFS/ABFS/file), serialize flows " +
+            s"externally, or unset ${Confs.ClaimsRequireAtomicKey} to proceed " +
+            s"with advisory claims."))
+      else if (warnedSchemes.add(scheme))
+        Console.err.println(
+          s"[graft] WARNING: $what claim markers on '$scheme' rely on create-no-overwrite, " +
+            s"which this store does not provide atomically; cross-process claim arbitration " +
+            s"is advisory here (same-JVM flows stay fully arbitrated). Set " +
+            s"${Confs.ClaimsRequireAtomicKey}=true to fail fast instead.")
     }
+  }
 
   /** Test seam for the concurrent-append-during-compaction proof: invoked
     * with "layer.name" after a compact/rebucket's staged write lands,

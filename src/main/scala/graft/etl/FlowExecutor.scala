@@ -2,7 +2,6 @@ package graft.etl
 
 import java.sql.Timestamp
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -65,40 +64,17 @@ final class FlowExecutor(
     runinfo.agg(coalesce(max(col("run_id")), lit(0L)) + 1L).head().getLong(0)
 
   /** Allocate a run id safely under the concurrency the ingestion claim
-    * explicitly supports: [[nextRunId]] is check-then-act over the ledger,
-    * so two flows over DIFFERENT files can both read max+1 before either
-    * writes its start row and stamp every vault audit column with the same
-    * run_id. The candidate id is therefore CLAIMED with the same
-    * create-no-overwrite primitive as the ingestion claim (atomic on
-    * HDFS/ABFS/file; capability-gated on flat object stores — see
-    * [[FlowExecutor.gateClaimStore]]; the JVM-wide registry arbitrates
-    * same-process races); losers walk forward. A crash between claim and ledger start-row leaves a marker
-    * with no ledger row — later allocations skip that id rather than reuse
-    * one that may have partially stamped vault rows. Markers are empty
-    * files under `metadata/.run_ids`, one per run ever allocated (same
-    * cardinality as the ledger's own rows). */
+    * supports: [[nextRunId]] is check-then-act over the ledger, so two
+    * flows over DIFFERENT files can both read max+1 before either writes
+    * its start row and stamp every vault audit column with the same
+    * run_id. The candidate id is therefore claimed (a permanent run-id
+    * marker, [[Lake.tryClaim]]); losers walk forward. A crash between
+    * claim and ledger start-row leaves a marker with no ledger row — later
+    * allocations skip that id rather than reuse one that may have
+    * partially stamped vault rows. */
   private[graft] def allocateRunId(): Long = {
-    val dir = new Path(lake.tablePath("metadata", ".run_ids"))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    FlowExecutor.gateClaimStore(fs, spark.conf, "run-id")
-    fs.mkdirs(dir)
     var id = nextRunId()
-    def claim(id: Long): Boolean = {
-      val p = new Path(dir, f"$id%020d")
-      // qualified key: same-JVM arbitration must hold across FlowExecutors
-      // whose lake roots spell this directory differently (Lake.qualifiedKey
-      // rationale)
-      if (FlowExecutor.localClaims.putIfAbsent(fs.makeQualified(p).toString, java.lang.Boolean.TRUE) != null)
-        false
-      else
-        try { fs.create(p, /* overwrite = */ false).close(); true }
-        catch {
-          case e: java.io.IOException =>
-            if (fs.exists(p)) false // lost a cross-process race for this id
-            else throw e            // infrastructure error — surface it
-        }
-    }
-    while (!claim(id)) id += 1
+    while (!lake.tryClaim(lake.runIdClaimPath(id), "run-id")) id += 1
     id
   }
 
@@ -107,76 +83,6 @@ final class FlowExecutor(
     runinfo
       .filter(col("source_file") === filePath && col("source_table") === sourceTable && col("status") === status)
       .limit(1).count() > 0
-
-  /** Ingestion claim marker for one (source table, file). The ledger check
-    * above is check-then-act: two concurrent flows over the same file both
-    * see "not ingested" and double-load. The claim closes the race — a
-    * marker file under the lake's metadata layer, acquired with the Hadoop
-    * FS create-fails-if-exists primitive (atomic on HDFS/ABFS; local FS
-    * gets the additional JVM-wide [[FlowExecutor.localClaims]] guard, which
-    * also makes same-process races deterministic; S3-class flat stores are
-    * capability-gated — [[FlowExecutor.gateClaimStore]]). The reference needs none of
-    * this: it inherits DuckDB's transactionality
-    * (db/database_connection.py); a lake claims explicitly.
-    *
-    * Lifecycle: acquired after the ledger check, kept forever on success
-    * (a durable second line of defense beside the ledger row), released on
-    * a caught failure so the file can be retried. A hard crash between
-    * claim and ledger write leaves a stale marker; recovery is
-    * `forceLoad = true` (which bypasses ledger AND claim — an explicit
-    * operator override) or deleting the marker. */
-  private def claimPath(sourceTable: String, filePath: String): Path = {
-    val digest = java.security.MessageDigest.getInstance("SHA-1")
-      .digest(filePath.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    new Path(lake.tablePath("metadata", ".flow_claims"), s"${sourceTable}__$digest")
-  }
-
-  /** Atomically claim (source, file); false when another flow holds it.
-    * Failure hygiene: ANY failure (not just IOException — object-store
-    * connectors throw RuntimeExceptions) releases the in-process registry
-    * entry, or a transient error would permanently block the file in this
-    * JVM. A failure AFTER our own create succeeded deletes the half-written
-    * marker best-effort for the same reason — otherwise a transient write
-    * error turns into "another flow holds it" forever. */
-  private def tryClaim(sourceTable: String, filePath: String): Boolean = {
-    val p = claimPath(sourceTable, filePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // gate BEFORE the registry insert: a requireAtomic throw must not leave
-    // a stale in-process entry blocking this (source, file) forever
-    FlowExecutor.gateClaimStore(fs, spark.conf, "ingestion")
-    // qualified key (Lake.qualifiedKey rationale): two executors over
-    // "/x" vs "file:/x/" must arbitrate the same (source, file) in-process
-    val key = fs.makeQualified(p).toString
-    if (FlowExecutor.localClaims.putIfAbsent(key, java.lang.Boolean.TRUE) != null)
-      return false
-    try {
-      fs.mkdirs(p.getParent)
-      val out = fs.create(p, /* overwrite = */ false) // the atomic arbiter
-      try {
-        try out.write(filePath.getBytes("UTF-8")) finally out.close()
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          scala.util.Try(fs.delete(p, false)) // our own half-claim, not a holder's
-          throw e
-      }
-      true
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        FlowExecutor.localClaims.remove(key)
-        if (scala.util.Try(fs.exists(p)).getOrElse(false)) false else throw e
-    }
-  }
-
-  private def releaseClaim(sourceTable: String, filePath: String): Unit = {
-    val p = claimPath(sourceTable, filePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // registry entry FIRST: if the marker delete throws, the next in-process
-    // attempt still resolves correctly through the fs marker (typed
-    // Concurrency skip) instead of being silently blocked by a stale entry.
-    FlowExecutor.localClaims.remove(fs.makeQualified(p).toString)
-    fs.delete(p, false)
-    ()
-  }
 
   private def logRun(sourceTable: String, runId: Long, filePath: Option[String], status: String, message: String = ""): Unit = {
     val row = Row(sourceTable, runId, new Timestamp(System.currentTimeMillis()), filePath.orNull, status, message)
@@ -204,14 +110,19 @@ final class FlowExecutor(
   ): FlowResult = {
     if (!forceLoad && filePath.exists(alreadyIngested(sourceTable, _)))
       return FlowResult(0L, "skipped", skipped = true, Nil, Map.empty)
-    // Atomic run-claim between the ledger check and any load work: of two
-    // flows racing past the check above, exactly one proceeds; the loser
-    // reports the conflict as a typed skip, not a double-ingest. A claim
-    // that THROWS (filesystem down) is a typed failure, not a raw escape —
-    // flows log-and-continue rather than unwind.
+    // Ingestion claim between the ledger check and any load work: the
+    // check is check-then-act, so of two flows racing past it exactly one
+    // proceeds and the loser reports a typed skip, not a double-ingest.
+    // The marker is kept on success (a durable second line of defense
+    // beside the ledger row) and released on a caught failure so the file
+    // can be retried. A hard crash leaves it behind; recovery is
+    // forceLoad = true (which bypasses ledger AND claim) or deleting the
+    // marker. A claim that THROWS (filesystem down) is a typed failure,
+    // not a raw escape — flows log-and-continue rather than unwind.
     if (!forceLoad && filePath.isDefined) {
       val claimed =
-        try tryClaim(sourceTable, filePath.get)
+        try lake.tryClaim(lake.ingestionClaimPath(sourceTable, filePath.get), "ingestion",
+          filePath.get.getBytes("UTF-8"))
         catch {
           case scala.util.control.NonFatal(e) =>
             return FlowResult(-1L, "failure", skipped = false,
@@ -269,23 +180,15 @@ final class FlowExecutor(
           merge(linkLoads(hv, transitions, ctx), satLoads(hv, transitions, ctx)))
         finally hv.unpersist()
       }
-      // Per-SOURCE flow claim around staging + loads: the per-file
-      // ingestion claim lets two flows of the same source table with
-      // DIFFERENT files both proceed, and the stg table is
-      // truncate-and-load — the second flow's staging overwrite would
-      // swap the data under the first flow's lazily-evaluated hash view
-      // mid-run. The reference effectively serializes here too (one
-      // DuckDB writer). Marker lives beside the ingestion claims
-      // (metadata/.flow_claims), NOT in the stg dir the overwrite
-      // deletes; the per-TARGET load claims (hubLoads doc) nest inside
-      // and stay, because flows of DIFFERENT sources sharing a hub
-      // serialize only on that hub. View-backed sources skip the claim:
-      // nothing stages, and the view's relation is the user's to manage.
+      // Per-SOURCE flow claim around staging + loads (Lake.withFlowClaim):
+      // the ingestion claim lets two flows of one source with DIFFERENT
+      // files both proceed, and the second one's truncate-and-load would
+      // swap the staging data under the first. The per-TARGET load claims
+      // (hubLoads doc) nest inside, because flows of DIFFERENT sources
+      // sharing a hub serialize only on that hub. View-backed sources skip
+      // the claim: nothing stages, and the view is the user's to manage.
       val loaded =
-        if (isStgTable)
-          lake.withClaimedMarker(
-            new Path(lake.tablePath("metadata", ".flow_claims"), s"__flow__$sourceTable"),
-            s"executeFlow($sourceTable)", gateLabel = "flow") { () } { stageAndLoad() }
+        if (isStgTable) lake.withFlowClaim(sourceTable) { stageAndLoad() }
         else stageAndLoad()
       logRun(sourceTable, runId, filePath, "success",
         loaded.map { case (k, v) => s"$k:$v" }.mkString(", "))
@@ -300,7 +203,8 @@ final class FlowExecutor(
         // original load error — the in-process registry entry is removed
         // before the marker delete, so a later retry resolves through the
         // fs marker as a typed skip. forceLoad never claimed.
-        if (!forceLoad) filePath.foreach(fp => scala.util.Try(releaseClaim(sourceTable, fp)))
+        if (!forceLoad)
+          filePath.foreach(fp => scala.util.Try(lake.releaseClaim(lake.ingestionClaimPath(sourceTable, fp))))
         // Best-effort: when the lake is down the failure row can't land
         // anyway — the caller still gets the original error in the result.
         // No ledger row at all when nextRunId() itself threw (runId still
@@ -497,56 +401,6 @@ final class FlowExecutor(
 }
 
 object FlowExecutor {
-  /** JVM-wide in-process claim registry, keyed by claim-file path: makes
-    * same-process races deterministic (the Hadoop create-no-overwrite on
-    * RawLocalFileSystem is itself check-then-act) and costs nothing on a
-    * real cluster where HDFS create(overwrite=false) is the atomic arbiter
-    * across processes. */
-  private val localClaims =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** Serializes same-process runinfo appends (see logRun). */
   private val ledgerLock = new Object
-
-  /** Filesystem schemes whose plain create() is NOT a conditional write —
-    * flat object stores where two processes can both "create" the same
-    * marker and both believe they won (S3-class: create(overwrite=false)
-    * is HEAD-then-PUT). HDFS, local file (plus the JVM registry), and
-    * hierarchical-namespace stores (abfs/ADLS Gen2) ARE atomic. Hadoop
-    * exposes no path capability for this (checked CommonPathCapabilities,
-    * Hadoop 3.4), so the gate is a scheme list; unknown schemes are
-    * assumed atomic and documented in README's deployment notes. */
-  private val nonAtomicCreateSchemes =
-    Set("s3", "s3a", "s3n", "wasb", "wasbs", "swift", "oss", "cos", "obs")
-
-  /** Schemes already warned about in this JVM (warn once, not per claim). */
-  private val warnedSchemes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Capability gate for the claim primitives ([[Confs.claimsRequireAtomic]]
-    * doc): on a store whose create is not conditional, either fail fast
-    * (requireAtomic=true — typed Configuration error naming the conf) or
-    * warn once per scheme and proceed with ADVISORY cross-process claims
-    * (same-JVM arbitration via [[localClaims]] is unaffected). */
-  private[graft] def gateClaimStore(
-      fs: org.apache.hadoop.fs.FileSystem,
-      conf: org.apache.spark.sql.RuntimeConfig,
-      what: String): Unit = {
-    val scheme = Option(fs.getUri.getScheme).getOrElse("file").toLowerCase
-    if (nonAtomicCreateSchemes(scheme)) {
-      if (graft.core.Confs.claimsRequireAtomic(conf))
-        throw new DvException(DvError.Configuration(
-          s"$what claim markers are on '$scheme', whose create() is not a conditional " +
-            s"write — cross-process claim arbitration would be advisory. Host the lake's " +
-            s"metadata layer on an atomic-create store (HDFS/ABFS/file), serialize flows " +
-            s"externally, or unset ${graft.core.Confs.ClaimsRequireAtomicKey} to proceed " +
-            s"with advisory claims."))
-      else if (warnedSchemes.add(scheme))
-        Console.err.println(
-          s"[graft] WARNING: $what claim markers on '$scheme' rely on create-no-overwrite, " +
-            s"which this store does not provide atomically; cross-process claim arbitration " +
-            s"is advisory here (same-JVM flows stay fully arbitrated). Set " +
-            s"${graft.core.Confs.ClaimsRequireAtomicKey}=true to fail fast instead.")
-    }
-  }
 }

@@ -148,36 +148,17 @@ object Dedup {
       .select(col("grp"), col("doc_id"), col("__n.norm").as("norm"), col("gsz"))
     // repartition: same parallelism restoration as dedupMinhash — AQE
     // coalesces the groupBy exchange by data size, serializing the
-    // CPU-bound shingle map that five operators re-execute.
-    //
-    // Shingle-reuse exchange: MEASURED AND REJECTED (r22, the r21
-    // verdict's #5). A doc_id-keyed exchange directly above the shingle
-    // map would let every consumer branch read one materialized shuffle
-    // at runtime instead of re-running the map (the plan keeps its 16
-    // static MapElements either way — AQE reuse is a runtime effect),
-    // but the interleaved same-session A/B LOSES in both orderings at
-    // both scales — sf1 warm reps: reuse 4.24/3.72/3.91 s vs recompute
-    // 3.38/2.73/2.77 s; sf0.1 warm reps within noise the same direction —
-    // because the exchange ships the FAT shingle arrays (~3× the
-    // normalized text) while the saved work is an embarrassingly-parallel
-    // CPU pass over the collapsed rep table. Same verdict as the r19
-    // parquet materialization of this table (60% slower). At 100 TB the
-    // ranking only widens: shuffle bytes are the scaling wall (guide
-    // §2.2), per-task CPU is not. `spark.graft.dedup.shingleReuse=true`
-    // keeps the rejected shape runnable for re-measurement (results
-    // identical either way — oracle-green under both).
-    val shingleReuse =
-      s.conf.getOption("spark.graft.dedup.shingleReuse").exists(_.toBoolean)
-    val withSh0 = reps
+    // CPU-bound shingle map that five operators re-execute. No exchange
+    // sits above the shingle map: it would ship the fat shingle arrays
+    // (~3x the normalized text) to save a parallel CPU pass over the
+    // collapsed rep table, and measured slower at sf0.1 and sf1.
+    val withSh = reps
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"), col("norm"), col("gsz"))
       .as[(Long, String, Long)]
       .map { case (id, n, gs) => (id, TextFns.shinglesOf(n).toSeq, gs) }
       .toDF("doc_id", "sh", "gsz")
       .filter(size(col("sh")) > 0)
-    val withSh =
-      if (shingleReuse) withSh0.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      else withSh0
     val e = withSh.select(col("doc_id"), col("gsz"), explode(col("sh")).as("shingle"))
     // df-capped blocking set: rare shingles only. sum(gsz) = true document
     // frequency over the full corpus (each member counts), so the blocking
@@ -752,7 +733,11 @@ object Dedup {
       val ra = find(a); val rb = find(b)
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
-    parent.keysIterator.map(k => (k, find(k), false)).toSeq
+    // Snapshot the keys first: find path-compresses (parent(c) = r), and a
+    // Scala 2.13 mutable.HashMap runs its resize check even when updating an
+    // existing key. When the last inserts made no update (trailing
+    // self-edges), walking the live map could regrow it and skip nodes.
+    parent.keys.toArray.map(k => (k, find(k), false)).toSeq
       .toDF("node", "label", "__chg").persist()
   }
 

@@ -58,10 +58,8 @@ object BvProf {
     def aggStructFor(df: DataFrame) = struct(
       (Seq("load_dts", "run_id", "hash_diff", "l_partkey", "l_suppkey", "l_quantity") ++
         (if (df.columns.contains("pay")) Seq("pay") else Nil)).map(col): _*)
-    def sortShape(df: DataFrame): DataFrame = {
-      spark.conf.set("spark.graft.rewriteMaxStruct", "false")
+    def sortShape(df: DataFrame): DataFrame =
       df.groupBy(col("k")).agg(max(aggStructFor(df)).as("__r")).select(col("k"), col("__r.*"))
-    }
     def hashShape(df: DataFrame): DataFrame =
       df.groupBy(col("k")).agg(graft.dv.DvOps.maxStruct(aggStructFor(df)).as("__r"))
         .select(col("k"), col("__r.*"))
@@ -71,7 +69,7 @@ object BvProf {
 
     base.write.format("noop").mode("overwrite").save() // warm scan
 
-    // Optional comma-separated profile filter (e.g. BVPROF_ONLY=deepwide
+    // Optional comma-separated profile filter (e.g. SPARK_GRAFT_BVPROF_ONLY=deepwide
     // for the r22 sf30 confirmation run, where the full grid would take
     // most of an hour at 3x the rows).
     val only = sys.env.get("SPARK_GRAFT_BVPROF_ONLY").map(_.split(',').map(_.trim).toSet)

@@ -164,19 +164,40 @@ class CorpusOpsSpec extends SparkSpec {
       (for (a <- 101L to 105L; b <- 101L to 105L if a < b) yield (a, b)) ++ // clique
       Seq((200L, 300L), (300L, 400L), (500L, 500L))          // path + self-loop
     )
-    val sym = edges0.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
-    def run(): Map[Long, Long] = {
+    def symOf(es: Seq[(Long, Long)]) = es.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
+    def run(sym: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
       val h = graft.queries.Dedup.connectedComponents(sym)
       val m = h.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       h.unpersist()
       m
     }
-    val viaDriver = run() // default gate: 2^20 edges — takes the union-find
-    spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
-    val viaLoop = try run() finally spark.conf.unset("spark.graft.cc.driverMaxEdges")
+    // default gate: 2^20 edges — takes the union-find; gate 0 takes the loop
+    def both(es: Seq[(Long, Long)]): (Map[Long, Long], Map[Long, Long]) = {
+      val sym = symOf(es)
+      val viaDriver = run(sym)
+      spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
+      val viaLoop = try run(sym) finally spark.conf.unset("spark.graft.cc.driverMaxEdges")
+      (viaDriver, viaLoop)
+    }
+    val (viaDriver, viaLoop) = both(edges0)
     assert(viaDriver == viaLoop)
     assert(viaDriver(40L) == 0L && viaDriver(105L) == 101L && viaDriver(400L) == 200L
       && viaDriver(500L) == 500L)
+    // Graphs one node below each resize threshold of the union-find's
+    // HashMap (capacity 16, 32, ... at load factor 0.75), shaped like the
+    // collapsed clusters input: pair edges (a chain of n-1 nodes), then one
+    // self-edge per node, the last node isolated. The trailing self-edges
+    // insert nodes without updating the map, so the first path-compression
+    // update while collecting the labels used to regrow it mid-walk and
+    // drop nodes from the output.
+    Seq(11, 23, 47, 95, 191).foreach { n =>
+      val nodes = 1000L until 1000L + n
+      val chain = (1000L until 1000L + n - 2).map(i => (i, i + 1))
+      val (d, l) = both(chain ++ nodes.map(i => (i, i)))
+      assert(d.keySet == nodes.toSet, s"n=$n: unlabeled nodes in the driver result")
+      assert(d == l, s"n=$n: driver union-find differs from the loop")
+      assert(d == nodes.map(i => i -> (if (i == nodes.last) i else 1000L)).toMap, s"n=$n")
+    }
   }
 
   test("connectedComponents: string node ids fail loudly at the boundary") {

@@ -6,22 +6,29 @@ import org.apache.spark.sql.functions._
 
 import graft.dv.HashGen
 
-/** Run the REFERENCE'S OWN demo — its metadata CSVs, its customer file, its
-  * stg view script, verbatim — through the Spark engine. This is the
-  * "a reference user can switch" proof: same tables.csv/transitions.csv, same
-  * data, same scripts, reference-identical vault contents.
+/** A reference-style demo vault — metadata CSVs, a customer file and a
+  * stg view script in the reference's layout (src/test/resources/demo) —
+  * run through the facade end to end.
   *
-  * The demo exercises paths the synthetic tests don't: two bk groups loading
-  * the SAME hub (self-referencing customer/referencer), NULL business keys,
-  * a self-link with a degenerate key, a link satellite with no payload
-  * fields (hashdiff falls back to the link hash key), and a stg_vw script
-  * with `stg.`-qualified names.
+  * The fixture exercises paths the synthetic tests don't: two bk groups
+  * loading the SAME hub (self-referencing customer/referencer), a NULL
+  * business key, a self-link with a degenerate key, a link satellite with
+  * no payload fields (hashdiff falls back to the link hash key), a
+  * composite-key hub (`_cbk` columns), and a stg_vw script with
+  * `stg.`-qualified names. Expected values are derived by hand from the
+  * two customer rows: (1, ref-a, referenced_by NULL) and (2, ref-b,
+  * referenced_by 1).
   */
 class DemoParitySpec extends SparkSpec {
 
-  private val demo = "/root/reference/demo"
+  private val demo =
+    java.nio.file.Paths.get(getClass.getResource("/demo/tables.csv").toURI).getParent.toString
 
-  test("reference demo runs verbatim: metadata, flow, scripts") {
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  test("demo vault: metadata, flow, scripts, qualified SQL, claim-guarded re-submission") {
     val root = tmpDir("demo")
     val g = Graft.fromCsv(
       spark, s"$root/lake",
@@ -49,12 +56,21 @@ class DemoParitySpec extends SparkSpec {
     val hub = g.table("dv", "hub_customer")
     assert(hub.count() == 3)
     assert(hub.filter(col("id_bk").isNull).count() == 1)
+    // hash keys: md5(upper(concat_ws('||', coalesce(bk, '')))) — the NULL
+    // key hashes as the empty string
+    assert(hub.select("customer_hk").collect().map(_.getString(0)).toSet ==
+      Set(md5Hex("1"), md5Hex("2"), md5Hex("")))
 
     // self-link with degenerate key: 2 staged combinations, both new.
     val link = g.table("dv", "link_customer__referencer")
     assert(link.count() == 2)
     assert(link.columns.contains("customer_hk") && link.columns.contains("referencer_hk")
       && link.columns.contains("reference_code_dk"))
+    // link key = legs' bk source fields then the degenerate key, upper-cased
+    assert(link.select("customer__referencer_hk").collect().map(_.getString(0)).toSet ==
+      Set(md5Hex("1||||REF-A"), md5Hex("2||1||REF-B")))
+    assert(link.filter(col("customer_hk") === md5Hex("2")).select("referencer_hk", "reference_code_dk")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq == Seq((md5Hex("1"), "ref-b")))
 
     // link satellite with NO payload fields: hashdiff = the link hash key.
     val lsat = g.table("dv", "lsat_customer__referencer")
@@ -62,7 +78,11 @@ class DemoParitySpec extends SparkSpec {
     assert(lsat.select(col("customer__referencer_hk") === col("hash_diff")).collect().forall(_.getBoolean(0)))
 
     // hub satellite payload (mapped as `c` in the demo metadata).
-    assert(g.table("dv", "hsat_customer_details").count() == 2)
+    val hsat = g.table("dv", "hsat_customer_details")
+    assert(hsat.count() == 2)
+    assert(hsat.filter(col("customer_hk") === md5Hex("1")).select("name", "email", "hash_diff")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq ==
+      Seq(("Ann", "ann@example.com", md5Hex("ANN||ANN@EXAMPLE.COM"))))
 
     // the reference's stg view script ran verbatim against stg.customer.
     val vw = g.sql("SELECT * FROM stg.customer_vw")

@@ -374,21 +374,21 @@ class FlowExecutorSpec extends SparkSpec {
         override def getUri: java.net.URI = java.net.URI.create(s"$scheme://bucket")
       }
     // default posture: advisory — warn (once), do not throw
-    FlowExecutor.gateClaimStore(fakeFs("s3a"), spark.conf, "test")
+    Lake.gateClaimStore(fakeFs("s3a"), spark.conf, "test")
     // atomic stores pass even under requireAtomic
     try {
       spark.conf.set(graft.core.Confs.ClaimsRequireAtomicKey, "true")
-      FlowExecutor.gateClaimStore(fakeFs("hdfs"), spark.conf, "test")
-      FlowExecutor.gateClaimStore(fakeFs("abfs"), spark.conf, "test")
-      FlowExecutor.gateClaimStore(fakeFs("file"), spark.conf, "test")
+      Lake.gateClaimStore(fakeFs("hdfs"), spark.conf, "test")
+      Lake.gateClaimStore(fakeFs("abfs"), spark.conf, "test")
+      Lake.gateClaimStore(fakeFs("file"), spark.conf, "test")
       val e = intercept[DvException](
-        FlowExecutor.gateClaimStore(fakeFs("s3a"), spark.conf, "run-id"))
+        Lake.gateClaimStore(fakeFs("s3a"), spark.conf, "run-id"))
       assert(e.error.isInstanceOf[DvError.Configuration])
       assert(e.getMessage.contains(graft.core.Confs.ClaimsRequireAtomicKey))
       assert(e.getMessage.contains("s3a"))
       // wasb (flat blob) gated too
       intercept[DvException](
-        FlowExecutor.gateClaimStore(fakeFs("wasb"), spark.conf, "ingestion"))
+        Lake.gateClaimStore(fakeFs("wasb"), spark.conf, "ingestion"))
       // a flow catching the gate's throw must carry the TYPED error through,
       // not re-wrap it as a generic Etl error
       assert(DvError.from(new DvException(DvError.Configuration("x")))

@@ -429,10 +429,11 @@ class PlanSpec extends SparkSpec {
       assert(count[Exchange](q) == 1, plan(q))
       assert(count[WindowExec](q) == 0, plan(q))
       // structural comparison, not Row.toString (which conflates values
-      // that differ only in rendering — r21 ADVICE): same multiset size +
-      // empty set differences both ways
+      // that differ only in rendering): same row count + empty multiset
+      // differences both ways (exceptAll keeps duplicates; except would
+      // deduplicate and miss a changed multiplicity)
       assert(q.count() == dflt.count(), "shape changed row count")
-      assert(q.except(dflt).isEmpty && dflt.except(q).isEmpty,
+      assert(q.exceptAll(dflt).isEmpty && dflt.exceptAll(q).isEmpty,
         "shape changed row values")
     } finally spark.conf.unset(graft.core.Confs.LatestShapeKey)
   }
