@@ -10,28 +10,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    // Shared standing tuning (graft.core.Sessions) + the bench-only delta:
-    // let AQE SIZE each exchange instead of pinning it to the core count —
-    // exchanges start at 16×cores partitions and coalesce down to ~cores
-    // when map output is small (same task count as before for sf0.1), but
-    // a ×100 input keeps the width and each task's spill stays bounded.
-    // Without this, 32-way shuffles at sf10 put ~4 GB in one sorter task
-    // and dedup_minhash dies in spill — partition count must be a function
-    // of DATA, not cluster size; this is how you express that declaratively.
-    val spark = graft.core.Sessions.localBuilder(cpus, shuffleParts)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (shuffleParts.toInt * 16).toString)
-      .getOrCreate()
-    // Ad-hoc conf A/Bs without code edits (e.g. state-store provider
-    // sweeps): SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2".
-    // Tolerant parse: empty segments (trailing ';') are skipped, a token
-    // without '=' warns instead of MatchError-aborting the whole run.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').map(_.trim).filter(_.nonEmpty).foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => spark.conf.set(k.trim, v.trim)
-        case _ => System.err.println(s"[bench] ignoring malformed SPARK_GRAFT_EXTRA_CONF token '$kv' (want k=v)")
-      }
-    })
+    // Shared standing tuning, AQE exchange sizing and SPARK_GRAFT_EXTRA_CONF
+    // (graft.core.Sessions.benchSession; tools.Prof profiles this session).
+    val spark = graft.core.Sessions.benchSession(cpus, shuffleParts)
     spark.sparkContext.setLogLevel("WARN")
     def jstr(s: String): String = graft.core.Json.str(s)
     // Median-of-N per query (default 3): identical bits measured by the r4/r5

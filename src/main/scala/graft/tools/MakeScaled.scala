@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -25,12 +25,7 @@ object MakeScaled {
     val Array(srcDir, dstDir, factorS) = args
     val factor = factorS.toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.localBuilder(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // max() preserves the input type, so an INT32 key in regenerated testdata

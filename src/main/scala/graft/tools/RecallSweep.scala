@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Ann
 
 /** Recall@10-vs-nprobe sweep for the trained-IVF operator: one line of
@@ -17,13 +15,7 @@ object RecallSweep {
     val probes = args.lift(1).map(_.split(',').map(_.trim.toInt).toSeq)
       .getOrElse(Seq(3, 6, 10, 16, 24, 32))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.core.Sessions.localBuilder(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val brute = Ann.knnBrute(spark, sfDir).select($"query_id", $"neighbor_id")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Joins
@@ -23,21 +23,12 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // the engine's standing session tuning (Sessions.localBuilder): the
+    // bv-view SQL rows below resolve graft_latest through the extension,
+    // and the typed aggregate needs the raised ObjectHashAggregate
+    // fallback threshold to measure the shape production sessions run
+    val spark = graft.core.Sessions.localBuilder(cpus, cpus)
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // the engine's standing session tuning (Sessions.localBuilder): the
-      // bv-view SQL rows below resolve graft_latest through the extension,
-      // and the typed aggregate needs the raised ObjectHashAggregate
-      // fallback threshold to measure the shape production sessions run
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      // See Bench: route >64-bucket exchanges through the sort writer
-      // (bypass applies when numPartitions <= threshold).
-      .config("spark.shuffle.sort.bypassMergeThreshold", "64")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -92,22 +83,7 @@ object SkewBench {
     // satNewRows probe/staged join when the key distribution is hostile.
     // The straggler bound reported is max task vs the same stage's median.
     spark.conf.set("spark.sql.adaptive.enabled", true)
-    val stageDurs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.Queue[Long]]()
-    val stageShuffleRead = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
-    val spills = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          stageDurs.computeIfAbsent(t.stageId, _ => new java.util.concurrent.ConcurrentLinkedQueue[Long]())
-            .add(m.executorRunTime)
-          stageShuffleRead.computeIfAbsent(t.stageId, _ => new java.util.concurrent.atomic.AtomicLong())
-            .addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          spills.addAndGet(m.diskBytesSpilled)
-          ()
-        }
-      }
-    })
+    val rec = new StageRecorder(spark.sparkContext)
     // 10% of lineitem version rows remapped to one hot natural key —
     // deterministic, same row-hash trick as the join section.
     def skewedSat: DataFrame = spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -120,11 +96,10 @@ object SkewBench {
         col("l_partkey"), col("l_suppkey"), col("l_quantity"))
 
     def runSkew(label: String)(mk: => DataFrame): String = {
-      stageDurs.clear(); stageShuffleRead.clear(); spills.set(0L)
+      rec.reset()
       val t0 = System.nanoTime()
       mk.write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let async task-end events drain
       // The straggler stage = the one holding the slowest single task,
       // compared against ITS OWN median. Attribution is restricted to
       // SHUFFLE-READING stages (key skew can only concentrate work at or
@@ -133,17 +108,13 @@ object SkewBench {
       // max ≈ median, masking the skew signal (observed r13; raw sessions
       // in bench/r13_skew_vault.jsonl). Falls back to all stages when
       // nothing read a shuffle.
-      val worst = {
-        import scala.jdk.CollectionConverters._
-        val byStage = stageDurs.asScala.toMap
-        val reading = byStage.filter { case (sid, _) =>
-          Option(stageShuffleRead.get(sid)).exists(_.get() > 0L) }
-        (if (reading.nonEmpty) reading else byStage)
-          .values.map(_.asScala.toSeq.sorted).filter(_.nonEmpty).maxByOption(_.last)
-      }
-      val (maxMs, medMs) = worst.map(d => (d.last, d(d.size / 2))).getOrElse((0L, 0L))
+      val stages = rec.stages.filter(_.tasks > 0)
+      val reading = stages.filter(_.shuffleReadBytes > 0L)
+      val worst = (if (reading.nonEmpty) reading else stages).maxByOption(_.maxTaskMs)
+      val (maxMs, medMs) = worst.map(w => (w.maxTaskMs, w.medianTaskMs)).getOrElse((0L, 0L))
+      val spill = stages.map(_.diskSpillBytes).sum
       val row = s""""$label":{"sec":${f"$sec%.1f"},"max_task_s":${f"${maxMs / 1000.0}%.2f"},""" +
-        s""""stage_median_task_s":${f"${medMs / 1000.0}%.2f"},"spill_disk_mb":${f"${spills.get / 1048576.0}%.1f"}}"""
+        s""""stage_median_task_s":${f"${medMs / 1000.0}%.2f"},"spill_disk_mb":${f"${StageRecorder.mb(spill)}%.1f"}}"""
       println(s"[skew] $row")
       row
     }

@@ -508,4 +508,36 @@ class PlanSpec extends SparkSpec {
     assert(fast.collect().map(_.toString).sorted.toSeq == rows)
     assert(slow.collect().map(_.toString).sorted.toSeq == rows)
   }
+
+  test("Sessions.parseConf/applyConf: trailing ';' accepted; a token without '=' or a static conf fails naming it") {
+    assert(graft.core.Sessions.parseConf("a=b; c = d ;") == Seq("a" -> "b", "c" -> "d"))
+    val noEq = intercept[IllegalArgumentException](graft.core.Sessions.parseConf("a=b;c"))
+    assert(noEq.getMessage.contains("'c'"), noEq.getMessage)
+    val static = intercept[IllegalArgumentException](
+      graft.core.Sessions.applyConf(spark, graft.core.Sessions.parseConf("spark.ui.enabled=true")))
+    assert(static.getMessage.contains("'spark.ui.enabled'"), static.getMessage)
+  }
+
+  test("Prof A/B: base sides see the session conf, conf sides the override; the conf is restored after") {
+    val (preset, unset) = ("graft.test.prof.preset", "graft.test.prof.unset")
+    spark.conf.set(preset, "orig")
+    spark.conf.unset(unset)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Option[String], Option[String])]
+    val probe: graft.tools.Prof.Query = (s, _) => {
+      seen += (s.conf.getOption(preset) -> s.conf.getOption(unset))
+      s.range(0, 1000, 1, 4).toDF()
+    }
+    try {
+      val rows = graft.tools.Prof.run(spark, dir, Seq("probe" -> probe), reps = 2,
+        ab = Seq(preset -> "over", unset -> "on"), out = _ => ())
+      assert(rows.map(r => (r.side, r.rep)) == Seq(("base", 1), ("conf", 1), ("base", 2), ("conf", 2)))
+      val (base, conf) = (Some("orig") -> None, Some("over") -> Some("on"))
+      assert(seen == Seq(base, conf, base, conf))
+      assert(spark.conf.get(preset) == "orig")
+      assert(spark.conf.getOption(unset).isEmpty)
+      // the recorder drained the listener bus before the rows were built
+      assert(rows.forall(r => r.err.isEmpty && r.jobs > 0 && r.tasks > 0), rows.map(_.json))
+      assert(rows.head.json.startsWith("""{"q":"probe","side":"base","rep":1,"""), rows.head.json)
+    } finally spark.conf.unset(preset)
+  }
 }
