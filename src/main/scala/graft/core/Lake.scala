@@ -720,6 +720,11 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       }
       true
     } catch {
+      // the arbiter saw a holder's marker; it may be gone by now (its
+      // holder releasing), so this is a refusal without an exists check
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        Lake.claims.remove(key)
+        false
       case scala.util.control.NonFatal(e) =>
         Lake.claims.remove(key)
         if (scala.util.Try(fs.exists(p)).getOrElse(false)) false else throw e

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FSDataOutputStream, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException, FilterFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.scalacheck.Gen
@@ -212,6 +212,20 @@ class ClaimProtocolSpec extends SparkSpec {
     Seq("failed take", "failed release", "refusal", "reentrant take", "out-of-band marker", "fault fired")
       .foreach(k => assert(counts.getOrElse(k, 0) > 0, s"no schedule exercised '$k': $counts"))
   }
+
+  test("a take whose create meets a marker its holder deletes right after is a refusal") {
+    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val lake = new Lake(spark, s"faulty://lake${tmpDir("claims")}", buckets = 4)
+    val p = lake.compactClaimPath("dv", "hub_a")
+    assert(lake.tryClaim(p, "compaction"))
+    // the holder is mid-release: its registry entry is gone, its marker not yet
+    Lake.claims.remove(qualify(p))
+    FaultyFs.releaseOnClash = true
+    try assert(!lake.tryClaim(p, "compaction"))
+    finally FaultyFs.releaseOnClash = false
+    assert(lake.tryClaim(p, "compaction"))
+    lake.releaseClaim(p)
+  }
 }
 
 object ClaimProtocolSpec {
@@ -243,7 +257,13 @@ final class FaultyFs extends FilterFileSystem(new RawLocalFileSystem {
       f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
       replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
     FaultyFs.hit("create")
-    val out = super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+    val out =
+      try super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+      catch {
+        case e: FileAlreadyExistsException if FaultyFs.releaseOnClash =>
+          super.delete(f, false) // the holder's release lands right after the clash
+          throw e
+      }
     new FSDataOutputStream(out, null) {
       override def close(): Unit = { super.close(); FaultyFs.hit("close") }
     }
@@ -259,6 +279,10 @@ object FaultyFs {
   val Uri: URI = URI.create("faulty://lake/")
 
   @volatile private var plan: Option[(String, Int)] = None
+
+  /** When set, a create that fails because the file exists deletes it
+    * before throwing, as a holder releasing its marker in that window. */
+  @volatile var releaseOnClash = false
   @volatile private var hitPlan = false
   private val counts = new ConcurrentHashMap[String, AtomicInteger]()
 
