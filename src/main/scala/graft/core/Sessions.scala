@@ -93,4 +93,28 @@ object Sessions {
       // task. The hosts this was measured on had that headroom; a small-heap
       // deployment should lower this key (it is settable at runtime).
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
+      // Compile once: Spark's JVM-wide cache of generated classes holds 100
+      // entries by default, and graft's working set is larger — one cycle of
+      // the benchmark's vault_ingest (a day's flows, compaction, lookups and
+      // scans) needs ~210 classes, one corpus_dedup cycle ~400. At 100 the
+      // cache thrashes and every operation pays Janino compiles plus fresh
+      // JIT work again (122-129 compiles per vault write, 74-77 per read;
+      // 14 and 4-8 with this cache and graft.functions.RunConstant's
+      // per-run values). A cached class costs 23-28 KB of heap (its
+      // source-string key plus the bytecode Janino's class loader keeps;
+      // 100 -> 339 entries added 6.65 MB on corpus_dedup), so the cap's
+      // worst case is ~28 MB. Static: set before the first compile.
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
+      // The cache is paid for with status history this session cannot
+      // show (the UI is off above): the status store still kept 1000 SQL
+      // executions, 1000 jobs and stages and 100k tasks; one SQL execution
+      // holds ~1,300 plan-metric objects, and each extra corpus_dedup cycle
+      // retained ~6 MB
+      // (87.2 MB of heap after 1 cycle, 99.6 MB after 3). Nothing graft
+      // runs reads that history: Prof and SkewBench record stages with
+      // their own listener (graft.tools.StageRecorder).
+      .config("spark.sql.ui.retainedExecutions", "50")
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
+      .config("spark.ui.retainedTasks", "1000")
 }

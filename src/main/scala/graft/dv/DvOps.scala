@@ -134,15 +134,20 @@ object DvOps {
       .select((col(s"${groupName}_hk").as(hkName) +: attrFields.map { case (s, t) => col(s).as(t) }).toIndexedSeq: _*)
       .distinct()
     val fresh = staged.join(existing.select(col(hkName)), Seq(hkName), "left_anti")
-    fresh.select(
-      (Seq(
-        col(hkName),
-        lit(ctx.loadDts).as("load_dts"),
-        lit(ctx.recordSource).as("record_source"),
-        lit(ctx.runId).as("run_id")
-      ) ++ attrFields.map { case (_, t) => col(t) }).toIndexedSeq: _*
-    )
+    fresh.select(audited(ctx, col(hkName), Nil, attrFields.map { case (_, t) => col(t) }): _*)
   }
+
+  /** A vault row in [[VaultSchemas]] column order: `hk, load_dts,
+    * <satHead>, record_source, run_id, <payload>` (`satHead` is a
+    * satellite's `del_flag, hash_diff`, empty for hubs and links). The
+    * ONE place the audit columns are built. `load_dts` and `run_id` are
+    * bound by reference ([[graft.functions.RunConstant]]), not inlined as
+    * literals, so a load plan compiles once and every later flow, and
+    * every streaming micro-batch (run_id = batch id), reuses its classes. */
+  private def audited(ctx: LoadContext, hk: Column, satHead: Seq[Column], payload: Seq[Column]): Seq[Column] =
+    ((hk +: graft.functions.RunConstant.column(ctx.loadDts).as("load_dts") +: satHead) ++
+      (lit(ctx.recordSource).as("record_source") +:
+        graft.functions.RunConstant.column(ctx.runId).as("run_id") +: payload)).toIndexedSeq
 
   /** New-hub-rows load: distinct staged keys anti-joined against the existing
     * hub. `bkFields` maps staged source field → hub business-key column. */
@@ -411,16 +416,8 @@ object DvOps {
       .filter(
         col("__active").isNull || col("__active.del_flag") ||
           col("__active.hash_diff") =!= col("hash_diff"))
-      .select(
-        (Seq(
-          col(satHk),
-          lit(ctx.loadDts).as("load_dts"),
-          lit(false).as("del_flag"),
-          col("hash_diff"),
-          lit(ctx.recordSource).as("record_source"),
-          lit(ctx.runId).as("run_id")
-        ) ++ fields.map { case (_, t) => col(s"__p.$t").as(t) }).toIndexedSeq: _*
-      )
+      .select(audited(ctx, col(satHk), Seq(lit(false).as("del_flag"), col("hash_diff")),
+        fields.map { case (_, t) => col(s"__p.$t").as(t) }): _*)
   }
 
   /** Full-load delete detection: latest active satellite rows whose key is
@@ -511,16 +508,7 @@ object DvOps {
     // (the global override wins over this per-site preference).
     val gone = latestRows(absent, satHk, preferredShape = "hash")
       .filter(!col("del_flag"))
-    gone.select(
-      (Seq(
-        col(satHk),
-        lit(ctx.loadDts).as("load_dts"),
-        lit(true).as("del_flag"),
-        col("hash_diff"),
-        lit(ctx.recordSource).as("record_source"),
-        lit(ctx.runId).as("run_id")
-      ) ++ fields.map(col)).toIndexedSeq: _*
-    )
+    gone.select(audited(ctx, col(satHk), Seq(lit(true).as("del_flag"), col("hash_diff")), fields.map(col)): _*)
   }
 
   /** Current view: latest satellite row per key (all columns).

@@ -218,10 +218,17 @@ final class FlowExecutor(
 
   /** The staging relation a flow reads: the lake's `stg` table when the
     * metadata declares one, otherwise a session-catalog view (flows can run
-    * off curated stg_vw views exactly like the reference). */
-  def stagingDf(sourceTable: String): DataFrame =
-    if (meta.getTables(Some(sourceTable), Some("stg")).nonEmpty) lake.read("stg", sourceTable)
+    * off curated stg_vw views exactly like the reference). The `stg` table
+    * is read with the schema [[Staging.loadFile]] writes, so no Spark job
+    * infers it from the part-file footers. Not [[Lake.readOr]]: a staging
+    * table that was never written must fail the flow, not read as an empty
+    * batch that a full-load satellite would turn into a tombstone for
+    * every key. */
+  def stagingDf(sourceTable: String): DataFrame = {
+    val cols = meta.getTables(Some(sourceTable), Some("stg"))
+    if (cols.nonEmpty) spark.read.schema(Staging.schemaFor(cols)).parquet(lake.dataPath("stg", sourceTable))
     else spark.table(sourceTable)
+  }
 
   /** Load just the hubs fed by `stgTable` — the reference's standalone
     * `load_related_hubs(stg_table, run_id, record_source, load_date)`

@@ -85,12 +85,11 @@ object TextOps {
     }
   }
 
-  /** ONE definition of the train-input stages — shared with
-    * [[graft.tools.BpeTrainStress]], whose cost-decomposition bench must
-    * measure the pipeline production actually runs (r20 review): a
-    * map-side-combined word-frequency aggregation over `docsDs` (the only
-    * corpus-wide shuffle; grams are (word, count) pairs, never documents)
-    * DISK_ONLY-persisted vocab-sized — memory persistence of an unbounded
+  /** ONE definition of the train-input stages, so a cost decomposition
+    * measures the pipeline production actually runs (the sf10 one is
+    * `bench/r20_bpe_sf10.json`): a map-side-combined word-frequency
+    * aggregation over `docsDs` (the only corpus-wide shuffle; grams are
+    * (word, count) pairs, never documents) DISK_ONLY-persisted vocab-sized — memory persistence of an unbounded
     * vocab would evict under pressure and silently re-run the corpus
     * scan — then the top-`dictCap` dictionary (deterministic word
     * tiebreak) and the mass totals, each one vocab-sized job over the

@@ -24,14 +24,19 @@ import graft.core.{Json, Sessions}
   *   - `SPARK_GRAFT_EXTRA_CONF` (`k=v;k2=v2`, as in Bench): set on both sides;
   *   - `SPARK_GRAFT_AB_CONF` (`k=v;k2=v2`): every rep runs a base side, then
   *     a conf side with these set, restoring the session conf after it, so
-  *     both sides share one noise window. */
+  *     both sides share one noise window.
+  *
+  * `codegen_compiles` counts the Janino compiles during the query (the
+  * JVM-wide `CodegenMetrics` compile count, so a concurrent query in the
+  * same JVM is counted too): 0 on a warm rep means every generated class
+  * came from Spark's compiled-class cache. */
 object Prof {
   type Query = (SparkSession, String) => DataFrame
 
-  /** One query on one side of one rep: wall time, failure, job count and
-    * the per-stage record. */
+  /** One query on one side of one rep: wall time, failure, job count, the
+    * Janino compiles it caused and the per-stage record. */
   final case class Row(query: String, side: String, rep: Int, sec: Double, err: Option[String],
-      jobs: Int, stages: Seq[StageRecorder.Stage]) {
+      jobs: Int, compiles: Long, stages: Seq[StageRecorder.Stage]) {
     def tasks: Long = stages.map(_.tasks).sum
 
     def json: String = {
@@ -39,7 +44,7 @@ object Prof {
       def max(f: StageRecorder.Stage => Long): Long = stages.map(f).maxOption.getOrElse(0L)
       def mb(f: StageRecorder.Stage => Long): String = f"${StageRecorder.mb(sum(f))}%.1f"
       f"""{"q":${Json.str(query)},"side":"$side","rep":$rep,"sec":$sec%.3f,"ok":${err.isEmpty}""" +
-        f""","jobs":$jobs,"stages":${stages.size},"tasks":$tasks""" +
+        f""","jobs":$jobs,"codegen_compiles":$compiles,"stages":${stages.size},"tasks":$tasks""" +
         f""","run_s":${sum(_.runMs) / 1e3}%.2f,"cpu_s":${sum(_.cpuNs) / 1e9}%.2f""" +
         s""","input_mb":${mb(_.inputBytes)},"shuffle_write_mb":${mb(_.shuffleWriteBytes)}""" +
         s""","shuffle_read_mb":${mb(_.shuffleReadBytes)},"spill_mem_mb":${mb(_.memSpillBytes)}""" +
@@ -82,14 +87,15 @@ object Prof {
     val rec = new StageRecorder(spark.sparkContext)
     def side(rep: Int, name: String): Seq[Row] = queries.map { case (q, fn) =>
       rec.reset()
+      val c0 = compiles()
       val t0 = System.nanoTime()
       val err =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
         catch { case NonFatal(e) => Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}") }
       val sec = (System.nanoTime() - t0) / 1e9
       val jobs = rec.jobs
-      val row = Row(q, name, rep, sec, err, jobs.size, rec.stages)
-      out(f"[prof] $q side=$name rep=$rep wall=$sec%.3f s jobs=${jobs.size}")
+      val row = Row(q, name, rep, sec, err, jobs.size, compiles() - c0, rec.stages)
+      out(f"[prof] $q side=$name rep=$rep wall=$sec%.3f s jobs=${jobs.size} codegen_compiles=${row.compiles}")
       (jobs ++ row.stages.map(_.line) ++ rec.batches).foreach(l => out(s"[prof]   $l"))
       out(s"[prof] ${row.json}")
       row
@@ -98,6 +104,9 @@ object Prof {
       side(rep, "base") ++ (if (ab.isEmpty) Nil else withConf(spark, ab)(side(rep, "conf")))
     } finally rec.close()
   }
+
+  private def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Runs `body` with `kvs` set on the session, then puts back each key's
     * previous value, or unsets it if it had none. */

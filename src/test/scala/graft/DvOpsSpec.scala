@@ -344,4 +344,45 @@ class DvOpsSpec extends SparkSpec {
     val got = out.select("t_hk", "id_bk").as[(String, Long)].collect().sortBy(_._1)
     assert(got.toSeq == Seq(("hk1", 1L), ("hk3", 3L)))
   }
+
+  test("newHubRows under two load contexts compiles to the same whole-stage code") {
+    // A flow's run_id and load_dts are per-run values: inlined as literals
+    // they made every run's plan new Java source, so no run reused the
+    // compiled classes of the last. Bound by reference, only the rows differ.
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val hv = Seq((1L, "hk1"), (2L, "hk2"), (3L, "hk3")).toDF("id", "g_hk")
+    val existing = Seq("hk2").toDF("t_hk")
+    def run(c: LoadContext): (Seq[String], Set[(Timestamp, Long)]) = {
+      val out = DvOps.newHubRows(hv, existing, "g", Seq("id" -> "id_bk"), "t_hk", c)
+      // collected first: AQE plans its codegen stages as it runs them
+      val rows = out.collect().map(r => (r.getAs[Timestamp]("load_dts"), r.getAs[Long]("run_id"))).toSet
+      (codegenStringSeq(out.queryExecution.executedPlan).map(_._2).sorted, rows)
+    }
+    val (code1, rows1) = run(ctx)
+    val (code2, rows2) = run(LoadContext(ts("2026-03-04 05:06:07"), "test", 8L))
+    assert(code1.nonEmpty)
+    assert(code1 == code2)
+    assert(rows1 == Set(ts("2026-01-02 00:00:00") -> 7L))
+    assert(rows2 == Set(ts("2026-03-04 05:06:07") -> 8L))
+  }
+
+  test("run constant: equals lit on the codegen and the interpreted path, Long and Timestamp") {
+    val values = Seq[Any](7L, Long.MinValue, ts("2026-01-02 03:04:05.123456"))
+    for ((wholeStage, mode) <- Seq("true" -> "CODEGEN_ONLY", "false" -> "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try values.foreach { v =>
+        val df = spark.range(0, 4, 1, 2)
+          .select(graft.functions.RunConstant.column(v).as("c"), lit(v).as("l"))
+        assert(df.schema("c").dataType == df.schema("l").dataType)
+        assert(!df.schema("c").nullable)
+        val rows = df.collect()
+        assert(rows.length == 4)
+        assert(rows.forall(r => r.get(0) == v && r.get(1) == v), s"$mode: ${rows.toSeq}")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+  }
 }

@@ -280,6 +280,22 @@ class FlowExecutorSpec extends SparkSpec {
     assert(retry.loaded("hub_customer") == 1L)
   }
 
+  test("a staging table that was never written fails the flow instead of tombstoning every key") {
+    // Read as an empty batch, a missing stg table would make the sat_full
+    // delete detection mark every live key deleted.
+    val root = tmpDir("lake")
+    val lake = new Lake(spark, root, buckets = 4)
+    val flow = new FlowExecutor(lake, meta, HashGen.Md5)
+    val f1 = s"$root/batch1.csv"
+    writeCsv(f1, Seq("1,ann,A", "2,bob,B"))
+    assert(flow.executeFlow("customer", "unit", Some(f1)).status == "success")
+    val stg = new org.apache.hadoop.fs.Path(lake.tablePath("stg", "customer"))
+    stg.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(stg, true)
+    val r = flow.executeFlow("customer", "unit", None)
+    assert(r.status == "failure", r)
+    assert(lake.read("dv", "hsat_customer").filter(col("del_flag")).count() == 0L)
+  }
+
   test("per-entity loads: loadRelatedHubs/Links/Sats load exactly their family") {
     val root = tmpDir("lake")
     val lake = new Lake(spark, root, buckets = 4)

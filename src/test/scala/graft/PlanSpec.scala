@@ -528,8 +528,9 @@ class PlanSpec extends SparkSpec {
       s.range(0, 1000, 1, 4).toDF()
     }
     try {
+      val printed = scala.collection.mutable.ArrayBuffer.empty[String]
       val rows = graft.tools.Prof.run(spark, dir, Seq("probe" -> probe), reps = 2,
-        ab = Seq(preset -> "over", unset -> "on"), out = _ => ())
+        ab = Seq(preset -> "over", unset -> "on"), out = printed += _)
       assert(rows.map(r => (r.side, r.rep)) == Seq(("base", 1), ("conf", 1), ("base", 2), ("conf", 2)))
       val (base, conf) = (Some("orig") -> None, Some("over") -> Some("on"))
       assert(seen == Seq(base, conf, base, conf))
@@ -538,6 +539,12 @@ class PlanSpec extends SparkSpec {
       // the recorder drained the listener bus before the rows were built
       assert(rows.forall(r => r.err.isEmpty && r.jobs > 0 && r.tasks > 0), rows.map(_.json))
       assert(rows.head.json.startsWith("""{"q":"probe","side":"base","rep":1,"""), rows.head.json)
+      // each header and JSON row carries the query's Janino compile count,
+      // and rep 2 runs on the classes rep 1 compiled
+      val headers = printed.filter(_.startsWith("[prof] probe side="))
+      assert(headers.size == 4 && headers.forall(_.contains(" codegen_compiles=")), headers)
+      assert(rows.forall(r => r.json.contains(s""""codegen_compiles":${r.compiles},""")), rows.map(_.json))
+      assert(rows.filter(_.rep == 2).map(_.compiles) == Seq(0L, 0L), rows.map(_.json))
     } finally spark.conf.unset(preset)
   }
 }
