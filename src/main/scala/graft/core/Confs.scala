@@ -81,9 +81,10 @@ object Confs {
     * bucket-prune the existing vault table to the staged batch's hk
     * buckets (`Lake.readOrProbe`). Below it a full scan is cheaper than
     * the extra driver action that computes the staged bucket set; above
-    * it the probe cost follows the BATCH's bucket span instead of vault
+    * it the probe's scan follows the BATCH's bucket span instead of vault
     * size — the difference between O(batch) and O(vault) per micro-batch
-    * at 100 TB. 0 = always prune (tests). */
+    * at 100 TB. Appends never list the table, so the gate governs only the
+    * probe. 0 = always prune (tests). */
   def probePruneMinBytes(conf: RuntimeConfig): Long = {
     val b = long(conf, ProbePruneMinBytesKey, 256L << 20)
     require(b >= 0L, s"$ProbePruneMinBytesKey must be >= 0, got $b")

@@ -47,8 +47,8 @@ final case class TableLayout(bucketCount: Int, keyCol: String, sortBy: Seq[Strin
   * describes — table root for the flat layout, generation dir after a
   * compaction, so a generation commit atomically publishes data AND
   * layout). All bucket-coupled operations (pruned probes, bucketed
-  * appends, point lookups, span-bounded listings) resolve the count from
-  * the record, so a session-conf drift can no longer mis-prune silently —
+  * appends, point lookups) resolve the count from the record, so a
+  * session-conf drift can no longer mis-prune silently —
   * it is noted once per table on stderr and the persisted count governs.
   * [[rebucket]] is the explicit way to change a table's count.
   */
@@ -230,16 +230,52 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * (bounded by the table's bucket count). A batch spanning every bucket
     * falls back to the unpruned scan. NOT for delete detection
     * (DvOps.satDeleteRows): there the ABSENT keys are the signal, and
-    * pruning would mass-delete the unscanned buckets. */
+    * pruning would mass-delete the unscanned buckets. Bucket derivation
+    * uses the TABLE's persisted count ([[tableBuckets]]), so a
+    * session-conf drift cannot mis-prune.
+    *
+    * `gate`: a caller that already evaluated [[probeWouldEngage]] this
+    * batch (the streaming sinks do, to decide hash-view caching BEFORE the
+    * bucket collect runs) passes the decision here — the gate's
+    * estBytesKnown walks the optimized plan, a per-call driver optimizer
+    * pass worth skipping twice per micro-batch. None = evaluate here. */
   def readOrProbe(
       layer: String, name: String, schema: StructType,
-      staged: DataFrame, stagedKey: org.apache.spark.sql.Column): DataFrame =
-    readOrProbeWithSpan(layer, name, schema, staged, stagedKey)._1
+      staged: DataFrame, stagedKey: org.apache.spark.sql.Column,
+      gate: Option[Boolean] = None): DataFrame = {
+    val full = readOr(layer, name, schema)
+    if (!exists(layer, name)) return full
+    val engaged = gate.getOrElse {
+      val known = Tables.estBytesKnown(full)
+      val e = known.exists(_ >= Confs.probePruneMinBytes(spark.conf))
+      Tables.gateTrace(spark.conf, s"readOrProbe($layer.$name)", e, known)
+      e
+    }
+    if (!engaged) return full
+    val n = tableBuckets(layer, name)
+    val buckets = staged.select(bucketOfN(stagedKey, n).as("__b")).distinct()
+      .collect().map(_.getLong(0))
+    if (buckets.length >= n) return full
+    val raw = spark.read.schema(schema).parquet(dataPath(layer, name))
+    // The partition column only exists once a bucketed append has
+    // landed: a table pre-created by initVault holds a single empty
+    // FLAT part file, and filtering an undiscovered column is an
+    // analysis error, not a no-op — fall back to the unpruned scan
+    // (a forced-open gate is the only way here before first data).
+    if (!raw.columns.contains("hk_bucket")) full
+    else raw
+      // predicate on the DISCOVERED partition column, applied before
+      // the imposed-schema select drops it — evaluated driver-side by
+      // the file index, so only the staged buckets' files are read
+      // (ProbePruneSpec pins inputFiles shrink + result equality)
+      .filter(col("hk_bucket").cast("long").isin(buckets.map(java.lang.Long.valueOf): _*))
+      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+  }
 
-  /** True when [[readOrProbeWithSpan]] would engage the bucket-pruned probe
+  /** True when [[readOrProbe]] would engage the bucket-pruned probe
     * for this table (exists + above the size gate). Callers use it to
     * decide whether materializing a shared input pays: above the gate the
-    * span distinct-collect is a SECOND action over the staged batch (the
+    * bucket distinct-collect is a SECOND action over the staged batch (the
     * streaming sinks cache their per-batch hash view for it); below it the
     * append is the only action and a cache is pure overhead (measured
     * +0.2–0.4 s per micro-batch on the KB-scale driver bench rows). */
@@ -248,70 +284,15 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       Tables.estBytesKnown(readOr(layer, name, schema))
         .exists(_ >= Confs.probePruneMinBytes(spark.conf))
 
-  /** [[readOrProbe]] also returning the staged batch's bucket span when the
-    * prune engaged (None otherwise: table absent, under the size gate, or a
-    * batch spanning every bucket). The span is ONE tiny distinct-collect
-    * over the staged keys (≤ the table's bucket count), and returning it
-    * lets the flow executor pay that job once per load and reuse it for the
-    * counted append's listing diff ([[appendIncrementBucketed]]) — the
-    * probe scan and the listing are bounded by the SAME set by
-    * construction. Bucket derivation uses the TABLE's persisted count
-    * ([[tableBuckets]]), so a session-conf drift cannot mis-prune.
-    *
-    * `gate`: a caller that already evaluated [[probeWouldEngage]] this
-    * batch (the streaming sinks do, to decide hash-view caching BEFORE the
-    * span's action runs) passes the decision here — the gate's
-    * estBytesKnown walks the optimized plan, a per-call driver optimizer
-    * pass worth skipping twice per micro-batch. None = evaluate here. */
-  def readOrProbeWithSpan(
-      layer: String, name: String, schema: StructType,
-      staged: DataFrame, stagedKey: org.apache.spark.sql.Column,
-      gate: Option[Boolean] = None): (DataFrame, Option[Array[Long]]) = {
-    val full = readOr(layer, name, schema)
-    if (!exists(layer, name)) return (full, None)
-    val engaged = gate.getOrElse {
-      val known = Tables.estBytesKnown(full)
-      val e = known.exists(_ >= Confs.probePruneMinBytes(spark.conf))
-      Tables.gateTrace(spark.conf, s"readOrProbe($layer.$name)", e, known)
-      e
-    }
-    if (!engaged) (full, None)
-    else {
-      val n = tableBuckets(layer, name)
-      val buckets = staged.select(bucketOfN(stagedKey, n).as("__b")).distinct()
-        .collect().map(_.getLong(0))
-      if (buckets.length >= n) (full, None)
-      else {
-        val raw = spark.read.schema(schema).parquet(dataPath(layer, name))
-        // The partition column only exists once a bucketed append has
-        // landed: a table pre-created by initVault holds a single empty
-        // FLAT part file, and filtering an undiscovered column is an
-        // analysis error, not a no-op — fall back to the unpruned scan
-        // (a forced-open gate is the only way here before first data).
-        if (!raw.columns.contains("hk_bucket")) (full, None)
-        else {
-          val pruned = raw
-            // predicate on the DISCOVERED partition column, applied before
-            // the imposed-schema select drops it — evaluated driver-side by
-            // the file index, so only the staged buckets' files are read
-            // (ProbePruneSpec pins inputFiles shrink + result equality)
-            .filter(col("hk_bucket").cast("long").isin(buckets.map(java.lang.Long.valueOf): _*))
-            .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-          (pruned, Some(buckets))
-        }
-      }
-    }
-  }
-
   /** Lazy recursive iterator of the parquet leaf FileStatuses under `p` —
-    * THE tree walk every lake metadata operation shares (counted-append
-    * diff, empty-first-append probe, compact's count + per-bucket bytes).
-    * ONE listStatus per directory, reusing its FileStatus entries for the
-    * isDirectory/size checks: a per-entry getFileStatus re-fetch is one
-    * extra filesystem RPC per file, a real metadata cost on remote stores.
-    * Callers guard `p`'s existence — inner directories came from a parent
-    * listStatus, so re-checking them would pay one extra RPC per
-    * directory. Laziness lets any-parquet probes short-circuit at the
+    * THE tree walk every lake metadata operation shares (compact's count +
+    * per-bucket bytes, the staged and source-unchanged checks, expire's
+    * orphan check). ONE listStatus per directory, reusing its FileStatus
+    * entries for the isDirectory/size checks: a per-entry getFileStatus
+    * re-fetch is one extra filesystem RPC per file, a real metadata cost on
+    * remote stores. Callers guard `p`'s existence — inner directories came
+    * from a parent listStatus, so re-checking them would pay one extra RPC
+    * per directory. Laziness lets any-parquet probes short-circuit at the
     * first leaf. */
   private def parquetLeaves(
       fs: org.apache.hadoop.fs.FileSystem, p: Path): Iterator[org.apache.hadoop.fs.FileStatus] =
@@ -397,97 +378,6 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * XxHash64 codepath Spark executes, evaluated without launching a job. */
   def bucketOfValue(value: String): Long = bucketOfValueN(value, bucketCount)
 
-  /** Append an increment computed AGAINST a table to that same table and
-    * return rows appended. ONE execution of the increment plan (the same
-    * single-pass write as [[appendIncrementBucketedUncounted]]); the count
-    * comes from the parquet FOOTERS of the files the write produced
-    * (listing diff around the write — part file names are unique, and the
-    * lake's single-writer-per-table contract means nothing else appends
-    * concurrently). Footer reads are driver-side metadata (no job, no
-    * scan): this replaced a cache()+count()+write shape whose cache
-    * materialized the ENTIRE increment in executor storage just to count
-    * it — a bench-visible extra action per flow load and, at production
-    * batch sizes, a memory/disk copy of the whole batch. The footer count
-    * is also strictly more truthful: it counts what was WRITTEN.
-    *
-    * `listingSpan` bounds the listing diff to those `hk_bucket=` subtrees
-    * (the [[readOrProbeWithSpan]] value the flow executor already computed for the
-    * probe scan): without it each counted append walks EVERY file in the
-    * table twice — O(vault-files) driver metadata per batch, the same cost
-    * class the bucket-pruned probe eliminated for scans. With it the walk
-    * is bounded by the BATCH's bucket span. CONTRACT: the span must cover
-    * every bucket of `rows`' `keyCol` values — true for hub/link/sat-delta
-    * increments (their keys ⊆ the staged batch's keys the span came from);
-    * NOT for delete detection, whose tombstone keys come from the vault
-    * side — pass None there (FlowExecutor.appendCounted). A file written
-    * outside the span would be missed by the diff and silently undercounted,
-    * so the span is the caller's proof obligation, pinned by ScratchSpec. */
-  def appendIncrementBucketed(
-      rows: DataFrame, layer: String, name: String, keyCol: String,
-      listingSpan: Option[Array[Long]] = None): Long = {
-    // the CURRENT data dir: post-compaction appends land (and are counted)
-    // inside the committed generation, not the table root
-    val path = new Path(dataPath(layer, name))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // The exists() guard runs ONLY at each root (a span bucket dir may not
-    // exist yet); see parquetLeaves for the inner-directory RPC economics.
-    def files(root: Path): Iterator[Path] =
-      if (fs.exists(root)) parquetLeaves(fs, root).map(_.getPath) else Iterator.empty
-    val roots: Seq[Path] = listingSpan match {
-      case Some(buckets) => buckets.toIndexedSeq.map(b => new Path(path, s"hk_bucket=$b"))
-      case None          => Seq(path)
-    }
-    val before = roots.iterator.flatMap(files).toSet
-    appendIncrementBucketedUncounted(rows, layer, name, keyCol)
-    (roots.iterator.flatMap(files).toSet -- before).iterator.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(f, spark.sparkContext.hadoopConfiguration)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
-
-  /** [[appendIncrementBucketed]] for callers that don't need the row count
-    * (the streaming DV sinks): ONE pass — the increment plan feeds the
-    * bucketed write directly, no cache+count+recompute. The extra action
-    * was a measurable slice of each micro-batch's addBatch at replay scale
-    * (r15 profile; BASELINE.md multi-batch floor paragraph).
-    *
-    * Read-own-target safety (the increment plan typically SCANS this same
-    * table — the satellite delta probes existing history) rests on the
-    * LISTING-SNAPSHOT invariant, pinned by ScratchSpec "self-reading
-    * uncounted append": the scan's file set is frozen in the
-    * InMemoryFileIndex built when [[readOr]] resolved the relation —
-    * driver-side, strictly BEFORE this write job starts — and the write
-    * publishes new part files only at job commit (tasks write under
-    * `_temporary`, never visible to a listing snapshot taken earlier). So
-    * the scan reads exactly the pre-append files: no new-file double-read,
-    * no deleted-file FILE_NOT_EXIST. The one hazard is an increment built
-    * from a STALE DataFrame (resolved before an intervening append by a
-    * concurrent writer) — out of scope: the lake's single-writer-per-table
-    * contract (flow executor / one streaming query per sink table).
-    *
-    * An empty increment appended to an EXISTING table writes no part files
-    * (per-partition writers skip empty tasks) and is harmless; on the
-    * FIRST append an empty write leaves a part-file-less parquet dir that
-    * breaks later reads — detected by a post-write listing and deleted
-    * (layout record included), so readOr keeps seeing "table absent". (A
-    * write-action `observe()` was tried first: V1 write commands don't
-    * surface CollectMetrics, `Observation.get` returns an empty map.) */
-  def appendIncrementBucketedUncounted(rows: DataFrame, layer: String, name: String, keyCol: String): Unit = {
-    val existed = exists(layer, name)
-    appendBucketed(rows, layer, name, keyCol)
-    if (!existed) {
-      val path = new Path(tablePath(layer, name))
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // laziness: hasNext stops at the first parquet leaf
-      if (fs.exists(path) && !parquetLeaves(fs, path).hasNext) {
-        fs.delete(path, true)
-        refresh(layer, name)
-      }
-    }
-  }
-
   /** Once-per-table stderr note when a layout record's bucket count differs
     * from this lake's configured count: not an error (the record governs,
     * results stay correct), but drift usually means a misconfigured
@@ -521,8 +411,34 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * KB-sized files). One exchange keyed on the bucket column writes
     * exactly one file per non-empty bucket per append — the bucketed-table
     * invariant compaction relies on; at production scale the bucket count,
-    * not the cluster width, is the correct append parallelism. */
-  def appendBucketed(df: DataFrame, layer: String, name: String, keyCol: String): Unit = {
+    * not the cluster width, is the correct append parallelism.
+    *
+    * Returns the rows written, read from the write command's own metrics
+    * ([[writeParquet]]): no listing, no footer read, and the same count a
+    * footer sum over the new files gives (ScratchSpec checks that on every
+    * counted append).
+    *
+    * Read-own-target safety (the increment plan typically SCANS this same
+    * table — the satellite delta probes existing history) rests on the
+    * LISTING-SNAPSHOT invariant, pinned by ScratchSpec "self-reading
+    * uncounted append": the scan's file set is frozen in the
+    * InMemoryFileIndex built when [[readOr]] resolved the relation —
+    * driver-side, strictly BEFORE this write job starts — and the write
+    * publishes new part files only at job commit (tasks write under
+    * `_temporary`, never visible to a listing snapshot taken earlier). So
+    * the scan reads exactly the pre-append files: no new-file double-read,
+    * no deleted-file FILE_NOT_EXIST. The one hazard is an increment built
+    * from a STALE DataFrame (resolved before an intervening append by a
+    * concurrent writer) — out of scope: the lake's single-writer-per-table
+    * contract (flow executor / one streaming query per sink table).
+    *
+    * An empty increment appended to an EXISTING table writes no part files
+    * (per-partition writers skip empty tasks) and is harmless; on the
+    * FIRST append an empty write leaves a `_SUCCESS`-only directory that
+    * breaks later reads — the write reports 0 files, and the directory is
+    * deleted (no layout record is written), so readOr keeps seeing "table
+    * absent". */
+  def appendBucketed(df: DataFrame, layer: String, name: String, keyCol: String): Long = {
     val res = resolution(layer, name)
     res.layout.foreach { lo =>
       if (lo.keyCol != keyCol)
@@ -535,21 +451,50 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     val n = res.layout.map(_.bucketCount).getOrElse(bucketCount)
     val dataDir = new Path(res.dataDir)
     val fs = fsOf(dataDir)
+    val existed = exists(layer, name)
     if (res.layout.isEmpty)
       // legacy (pre-record) table: refuse when the disk disproves this
       // lake's count before we bless it into a record
       verifyLegacyAdoption(layer, name, fs, dataDir, keyCol, n)
-    val bucketed = df.withColumn("hk_bucket", bucketOfN(col(keyCol), n))
-    bucketed
-      .repartition(n, col("hk_bucket"))
-      // resolved dir, not the table root: post-compaction appends belong to
-      // the committed generation (the root's flat files are superseded data
-      // retained only for in-flight readers)
-      .write.mode("append").partitionBy("hk_bucket").parquet(res.dataDir)
+    // resolved dir, not the table root: post-compaction appends belong to
+    // the committed generation (the root's flat files are superseded data
+    // retained only for in-flight readers)
+    val (rows, files) = writeParquet(
+      df.withColumn("hk_bucket", bucketOfN(col(keyCol), n)).repartition(n, col("hk_bucket")),
+      res.dataDir, Seq("hk_bucket"))
+    if (files == 0L && !existed) {
+      fs.delete(dataDir, true)
+      refresh(layer, name)
+      return 0L
+    }
     if (res.layout.isEmpty)
       writeLayout(fs, dataDir, TableLayout(n, keyCol, Nil))
     refresh(layer, name)
     maybeExpireAged(layer, name)
+    rows
+  }
+
+  /** Appends `df` as parquet under `dir` (partitioned by
+    * `partitionColumns`) and returns (rows, files) written, read from the
+    * write command's own metrics. It plans the write exactly as
+    * `df.write.mode("append").partitionBy(...).parquet(dir)` does, but keeps
+    * the executed plan: the `DataWritingCommandExec` in it carries
+    * `numOutputRows` and `numFiles`, which Spark sets on the driver when the
+    * write job commits, before this call returns — no listener, no bus
+    * drain, and each call reads only its own write. */
+  private def writeParquet(df: DataFrame, dir: String, partitionColumns: Seq[String]): (Long, Long) = {
+    import org.apache.spark.sql.catalyst.plans.logical.CommandResult
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    val plan = org.apache.spark.sql.execution.datasources.DataSource(
+      spark, "parquet", paths = Seq(dir), partitionColumns = partitionColumns)
+      .planForWriting(org.apache.spark.sql.SaveMode.Append, df.queryExecution.analyzed)
+    val qe = spark.sessionState.executePlan(plan)
+    qe.assertCommandExecuted()
+    val metrics = qe.commandExecuted
+      .collectFirst { case r: CommandResult => r.commandPhysicalPlan }
+      .flatMap(Lake.PlanWalk.collectFirst(_) { case w: DataWritingCommandExec => w.metrics })
+      .getOrElse(throw new IllegalStateException(s"no write command in the executed plan of $dir"))
+    (metrics("numOutputRows").value, metrics("numFiles").value)
   }
 
   /** Adoption check for a RECORD-LESS legacy table about to be blessed into
@@ -1033,7 +978,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       val df = spark.read.option("mergeSchema", "true").parquet(curDir.toString)
       val staged = new Path(root, s"${Lake.GenPrefix}$nextN")
       fs.delete(staged, true)
-      if (df.columns.contains("hk_bucket")) {
+      val (_, after) = if (df.columns.contains("hk_bucket")) {
         val target = Confs.compactTargetBytes(spark.conf)
         // per-bucket compressed bytes from the SAME leaves the file count
         // walked (a leaf's bucket = its parent dir's hk_bucket= value); an
@@ -1065,17 +1010,19 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
           coalesce(
             element_at(typedLit(chunksOf), col("hk_bucket").cast("long")),
             lit(1)))
-        sortedWithin(
-          df.withColumn("__chunk", chunk)
-            .repartition(totalChunks, col("hk_bucket"), col("__chunk")), sortBy)
-          .drop("__chunk")
-          .write.partitionBy("hk_bucket").parquet(staged.toString)
+        writeParquet(
+          sortedWithin(
+            df.withColumn("__chunk", chunk)
+              .repartition(totalChunks, col("hk_bucket"), col("__chunk")), sortBy)
+            .drop("__chunk"),
+          staged.toString, Seq("hk_bucket"))
       }
       // inputFiles length instead of df.rdd.getNumPartitions (the latter
       // materializes the physical RDD driver-side); compaction targets ~8
       // input files per output file.
-      else sortedWithin(df.coalesce(math.max(1, df.inputFiles.length / 8)), sortBy)
-        .write.parquet(staged.toString)
+      else writeParquet(
+        sortedWithin(df.coalesce(math.max(1, df.inputFiles.length / 8)), sortBy),
+        staged.toString, Nil)
       // the layout record travels WITH the generation it describes (one
       // marker publishes data + layout); the rewrite's sort becomes the
       // recorded one
@@ -1094,7 +1041,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       fs.create(new Path(staged, Lake.CommitMarker), /* overwrite = */ false).close()
       refresh(layer, name)
       onGenerationSwap(layer, name)
-      (before, parquetLeaves(fs, staged).size.toLong)
+      (before, after)
     }
   }
 
@@ -1110,7 +1057,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * generation — the explicit (and only) way a table's bucket count
     * changes. A 16-bucket vault that grows 100× otherwise keeps
     * multi-TB-granularity probe pruning forever: bucket span is the unit
-    * of probe/lookup/append-listing cost, so the count must be able to
+    * of probe/lookup cost, so the count must be able to
     * follow data volume. Same claim, staging, verify-then-marker commit,
     * and retention posture as [[compact]]; the staged generation's layout
     * record carries the new count, so the one marker create atomically
@@ -1162,11 +1109,12 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       val dataCols = df.columns.filterNot(_ == "hk_bucket").toIndexedSeq
       val chunk = pmod(xxhash64(dataCols.map(col): _*), lit(chunksPerBucket))
       val effSort = if (sortBy.nonEmpty) sortBy else layout.map(_.sortBy).getOrElse(Nil)
-      sortedWithin(
-        df.withColumn("__chunk", chunk)
-          .repartition(totalChunks, col("hk_bucket"), col("__chunk")), effSort)
-        .drop("__chunk")
-        .write.partitionBy("hk_bucket").parquet(staged.toString)
+      val (_, after) = writeParquet(
+        sortedWithin(
+          df.withColumn("__chunk", chunk)
+            .repartition(totalChunks, col("hk_bucket"), col("__chunk")), effSort)
+          .drop("__chunk"),
+        staged.toString, Seq("hk_bucket"))
       writeLayout(fs, staged, TableLayout(newBuckets, key, effSort))
       Lake.beforeCommitHook(s"$layer.$name")
       // same concurrent-append detection as compact's
@@ -1175,7 +1123,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       fs.create(new Path(staged, Lake.CommitMarker), /* overwrite = */ false).close()
       refresh(layer, name)
       onGenerationSwap(layer, name)
-      (before, parquetLeaves(fs, staged).size.toLong)
+      (before, after)
     }
   }
 
@@ -1445,6 +1393,9 @@ object Lake {
   val LoadClaim = "_graft_loading"
 
   private[core] final case class Resolution(dataDir: String, layout: Option[TableLayout])
+
+  /** Walks executed plans through AQE wrappers and query stages. */
+  private object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
   /** JVM-wide (data dir, layout) resolution cache keyed by table path —
     * shared across Lake instances over the same root so any instance's

@@ -297,14 +297,9 @@ final class FlowExecutor(
       // built — its file listing pins at construction.
       val n = lake.withLoadClaim("dv", target, "hubLoad") {
         insideLoadClaimHook(target)
-        // ONE span computation serves the bucket-pruned probe scan AND the
-        // counted append's listing diff (Lake.readOrProbeWithSpan doc): new
-        // hub keys ⊆ staged keys, so the span covers every bucket the append
-        // writes.
-        val (existing, span) =
-          lake.readOrProbeWithSpan("dv", target, existingSchema, hv, col(s"${group}_hk"))
+        val existing = lake.readOrProbe("dv", target, existingSchema, hv, col(s"${group}_hk"))
         val rows = DvOps.newHubRows(hv, existing, group, bkFields, hkName, ctx)
-        appendCounted(rows, target, hkName, span)
+        lake.appendBucketed(rows, "dv", target, hkName)
       }
       // several bk groups may feed one hub (self-referencing entities) —
       // accumulate, don't overwrite
@@ -331,12 +326,10 @@ final class FlowExecutor(
       // load claim spanning probe construction + append (hubLoads doc)
       val n = lake.withLoadClaim("dv", target, "linkLoad") {
         insideLoadClaimHook(target)
-        // shared span: probe scan + counted-append listing
-        // (Lake.readOrProbeWithSpan doc)
-        val (existing, span) = lake.readOrProbeWithSpan("dv", target,
+        val existing = lake.readOrProbe("dv", target,
           StructType(StructField(hkName, StringType) :: Nil), hv, col(s"${group}_hk"))
         val rows = DvOps.newLinkRows(hv, existing, group, legFields, hkName, ctx)
-        appendCounted(rows, target, hkName, span)
+        lake.appendBucketed(rows, "dv", target, hkName)
       }
       loaded += target -> (loaded.getOrElse(target, 0L) + n)
     }
@@ -370,23 +363,18 @@ final class FlowExecutor(
       // tombstone scan a vault state neither run staged.
       val n = lake.withLoadClaim("dv", satName, "satLoad") {
         insideLoadClaimHook(satName)
-        // DELTA probe: bucket-pruned above the gate, span shared with the
-        // counted append's listing diff. The sat_full delete detection below
-        // stays UNPRUNED by design — absent keys are its signal
-        // (Lake.readOrProbe doc).
-        val (existing, span) =
-          lake.readOrProbeWithSpan("dv", satName, satSchema, hv, col(satT.sourceField))
+        // DELTA probe: bucket-pruned above the gate. The sat_full delete
+        // detection below stays UNPRUNED by design — absent keys are its
+        // signal (Lake.readOrProbe doc).
+        val existing = lake.readOrProbe("dv", satName, satSchema, hv, col(satT.sourceField))
         val newRows = DvOps.satNewRows(hv, existing, satT.sourceField, hashdiffField, fields, satHk, ctx)
-        var m = appendCounted(newRows, satName, satHk, span)
+        var m = lake.appendBucketed(newRows, "dv", satName, satHk)
         if (satT.transferType == "sat_full") {
           // Delete detection must see the vault INCLUDING this run's inserts
           // (reference runs the two INSERTs sequentially on the same table).
-          // NO listing span here: tombstone keys come from the VAULT side
-          // (keys absent from the batch), so their buckets can lie outside
-          // the staged span — Lake.appendIncrementBucketed contract.
           val afterNew = lake.readOr("dv", satName, satSchema)
           val delRows = DvOps.satDeleteRows(hv, afterNew, satT.sourceField, fields.map(_._2), satHk, ctx)
-          m += appendCounted(delRows, satName, satHk)
+          m += lake.appendBucketed(delRows, "dv", satName, satHk)
         }
         m
       }
@@ -394,11 +382,6 @@ final class FlowExecutor(
     }
     loaded
   }
-
-  private def appendCounted(
-      rows: DataFrame, target: String, keyCol: String,
-      listingSpan: Option[Array[Long]] = None): Long =
-    lake.appendIncrementBucketed(rows, "dv", target, keyCol, listingSpan)
 
   /** Test seam for the concurrent-loader race proof: invoked with the
     * target table name INSIDE that table's load claim, after acquire and

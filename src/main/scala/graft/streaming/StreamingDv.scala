@@ -80,12 +80,12 @@ object StreamingDv {
     *  - the probe gate evaluated once per batch and MONOTONE across
     *    batches (appends only grow the sink table — once it clears, later
     *    batches skip the optimizer-pass stats walk);
-    *  - the hash view cached ONLY above the gate, where the span
+    *  - the hash view cached ONLY above the gate, where the bucket
     *    distinct-collect is a second ACTION over the batch; under the gate
     *    the append is the only action and a cache is pure overhead
     *    (Lake.probeWouldEngage doc); unpersisted in the finally;
     *  - bucket-pruned existing-probe (Lake.readOrProbe doc), row builder,
-    *    uncounted bucketed append, crash-window test hook. */
+    *    bucketed append, crash-window test hook. */
   private def dvSink(
       lake: Lake,
       staged: DataFrame,
@@ -123,9 +123,9 @@ object StreamingDv {
           // create+delete per micro-batch — noise against the batch's own
           // jobs (the per-batch checkpoint machinery alone is ~0.13 s).
           lake.withLoadClaim("dv", table, "streamSink") {
-            val existing = lake.readOrProbeWithSpan("dv", table, schema,
-              hv, org.apache.spark.sql.functions.col(probeKey), gate = Some(cacheHv))._1
-            lake.appendIncrementBucketedUncounted(rows(hv, existing, ctx), "dv", table, keyColName)
+            val existing = lake.readOrProbe("dv", table, schema,
+              hv, org.apache.spark.sql.functions.col(probeKey), gate = Some(cacheHv))
+            lake.appendBucketed(rows(hv, existing, ctx), "dv", table, keyColName)
           }
           afterAppendHook(table, batchId)
         } finally if (cacheHv) { hv.unpersist(); () }

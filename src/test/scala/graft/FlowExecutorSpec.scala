@@ -80,11 +80,10 @@ class FlowExecutorSpec extends SparkSpec {
   }
 
   test("executeFlow under a forced-open probe gate: span-shared pruned loads equal the gated run") {
-    // Forces spark.graft.probePrune.minBytes=0 so every probe scan AND every
-    // counted append runs the bucket-span path (Lake.readOrProbeWithSpan shared between
-    // the probe scan and appendIncrementBucketed), including the sat_full delete
-    // detection that must stay span-less. Loaded counts and final vault state
-    // must match the default-gate run above exactly.
+    // Forces spark.graft.probePrune.minBytes=0 so every probe scan runs the
+    // bucket-pruned path (Lake.readOrProbe), while the sat_full delete
+    // detection stays unpruned. Loaded counts and final vault state must
+    // match the default-gate run above exactly.
     val root = tmpDir("lake_span_flow")
     val lake = new Lake(spark, root, buckets = 4)
     val flow = new FlowExecutor(lake, meta, HashGen.Md5)
@@ -102,8 +101,8 @@ class FlowExecutorSpec extends SparkSpec {
       val r2 = flow.executeFlow("customer", "unit", Some(f1),
         Some(Timestamp.valueOf("2026-01-02 00:00:00")), forceLoad = true)
       assert(r2.loaded == Map("hub_customer" -> 0L, "hsat_customer" -> 0L))
-      // change + new + delete: counted appends bounded by each batch's span,
-      // delete tombstone (vault-side key 3) counted via the span-less path
+      // change + new + delete: the delete tombstone (vault-side key 3, in a
+      // bucket the staged batch may not touch) is counted too
       val r3 = flow.executeFlow("customer", "unit", Some(f2),
         Some(Timestamp.valueOf("2026-01-03 00:00:00")))
       assert(r3.loaded("hub_customer") == 1L)

@@ -73,17 +73,18 @@ class LakeLayoutSpec extends SparkSpec {
       val staged = inB0.take(5).toDF("hk")
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("hk", org.apache.spark.sql.types.StringType)))
-      val (pruned, span) = drifted.readOrProbeWithSpan("dv", "t", schema, staged, col("hk"))
-      assert(span.exists(_.sameElements(Array(b0))),
-        s"span under the TABLE count: ${span.map(_.mkString(",")).getOrElse("<none>")}")
+      val pruned = drifted.readOrProbe("dv", "t", schema, staged, col("hk"))
+      val read = pruned.select(input_file_name()).distinct().as[String].collect()
+      assert(read.nonEmpty && read.forall(_.contains(s"hk_bucket=$b0/")),
+        s"pruned scan under the TABLE count reads only hk_bucket=$b0: ${read.mkString(",")}")
       val got = pruned.as[String].collect().toSet
       assert(got == inB0.toSet,
         s"pruned probe missed ${(inB0.toSet -- got).mkString(",")} (drifted derivation?)")
     }
 
     // appends from the drifted session land in the TABLE's bucket layout
-    assert(drifted.appendIncrementBucketed(
-      Seq(("newkey1", 100L), ("newkey2", 101L)).toDF("hk", "v"), "dv", "t", "hk") == 2L)
+    assert(ScratchSpec.footerCounted(drifted, "dv", "t")(drifted.appendBucketed(
+      Seq(("newkey1", 100L), ("newkey2", 101L)).toDF("hk", "v"), "dv", "t", "hk")) == 2L)
     assert(bucketDirs(drifted, "dv", "t").forall(_ < 4),
       s"drifted append escaped the 4-bucket layout: ${bucketDirs(drifted, "dv", "t")}")
     assert(drifted.lookupBucketed("dv", "t", "hk", "newkey1")
@@ -238,9 +239,12 @@ class LakeLayoutSpec extends SparkSpec {
     withConf(Confs.ProbePruneMinBytesKey, "0") {
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("hk", org.apache.spark.sql.types.StringType)))
-      val (pruned, span) = lake.readOrProbeWithSpan(
+      val pruned = lake.readOrProbe(
         "dv", "t", schema, Seq("k0_1", "k2_40").toDF("hk"), col("hk"))
-      assert(span.isDefined && span.get.forall(_ < 16))
+      // pruned: at most the two staged keys' buckets are read, all under 16
+      val read = pruned.select(input_file_name()).distinct().as[String].collect()
+        .map("hk_bucket=(\\d+)/".r.findFirstMatchIn(_).get.group(1).toInt)
+      assert(read.nonEmpty && read.length <= 2 && read.forall(_ < 16), read.mkString(","))
       // the pruned SCAN covers the staged buckets — both staged keys must
       // be visible in it (the anti-join's correctness condition)
       assert(Set("k0_1", "k2_40").subsetOf(pruned.as[String].collect().toSet))

@@ -183,7 +183,7 @@ class LoadClaimSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
       .withColumn("hk", md5(col("k").cast("string")))
-    lake.appendIncrementBucketedUncounted(df, "dv", "hub_t", "hk")
+    lake.appendBucketed(df, "dv", "hub_t", "hk")
     val (_, _) = lake.compact("dv", "hub_t") // table now generation-based
     assert(lake.tryLoadClaim("dv", "hub_t"))
     // assert on the DISK marker, not tryLoadClaim: the in-JVM registry

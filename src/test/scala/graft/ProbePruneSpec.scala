@@ -55,8 +55,8 @@ class ProbePruneSpec extends SparkSpec {
   test("pruned probe + span-counted append work unchanged on a COMPACTED (generational) table") {
     // the r18 layout: after compaction the data lives under
     // {table}/_gen-N/hk_bucket=... — the pruned probe's partition paths and
-    // the counted append's span-bounded listing must both resolve through
-    // the committed generation, not the table root
+    // the counted append's write must both resolve through the committed
+    // generation, not the table root
     val (lake, keys) = vault(buckets = 8, n = 80)
     lake.compact("dv", "hub")
     assert(lake.dataPath("dv", "hub").contains(graft.core.Lake.GenPrefix))
@@ -66,16 +66,16 @@ class ProbePruneSpec extends SparkSpec {
     val staged = (sameBucket :+ fresh).toDF("hk")
     try {
       spark.conf.set(Confs.ProbePruneMinBytesKey, "0")
-      val (pruned, span) = lake.readOrProbeWithSpan("dv", "hub", hkSchema, staged, col("hk"))
-      assert(span.exists(_.toSeq == Seq(b0)), s"span=$span")
-      def filesRead(df: DataFrame): Long = df.select(input_file_name()).distinct().count()
-      assert(filesRead(pruned) == 1L, "one bucket staged -> one generation file read")
+      val pruned = lake.readOrProbe("dv", "hub", hkSchema, staged, col("hk"))
+      val read = pruned.select(input_file_name()).distinct().as[String].collect()
+      assert(read.length == 1, "one bucket staged -> one generation file read")
+      assert(read.forall(f => f.contains(graft.core.Lake.GenPrefix) && f.contains(s"hk_bucket=$b0/")),
+        read.mkString(","))
       val anti = staged.join(pruned, Seq("hk"), "left_anti")
-      // counted append with the shared span: the listing diff must see the
-      // new file INSIDE the generation dir and count exactly the fresh row
-      val n = lake.appendIncrementBucketed(
-        anti.withColumn("v", lit(0L)).select(col("hk"), col("v")),
-        "dv", "hub", "hk", listingSpan = span)
+      // counted append: the new file lands INSIDE the generation dir, and
+      // the count is exactly the fresh row (the footer sum of that file)
+      val n = ScratchSpec.footerCounted(lake, "dv", "hub")(lake.appendBucketed(
+        anti.withColumn("v", lit(0L)).select(col("hk"), col("v")), "dv", "hub", "hk"))
       assert(n == 1L, s"counted $n")
       assert(lake.readOr("dv", "hub",
         StructType(Seq(StructField("hk", StringType),

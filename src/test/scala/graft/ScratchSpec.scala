@@ -5,6 +5,36 @@ import org.apache.spark.sql.functions._
 import graft.core.Scratch
 import graft.queries.Ann
 
+object ScratchSpec {
+  import org.apache.hadoop.fs.Path
+
+  /** Test-side reference count for a bucketed append: lists the table's
+    * parquet files before and after `append` and sums the footer row counts
+    * of the files that appeared. Fails unless `append` returned exactly that
+    * sum; returns it. Valid only while nothing else writes the table. */
+  def footerCounted(lake: graft.core.Lake, layer: String, name: String)(append: => Long): Long = {
+    val conf = lake.spark.sparkContext.hadoopConfiguration
+    val root = new Path(lake.tablePath(layer, name))
+    val fs = root.getFileSystem(conf)
+    def files(): Set[Path] =
+      if (!fs.exists(root)) Set.empty
+      else {
+        val it = fs.listFiles(root, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+          .filter(_.getName.endsWith(".parquet")).toSet
+      }
+    val before = files()
+    val n = append
+    val footers = (files() -- before).iterator.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+    org.scalatest.Assertions.assert(n == footers, s"$layer.$name: append returned $n, footers sum $footers")
+    n
+  }
+}
+
 /** Pins the cluster-portable scratch contract: every intermediate landing
   * (cc labels, frozen centroids, Verify aux) resolves under ONE root that
   * `spark.graft.scratch.dir` overrides, and the default root reproduces the
@@ -80,17 +110,17 @@ class ScratchSpec extends SparkSpec {
     // empty first increment: the single-pass write must not leave a
     // part-file-less dir behind (readOr would then explode on read)
     val empty = Seq.empty[(String, Long)].toDF("hk", "v")
-    lake.appendIncrementBucketedUncounted(empty, "dv", "t", "hk")
+    lake.appendBucketed(empty, "dv", "t", "hk")
     assert(!lake.exists("dv", "t"), "empty first append must leave the table absent")
     val schema = empty.schema
     assert(lake.readOr("dv", "t", schema).count() == 0)
     // non-empty first increment: single pass, rows readable
     val rows = Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("hk", "v")
-    lake.appendIncrementBucketedUncounted(rows, "dv", "t", "hk")
+    lake.appendBucketed(rows, "dv", "t", "hk")
     assert(lake.readOr("dv", "t", schema).as[(String, Long)].collect().sorted.toSeq
       == Seq(("a", 1L), ("b", 2L), ("c", 3L)))
     // empty SECOND append: harmless no-op on an existing table
-    lake.appendIncrementBucketedUncounted(empty, "dv", "t", "hk")
+    lake.appendBucketed(empty, "dv", "t", "hk")
     assert(lake.readOr("dv", "t", schema).count() == 3)
   }
 
@@ -98,56 +128,58 @@ class ScratchSpec extends SparkSpec {
     import spark.implicits._
     val lake = new graft.core.Lake(spark, tmpDir("lake_cnt"), buckets = 4)
     val s = Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("hk", "v").schema
+    def counted(name: String, df: org.apache.spark.sql.DataFrame): Long =
+      ScratchSpec.footerCounted(lake, "dv", name)(lake.appendBucketed(df, "dv", name, "hk"))
     // first append: creates the table, rows spread over several buckets
-    assert(lake.appendIncrementBucketed(
-      Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("hk", "v"), "dv", "t", "hk") == 3L)
+    assert(counted("t", Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("hk", "v")) == 3L)
     // second append: count must cover ONLY the new files, not the table
-    assert(lake.appendIncrementBucketed(
-      Seq(("d", 4L), ("e", 5L)).toDF("hk", "v"), "dv", "t", "hk") == 2L)
+    assert(counted("t", Seq(("d", 4L), ("e", 5L)).toDF("hk", "v")) == 2L)
     // empty increment on an existing table: zero, no phantom files
-    assert(lake.appendIncrementBucketed(
-      Seq.empty[(String, Long)].toDF("hk", "v"), "dv", "t", "hk") == 0L)
+    assert(counted("t", Seq.empty[(String, Long)].toDF("hk", "v")) == 0L)
     // empty FIRST increment: zero and the table stays absent
-    assert(lake.appendIncrementBucketed(
-      Seq.empty[(String, Long)].toDF("hk", "v"), "dv", "t2", "hk") == 0L)
+    assert(counted("t2", Seq.empty[(String, Long)].toDF("hk", "v")) == 0L)
     assert(!lake.exists("dv", "t2"))
-    assert(lake.readOr("dv", "t", s).count() == 5)
+    // a one-key increment lands in one bucket: one file, its one row
+    assert(counted("t", Seq(("zz", 7L)).toDF("hk", "v")) == 1L)
+    // a wide increment spread over many input partitions: every bucket gets
+    // one file and the count is the whole increment
+    assert(counted("t", spark.range(0, 1000, 1, 8)
+      .selectExpr("concat('w', id) as hk", "id as v")) == 1000L)
+    assert(lake.readOr("dv", "t", s).count() == 1006)
+    // compacted table: the append lands inside the committed generation and
+    // is counted there
+    lake.compact("dv", "t")
+    assert(counted("t", Seq(("post", 8L), ("post2", 9L)).toDF("hk", "v")) == 2L)
+    assert(lake.readOr("dv", "t", s).count() == 1008)
   }
 
-  test("counted append with a listing span: identical counts, and the listing really is bounded to the span") {
+  test("concurrent counted appends to two tables: each returns only its own rows") {
     import spark.implicits._
-    val lake = new graft.core.Lake(spark, tmpDir("lake_span"), buckets = 4)
-    def spanOf(df: org.apache.spark.sql.DataFrame) = Some(
-      df.select(lake.bucketOf(col("hk")).as("b")).distinct().collect().map(_.getLong(0)))
-    val schema = Seq(("a", 1L)).toDF("hk", "v").schema
-    // FIRST append with a span (table absent): creates the table, count exact
-    val first = Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("hk", "v")
-    assert(lake.appendIncrementBucketed(first, "dv", "t", "hk", spanOf(first)) == 3L)
-    // second append: only the new files counted, pre-existing span files excluded
-    val second = Seq(("d", 4L), ("e", 5L)).toDF("hk", "v")
-    assert(lake.appendIncrementBucketed(second, "dv", "t", "hk", spanOf(second)) == 2L)
-    // EMPTY increment with an empty span: zero, nothing listed
-    val empty = Seq.empty[(String, Long)].toDF("hk", "v")
-    assert(lake.appendIncrementBucketed(empty, "dv", "t", "hk", Some(Array.empty[Long])) == 0L)
-    // empty FIRST increment: zero and the table stays absent
-    assert(lake.appendIncrementBucketed(empty, "dv", "t2", "hk", Some(Array.empty[Long])) == 0L)
-    assert(!lake.exists("dv", "t2"))
-    // bounded-listing proof: a span that does NOT cover the increment's
-    // bucket leaves the diff blind to the write (row lands, count misses
-    // it) — i.e. the walk really only touches the span's subtrees. This is
-    // exactly the contract violation the Lake doc forbids callers.
-    val zzBucket = lake.bucketOfValue("zz")
-    val wrongSpan = Some(Array((zzBucket + 1) % 4))
-    assert(lake.appendIncrementBucketed(
-      Seq(("zz", 7L)).toDF("hk", "v"), "dv", "t", "hk", wrongSpan) == 0L)
-    assert(lake.readOr("dv", "t", schema).count() == 6)
+    val lake = new graft.core.Lake(spark, tmpDir("lake_cnt2"), buckets = 4)
+    val sizes = Map("a" -> 300L, "b" -> 17L)
+    (1 to 3).foreach { round =>
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val futures = sizes.toSeq.map { case (t, k) =>
+          t -> pool.submit(new java.util.concurrent.Callable[Long] {
+            def call(): Long = lake.appendBucketed(
+              spark.range(0, k).selectExpr(s"concat('$t${round}_', id) as hk", "id as v"),
+              "dv", t, "hk")
+          })
+        }
+        futures.foreach { case (t, f) =>
+          assert(f.get(5, java.util.concurrent.TimeUnit.MINUTES) == sizes(t), s"table $t round $round")
+        }
+      } finally pool.shutdown()
+    }
+    sizes.foreach { case (t, k) => assert(lake.read("dv", t).count() == 3 * k, t) }
   }
 
   test("self-reading uncounted append: the scan's listing snapshot predates the write (no double-read, no race)") {
     import spark.implicits._
     val lake = new graft.core.Lake(spark, tmpDir("lake_selfread"), buckets = 4)
     val schema = Seq(("seed", 1L)).toDF("hk", "v").schema
-    lake.appendIncrementBucketedUncounted(Seq(("seed", 1L)).toDF("hk", "v"), "dv", "t", "hk")
+    lake.appendBucketed(Seq(("seed", 1L)).toDF("hk", "v"), "dv", "t", "hk")
     // Each round's increment SCANS the target it appends to (the satellite
     // delta probe shape). The listing-snapshot invariant says every scan
     // sees exactly the pre-append file set: rows double geometrically
@@ -157,7 +189,7 @@ class ScratchSpec extends SparkSpec {
     (1 to 3).foreach { round =>
       val increment = lake.readOr("dv", "t", schema)
         .withColumn("hk", concat_ws("_", col("hk"), lit(round.toString)))
-      lake.appendIncrementBucketedUncounted(increment, "dv", "t", "hk")
+      lake.appendBucketed(increment, "dv", "t", "hk")
       assert(lake.readOr("dv", "t", schema).count() == (1L << round),
         s"after self-read append $round")
     }
@@ -181,6 +213,12 @@ class ScratchSpec extends SparkSpec {
 
     val (before, after) = lake.compact("dv", "t")
     assert(after <= before)
+    // "files after" is the write's own file count: the committed
+    // generation's parquet files, exactly
+    val genDir = new org.apache.hadoop.fs.Path(lake.dataPath("dv", "t"))
+    val genFiles = genDir.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(genDir, true)
+    assert(after == Iterator.continually(genFiles).takeWhile(_.hasNext)
+      .count(_.next().getPath.getName.endsWith(".parquet")).toLong)
 
     // post-commit: new readers resolve the committed generation
     assert(lake.dataPath("dv", "t").contains(graft.core.Lake.GenPrefix))

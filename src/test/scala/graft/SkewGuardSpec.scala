@@ -30,9 +30,9 @@ class SkewGuardSpec extends SparkSpec {
     // the exact clusterBy shape WITHOUT paying a histogram, so default
     // plans on bench/test-scale inputs are bit-identical to `off`.
     assert(graft.core.Confs.skewGuard(spark.conf) == "auto", "default mode must be auto")
-    val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
+    val before = TestJobs.count
     val g = Tables.clusterByGuarded(hotFrame, "k")
-    val after = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
+    val after = TestJobs.count
     assert(clustered(g))
     assert(after == before, s"default must sample nothing under the gate, ran ${after - before} jobs")
     assert(g.columns.toSeq == Seq("k", "v"))
@@ -67,9 +67,9 @@ class SkewGuardSpec extends SparkSpec {
     spark.conf.set("spark.graft.skewGuard", "auto")
     spark.conf.set("spark.graft.skewGuard.sampleFraction", "1.0")
     try {
-      val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
+      val before = TestJobs.count
       assert(clustered(Tables.clusterByGuarded(hotFrame, "k")), "gated: plan = clusterBy")
-      val after = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
+      val after = TestJobs.count
       assert(after == before, s"gated auto must sample nothing, ran ${after - before} jobs")
       // malformed floor names the key
       spark.conf.set(graft.core.Confs.MinBytesKey, "big")

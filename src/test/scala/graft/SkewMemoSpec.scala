@@ -13,7 +13,7 @@ import graft.core.{SkewMemo, Tables}
 class SkewMemoSpec extends SparkSpec {
   import spark.implicits._
 
-  private def jobs: Int = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
+  private def jobs: Long = TestJobs.count
 
   private def writeHot(dir: String): Unit =
     spark.range(5000)

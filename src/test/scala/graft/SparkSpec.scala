@@ -3,25 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole suite (cuts per-spec JVM spin-up). */
+/** One shared local session for the whole suite (cuts per-spec JVM spin-up),
+  * built from the standing session tuning Bench, Verify, Prof and the
+  * benchmark run (`Sessions.localBuilder`); only stall tolerance is added. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = graft.core.Sessions.localBuilder("4", "4")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-    // Explicit multi-wave exchanges (Tables.clusterBy at 4x cores = 128
-    // reduce partitions) sit UNDER the 200-partition bypass-merge default,
-    // so every map task streams through 128 open bucket files (4k
-    // concurrent buffers at 32 tasks) — measured 3-4x the map-side CPU of
-    // the serialized sort writer on dv_sat_current/dv_pit_asof at sf1
-    // (scan stage 41 -> 17 s CPU). 64 keeps genuinely-narrow one-wave
-    // exchanges (<= 32 buckets) on the cheap bypass path and routes
-    // everything wider through the single-file sort writer.
-    .config("spark.shuffle.sort.bypassMergeThreshold", "64")
     // Stall tolerance for this co-tenant host: a measured 281 s whole-JVM
     // freeze mid-suite (r21, /tmp/r21_sbt_test.log 10:11:05) blew the 120 s
     // default, the driver dropped the local executor, the heartbeater
@@ -48,6 +35,27 @@ object TestSpark {
     // that matter (local mode: driver and executor freeze together).
     .config("spark.executor.heartbeatInterval", "60s")
     .getOrCreate()
+}
+
+/** Jobs started on the shared session, counted by a listener: the status
+  * tracker keeps only `spark.ui.retainedJobs` jobs, so a count read from it
+  * stops growing at that cap. */
+object TestJobs {
+  private val started = new java.util.concurrent.atomic.AtomicLong
+  private lazy val listening: Unit = TestSpark.spark.sparkContext.addSparkListener(
+    new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        started.incrementAndGet(); ()
+      }
+    })
+
+  /** Jobs started since the first call; every event posted before the call
+    * is delivered first. */
+  def count: Long = {
+    listening
+    org.apache.spark.GraftListenerDrain.drain(TestSpark.spark.sparkContext)
+    started.get
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {
