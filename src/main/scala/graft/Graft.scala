@@ -155,17 +155,18 @@ final class Graft(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema).repartition(1), layer, name)
         Some(s"$layer.$name")
       }
-    // Staging tables are flat (truncate-and-load) → safe to expose as
-    // catalog TABLES at the stable root path; vault tables are
-    // hk-bucketed, generation-resolved dirs and get a VIEW surface
-    // instead ([[registerDvTable]] — the view text pins the CURRENT
-    // generation dir and is re-registered on swaps). Drop-then-create so
-    // a leftover registration from another lake in this session can't
-    // shadow this one (the catalog holds one `stg.<name>` per session).
+    // Staging tables are truncate-and-load, which recommits `gen-1` every
+    // time → safe to expose as catalog TABLES at that stable
+    // [[Lake.dataPath]] (not the root: a root holding two generations
+    // would read both). Vault tables get a VIEW surface instead
+    // ([[registerDvTable]] — the view text pins the CURRENT generation dir
+    // and is re-registered on swaps). Drop-then-create so a leftover
+    // registration from another lake in this session can't shadow this
+    // one (the catalog holds one `stg.<name>` per session).
     if (layer == "stg") {
       spark.sql(s"DROP TABLE IF EXISTS $layer.$name")
       spark.sql(s"CREATE TABLE $layer.$name USING PARQUET " +
-        s"LOCATION '${Graft.sqlLit(lake.tablePath(layer, name))}'")
+        s"LOCATION '${Graft.sqlLit(lake.dataPath(layer, name))}'")
     }
     made
   }

@@ -30,7 +30,7 @@ import graft.etl.{DvError, DvException}
 final case class TableLayout(bucketCount: Int, keyCol: String, sortBy: Seq[String])
 
 /** Layered lake storage for the vault: `{root}/{layer}/{table}` parquet
-  * directories, layers mirroring the reference's schemas
+  * tables, layers mirroring the reference's schemas
   * (mallarddv/db/schema_manager.py:21 — stg, dv, bv, dm, metadata).
   *
   * The reference uses a single-file DuckDB database; the Spark re-expression
@@ -40,15 +40,23 @@ final case class TableLayout(bucketCount: Int, keyCol: String, sortBy: Seq[Strin
   * vault table's scan, as well as hub/link anti-joins repartitioned on the
   * same derivation, can prune and co-locate by bucket.
   *
+  * ONE LAYOUT: a table's data lives in its highest COMMITTED generation,
+  * `{table}/gen-N/`, and the create of `gen-N/_graft_committed` is the
+  * commit ([[commitGeneration]]). A table's first write commits `gen-1`,
+  * compact/rebucket commit the next generation, and [[overwrite]] deletes
+  * the table and commits `gen-1` again. The table root holds nothing but
+  * generation dirs and the compaction claim, so a table exists exactly
+  * when it has a committed generation, and an external engine reads
+  * [[dataPath]]. A root holding data outside any generation was written by
+  * the older flat layout and is refused — there is no migration.
+  *
   * BUCKET-COUNT RESOLUTION: the constructor arg / `spark.graft.buckets`
   * conf / default-16 chain sets this lake's count for NEW tables only.
   * Existing bucketed tables carry their count in a [[TableLayout]] record
-  * (`_graft_table.json`, written at create, living beside the data it
-  * describes — table root for the flat layout, generation dir after a
-  * compaction, so a generation commit atomically publishes data AND
-  * layout). All bucket-coupled operations (pruned probes, bucketed
-  * appends, point lookups) resolve the count from the record, so a
-  * session-conf drift can no longer mis-prune silently —
+  * (`_graft_table.json`) inside the generation it describes, so one commit
+  * marker publishes data AND layout. All bucket-coupled operations (pruned
+  * probes, bucketed appends, point lookups) resolve the count from the
+  * record, so a session-conf drift can no longer mis-prune silently —
   * it is noted once per table on stderr and the persisted count governs.
   * [[rebucket]] is the explicit way to change a table's count.
   */
@@ -77,11 +85,8 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
 
   def tablePath(layer: String, name: String): String = s"$root/$layer/$name"
 
-  def exists(layer: String, name: String): Boolean = {
-    val p = new Path(tablePath(layer, name))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
-  }
+  /** True when the table has a committed generation. */
+  def exists(layer: String, name: String): Boolean = resolution(layer, name).isDefined
 
   private def fsOf(p: Path): org.apache.hadoop.fs.FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -100,81 +105,76 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     fsOf(p).makeQualified(p).toString
   }
 
-  /** Generation number of a `_gen-N` directory name, None for anything else
-    * (flat data files, `hk_bucket=` partition dirs, markers). */
+  /** Generation number of a `gen-N` directory name, None for anything else. */
   private def genNumber(p: Path): Option[Long] =
     if (p.getName.startsWith(Lake.GenPrefix))
       p.getName.stripPrefix(Lake.GenPrefix).toLongOption.filter(_ > 0)
     else None
 
-  /** (generation number, directory) of the highest COMMITTED generation
-    * under the table root, None when the table is flat (or absent).
-    * Commit = the `_graft_committed` marker file exists inside the
-    * generation dir — its CREATE is the compaction's atomic commit point
-    * on every store (HDFS create, S3 PUT, local FS: the object either
-    * exists or it doesn't; no rename involved). Cost: one listStatus of
-    * the table ROOT (entries = bucket dirs + generation dirs, both
-    * configuration-scale) plus one exists per generation dir present
-    * (≤ 2 in steady state: current + the retained previous). */
-  private def currentGen(fs: org.apache.hadoop.fs.FileSystem, root: Path): Option[(Long, Path)] =
-    if (!fs.exists(root)) None
-    else fs.listStatus(root).iterator
+  /** The table root's entries and its COMMITTED generations (those whose
+    * `_graft_committed` marker exists), ascending. Cost: one listStatus of
+    * the root plus one exists per generation dir (≤ 2 in steady state). A
+    * root holding parquet files or `hk_bucket=` dirs outside any generation
+    * was written in the older flat layout: refused, never read as absent —
+    * an [[overwrite]] (initVault's ensure) would otherwise delete its data. */
+  private def generations(
+      fs: org.apache.hadoop.fs.FileSystem, root: Path): (Array[org.apache.hadoop.fs.FileStatus], Array[(Long, Path)]) = {
+    if (!fs.exists(root)) return (Array.empty, Array.empty)
+    val entries = fs.listStatus(root)
+    entries.map(_.getPath.getName).find(n => n.startsWith("hk_bucket=") || n.endsWith(".parquet"))
+      .foreach { n =>
+        throw new DvException(DvError.Configuration(
+          s"$root holds $n outside any generation directory: the table was written in " +
+            s"graft's older flat layout, which has no migration. Rewrite it into a new lake " +
+            s"(read the directory with Spark, append through a Lake)."))
+      }
+    val committed = entries.iterator
       .filter(_.isDirectory)
       .flatMap(s => genNumber(s.getPath).map(_ -> s.getPath))
       .filter { case (_, p) => fs.exists(new Path(p, Lake.CommitMarker)) }
-      .reduceOption((a, b) => if (a._1 >= b._1) a else b)
-
-  /** Resolved (data dir, layout record) for a table, computed once and
-    * cached JVM-wide per table path — generation resolution is one
-    * listStatus + a marker probe per generation dir, and it sits on the
-    * hottest paths (a streaming foreachBatch issues several reads + an
-    * append per micro-batch, each of which resolves): on a remote object
-    * store that is a driver metadata RPC per call. Every Lake WRITE
-    * invalidates through [[refresh]] (all mutating ops call it), so
-    * within the lake's documented single-writer-per-table contract the
-    * cache is always coherent; a table compacted by ANOTHER process keeps
-    * serving the superseded (still-present, retention contract) generation
-    * to this JVM until any local write or an explicit
-    * `spark.catalog.refreshByPath`-accompanied [[refresh]] — same staleness
-    * class as Spark's own file-listing cache. */
-  private def resolution(layer: String, name: String): Lake.Resolution = {
-    val key = qualifiedKey(layer, name)
-    Lake.resolutionCache.computeIfAbsent(key, _ => {
-      val rootP = new Path(tablePath(layer, name))
-      val fs = fsOf(rootP)
-      val cur = currentGen(fs, rootP)
-      val dir = cur.map(_._2).getOrElse(rootP)
-      // fallback to the root record covers a table compacted BEFORE layout
-      // records existed whose record was written to the root afterwards
-      val layout = readLayout(fs, dir)
-        .orElse(if (cur.isDefined) readLayout(fs, rootP) else None)
-      Lake.Resolution(dir.toString, layout)
-    })
+      .toArray.sortBy(_._1)
+    (entries, committed)
   }
 
-  /** The directory holding the table's CURRENT data: the highest committed
-    * generation (`{table}/_gen-N/`) once the table has been compacted, else
-    * the table directory itself — the flat layout every table is born with
-    * and keeps until its first compaction. All lake reads and appends
-    * resolve through this, so a compaction's generation swap is invisible
-    * to callers. Generation dirs start with `_`, which Spark's file index
-    * treats as hidden — a reader of the FLAT layout never sees a staged
-    * generation being written next to its data. External engines reading a
-    * lake table directly should read this resolved directory, not glob the
-    * table root. Cached per table ([[resolution]]). */
-  def dataPath(layer: String, name: String): String = resolution(layer, name).dataDir
+  /** (data dir, layout record) of the table's current generation, None
+    * when it has none. Positive results are cached JVM-wide per table —
+    * resolution sits on the hottest paths (a streaming foreachBatch reads
+    * and appends per micro-batch), each a driver metadata RPC on a remote
+    * store. Every Lake WRITE invalidates through [[refresh]], so within the
+    * single-writer-per-table contract the cache is coherent; a table
+    * compacted by ANOTHER process keeps serving the superseded (retained)
+    * generation to this JVM until a local write or [[refresh]] — the
+    * staleness class of Spark's own file-listing cache. */
+  private def resolution(layer: String, name: String): Option[Lake.Resolution] =
+    Option(Lake.resolutionCache.computeIfAbsent(qualifiedKey(layer, name), _ => {
+      val rootP = new Path(tablePath(layer, name))
+      val fs = fsOf(rootP)
+      generations(fs, rootP)._2.lastOption
+        .map { case (_, dir) => Lake.Resolution(dir.toString, readLayout(fs, dir)) }
+        .orNull // computeIfAbsent records no mapping for null
+    }))
 
-  /** The [[TableLayout]] record governing this table, None for tables
-    * created before layout records existed (or never bucket-appended). */
+  /** The directory holding the table's CURRENT data, its highest committed
+    * generation (`{table}/gen-N/`). All lake reads and appends resolve
+    * through this, so a compaction's generation swap is invisible to
+    * callers; external engines reading a lake table should read this
+    * directory. Fails with a typed Entity error when the table does not
+    * exist. Cached per table ([[resolution]]). */
+  def dataPath(layer: String, name: String): String =
+    resolution(layer, name).map(_.dataDir).getOrElse(throw new DvException(DvError.Entity(
+      s"$layer.$name does not exist: no committed generation under ${tablePath(layer, name)}")))
+
+  /** The [[TableLayout]] record governing this table, None for absent tables
+    * and tables never bucket-appended. */
   def tableLayout(layer: String, name: String): Option[TableLayout] =
-    resolution(layer, name).layout
+    resolution(layer, name).flatMap(_.layout)
 
   /** The bucket count in force FOR THIS TABLE: its layout record's count
     * when present (authoritative — survives session-conf drift), else this
     * lake's [[bucketCount]]. Every bucket-coupled operation resolves
     * through here. */
   def tableBuckets(layer: String, name: String): Int =
-    resolution(layer, name).layout.map(_.bucketCount).getOrElse(bucketCount)
+    tableLayout(layer, name).map(_.bucketCount).getOrElse(bucketCount)
 
   def read(layer: String, name: String): DataFrame =
     spark.read.parquet(dataPath(layer, name))
@@ -185,32 +185,31 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * contract: a column added to satellite metadata after earlier appends
     * is absent from the old part files, and the parquet reader
     * null-backfills it per file, so an evolved satellite reads with the
-    * new column as NULL history instead of silently dropping it (the
-    * pre-r12 column-intersection behavior). This is also cheaper than
-    * `mergeSchema` (no footer-merge job over every part file — at 100 TB
-    * that job is a full listing + footer read), and it keeps the column
-    * set stable: on-disk extras like the `hk_bucket` partition column are
-    * simply not part of the imposed schema. Columns REMOVED from metadata
-    * while still on disk are likewise dropped here; history stays in the
-    * files. */
+    * new column as NULL history instead of silently dropping it. This is
+    * also cheaper than `mergeSchema` (no footer-merge job over every part
+    * file — at 100 TB that job is a full listing + footer read), and it
+    * keeps the column set stable: on-disk extras like the `hk_bucket`
+    * partition column are simply not part of the imposed schema. Columns
+    * REMOVED from metadata while still on disk are likewise dropped here;
+    * history stays in the files. */
   def readOr(layer: String, name: String, schema: StructType): DataFrame =
-    if (exists(layer, name))
+    resolution(layer, name).map { r =>
       // The select drops DISCOVERED partition columns (hk_bucket): a
       // user-specified schema governs data columns, but partition
       // discovery still appends directory-derived ones.
-      spark.read.schema(schema).parquet(dataPath(layer, name))
+      spark.read.schema(schema).parquet(r.dataDir)
         .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    else
+    }.getOrElse(
       // empty LOCAL relation, not an empty RDD: a LogicalRDD's stats are the
       // defaultSizeInBytes SENTINEL, so every plan built over an
       // absent-table probe (a first flow load, a streaming sink's batch 0)
       // claimed Long.MaxValue-ish input — Tables.clusterParts then sized
       // the delta load's exchange to the 4-wave cap (128 tasks for a
-      // 15k-row micro-batch, profiled r19) and estBytesKnown-gated sites
+      // 15k-row micro-batch) and estBytesKnown-gated sites
       // saw "unknown". A LocalRelation reports its true 0 bytes, and the
       // optimizer's PropagateEmptyRelation can collapse joins against it
       // outright — the correct first-batch plan.
-      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema))
 
   /** [[readOr]] for INCREMENTAL-LOAD probes: the existing-table side of a
     * hub/link anti-join or a satellite DELTA probe only matters where its
@@ -258,9 +257,9 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     if (buckets.length >= n) return full
     val raw = spark.read.schema(schema).parquet(dataPath(layer, name))
     // The partition column only exists once a bucketed append has
-    // landed: a table pre-created by initVault holds a single empty
-    // FLAT part file, and filtering an undiscovered column is an
-    // analysis error, not a no-op — fall back to the unpruned scan
+    // landed: a table pre-created by initVault holds one empty part
+    // file and no partition dir, and filtering an undiscovered column is
+    // an analysis error, not a no-op — fall back to the unpruned scan
     // (a forced-open gate is the only way here before first data).
     if (!raw.columns.contains("hk_bucket")) full
     else raw
@@ -325,29 +324,44 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * listings under their own catalog names). Must not throw. */
   private[graft] var onRefresh: (String, String) => Unit = (_, _) => ()
 
-  /** Truncate-and-load. Writes to the TABLE ROOT deliberately: Spark's
-    * overwrite deletes the whole output dir first — generation dirs and
-    * layout record included — so an overwritten table is reborn flat and
-    * unrecorded, exactly like a new one (self-healing; there is no
-    * half-generation state to reconcile). Engine paths only overwrite
-    * staging/metadata tables, which are never compacted or bucketed. */
+  /** Truncate-and-load: deletes the table, then commits `df` as generation
+    * 1 — an overwritten table is reborn like a new one, with no layout
+    * record (engine paths only overwrite staging/metadata tables, which are
+    * never bucketed). A crash mid-write leaves the table absent, never
+    * partially written. An empty `df` still commits: the table reads 0 rows.
+    * Refused before anything is deleted: a flat-layout root, and (as by
+    * Spark's own overwrite) a `df` that reads this table. */
   def overwrite(df: DataFrame, layer: String, name: String): Unit = {
-    df.write.mode("overwrite").parquet(tablePath(layer, name))
-    refresh(layer, name)
+    resolution(layer, name).foreach(r => org.apache.spark.sql.execution.command.DDLUtils
+      .verifyNotReadPath(df.queryExecution.analyzed, new Path(r.dataDir)))
+    val root = new Path(tablePath(layer, name))
+    fsOf(root).delete(root, true)
+    Lake.resolutionCache.remove(qualifiedKey(layer, name))
+    commitGeneration(layer, name, 1L, None, s"overwrite($layer.$name)")(writeParquet(df, _, Nil))
   }
 
-  /** Plain (non-bucketed) append — the runinfo ledger's write path. Routes
-    * through [[dataPath]] like every other read/append: once a plain-append
-    * table has been compacted (the ledger is the archetypal small-file
-    * compaction target), new rows MUST land inside the committed generation
-    * — an append to the table root would be invisible to generation-routed
-    * reads and silently deleted as legacy flat data by the next
-    * expire/compact (r18 ADVICE finding: lost ledger rows double-ingest
-    * files). */
-  def append(df: DataFrame, layer: String, name: String): Unit = {
-    df.write.mode("append").parquet(dataPath(layer, name))
-    refresh(layer, name)
-  }
+  /** Plain (non-bucketed) append — the runinfo ledger's write path. Lands
+    * in the current generation like every append, so a compacted ledger
+    * keeps its new rows; a table with no generation gets `df` as
+    * generation 1. */
+  def append(df: DataFrame, layer: String, name: String): Unit =
+    writeTable(df, layer, name, resolution(layer, name), Nil, None, commitEmpty = true)
+
+  /** Writes `df` into the table's current generation `res`, or — for a
+    * table with none — commits it as generation 1 with `layout`; an empty
+    * first write commits only when `commitEmpty`. Returns (rows, files). */
+  private def writeTable(
+      df: DataFrame, layer: String, name: String, res: Option[Lake.Resolution],
+      partitionColumns: Seq[String], layout: Option[TableLayout], commitEmpty: Boolean): (Long, Long) =
+    res match {
+      case Some(r) =>
+        val written = writeParquet(df, r.dataDir, partitionColumns)
+        refresh(layer, name)
+        written
+      case None =>
+        commitGeneration(layer, name, 1L, layout, s"append($layer.$name)", commitEmpty = commitEmpty)(
+          writeParquet(df, _, partitionColumns))
+    }
 
   private def bucketOfN(keyCol: Column, n: Int): Column =
     pmod(xxhash64(keyCol), lit(n))
@@ -393,14 +407,11 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
   /** Append a vault increment partitioned by hash-key-prefix bucket. The
     * bucket is a deterministic function of the key AND the table's
     * persisted bucket count, so co-located reads and bucket pruning
-    * survive any number of appends and any session-conf drift. On the
-    * append that CREATES a table, the layout record is written (after the
-    * data, so a failed write can't leave a record-only husk); a pre-record
-    * legacy table adopts this lake's count after a best-effort on-disk
-    * sanity check (an observed `hk_bucket=` value ≥ the count proves
-    * drift and fails loudly; the converse — legacy table written at a
-    * SMALLER count than the session's — is not detectable from names
-    * alone, which is exactly why the record now exists from birth). An
+    * survive any number of appends and any session-conf drift. A table's
+    * first bucketed append commits generation 1 with its layout record; a
+    * committed table without one (created by [[overwrite]], as initVault's
+    * empty vault tables are) gets the record before its first bucketed
+    * data. So no generation holds `hk_bucket=` data without a record. An
     * append bucketing on a different KEY COLUMN than the record's fails
     * loudly — two derivations over one table would scatter keys.
     *
@@ -432,15 +443,14 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * concurrent writer) — out of scope: the lake's single-writer-per-table
     * contract (flow executor / one streaming query per sink table).
     *
-    * An empty increment appended to an EXISTING table writes no part files
-    * (per-partition writers skip empty tasks) and is harmless; on the
-    * FIRST append an empty write leaves a `_SUCCESS`-only directory that
-    * breaks later reads — the write reports 0 files, and the directory is
-    * deleted (no layout record is written), so readOr keeps seeing "table
-    * absent". */
+    * An empty increment appended to an existing table writes no part files
+    * (per-partition writers skip empty tasks) and is harmless; an empty
+    * FIRST append commits nothing and deletes its staged generation, so
+    * the table stays absent. */
   def appendBucketed(df: DataFrame, layer: String, name: String, keyCol: String): Long = {
     val res = resolution(layer, name)
-    res.layout.foreach { lo =>
+    val layout = res.flatMap(_.layout)
+    layout.foreach { lo =>
       if (lo.keyCol != keyCol)
         throw new DvException(DvError.Configuration(
           s"appendBucketed($layer.$name): the table's layout record buckets on " +
@@ -448,28 +458,16 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
             s"carry two bucket derivations (pruned probes and lookups would miss keys)"))
       noteDrift(layer, name, lo)
     }
-    val n = res.layout.map(_.bucketCount).getOrElse(bucketCount)
-    val dataDir = new Path(res.dataDir)
-    val fs = fsOf(dataDir)
-    val existed = exists(layer, name)
-    if (res.layout.isEmpty)
-      // legacy (pre-record) table: refuse when the disk disproves this
-      // lake's count before we bless it into a record
-      verifyLegacyAdoption(layer, name, fs, dataDir, keyCol, n)
-    // resolved dir, not the table root: post-compaction appends belong to
-    // the committed generation (the root's flat files are superseded data
-    // retained only for in-flight readers)
-    val (rows, files) = writeParquet(
-      df.withColumn("hk_bucket", bucketOfN(col(keyCol), n)).repartition(n, col("hk_bucket")),
-      res.dataDir, Seq("hk_bucket"))
-    if (files == 0L && !existed) {
-      fs.delete(dataDir, true)
-      refresh(layer, name)
-      return 0L
+    val n = layout.map(_.bucketCount).getOrElse(bucketCount)
+    val record = TableLayout(n, keyCol, Nil)
+    res.filter(_.layout.isEmpty).foreach { r =>
+      val dir = new Path(r.dataDir)
+      writeLayout(fsOf(dir), dir, record)
+      Lake.resolutionCache.remove(qualifiedKey(layer, name))
     }
-    if (res.layout.isEmpty)
-      writeLayout(fs, dataDir, TableLayout(n, keyCol, Nil))
-    refresh(layer, name)
+    val (rows, _) = writeTable(
+      df.withColumn("hk_bucket", bucketOfN(col(keyCol), n)).repartition(n, col("hk_bucket")),
+      layer, name, res, Seq("hk_bucket"), Some(record), commitEmpty = false)
     maybeExpireAged(layer, name)
     rows
   }
@@ -496,73 +494,6 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       .getOrElse(throw new IllegalStateException(s"no write command in the executed plan of $dir"))
     (metrics("numOutputRows").value, metrics("numFiles").value)
   }
-
-  /** Adoption check for a RECORD-LESS legacy table about to be blessed into
-    * a TableLayout at count `n`: the record makes `n` permanently
-    * authoritative, so the disk must be proven CONSISTENT with it first —
-    * "no partition name ≥ n" alone is not proof (a table written at 16
-    * whose occupied buckets happen to all be < 12 would pass that test at
-    * n=12, then every probe/lookup under the blessed record would scan the
-    * wrong partitions and silently miss existing keys — worse than
-    * pre-record drift, which healed when the conf was fixed).
-    *
-    * Two stages: (1) the free listing check — any observed `hk_bucket=` ≥ n
-    * disproves n outright; (2) an exhaustive row check — one column-pruned
-    * job over (keyCol, hk_bucket) asserting `pmod(xxhash64(key), n)` equals
-    * the stored partition value for EVERY row. On a genuinely mismatched
-    * count the limit(1) short-circuits at the first wrong row (most rows
-    * are wrong, so the incremental collect-limit stops in its first
-    * partition batch); on a consistent table it is one full two-column scan
-    * — the one-time price of adopting an unrecorded table (the record is
-    * written immediately after, so this never runs again).
-    *
-    * Deliberately admitted: a table written at count m where n divides m
-    * and every occupied bucket b < n passes — and adopting n there is
-    * CORRECT, not a near-miss: b = h mod m and n | m give h mod n = b for
-    * every stored row, so old rows already sit exactly where n-derived
-    * probes/appends look, and the table is henceforth a valid n-bucket
-    * table. The check admits precisely the consistent counts. */
-  private def verifyLegacyAdoption(
-      layer: String, name: String, fs: org.apache.hadoop.fs.FileSystem,
-      dataDir: Path, keyCol: String, n: Int): Unit = {
-    observedBucketAtOrOver(fs, dataDir, n).foreach { b =>
-      throw new DvException(DvError.Configuration(
-        s"appendBucketed($layer.$name): on-disk partition hk_bucket=$b is outside this " +
-          s"session's bucket count $n — the table predates layout records and was written " +
-          s"at a different count. Construct the Lake with the original count (a record is " +
-          s"adopted on the next append) or rewrite via Lake.rebucket."))
-    }
-    val hasBuckets = fs.exists(dataDir) && fs.listStatus(dataDir).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith("hk_bucket="))
-    if (!hasBuckets) return
-    val mismatch = spark.read.parquet(dataDir.toString)
-      .filter(bucketOfN(col(keyCol), n) =!= col("hk_bucket").cast("long"))
-      .select(col("hk_bucket").cast("long"))
-      .limit(1).collect()
-    mismatch.headOption.foreach { row =>
-      throw new DvException(DvError.Configuration(
-        s"appendBucketed($layer.$name): a stored row in hk_bucket=${row.getLong(0)} does " +
-          s"not re-derive to its partition under this session's bucket count $n — the " +
-          s"table predates layout records and was written at a different count; blessing " +
-          s"$n into a record would make probes/lookups miss existing keys permanently. " +
-          s"Construct the Lake with the original count (a record is adopted on the next " +
-          s"append) or rewrite via Lake.rebucket."))
-    }
-  }
-
-  /** First on-disk `hk_bucket=` partition value ≥ `n` under `dir`, if any —
-    * disk-evidence that `n` is NOT the count this table was written with.
-    * One listStatus; only consulted on the adopt path of record-less
-    * legacy tables. */
-  private def observedBucketAtOrOver(
-      fs: org.apache.hadoop.fs.FileSystem, dir: Path, n: Int): Option[Long] =
-    if (!fs.exists(dir)) None
-    else fs.listStatus(dir).iterator
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith("hk_bucket="))
-      .flatMap(_.stripPrefix("hk_bucket=").toLongOption)
-      .find(_ >= n)
 
   // ---------------------------------------------------------------------
   // Layout record IO
@@ -597,8 +528,8 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     val json =
       s"""{"version":1,"bucketCount":${lo.bucketCount},"keyCol":${Json.str(lo.keyCol)},""" +
         s""""sortBy":[${lo.sortBy.map(Json.str).mkString(",")}]}"""
-    // overwrite=true: only written inside single-writer windows (table
-    // create, a claimed compact/rebucket's staged dir)
+    // overwrite=true: only written inside single-writer windows (a staged
+    // generation, or a record-less table's first bucketed append)
     val out = fs.create(new Path(dir, Lake.LayoutFile), true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
@@ -618,9 +549,8 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
   //   flow        metadata/.flow_claims/__flow__<source>  scoped, waits
   //   load        <layer>/.claims/<table>_graft_loading   scoped, waits
   //   compaction  <layer>/<table>/_graft_compacting       scoped, no wait
-  // All but compaction's live in side dirs: a marker inside a table dir
-  // would make exists() true for a table with no data yet, and
-  // truncate-and-load deletes a staging table's dir, marker included.
+  // All but compaction's live in side dirs: truncate-and-load deletes a
+  // table's dir, marker included.
 
   /** Run-id marker: one per run id ever allocated, never released. */
   private[graft] def runIdClaimPath(id: Long): Path =
@@ -795,24 +725,13 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * create — the guard converts the practically-hittable race into a
     * typed error, not a proof. */
   private def verifySourceUnchanged(
-      fs: org.apache.hadoop.fs.FileSystem, srcDir: Path, staged: Path,
+      fs: org.apache.hadoop.fs.FileSystem, srcDir: Path,
       snapshot: Array[org.apache.hadoop.fs.FileStatus], what: String): Unit = {
     def key(s: org.apache.hadoop.fs.FileStatus) =
       (s.getPath.toString, s.getLen, s.getModificationTime)
     val before = snapshot.map(key).toSet
-    // skip the just-written staged generation: on a FIRST compaction the
-    // source dir is the table root and the staged dir sits inside it — its
-    // fresh files are the rewrite's own output, not a concurrent append
-    // listStatus returns QUALIFIED paths; qualify the staged path too or
-    // the exclusion never matches (file:/x/_gen-N vs /x/_gen-N)
-    val stagedQ = fs.makeQualified(staged)
     val now =
-      try fs.listStatus(srcDir).iterator.flatMap { s =>
-        if (s.isDirectory && fs.makeQualified(s.getPath) == stagedQ) Iterator.empty
-        else if (s.isDirectory) parquetLeaves(fs, s.getPath)
-        else if (s.getPath.getName.endsWith(".parquet")) Iterator.single(s)
-        else Iterator.empty
-      }.map(key).toSet
+      try parquetLeaves(fs, srcDir).map(key).toSet
       catch {
         // a directory vanishing between the listing and the descent IS the
         // concurrent mutation this guard exists to catch — surface the
@@ -872,46 +791,71 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       d.sortWithinPartitions(keys.map(col): _*)
     }
 
-  /** Compact a bucketed table: every append adds a part file per bucket per
-    * task, and a long-lived vault accumulates small files (the classic
-    * 100 TB lake operations problem). Rewrites each bucket into
+  /** A bucketed rewrite's write frame: each bucket split into `chunks`
+    * (per row) cells on a deterministic row hash, one exchange on (bucket,
+    * chunk) into `cells` tasks, sorted within each by `sortBy`. */
+  private def chunked(df: DataFrame, chunks: Column, cells: Int, sortBy: Seq[String]): DataFrame = {
+    val dataCols = df.columns.filterNot(_ == "hk_bucket").toIndexedSeq.map(col)
+    sortedWithin(
+      df.withColumn("__chunk", pmod(xxhash64(dataCols: _*), chunks))
+        .repartition(cells, col("hk_bucket"), col("__chunk")), sortBy)
+      .drop("__chunk")
+  }
+
+  /** The commit routine of every generation writer (a table's first write,
+    * [[overwrite]], [[compact]], [[rebucket]]): stages `{table}/gen-n/`
+    * (replacing a crashed writer's uncommitted leftover), writes the layout
+    * record, then the data through `write`. A rewrite's `source` (current
+    * dir + the leaves it read) gets [[verifySourceUnchanged]]. THE COMMIT
+    * is the create of `gen-n/_graft_committed`: one small-object write,
+    * atomic on every store (HDFS create, S3-class PUT, local FS; no rename,
+    * which on S3 is copy+delete), so a reader sees the old generation or
+    * the new one, never an absent or mixed table. With `commitEmpty` false
+    * a write of 0 files commits nothing. Returns `write`'s (rows, files). */
+  private def commitGeneration(
+      layer: String, name: String, n: Long, layout: Option[TableLayout], what: String,
+      source: Option[(Path, Array[org.apache.hadoop.fs.FileStatus])] = None,
+      commitEmpty: Boolean = true)(write: String => (Long, Long)): (Long, Long) = {
+    val staged = new Path(tablePath(layer, name), s"${Lake.GenPrefix}$n")
+    val fs = fsOf(staged)
+    fs.delete(staged, true)
+    layout.foreach(writeLayout(fs, staged, _))
+    val written = write(staged.toString)
+    if (written._2 == 0L && !commitEmpty) {
+      fs.delete(staged, true)
+      return written
+    }
+    source.foreach { case (dir, leaves) =>
+      Lake.beforeCommitHook(s"$layer.$name")
+      // a concurrent append mid-staging would be silently dropped by this
+      // commit — abort loudly instead (contract-violation detection)
+      verifySourceUnchanged(fs, dir, leaves, what)
+    }
+    verifyStaged(fs, staged, what)
+    fs.create(new Path(staged, Lake.CommitMarker), /* overwrite = */ false).close()
+    refresh(layer, name)
+    onGenerationSwap(layer, name)
+    written
+  }
+
+  /** Compact a table: every append adds a part file per bucket per task,
+    * and a long-lived vault accumulates small files (the classic 100 TB lake
+    * operations problem). Rewrites each bucket into
     * ~`spark.graft.compact.targetBytes`-sized files (one file while the
-    * bucket fits under the target) as a NEW GENERATION directory
-    * (`{table}/_gen-N/`), committed by creating one small marker file —
-    * readers never observe a half-compacted (mixed old/new) table, and
-    * never a missing one. Returns (files before, files after).
+    * bucket fits under the target) as the NEXT GENERATION, committed by
+    * [[commitGeneration]] — readers never observe a half-compacted (mixed
+    * old/new) table, and never a missing one. The layout record is carried
+    * into the new generation (with the rewrite's sort). Returns (files
+    * before, files after).
     *
-    * CLAIM: the whole operation runs under the table's compaction claim
-    * (create-no-overwrite marker at the table root) — a second concurrent
-    * compact/rebucket/expire gets a typed DvError.Concurrency refusal
-    * instead of silently deleting this one's staged data (two compactors
-    * both compute nextN; the loser's pre-write `delete(staged)` used to
-    * wipe the winner's in-flight staging). The claim is released on every
-    * exit; a hard crash leaves it behind — clear with
-    * [[releaseCompactionClaim]].
+    * CLAIM: the whole operation runs under the table's compaction claim, so
+    * a second concurrent compact/rebucket/expire gets a typed Concurrency
+    * refusal instead of deleting this one's staged generation. A hard
+    * crash leaves the claim behind — clear it with [[releaseCompactionClaim]].
     *
-    * COMMIT POSTURE (generation layout, r18 — replaced the two-rename
-    * swap): the staged generation is written next to the live data
-    * (underscore-prefixed, so Spark's file index hides it from flat-layout
-    * readers), and the commit is the CREATE of `_gen-N/_graft_committed` —
-    * a single small-object write, atomically visible on every store: HDFS
-    * create, S3-class PUT (no rename anywhere — S3 rename is copy+delete
-    * and was the old swap's silent failure mode), local FS. Readers
-    * resolve [[dataPath]] = highest committed generation; a reader
-    * resolving at any moment during compaction sees the OLD generation
-    * (before the marker lands) or the NEW one (after), never an absent or
-    * mixed table. A crashed compaction leaves an uncommitted `_gen-N`
-    * that resolution ignores and the next compact deletes. The staged
-    * data's survival is verified IMMEDIATELY before the marker create
-    * ([[verifyStaged]]), and the table's layout record is copied into the
-    * staged generation before the commit, so one marker publishes data +
-    * layout atomically.
-    *
-    * RETENTION: the superseded data (previous generation, or the root's
-    * flat files on first compaction) is kept until the NEXT compaction
-    * (the expire pass runs at compact start) — so a reader that resolved
-    * its file listing just before the commit can finish its scan; the
-    * no-concurrent-reader window of the old swap is gone on every store.
+    * RETENTION: the previous generation is kept until the NEXT compaction
+    * (the expire pass runs at compact start), so a reader that resolved
+    * its file listing just before the commit can finish its scan.
     * Steady-state cost: ≤ 2× table storage between compactions. Reclaim
     * earlier either by POLICY (`spark.graft.gen.retainMillis` ≥ 0: any
     * compact/rebucket/bucketed-append deletes data superseded for at
@@ -919,9 +863,8 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * explicit [[expireSuperseded]] call once in-flight readers are known
     * drained. With retainMillis set, the compact-start expire ALSO
     * respects the window (young superseded generations survive a rapid
-    * re-compact). Catalog tables registered over the FLAT path (Graft
-    * registers staging tables this way) must be re-registered after a
-    * first compaction — engine paths never compact staging tables.
+    * re-compact). A catalog table registered at [[dataPath]] must follow
+    * the swap ([[onGenerationSwap]]).
     *
     * `sortBy`: optional within-chunk sort columns for the rewrite. Vault
     * satellites pass (hk, load_dts): as-of queries filter `load_dts` over
@@ -943,42 +886,10 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * then emits one ~2×-target file) — the cap is a parallelism/restart
     * bound, not an exact packing, and the one-exchange append invariant
     * ([[appendBucketed]]) is untouched. */
-  def compact(layer: String, name: String, sortBy: Seq[String] = Nil): (Long, Long) = {
-    val root = new Path(tablePath(layer, name))
-    val fs = fsOf(root)
-    if (!fs.exists(root))
-      throw new DvException(DvError.Entity(s"compact($layer.$name): table does not exist"))
-    withCompactionClaim(layer, name, "compact") {
-      // Reclaim data superseded by the CURRENT generation (kept one cycle
-      // for in-flight readers; kept at least retainMillis under the policy)
-      // and any uncommitted staged generation a crashed compaction left —
-      // also what keeps the flat-layout walk below from counting a
-      // leftover `_gen` dir's leaves.
-      expireInternal(fs, root, layer, name,
-        math.max(0L, Confs.genRetainMillis(spark.conf)))
-      val cur = currentGen(fs, root)
-      val curDir = cur.map(_._2).getOrElse(root)
-      val nextN = cur.map(_._1 + 1L).getOrElse(1L)
-      val layout = readLayout(fs, curDir)
-        .orElse(if (cur.isDefined) readLayout(fs, root) else None)
-      // ONE pre-rewrite walk serves both the before-count and the per-bucket
-      // byte sizing below (a leaf's bucket is its parent dir's partition
-      // value) — a second full walk doubled the driver metadata RPCs per
-      // compaction on remote stores.
-      val leaves = parquetLeaves(fs, curDir).toArray
-      val before = leaves.length.toLong
-      // mergeSchema: compaction REWRITES the table, so it must read the UNION
-      // of every file's schema. Plain inference picks one footer; on a
-      // schema-evolved satellite (older appends missing a newer column) an
-      // old-footer pick would silently DROP the evolved column from the
-      // rewrite — on-disk data loss, not just a narrowed read. The
-      // footer-merge job is proportional to file count, which a compaction
-      // pays anyway; readOr's imposed-metadata-schema contract covers normal
-      // reads, but compact cannot assume a caller-supplied schema.
-      val df = spark.read.option("mergeSchema", "true").parquet(curDir.toString)
-      val staged = new Path(root, s"${Lake.GenPrefix}$nextN")
-      fs.delete(staged, true)
-      val (_, after) = if (df.columns.contains("hk_bucket")) {
+  def compact(layer: String, name: String, sortBy: Seq[String] = Nil): (Long, Long) =
+    rewrite(layer, name, "compact") { (df, layout, leaves) =>
+      val recorded = layout.map(lo => if (sortBy.nonEmpty) lo.copy(sortBy = sortBy) else lo)
+      if (df.columns.contains("hk_bucket")) {
         val target = Confs.compactTargetBytes(spark.conf)
         // per-bucket compressed bytes from the SAME leaves the file count
         // walked (a leaf's bucket = its parent dir's hk_bucket= value); an
@@ -997,7 +908,6 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
           }
         val totalChunks = chunksOf.values.map(_.toLong).sum
           .max(1L).min(1L << 20).toInt
-        val dataCols = df.columns.filterNot(_ == "hk_bucket").toIndexedSeq
         // chunk = row-hash mod the bucket's OWN chunk count (a tiny literal
         // map — bucket counts are configuration-scale, not data-scale), so
         // single-chunk buckets keep one file and only oversized ones split.
@@ -1005,52 +915,21 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
         // race, unexpected partition value) would make element_at NULL and
         // silently collapse that bucket to a single repartition cell —
         // deterministically give an unmapped bucket one chunk instead.
-        val chunk = pmod(
-          xxhash64(dataCols.map(col): _*),
-          coalesce(
-            element_at(typedLit(chunksOf), col("hk_bucket").cast("long")),
-            lit(1)))
-        writeParquet(
-          sortedWithin(
-            df.withColumn("__chunk", chunk)
-              .repartition(totalChunks, col("hk_bucket"), col("__chunk")), sortBy)
-            .drop("__chunk"),
-          staged.toString, Seq("hk_bucket"))
+        val chunks = coalesce(element_at(typedLit(chunksOf), col("hk_bucket").cast("long")), lit(1))
+        (chunked(df, chunks, totalChunks, sortBy), Seq("hk_bucket"), recorded)
       }
       // inputFiles length instead of df.rdd.getNumPartitions (the latter
       // materializes the physical RDD driver-side); compaction targets ~8
       // input files per output file.
-      else writeParquet(
-        sortedWithin(df.coalesce(math.max(1, df.inputFiles.length / 8)), sortBy),
-        staged.toString, Nil)
-      // the layout record travels WITH the generation it describes (one
-      // marker publishes data + layout); the rewrite's sort becomes the
-      // recorded one
-      layout.foreach { lo =>
-        writeLayout(fs, staged, if (sortBy.nonEmpty) lo.copy(sortBy = sortBy) else lo)
-      }
-      Lake.beforeCommitHook(s"$layer.$name")
-      // a concurrent append mid-staging would be silently dropped by this
-      // commit — abort loudly instead (contract-violation detection)
-      verifySourceUnchanged(fs, curDir, staged, leaves, s"compact($layer.$name)")
-      verifyStaged(fs, staged, s"compact($layer.$name)")
-      // THE COMMIT: one small-file create (atomic visibility on every store —
-      // no renames). Before it, readers resolve the old generation; after it,
-      // the new one. A crash before this line leaves an uncommitted staged
-      // dir that resolution ignores.
-      fs.create(new Path(staged, Lake.CommitMarker), /* overwrite = */ false).close()
-      refresh(layer, name)
-      onGenerationSwap(layer, name)
-      (before, after)
+      else (sortedWithin(df.coalesce(math.max(1, df.inputFiles.length / 8)), sortBy), Nil, recorded)
     }
-  }
 
-  /** Invoked with (layer, name) after a commit RELOCATES the table's
-    * current data directory (compact/rebucket generation swap), after the
-    * caches are refreshed. The Graft facade hooks catalog re-registration
-    * here so `dv.<table>` names follow the generation; plain appends never
-    * fire it (they stay inside the current directory, where [[refresh]]'s
-    * listing-cache invalidation is already sufficient). */
+  /** Invoked with (layer, name) after every generation commit (a table's
+    * first write, overwrite, compact, rebucket), after the caches are
+    * refreshed. The Graft facade hooks catalog re-registration here so
+    * `dv.<table>` names follow the generation; appends into the current
+    * generation never fire it ([[refresh]]'s listing-cache invalidation is
+    * already sufficient there). */
   private[graft] var onGenerationSwap: (String, String) => Unit = (_, _) => ()
 
   /** Rewrite a bucketed table at a NEW bucket count, as a committed
@@ -1064,34 +943,19 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * republishes data + layout, and concurrent readers of the old
     * generation are unaffected (their files persist one retention cycle).
     *
-    * `keyCol` defaults to the layout record's key; tables created before
-    * layout records must pass it explicitly. Output files are size-capped
+    * `keyCol` defaults to the layout record's key; a table without a record
+    * (plain-appended) must pass it explicitly. Output files are size-capped
     * like compact's (uniform chunk estimate — hash keys spread bytes
     * evenly across the new buckets). Returns (files before, files after). */
   def rebucket(
       layer: String, name: String, newBuckets: Int,
       keyCol: Option[String] = None, sortBy: Seq[String] = Nil): (Long, Long) = {
     require(newBuckets > 0, s"rebucket($layer.$name): newBuckets must be > 0, got $newBuckets")
-    val root = new Path(tablePath(layer, name))
-    val fs = fsOf(root)
-    if (!fs.exists(root))
-      throw new DvException(DvError.Entity(s"rebucket($layer.$name): table does not exist"))
-    withCompactionClaim(layer, name, "rebucket") {
-      expireInternal(fs, root, layer, name,
-        math.max(0L, Confs.genRetainMillis(spark.conf)))
-      val cur = currentGen(fs, root)
-      val curDir = cur.map(_._2).getOrElse(root)
-      val nextN = cur.map(_._1 + 1L).getOrElse(1L)
-      val layout = readLayout(fs, curDir)
-        .orElse(if (cur.isDefined) readLayout(fs, root) else None)
+    rewrite(layer, name, "rebucket") { (df0, layout, leaves) =>
       val key = keyCol.orElse(layout.map(_.keyCol)).getOrElse(
         throw new DvException(DvError.Configuration(
           s"rebucket($layer.$name): the table has no layout record to take the bucket " +
-            s"key from (created before records existed) — pass keyCol explicitly")))
-      val leaves = parquetLeaves(fs, curDir).toArray
-      val before = leaves.length.toLong
-      val totalBytes = leaves.iterator.map(_.getLen).sum
-      val df0 = spark.read.option("mergeSchema", "true").parquet(curDir.toString)
+            s"key from (it was never bucket-appended) — pass keyCol explicitly")))
       if (!df0.columns.contains(key))
         throw new DvException(DvError.Configuration(
           s"rebucket($layer.$name): bucket key column '$key' not present in the table " +
@@ -1101,77 +965,90 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       // xxhash64 keys spread bytes ~uniformly over the NEW buckets, so one
       // chunk count serves all of them (the old per-bucket listing can't
       // size new buckets — old dirs don't map to new assignments)
+      val totalBytes = leaves.iterator.map(_.getLen).sum
       val chunksPerBucket = math.max(1L,
         (totalBytes / math.max(1, newBuckets) + target - 1) / target).min(1L << 16).toInt
       val totalChunks = (chunksPerBucket.toLong * newBuckets).max(1L).min(1L << 20).toInt
-      val staged = new Path(root, s"${Lake.GenPrefix}$nextN")
-      fs.delete(staged, true)
-      val dataCols = df.columns.filterNot(_ == "hk_bucket").toIndexedSeq
-      val chunk = pmod(xxhash64(dataCols.map(col): _*), lit(chunksPerBucket))
       val effSort = if (sortBy.nonEmpty) sortBy else layout.map(_.sortBy).getOrElse(Nil)
-      val (_, after) = writeParquet(
-        sortedWithin(
-          df.withColumn("__chunk", chunk)
-            .repartition(totalChunks, col("hk_bucket"), col("__chunk")), effSort)
-          .drop("__chunk"),
-        staged.toString, Seq("hk_bucket"))
-      writeLayout(fs, staged, TableLayout(newBuckets, key, effSort))
-      Lake.beforeCommitHook(s"$layer.$name")
-      // same concurrent-append detection as compact's
-      verifySourceUnchanged(fs, curDir, staged, leaves, s"rebucket($layer.$name)")
-      verifyStaged(fs, staged, s"rebucket($layer.$name)")
-      fs.create(new Path(staged, Lake.CommitMarker), /* overwrite = */ false).close()
-      refresh(layer, name)
-      onGenerationSwap(layer, name)
-      (before, after)
+      (chunked(df, lit(chunksPerBucket), totalChunks, effSort), Seq("hk_bucket"),
+        Some(TableLayout(newBuckets, key, effSort)))
+    }
+  }
+
+  /** The frame [[compact]] and [[rebucket]] share: under the table's
+    * compaction claim, expire superseded data, then commit the next
+    * generation from the current one. `plan` gets the current generation
+    * (read with mergeSchema), its layout record and its parquet leaves, and
+    * returns the frame to write, its partition columns and the new
+    * generation's record. Returns (files before, files after). */
+  private def rewrite(layer: String, name: String, what: String)(
+      plan: (DataFrame, Option[TableLayout], Array[org.apache.hadoop.fs.FileStatus]) =>
+        (DataFrame, Seq[String], Option[TableLayout])): (Long, Long) = {
+    val absent = new DvException(DvError.Entity(s"$what($layer.$name): table does not exist"))
+    if (!exists(layer, name)) throw absent
+    val root = new Path(tablePath(layer, name))
+    val fs = fsOf(root)
+    withCompactionClaim(layer, name, what) {
+      // Reclaim data superseded by the CURRENT generation (kept one cycle
+      // for in-flight readers; kept at least retainMillis under the policy)
+      // and any uncommitted staged generation a crashed writer left.
+      expireInternal(fs, root, layer, name,
+        math.max(0L, Confs.genRetainMillis(spark.conf)))
+      val (n, curDir) = generations(fs, root)._2.lastOption.getOrElse(throw absent)
+      // ONE pre-rewrite walk serves the before-count, the rewrite's sizing
+      // and the source-unchanged check.
+      val leaves = parquetLeaves(fs, curDir).toArray
+      // mergeSchema: the rewrite must read the UNION of every file's schema.
+      // Plain inference picks one footer; on a schema-evolved satellite
+      // (older appends missing a newer column) an old-footer pick would
+      // silently DROP the evolved column from the rewrite — on-disk data
+      // loss, not just a narrowed read. The footer-merge job is
+      // proportional to file count, which a compaction pays anyway.
+      val df = spark.read.option("mergeSchema", "true").parquet(curDir.toString)
+      val (out, partitionColumns, layout) = plan(df, readLayout(fs, curDir), leaves)
+      val (_, after) = commitGeneration(layer, name, n + 1L, layout, s"$what($layer.$name)",
+        Some(curDir -> leaves))(writeParquet(out, _, partitionColumns))
+      (leaves.length.toLong, after)
     }
   }
 
   /** Delete data superseded by the table's current committed generation:
-    * committed generations BELOW the current one, uncommitted staged
-    * generations (crashed compactions), and — once any generation is
-    * committed — the legacy flat data files in the table root. Runs
-    * automatically at the start of every [[compact]]/[[rebucket]] (so
-    * superseded data survives at least one compaction cycle for in-flight
-    * readers — see the retention note there) and, under the
-    * `spark.graft.gen.retainMillis` policy, age-gated after bucketed
-    * appends; call directly to reclaim the ≤ 2× storage immediately once
-    * concurrent readers are known drained (the explicit call ignores the
-    * retention window — it IS the operator's drain statement). Claim-gated
-    * like compact: calling this while a compaction of the same table is
-    * in flight gets a typed Concurrency refusal instead of deleting the
-    * compaction's staged generation mid-write (r18 ADVICE finding).
-    * Returns the number of root entries deleted. No-op on a flat table
-    * with no generation leftovers and on absent tables. */
+    * committed generations BELOW the current one and uncommitted staged
+    * generations (crashed writers). Runs automatically at the start of
+    * every [[compact]]/[[rebucket]] (so superseded data survives at least
+    * one compaction cycle for in-flight readers — see the retention note
+    * there) and, under the `spark.graft.gen.retainMillis` policy, age-gated
+    * after bucketed appends; call directly to reclaim the ≤ 2× storage
+    * immediately once concurrent readers are known drained (the explicit
+    * call ignores the retention window — it IS the operator's drain
+    * statement). Claim-gated like compact: calling this while a compaction
+    * of the same table is in flight gets a typed Concurrency refusal
+    * instead of deleting the compaction's staged generation mid-write.
+    * Returns the number of root entries deleted; 0 on a table with one
+    * generation and on absent tables. */
   def expireSuperseded(layer: String, name: String): Long = {
     val root = new Path(tablePath(layer, name))
     val fs = fsOf(root)
     // absent-table guard BEFORE the claim: the claim marker's create would
-    // otherwise materialize the table dir and flip exists() to true
+    // otherwise materialize an empty table dir
     if (!fs.exists(root)) return 0L
     withCompactionClaim(layer, name, "expireSuperseded") {
       expireInternal(fs, root, layer, name, minAgeMillis = 0L)
     }
   }
 
-  /** The expire pass itself — callers hold the compaction claim. An item is
-    * reclaimable when it is superseded (a committed generation above it
-    * exists) AND its superseding generation's commit marker is at least
-    * `minAgeMillis` old (0 = immediately). Uncommitted staged generations
-    * are crashed leftovers by definition under the claim (a live staging
-    * writer would hold it) and are reclaimed regardless of age. The claim
-    * marker itself and the current generation are never touched. */
+  /** The expire pass itself — callers hold the compaction claim. A
+    * generation is reclaimable when it is superseded (a committed
+    * generation above it exists) AND its superseding generation's commit
+    * marker is at least `minAgeMillis` old (0 = immediately). Uncommitted
+    * generations are crashed leftovers by definition under the claim (a
+    * live compaction would hold it) and are reclaimed regardless of age.
+    * The claim marker and the current generation are never touched. */
   private def expireInternal(
       fs: org.apache.hadoop.fs.FileSystem, root: Path,
       layer: String, name: String, minAgeMillis: Long): Long = {
-    if (!fs.exists(root)) return 0L
-    val entries = fs.listStatus(root)
-    val committed = entries.iterator
-      .filter(_.isDirectory)
-      .flatMap(s => genNumber(s.getPath).map(_ -> s.getPath))
-      .filter { case (_, p) => fs.exists(new Path(p, Lake.CommitMarker)) }
-      .toArray.sortBy(_._1)
-    val cur = committed.lastOption
+    val (entries, committed) = generations(fs, root)
+    val cur = committed.lastOption.map(_._1)
     val now = System.currentTimeMillis()
     def agedOut(supersederDir: Path): Boolean =
       minAgeMillis <= 0L || {
@@ -1188,43 +1065,20 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
         scala.util.Try(fs.getFileStatus(m).getModificationTime)
           .map(t => now - t >= minAgeMillis).getOrElse(false)
       }
-    // doomed entry -> the superseding generation that makes it reclaimable
-    // (None for uncommitted staged leftovers, which have no superseder and
-    // no orphan check — a LIVE stager's loss is already loud on its own
+    // doomed generation -> the superseding generation that makes it
+    // reclaimable (None for uncommitted leftovers, which have no superseder
+    // and no orphan check — a LIVE stager's loss is already loud on its own
     // side via verifyStaged)
     val doomed: Array[(org.apache.hadoop.fs.FileStatus, Option[Path])] =
       entries.iterator.flatMap { s =>
-        genNumber(s.getPath) match {
-          case Some(n) if cur.exists(_._1 == n) => None // the current generation
-          case Some(n) =>
-            committed.find(_._1 > n) match {
-              case Some((_, superseder)) if committed.exists(_._1 == n) =>
-                if (agedOut(superseder)) Some(s -> Some(superseder)) else None
-              case _ => Some(s -> None) // uncommitted staging: crashed leftover (we hold the claim)
-            }
-          case None =>
-            // non-generation root entry (flat part files, hk_bucket= dirs,
-            // _SUCCESS, the root layout record): legacy data once any
-            // generation is committed — but never the claim marker we hold,
-            // and never a root layout record the CURRENT generation doesn't
-            // carry its own copy of (the manual-migration shape: a table
-            // compacted before layout records existed, record added at the
-            // root afterwards — resolution falls back to the root record,
-            // and deleting it would silently regress the table to
-            // session-conf bucket resolution, the exact drift the record
-            // prevents; the next compact copies it into its generation,
-            // after which the root copy is reclaimable as usual)
-            val reclaimable =
-              s.getPath.getName != Lake.CompactClaim &&
-                !(s.getPath.getName == Lake.LayoutFile &&
-                  cur.exists { case (_, d) => !fs.exists(new Path(d, Lake.LayoutFile)) }) &&
-                cur.exists { case (_, d) => agedOut(d) }
-            if (reclaimable) Some(s -> cur.map(_._2)) else None
+        genNumber(s.getPath).filterNot(cur.contains).flatMap { n =>
+          if (!committed.exists(_._1 == n)) Some(s -> None)
+          else committed.find(_._1 > n).map(_._2).filter(agedOut).map(d => s -> Some(d))
         }
       }.toArray
-    // ORPHAN-WRITE REFUSAL, checked for ALL doomed entries before deleting
-    // ANY. Why refuse rather than have compact ABSORB the orphans into its
-    // rewrite (considered, r19 ADVICE): absorption would silently merge
+    // ORPHAN-WRITE REFUSAL, checked for ALL doomed generations before
+    // deleting ANY. Why refuse rather than have compact ABSORB the orphans
+    // into its rewrite: absorption would silently merge
     // rows from a writer whose view of the table was WRONG — if the
     // operator already re-ingested them (the documented recovery), absorb
     // would double them; and an orphan file can carry a pre-evolution
@@ -1232,26 +1086,20 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     // under a violated contract needs a human decision, not a silent
     // merge; the refusal message spells out the exact recovery.
     // "Superseded" means the data predates its superseding commit. A
-    // parquet file (or a dir holding one) whose newest data mtime POSTDATES
-    // the superseder's marker was written AFTER the generation swap — a
-    // writer routed by a stale resolution (a cross-process Lake whose cache
-    // still pointed at the old generation, or at the flat root) appended
-    // rows the current generation never absorbed. Deleting it is silent
+    // generation whose newest parquet mtime POSTDATES the superseder's
+    // marker was written AFTER the generation swap — a writer routed by a
+    // stale resolution (a cross-process Lake whose cache still pointed at
+    // the old generation) appended rows the current generation never absorbed. Deleting it is silent
     // data loss; refuse with a typed error instead and leave the operator
     // to reconcile (re-ingest the orphaned rows into the current
     // generation, then expire). Marker and data mtimes come from the SAME
     // store, so the comparison needs no clock-skew margin. Cost: one leaf
-    // walk per doomed entry per expire — compaction-cadence, not hot-path.
-    def newestDataMtime(s: org.apache.hadoop.fs.FileStatus): Option[Long] =
-      if (s.isDirectory)
-        parquetLeaves(fs, s.getPath).map(_.getModificationTime).maxOption
-      else if (s.getPath.getName.endsWith(".parquet")) Some(s.getModificationTime)
-      else None // markers/_SUCCESS/records hold no rows — no loss in deleting
+    // walk per doomed generation per expire — compaction-cadence, not hot-path.
     doomed.foreach { case (s, superseder) =>
       superseder.foreach { d =>
         val marker = scala.util.Try(
           fs.getFileStatus(new Path(d, Lake.CommitMarker)).getModificationTime).toOption
-        newestDataMtime(s).foreach { dataT =>
+        parquetLeaves(fs, s.getPath).map(_.getModificationTime).maxOption.foreach { dataT =>
           if (marker.exists(dataT > _))
             throw new DvException(DvError.Concurrency(
               s"expireSuperseded($layer.$name): ${s.getPath} contains data WRITTEN AFTER " +
@@ -1291,10 +1139,9 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * calls keep the loud gate (they fail BEFORE touching data). */
   private def maybeExpireAged(layer: String, name: String): Unit = {
     val retain = Confs.genRetainMillis(spark.conf)
-    if (retain < 0L) return
+    if (retain < 0L || !exists(layer, name)) return
     val root = new Path(tablePath(layer, name))
     val fs = fsOf(root)
-    if (!fs.exists(root)) return
     val claimed =
       try tryCompactionClaim(layer, name)
       catch {
@@ -1344,9 +1191,9 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * [[tableBucketOf]] — this helper stays inference-based because a
     * per-lookup footer-merge would cost a full listing per point read. */
   def lookupBucketed(layer: String, name: String, keyCol: String, value: String): DataFrame = {
-    val res = resolution(layer, name)
-    res.layout.foreach(noteDrift(layer, name, _))
-    val n = res.layout.map(_.bucketCount).getOrElse(bucketCount)
+    val layout = tableLayout(layer, name)
+    layout.foreach(noteDrift(layer, name, _))
+    val n = layout.map(_.bucketCount).getOrElse(bucketCount)
     val df = read(layer, name)
     // bucketOfValue hashes a STRING; a table bucketed on a non-string key
     // column (xxhash64 of the native type) would prune to the WRONG bucket
@@ -1372,16 +1219,17 @@ object Lake {
   val DefaultBuckets = 16
   /** Sentinel default for the constructor arg: "resolve from conf". */
   val FromConf: Int = -1
-  /** Generation-directory name prefix (`{table}/_gen-N/`). Underscore:
-    * Spark's file index treats `_`/`.`-prefixed paths as hidden, so a
-    * staged generation is invisible to readers of the flat layout. */
-  val GenPrefix = "_gen-"
-  /** Marker file whose CREATE inside a generation dir is compaction's
-    * atomic commit point ([[Lake.compact]] commit posture). */
+  /** Generation-directory name prefix (`{table}/gen-N/`). Not hidden and
+    * free of `=`: the table root holds no data, so nothing needs hiding,
+    * and Spark logs "All paths were ignored" on every read of a
+    * `_`-prefixed directory. */
+  val GenPrefix = "gen-"
+  /** Marker file whose CREATE inside a generation dir is the generation's
+    * atomic commit point ([[Lake.commitGeneration]]). */
   val CommitMarker = "_graft_committed"
-  /** Per-table layout record file name ([[TableLayout]]); lives beside the
-    * data it describes (table root, or generation dir once compacted).
-    * Underscore-prefixed → hidden from Spark's file index. */
+  /** Per-table layout record file name ([[TableLayout]]); lives in the
+    * generation it describes. Underscore-prefixed → hidden from Spark's
+    * file index. */
   val LayoutFile = "_graft_table.json"
   /** Per-table compaction-claim marker at the table root (underscore →
     * hidden); create-no-overwrite is the cross-process arbiter. */
@@ -1397,9 +1245,10 @@ object Lake {
   /** Walks executed plans through AQE wrappers and query stages. */
   private object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
-  /** JVM-wide (data dir, layout) resolution cache keyed by table path —
-    * shared across Lake instances over the same root so any instance's
-    * write invalidates for all (see [[Lake.resolution]] staleness note). */
+  /** JVM-wide (data dir, layout) resolution cache keyed by table path,
+    * positive results only — shared across Lake instances over the same
+    * root so any instance's write invalidates for all (see
+    * [[Lake.resolution]] staleness note). */
   private val resolutionCache =
     new java.util.concurrent.ConcurrentHashMap[String, Resolution]()
 

@@ -469,8 +469,8 @@ object DvQueries {
     * queried through reference-style `dv.<table>` / `bv.<sat>_cv` SQL
     * names (mallarddv.py:87 sql() habits verbatim), WITH a compaction in
     * between so the hash-match also proves the catalog followed the
-    * generation swap (a root-pinned registration would read the
-    * superseded flat files or nothing). Oracle: the same hub+current-sat
+    * generation swap (a registration pinned to the superseded generation
+    * would read stale files, or nothing once they expire). Oracle: the same hub+current-sat
     * join derived straight from the staging parquet. */
   def catalogSql(s: SparkSession, dir: String): DataFrame = {
     val root = graft.core.Scratch.streamTempDir(s, "graft_catalog_lake_")

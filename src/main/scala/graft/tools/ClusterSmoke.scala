@@ -127,11 +127,12 @@ object ClusterSmoke {
       // the staged-generation rewrite job (with the satellite (hk, load_dts)
       // sort) runs ON the executors; resolution + marker commit are driver
       // metadata — results must survive the swap byte-for-byte
+      def gen(): Long = lake.dataPath("dv", "hsat_customer").split(graft.core.Lake.GenPrefix).last.toLong
+      val g0 = gen()
       val (cb, ca) = lake.compact("dv", "hsat_customer",
         sortBy = Seq("customer_hk", "load_dts"))
       check(ca <= cb, s"compact grew the table: $cb -> $ca")
-      check(lake.dataPath("dv", "hsat_customer").contains(graft.core.Lake.GenPrefix),
-        "compaction must land a committed generation")
+      check(gen() == g0 + 1, s"compaction must commit the next generation: gen-$g0 -> gen-${gen()}")
       val cur2 = DvOps.currentRows(lake.read("dv", "hsat_customer").drop("hk_bucket"), "customer_hk")
       check(cur2.count() == 4, s"current view keys after compact=${cur2.count()}")
 

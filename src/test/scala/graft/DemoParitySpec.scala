@@ -107,17 +107,19 @@ class DemoParitySpec extends SparkSpec {
     assert(bvCv.count() == 2)
 
     // ... and the catalog must FOLLOW THE GENERATION: after a compact the
-    // data moves to `_gen-1/`, and the qualified names must still resolve
-    // to live files (a root-pinned registration would chase deleted parts
-    // after the next compact's expire, or read the superseded flat files).
+    // data moves to `gen-2/`, and the qualified names must still resolve
+    // to live files (a registration pinned to `gen-1/` would chase deleted
+    // parts after the next compact's expire).
     g.compact("dv", "hub_customer")
     g.compact("dv", "hsat_customer_details")
+    assert(g.lake.dataPath("dv", "hub_customer").endsWith(s"${graft.core.Lake.GenPrefix}2"))
     assert(g.sql("SELECT * FROM dv.hub_customer").count() == 3)
     assert(g.sql("SELECT count(*) AS n FROM bv.hsat_customer_details_cv")
       .collect().head.getLong(0) == 2L)
     // second compact EXPIRES the first generation's files — a stale
     // registration would now throw FILE_NOT_EXIST rather than miscount
     g.compact("dv", "hub_customer")
+    assert(g.lake.dataPath("dv", "hub_customer").endsWith(s"${graft.core.Lake.GenPrefix}3"))
     assert(g.sql("SELECT * FROM dv.hub_customer").count() == 3)
 
     // incremental load through the claim-guarded flow path still lands in

@@ -184,10 +184,10 @@ class FlowExecutorSpec extends SparkSpec {
     // makes nextRunId's max() throw at read time, BEFORE any run exists.
     // The failure must not write a ledger row (there is no run to attribute
     // it to) and must not reuse the run-id-0 "skipped" sentinel.
-    Seq(("customer", "one", new Timestamp(0L), "seen.csv", "success", ""))
-      .toDF("source_table", "run_id", "log_date", "source_file", "status", "message")
-      .write.parquet(lake.tablePath("metadata", "runinfo"))
-    val dir = new java.io.File(lake.tablePath("metadata", "runinfo"))
+    lake.append(Seq(("customer", "one", new Timestamp(0L), "seen.csv", "success", ""))
+      .toDF("source_table", "run_id", "log_date", "source_file", "status", "message"),
+      "metadata", "runinfo")
+    val dir = new java.io.File(new org.apache.hadoop.fs.Path(lake.dataPath("metadata", "runinfo")).toUri.getPath)
     val before = dir.listFiles().map(_.getName).toSet
     val csv = s"$root/c.csv"
     writeCsv(csv, Seq("1,alice,BUILDING"))

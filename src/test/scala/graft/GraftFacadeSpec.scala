@@ -68,6 +68,53 @@ class GraftFacadeSpec extends SparkSpec {
       .as[Long].head() == 2L)
   }
 
+  test("reads of a compacted table log no 'All paths were ignored' warning") {
+    // Spark's DataSource warns when every path it is given is hidden (a
+    // `_`/`.` prefix); generation dirs are read directly, so their names
+    // must not be hidden ones
+    import scala.jdk.CollectionConverters._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val root = tmpDir("graftwarn")
+    val g = new Graft(spark, s"$root/lake", meta, None, HashGen.Md5)
+    g.initVault()
+    val f = s"$root/c.csv"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(f), "c_custkey,c_name\n1,ann\n2,bob")
+    assert(g.executeFlow("customer", "warn", Some(f), Some(Timestamp.valueOf("2026-01-01 00:00:00")))
+      .status == "success")
+    g.compact("dv", "hub_customer")
+    Seq(1L).toDF("x").write.parquet(s"$root/_hidden")
+
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graftDataSourceWarn", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger("org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[CoreLogger]
+    val level = logger.getLevel
+    appender.start()
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    def ignored(): Int = seen.asScala.count(_.contains("All paths were ignored"))
+    try {
+      // control: the appender does see the warning for a hidden directory
+      assert(spark.read.parquet(s"$root/_hidden").count() == 1L)
+      assert(ignored() >= 1, s"appender saw no warning for a hidden path: ${seen.asScala.mkString("; ")}")
+      seen.clear()
+      val hub = g.lake.read("dv", "hub_customer")
+      assert(hub.count() == 2L)
+      assert(g.lake.readOr("dv", "hub_customer", hub.drop("hk_bucket").schema).count() == 2L)
+      assert(g.sql("SELECT * FROM dv.hub_customer").count() == 2L)
+      assert(ignored() == 0, seen.asScala.mkString("\n"))
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+  }
+
   test("facade: compact rewrites a live satellite sorted and re-registers its current view") {
     val root = tmpDir("graftcompact")
     val g = new Graft(spark, s"$root/lake", meta, None, HashGen.Md5)
@@ -91,7 +138,7 @@ class GraftFacadeSpec extends SparkSpec {
     // within each file — read one file back and pin the clustering the
     // as-of pruning relies on
     val dataDir = g.lake.dataPath("dv", "hsat_customer")
-    assert(dataDir.contains(graft.core.Lake.GenPrefix))
+    assert(dataDir.endsWith(s"${graft.core.Lake.GenPrefix}2"), dataDir)
     val oneFile = g.table("dv", "hsat_customer") // routed through the generation
     assert(oneFile.count() == 4)
     import org.apache.spark.sql.expressions.Window

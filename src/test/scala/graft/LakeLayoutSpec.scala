@@ -28,6 +28,10 @@ class LakeLayoutSpec extends SparkSpec {
     fs.listStatus(p).map(_.getPath.getName).toSet
   }
 
+  private def gen(n: Int): String = s"${Lake.GenPrefix}$n"
+
+  private def localDir(path: String): java.io.File = new java.io.File(new Path(path).toUri.getPath)
+
   private def bucketDirs(lake: Lake, layer: String, name: String): Set[Long] = {
     val p = new Path(lake.dataPath(layer, name))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -42,7 +46,10 @@ class LakeLayoutSpec extends SparkSpec {
     val rows = (1 to 60).map(i => (s"key$i", i.toLong)).toDF("hk", "v")
     writer.appendBucketed(rows, "dv", "t", "hk")
     assert(writer.tableLayout("dv", "t").contains(TableLayout(4, "hk", Nil)))
-    assert(rootChildren(writer, "dv", "t").contains(Lake.LayoutFile))
+    // the first write committed generation 1, record inside it
+    assert(rootChildren(writer, "dv", "t") == Set(gen(1)))
+    assert(writer.dataPath("dv", "t").endsWith(gen(1)))
+    assert(localDir(writer.dataPath("dv", "t")).list().contains(Lake.LayoutFile))
 
     // a DIFFERENT bucket derivation on the same table: loud refusal
     val e = intercept[DvException](
@@ -100,85 +107,17 @@ class LakeLayoutSpec extends SparkSpec {
         (1 to 30).map(i => (s"k${r}_$i", i.toLong)).toDF("hk", "v"), "dv", "t", "hk")
     }
     writer.compact("dv", "t", sortBy = Seq("hk"))
-    assert(writer.dataPath("dv", "t").contains(Lake.GenPrefix))
+    assert(writer.dataPath("dv", "t").endsWith(gen(2)))
     // record lives INSIDE the generation (one marker committed data+layout),
     // and records the rewrite's sort
     assert(writer.tableLayout("dv", "t").contains(TableLayout(4, "hk", Seq("hk"))))
-    // the superseded root record goes with the superseded flat data
+    // the superseded generation goes with its record
     writer.expireSuperseded("dv", "t")
-    assert(!rootChildren(writer, "dv", "t").contains(Lake.LayoutFile))
+    assert(rootChildren(writer, "dv", "t") == Set(gen(2)))
     val drifted = new Lake(spark, root, buckets = 32)
     assert(drifted.tableBuckets("dv", "t") == 4)
     assert(drifted.lookupBucketed("dv", "t", "hk", "k1_17")
       .select("v").as[Long].head() == 17L)
-  }
-
-  test("legacy record-less table: disk evidence of a larger original count refuses adoption") {
-    val root = tmpDir("lake_layout_legacy_")
-    val writer = new Lake(spark, root, buckets = 16)
-    writer.appendBucketed((1 to 80).map(i => (s"k$i", i.toLong)).toDF("hk", "v"), "dv", "t", "hk")
-    // simulate a pre-r19 table: remove the record
-    val rec = new Path(writer.tablePath("dv", "t"), Lake.LayoutFile)
-    rec.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(rec, false)
-    val drifted = new Lake(spark, root, buckets = 4)
-    // 80 keys over 16 buckets: some on-disk hk_bucket >= 4 proves the drift
-    val e = intercept[DvException](
-      drifted.appendBucketed(Seq(("x", 1L)).toDF("hk", "v"), "dv", "t", "hk"))
-    assert(e.error.isInstanceOf[DvError.Configuration], e.error.render)
-    assert(e.error.message.contains("predates layout records"))
-    // the ORIGINAL count re-adopts and writes the record
-    val orig = new Lake(spark, root, buckets = 16)
-    orig.appendBucketed(Seq(("extra", 99L)).toDF("hk", "v"), "dv", "t", "hk")
-    assert(orig.tableLayout("dv", "t").contains(TableLayout(16, "hk", Nil)))
-  }
-
-  test("legacy adoption: a wrong count the partition NAMES can't disprove is caught by the row re-derivation check") {
-    // the r19 review scenario: a pre-record table written at 16 whose
-    // occupied buckets all happen to be < the drifted session's count —
-    // observedBucketAtOrOver passes, but blessing the wrong count into a
-    // record would make probes/lookups miss existing keys PERMANENTLY
-    val root = tmpDir("lake_layout_sparse_")
-    val writer = new Lake(spark, root, buckets = 16)
-    // keys confined to buckets < 12 under the TRUE count 16
-    val keys = (1 to 400).map(i => s"k$i").filter(k => writer.bucketOfValue(k) < 12).take(60)
-    assert(keys.size >= 30, s"fixture needs enough sparse keys, got ${keys.size}")
-    writer.appendBucketed(keys.map((_, 1L)).toDF("hk", "v"), "dv", "t", "hk")
-    val rec = new Path(writer.tablePath("dv", "t"), Lake.LayoutFile)
-    rec.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(rec, false)
-    assert(bucketDirs(writer, "dv", "t").forall(_ < 12), "fixture: names alone can't disprove 12")
-
-    // 12 ∤ 16: stored rows have pmod(h,16) ≠ pmod(h,12) for most keys — the
-    // exhaustive adoption check must refuse before writing the record
-    val drifted = new Lake(spark, root, buckets = 12)
-    val e = intercept[DvException](
-      drifted.appendBucketed(Seq(("x", 1L)).toDF("hk", "v"), "dv", "t", "hk"))
-    assert(e.error.isInstanceOf[DvError.Configuration], e.error.render)
-    assert(e.error.message.contains("does not re-derive"), e.error.message)
-    assert(!rootChildren(drifted, "dv", "t").contains(Lake.LayoutFile), "no record blessed")
-  }
-
-  test("legacy adoption: a divisor count consistent with every stored row is admitted and stays correct") {
-    // 4 | 16 and occupied buckets all < 4 ⇒ pmod(h,4) = pmod(h,16) for every
-    // stored row: adopting 4 makes the table a VALID 4-bucket table (old
-    // rows already sit where 4-derived probes look) — deliberately admitted
-    val root = tmpDir("lake_layout_divisor_")
-    val writer = new Lake(spark, root, buckets = 16)
-    val keys = (1 to 800).map(i => s"k$i").filter(k => writer.bucketOfValue(k) < 4).take(40)
-    assert(keys.size >= 20, s"fixture needs enough keys, got ${keys.size}")
-    writer.appendBucketed(keys.zipWithIndex.map { case (k, i) => (k, i.toLong) }.toDF("hk", "v"),
-      "dv", "t", "hk")
-    val rec = new Path(writer.tablePath("dv", "t"), Lake.LayoutFile)
-    rec.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(rec, false)
-
-    val adopter = new Lake(spark, root, buckets = 4)
-    adopter.appendBucketed(Seq(("newk", 999L)).toDF("hk", "v"), "dv", "t", "hk")
-    assert(adopter.tableLayout("dv", "t").contains(TableLayout(4, "hk", Nil)))
-    // every OLD key still resolves under the adopted count
-    keys.zipWithIndex.foreach { case (k, i) =>
-      assert(adopter.lookupBucketed("dv", "t", "hk", k)
-        .select("v").as[Long].head() == i.toLong, k)
-    }
-    assert(adopter.lookupBucketed("dv", "t", "hk", "newk").select("v").as[Long].head() == 999L)
   }
 
   test("resolution cache is keyed by the QUALIFIED path: a write through one spelling invalidates the other") {
@@ -190,12 +129,12 @@ class LakeLayoutSpec extends SparkSpec {
     val a = new Lake(spark, plainRoot, buckets = 4)
     val b = new Lake(spark, s"file:$plainRoot/", buckets = 4)
     a.append(Seq((1L, "a"), (2L, "b")).toDF("run_id", "status"), "metadata", "runinfo")
-    // B resolves (and caches) the flat layout
-    assert(!b.dataPath("metadata", "runinfo").contains(Lake.GenPrefix))
+    // B resolves (and caches) generation 1
+    assert(b.dataPath("metadata", "runinfo").endsWith(gen(1)))
     assert(b.read("metadata", "runinfo").count() == 2)
-    // A compacts: B must observe the committed generation immediately
+    // A compacts: B must observe the committed generation 2 immediately
     a.compact("metadata", "runinfo")
-    assert(b.dataPath("metadata", "runinfo").contains(Lake.GenPrefix),
+    assert(b.dataPath("metadata", "runinfo").endsWith(gen(2)),
       s"stale resolution through the other spelling: ${b.dataPath("metadata", "runinfo")}")
     // B's plain append lands INSIDE the generation and survives A's expire
     b.append(Seq((3L, "c")).toDF("run_id", "status"), "metadata", "runinfo")
@@ -221,6 +160,7 @@ class LakeLayoutSpec extends SparkSpec {
 
     val (before, after) = lake.rebucket("dv", "t", 16, sortBy = Seq("hk"))
     assert(before > 0 && after > 0)
+    assert(lake.dataPath("dv", "t").endsWith(gen(2)))
     assert(lake.tableLayout("dv", "t").contains(TableLayout(16, "hk", Seq("hk"))))
     assert(lake.tableBuckets("dv", "t") == 16)
 
@@ -253,15 +193,15 @@ class LakeLayoutSpec extends SparkSpec {
     // appends continue at the new count, inside the committed generation
     lake.appendBucketed(Seq(("post", 7L)).toDF("hk", "v"), "dv", "t", "hk")
     assert(lake.read("dv", "t").count() == 121)
-    assert(lake.dataPath("dv", "t").contains(Lake.GenPrefix))
+    assert(lake.dataPath("dv", "t").endsWith(gen(2)))
 
     // the pre-rebucket reader completes (superseded data retained one cycle)
     assert(oldReader.agg(sum("v")).head().getLong(0) == expectedSum)
 
-    // a record-less table refuses rebucket without an explicit keyCol
-    lake.appendBucketed(Seq(("a", 1L)).toDF("hk", "v"), "dv", "nolayout", "hk")
-    val rec = new Path(lake.tablePath("dv", "nolayout"), Lake.LayoutFile)
-    rec.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(rec, false)
+    // a record-less (plain-appended) table refuses rebucket without an
+    // explicit keyCol
+    lake.append(Seq(("a", 1L)).toDF("hk", "v"), "dv", "nolayout")
+    assert(lake.tableLayout("dv", "nolayout").isEmpty)
     val e = intercept[DvException](lake.rebucket("dv", "nolayout", 8))
     assert(e.error.isInstanceOf[DvError.Configuration])
     // ... and succeeds with one
@@ -315,17 +255,18 @@ class LakeLayoutSpec extends SparkSpec {
     val lake = new Lake(spark, root, buckets = 4)
     lake.appendBucketed((1 to 20).map(i => (s"k$i", i.toLong)).toDF("hk", "v"), "dv", "t", "hk")
     val expected = lake.read("dv", "t").agg(sum("v")).head().getLong(0)
-    lake.compact("dv", "t") // gen1 (flat superseded, expired at next compact)
+    lake.compact("dv", "t") // gen-2; gen-1 superseded
+    assert(rootChildren(lake, "dv", "t") == Set(gen(1), gen(2)))
 
     withConf(Confs.GenRetainMillisKey, "3600000") {
-      // an in-flight reader of gen1 resolved before the next rewrite
+      // an in-flight reader of gen-2 resolved before the next rewrite
       val oldReader = lake.read("dv", "t")
-      lake.compact("dv", "t") // gen2; gen1 superseded but INSIDE the window
-      assert(rootChildren(lake, "dv", "t")
-        .count(_.startsWith(Lake.GenPrefix)) == 2, "young superseded gen survives a re-compact")
-      // appends don't reclaim it either while young
+      lake.compact("dv", "t") // gen-3; gen-1 and gen-2 superseded but INSIDE the window
+      assert(rootChildren(lake, "dv", "t") == Set(gen(1), gen(2), gen(3)),
+        "young superseded gens survive a re-compact")
+      // appends don't reclaim them either while young
       lake.appendBucketed(Seq(("x", 0L)).toDF("hk", "v"), "dv", "t", "hk")
-      assert(rootChildren(lake, "dv", "t").count(_.startsWith(Lake.GenPrefix)) == 2)
+      assert(rootChildren(lake, "dv", "t") == Set(gen(1), gen(2), gen(3)))
       // the old-generation reader COMPLETES under the window
       assert(oldReader.agg(sum("v")).head().getLong(0) == expected)
     }
@@ -333,17 +274,16 @@ class LakeLayoutSpec extends SparkSpec {
       // window elapsed (0 ms): the table's own next append reclaims —
       // nobody had to remember expireSuperseded
       lake.appendBucketed(Seq(("y", 0L)).toDF("hk", "v"), "dv", "t", "hk")
-      assert(rootChildren(lake, "dv", "t").count(_.startsWith(Lake.GenPrefix)) == 1,
-        rootChildren(lake, "dv", "t").mkString(","))
+      assert(rootChildren(lake, "dv", "t") == Set(gen(3)), rootChildren(lake, "dv", "t").mkString(","))
     }
     assert(lake.read("dv", "t").agg(sum("v")).head().getLong(0) == expected)
 
     // explicit expireSuperseded ignores the window (it IS the drain statement)
     lake.compact("dv", "t")
     withConf(Confs.GenRetainMillisKey, "3600000") {
-      assert(rootChildren(lake, "dv", "t").count(_.startsWith(Lake.GenPrefix)) == 2)
+      assert(rootChildren(lake, "dv", "t") == Set(gen(3), gen(4)))
       lake.expireSuperseded("dv", "t")
-      assert(rootChildren(lake, "dv", "t").count(_.startsWith(Lake.GenPrefix)) == 1)
+      assert(rootChildren(lake, "dv", "t") == Set(gen(4)))
     }
   }
 
@@ -352,11 +292,12 @@ class LakeLayoutSpec extends SparkSpec {
     val lake = new Lake(spark, root, buckets = 4)
     // the ledger write path: plain (non-bucketed) appends
     lake.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("run_id", "status"), "metadata", "runinfo")
+    assert(lake.dataPath("metadata", "runinfo").endsWith(gen(1)))
     lake.compact("metadata", "runinfo") // the archetypal small-file target
-    assert(lake.dataPath("metadata", "runinfo").contains(Lake.GenPrefix))
-    // post-compaction appends MUST land inside the generation — to the table
-    // root they'd be invisible to reads and deleted as legacy by the next
-    // expire (r18 ADVICE-high: lost ledger rows double-ingest files)
+    assert(lake.dataPath("metadata", "runinfo").endsWith(gen(2)))
+    // post-compaction appends MUST land inside the current generation — in
+    // the superseded one they'd be invisible to reads and deleted by the
+    // next expire (lost ledger rows double-ingest files)
     lake.append(Seq((4L, "d"), (5L, "e")).toDF("run_id", "status"), "metadata", "runinfo")
     assert(lake.read("metadata", "runinfo").count() == 5)
     lake.expireSuperseded("metadata", "runinfo")
@@ -386,13 +327,13 @@ class LakeLayoutSpec extends SparkSpec {
       assert(e.error.isInstanceOf[DvError.Concurrency], e.error.render)
       assert(e.error.message.contains("changed while the rewrite was staging"), e.error.message)
     } finally Lake.beforeCommitHook = _ => ()
-    // nothing committed, nothing lost: flat layout intact INCLUDING the
+    // nothing committed, nothing lost: gen-1 still current INCLUDING the
     // mid-staging append's row
-    assert(!lake.dataPath("dv", "t").contains(Lake.GenPrefix))
+    assert(lake.dataPath("dv", "t").endsWith(gen(1)))
     assert(lake.read("dv", "t").agg(sum("v")).head().getLong(0) == expected + 777L)
     // the next (unraced) compact succeeds and carries every row
     lake.compact("dv", "t")
-    assert(lake.dataPath("dv", "t").contains(Lake.GenPrefix))
+    assert(lake.dataPath("dv", "t").endsWith(gen(2)))
     assert(lake.read("dv", "t").agg(sum("v")).head().getLong(0) == expected + 777L)
 
     // rebucket takes the same guard
@@ -405,11 +346,12 @@ class LakeLayoutSpec extends SparkSpec {
       assert(e.error.isInstanceOf[DvError.Concurrency], e.error.render)
     } finally Lake.beforeCommitHook = _ => ()
     assert(lake.tableBuckets("dv", "t") == 4, "aborted rebucket must not change the count")
+    assert(lake.dataPath("dv", "t").endsWith(gen(2)))
     assert(lake.read("dv", "t").agg(sum("v")).head().getLong(0) == expected + 777L + 888L)
-    // a clean FIRST-compaction baseline: the staged dir inside the source
-    // root must not trip the check (its files are the rewrite's own output)
-    lake.appendBucketed(Seq(("flat", 1L)).toDF("hk", "v"), "dv", "t2", "hk")
+    // an unraced rewrite of a fresh table commits gen-2 cleanly
+    lake.appendBucketed(Seq(("one", 1L)).toDF("hk", "v"), "dv", "t2", "hk")
     lake.compact("dv", "t2")
+    assert(lake.dataPath("dv", "t2").endsWith(gen(2)))
     assert(lake.read("dv", "t2").count() == 1)
   }
 
@@ -436,88 +378,133 @@ class LakeLayoutSpec extends SparkSpec {
       assert(e.error.isInstanceOf[DvError.Concurrency], e.error.render)
     } finally Lake.beforeCommitHook = _ => ()
     assert(lake.tableBuckets("dv", "t") == 4)
+    assert(lake.dataPath("dv", "t").endsWith(gen(1)), "aborted rebucket must not commit")
     assert(lake.read("dv", "t").agg(sum("v")).head().getLong(0) == expected + 999L)
-    // retry clean, then the policy reclaims EXACTLY the superseded flat
-    // layout on the next (claimed) append — current generation intact
+    // retry clean, then the policy reclaims EXACTLY the superseded gen-1 on
+    // the next (claimed) append — current generation intact
     lake.rebucket("dv", "t", 8)
     assert(lake.tableBuckets("dv", "t") == 8)
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tableRoot = new Path(lake.tablePath("dv", "t"))
-    assert(fs.listStatus(tableRoot).exists(_.getPath.getName.startsWith("hk_bucket=")),
-      "superseded flat layout should survive until the policy window")
+    assert(lake.dataPath("dv", "t").endsWith(gen(2)))
+    assert(rootChildren(lake, "dv", "t") == Set(gen(1), gen(2)),
+      "superseded gen-1 should survive until the policy window")
     try {
       spark.conf.set(graft.core.Confs.GenRetainMillisKey, "0")
       lake.withLoadClaim("dv", "t", "postLoad") {
         lake.appendBucketed(Seq(("post", 1L)).toDF("hk", "v"), "dv", "t", "hk")
       }
-      val names = fs.listStatus(tableRoot).map(_.getPath.getName).toSeq
-      assert(!names.exists(_.startsWith("hk_bucket=")) && !names.exists(_.endsWith(".parquet")),
-        s"policy expire left superseded root data: $names")
-      assert(names.exists(_.startsWith(Lake.GenPrefix)), s"current generation missing: $names")
+      assert(rootChildren(lake, "dv", "t") == Set(gen(2)),
+        s"policy expire must leave exactly the current generation: ${rootChildren(lake, "dv", "t")}")
       assert(lake.read("dv", "t").agg(sum("v")).head().getLong(0) == expected + 999L + 1L)
     } finally spark.conf.unset(graft.core.Confs.GenRetainMillisKey)
   }
 
-  test("expire keeps a root layout record the current generation doesn't carry (manual-migration shape)") {
-    val root = tmpDir("lake_rootrec_")
-    val lake = new Lake(spark, root, buckets = 4)
-    lake.appendBucketed((1 to 20).map(i => (s"k$i", i.toLong)).toDF("hk", "v"), "dv", "t", "hk")
-    lake.compact("dv", "t")
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val genDir = new Path(lake.dataPath("dv", "t"))
-    val tableRoot = new Path(lake.tablePath("dv", "t"))
-    // simulate the pre-record migration shape: record at the ROOT only
-    // (a table compacted before layout records existed, record added by an
-    // operator afterwards — the resolution fallback reads the root copy).
-    // The root copy survives from create; remove the generation's own.
-    assert(fs.delete(new Path(genDir, Lake.LayoutFile), false))
-    assert(fs.exists(new Path(tableRoot, Lake.LayoutFile)), "fixture: root record present")
-    lake.expireSuperseded("dv", "t")
-    // the root record SURVIVES (deleting it would silently regress the
-    // table to session-conf bucket resolution)...
-    assert(fs.exists(new Path(tableRoot, Lake.LayoutFile)), "root record expired away")
-    val drifted = new Lake(spark, root, buckets = 32)
-    assert(drifted.tableBuckets("dv", "t") == 4, "fallback record must govern")
-    // ...and the next compact copies it into its generation, after which
-    // the root copy is reclaimable as usual
-    lake.compact("dv", "t")
-    assert(fs.exists(new Path(new Path(lake.dataPath("dv", "t")), Lake.LayoutFile)))
-    lake.expireSuperseded("dv", "t")
-    assert(!fs.exists(new Path(tableRoot, Lake.LayoutFile)), "carried record: root copy reclaims")
-    assert(new Lake(spark, root, buckets = 32).tableBuckets("dv", "t") == 4)
-  }
-
   test("expire refuses to delete data written AFTER the superseding commit (stale-resolution orphan)") {
     // the cross-process shape: a Lake whose cached resolution predates a
-    // compaction keeps appending at the table root (or an old generation);
-    // those rows postdate the superseding commit, so "superseded legacy
-    // data" is a misdiagnosis — deleting them is silent loss. Expire must
-    // refuse with a typed error until the operator reconciles.
+    // compaction keeps appending into the superseded generation; those rows
+    // postdate the superseding commit, so "superseded data" is a
+    // misdiagnosis — deleting them is silent loss. Expire must refuse with
+    // a typed error until the operator reconciles.
     val root = tmpDir("lake_orphan_")
     val lake = new Lake(spark, root, buckets = 4)
     lake.appendBucketed((1 to 20).map(i => (s"k$i", i.toLong)).toDF("hk", "v"), "dv", "t", "hk")
     lake.compact("dv", "t")
+    assert(lake.dataPath("dv", "t").endsWith(gen(2)))
     Thread.sleep(20) // mtime strictly after the commit marker's
-    // orphan write: directly into the superseded flat layout, bypassing the
-    // Lake (what a stale cross-process resolution effectively does)
-    Seq(("orphan", 999L)).toDF("hk", "v")
-      .write.mode("append").parquet(s"${lake.tablePath("dv", "t")}/hk_bucket=0")
+    // orphan write: directly into the superseded gen-1, bypassing the Lake
+    // (what a stale cross-process resolution effectively does)
+    val bucketDir = new Path(new Path(lake.tablePath("dv", "t"), gen(1)), "hk_bucket=0")
+    Seq(("orphan", 999L)).toDF("hk", "v").write.mode("append").parquet(bucketDir.toString)
     val e = intercept[DvException](lake.expireSuperseded("dv", "t"))
     assert(e.error.isInstanceOf[DvError.Concurrency], e.error.render)
     assert(e.error.message.contains("WRITTEN AFTER"), e.error.message)
-    // nothing was deleted — the superseded flat data (and the orphan) survive
-    assert(rootChildren(lake, "dv", "t").exists(_.startsWith("hk_bucket=")),
+    // nothing was deleted — the superseded gen-1 (and the orphan) survive
+    assert(rootChildren(lake, "dv", "t") == Set(gen(1), gen(2)),
       "refusal must not have deleted anything")
     // operator reconciles (here: removes the orphan) — expire then succeeds
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bucketDir = new Path(lake.tablePath("dv", "t"), "hk_bucket=0")
     fs.listStatus(bucketDir).filter(s => s.getModificationTime >
       fs.getFileStatus(new Path(new Path(lake.dataPath("dv", "t")), Lake.CommitMarker))
         .getModificationTime)
       .foreach(s => fs.delete(s.getPath, false))
     assert(lake.expireSuperseded("dv", "t") > 0)
-    assert(!rootChildren(lake, "dv", "t").exists(_.startsWith("hk_bucket=")))
+    assert(rootChildren(lake, "dv", "t") == Set(gen(2)))
     assert(lake.read("dv", "t").count() == 20)
+  }
+
+  test("crash leftover: an uncommitted gen-1 reads as absent and the next first append replaces it") {
+    val root = tmpDir("lake_leftover_")
+    val lake = new Lake(spark, root, buckets = 4)
+    // a first write that crashed before its commit marker
+    Seq(("leftover", 1L)).toDF("hk", "v").write.parquet(s"${lake.tablePath("dv", "t")}/${gen(1)}")
+    assert(!lake.exists("dv", "t"))
+    assert(lake.readOr("dv", "t", Seq(("a", 0L)).toDF("hk", "v").schema).count() == 0L)
+    val e = intercept[DvException](lake.dataPath("dv", "t"))
+    assert(e.error.isInstanceOf[DvError.Entity], e.error.render)
+
+    assert(lake.appendBucketed((1 to 10).map(i => (s"k$i", i.toLong)).toDF("hk", "v"),
+      "dv", "t", "hk") == 10L)
+    assert(rootChildren(lake, "dv", "t") == Set(gen(1)))
+    val genChildren = localDir(lake.dataPath("dv", "t")).list().toSet
+    assert(Set(Lake.LayoutFile, Lake.CommitMarker).subsetOf(genChildren), genChildren)
+    assert(genChildren.exists(_.startsWith("hk_bucket=")), genChildren)
+    assert(lake.read("dv", "t").count() == 10L, "the leftover's rows must be gone")
+    assert(lake.tableLayout("dv", "t").contains(TableLayout(4, "hk", Nil)))
+  }
+
+  test("a flat-layout root is refused with a typed error by every entry point, and nothing is deleted") {
+    val root = tmpDir("lake_flatroot_")
+    val lake = new Lake(spark, root, buckets = 4)
+    val rows = (1 to 8).map(i => (s"k$i", i.toLong)).toDF("hk", "v")
+    // the two shapes the older flat layout left: plain part files, and
+    // hk_bucket= partition dirs, directly in the table root
+    rows.write.parquet(lake.tablePath("metadata", "flat"))
+    rows.withColumn("hk_bucket", lake.bucketOf(col("hk")))
+      .write.partitionBy("hk_bucket").parquet(lake.tablePath("dv", "flat"))
+    def files(layer: String): Set[String] = {
+      val p = new Path(lake.tablePath(layer, "flat"))
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSet
+    }
+    Seq("metadata", "dv").foreach { layer =>
+      val before = files(layer)
+      def refused(what: String)(op: => Any): Unit = {
+        val e = intercept[DvException](op)
+        assert(e.error.isInstanceOf[DvError.Configuration], s"$what: ${e.error.render}")
+        assert(e.error.message.contains(lake.tablePath(layer, "flat")), s"$what: ${e.error.message}")
+      }
+      refused("exists")(lake.exists(layer, "flat"))
+      refused("readOr")(lake.readOr(layer, "flat", rows.schema))
+      refused("appendBucketed")(lake.appendBucketed(rows, layer, "flat", "hk"))
+      refused("overwrite")(lake.overwrite(rows, layer, "flat"))
+      refused("compact")(lake.compact(layer, "flat"))
+      refused("expireSuperseded")(lake.expireSuperseded(layer, "flat"))
+      assert(files(layer) == before, s"$layer.flat: a refusal deleted or wrote files")
+    }
+  }
+
+  test("empty writes: an empty overwrite commits a 0-row table, an empty first appendBucketed leaves none") {
+    val root = tmpDir("lake_empty_")
+    val lake = new Lake(spark, root, buckets = 4)
+    val schema = Seq(("a", 0L)).toDF("hk", "v").schema
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    lake.overwrite(Seq(("x", 1L)).toDF("hk", "v"), "stg", "s")
+    lake.overwrite(empty, "stg", "s") // truncate
+    assert(lake.exists("stg", "s"))
+    assert(lake.dataPath("stg", "s").endsWith(gen(1)))
+    assert(lake.readOr("stg", "s", schema).count() == 0L)
+    assert(rootChildren(lake, "stg", "s") == Set(gen(1)))
+    // an overwrite whose frame reads the table itself is refused before the
+    // delete, as Spark's own overwrite refuses it
+    lake.overwrite(Seq(("y", 2L)).toDF("hk", "v"), "stg", "s")
+    intercept[org.apache.spark.sql.AnalysisException](
+      lake.overwrite(lake.read("stg", "s").filter(col("v") > 0L), "stg", "s"))
+    assert(lake.read("stg", "s").count() == 1L)
+
+    assert(lake.appendBucketed(empty, "dv", "e", "hk") == 0L)
+    assert(!lake.exists("dv", "e"))
+    assert(lake.tableLayout("dv", "e").isEmpty)
+    val eRoot = new java.io.File(lake.tablePath("dv", "e"))
+    assert(!eRoot.exists() || eRoot.list().isEmpty, eRoot.list().mkString(","))
   }
 
   test("DvError.from keeps the caller's context on already-typed errors") {

@@ -53,13 +53,13 @@ class ProbePruneSpec extends SparkSpec {
   }
 
   test("pruned probe + span-counted append work unchanged on a COMPACTED (generational) table") {
-    // the r18 layout: after compaction the data lives under
-    // {table}/_gen-N/hk_bucket=... — the pruned probe's partition paths and
-    // the counted append's write must both resolve through the committed
-    // generation, not the table root
+    // after compaction the data lives under {table}/gen-2/hk_bucket=... —
+    // the pruned probe's partition paths and the counted append's write
+    // must both resolve through the current generation, not the first one
     val (lake, keys) = vault(buckets = 8, n = 80)
+    val gen2 = s"${graft.core.Lake.GenPrefix}2"
     lake.compact("dv", "hub")
-    assert(lake.dataPath("dv", "hub").contains(graft.core.Lake.GenPrefix))
+    assert(lake.dataPath("dv", "hub").endsWith(gen2))
     val b0 = lake.bucketOfValue(keys.head)
     val sameBucket = keys.filter(k => lake.bucketOfValue(k) == b0).take(4)
     val fresh = (1 to 999).map(i => s"new$i").find(k => lake.bucketOfValue(k) == b0).get
@@ -69,7 +69,7 @@ class ProbePruneSpec extends SparkSpec {
       val pruned = lake.readOrProbe("dv", "hub", hkSchema, staged, col("hk"))
       val read = pruned.select(input_file_name()).distinct().as[String].collect()
       assert(read.length == 1, "one bucket staged -> one generation file read")
-      assert(read.forall(f => f.contains(graft.core.Lake.GenPrefix) && f.contains(s"hk_bucket=$b0/")),
+      assert(read.forall(f => f.contains(s"/$gen2/") && f.contains(s"hk_bucket=$b0/")),
         read.mkString(","))
       val anti = staged.join(pruned, Seq("hk"), "left_anti")
       // counted append: the new file lands INSIDE the generation dir, and
@@ -80,13 +80,12 @@ class ProbePruneSpec extends SparkSpec {
       assert(lake.readOr("dv", "hub",
         StructType(Seq(StructField("hk", StringType),
           StructField("v", org.apache.spark.sql.types.LongType)))).count() == 81)
-      // and the appended row landed inside the generation, not the root:
-      // after reclaiming the retained flat legacy, the root holds ONLY the
-      // generation dir (a flat re-creation would have added hk_bucket= dirs)
+      // and the appended row landed inside gen-2: after reclaiming the
+      // retained gen-1, the root holds ONLY gen-2
       lake.expireSuperseded("dv", "hub")
       val rootEntries = new java.io.File(lake.tablePath("dv", "hub")).listFiles().map(_.getName)
-      assert(rootEntries.forall(_.startsWith(graft.core.Lake.GenPrefix)),
-        s"post-compaction appends must not recreate the flat layout: ${rootEntries.mkString(",")}")
+      assert(rootEntries.toSeq == Seq(gen2),
+        s"post-compaction appends must land in the current generation: ${rootEntries.mkString(",")}")
     } finally spark.conf.unset(Confs.ProbePruneMinBytesKey)
   }
 

@@ -220,8 +220,9 @@ class ScratchSpec extends SparkSpec {
     assert(after == Iterator.continually(genFiles).takeWhile(_.hasNext)
       .count(_.next().getPath.getName.endsWith(".parquet")).toLong)
 
-    // post-commit: new readers resolve the committed generation
-    assert(lake.dataPath("dv", "t").contains(graft.core.Lake.GenPrefix))
+    // post-commit: new readers resolve the committed generation 2
+    val gen = graft.core.Lake.GenPrefix
+    assert(lake.dataPath("dv", "t").endsWith(s"${gen}2"))
     assert(lake.read("dv", "t").count() == 150)
     assert(lake.read("dv", "t").agg(sum(col("v"))).head().getLong(0) == expected)
 
@@ -233,23 +234,23 @@ class ScratchSpec extends SparkSpec {
     // an UNCOMMITTED staged generation (crashed compaction) is invisible to
     // resolution — no marker, no data change
     spark.range(5).selectExpr("cast(id as string) as hk", "id as v")
-      .write.parquet(s"$root/dv/t/${graft.core.Lake.GenPrefix}99")
+      .write.parquet(s"$root/dv/t/${gen}99")
     assert(lake.read("dv", "t").count() == 150)
 
-    // the next compact expires the crashed leftover AND the legacy flat
-    // files, then commits generation 2; generation 1 is retained one cycle
+    // the next compact expires the crashed leftover AND the superseded
+    // generation 1, then commits generation 3; generation 2 is retained one
+    // cycle
     lake.compact("dv", "t")
-    assert(lake.dataPath("dv", "t").endsWith(s"${graft.core.Lake.GenPrefix}2"))
+    assert(lake.dataPath("dv", "t").endsWith(s"${gen}3"))
     assert(lake.read("dv", "t").count() == 150)
     val fsPath = new org.apache.hadoop.fs.Path(lake.tablePath("dv", "t"))
     val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def rootChildren: Set[String] = fs.listStatus(fsPath).map(_.getPath.getName).toSet
-    assert(rootChildren == Set(s"${graft.core.Lake.GenPrefix}1", s"${graft.core.Lake.GenPrefix}2"),
-      rootChildren.mkString(","))
+    assert(rootChildren == Set(s"${gen}2", s"${gen}3"), rootChildren.mkString(","))
 
     // explicit early reclaim once in-flight readers are drained
     lake.expireSuperseded("dv", "t")
-    assert(rootChildren == Set(s"${graft.core.Lake.GenPrefix}2"), rootChildren.mkString(","))
+    assert(rootChildren == Set(s"${gen}3"), rootChildren.mkString(","))
 
     // appends after compaction land INSIDE the committed generation, read
     // back through the same resolution, and bucket-pruned lookups still work
@@ -258,14 +259,14 @@ class ScratchSpec extends SparkSpec {
       "dv", "t", "hk")
     assert(lake.read("dv", "t").count() == 160)
     assert(lake.lookupBucketed("dv", "t", "hk", "1005").select("v").as[Long].head() == 1005L)
-    assert(rootChildren == Set(s"${graft.core.Lake.GenPrefix}2"), rootChildren.mkString(","))
+    assert(rootChildren == Set(s"${gen}3"), rootChildren.mkString(","))
 
-    // expireSuperseded is a no-op on flat (never-compacted) tables and on
-    // absent tables — nothing to reclaim, nothing deleted
+    // expireSuperseded is a no-op on never-compacted tables and on absent
+    // tables — nothing to reclaim, nothing deleted
     lake.appendBucketed(
-      spark.range(5).selectExpr("cast(id as string) as hk", "id as v"), "dv", "flat", "hk")
-    assert(lake.expireSuperseded("dv", "flat") == 0L)
-    assert(lake.read("dv", "flat").count() == 5)
+      spark.range(5).selectExpr("cast(id as string) as hk", "id as v"), "dv", "fresh", "hk")
+    assert(lake.expireSuperseded("dv", "fresh") == 0L)
+    assert(lake.read("dv", "fresh").count() == 5)
     assert(lake.expireSuperseded("dv", "missing") == 0L)
   }
 
