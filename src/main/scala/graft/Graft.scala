@@ -194,7 +194,8 @@ final class Graft(
     ensureLayerDatabases()
     metaEntities(Set("hub"), baseName).flatMap { case ((_, base), cols) =>
       val made = ensure("dv", s"hub_$base", VaultSchemas.hub(base, cols))
-      registerDvTable(s"hub_$base")
+      // a table ensure just made was registered by its first commit's swap hook
+      if (made.isEmpty) registerDvTable(s"hub_$base")
       made
     }
   }
@@ -207,7 +208,7 @@ final class Graft(
     metaEntities(Set("link", "nhl").filter(rt => relType.forall(_ == rt)), baseName)
       .flatMap { case ((rt, base), cols) =>
         val made = ensure("dv", s"${rt}_$base", VaultSchemas.link(base, cols))
-        registerDvTable(s"${rt}_$base")
+        if (made.isEmpty) registerDvTable(s"${rt}_$base")
         made
       }
   }
@@ -221,7 +222,7 @@ final class Graft(
     metaEntities(Set("hsat", "lsat").filter(rt => relType.forall(_ == rt)), baseName)
       .flatMap { case ((rt, base), cols) =>
         val made = ensure("dv", s"${rt}_$base", VaultSchemas.sat(satHkOf(base, cols), cols))
-        registerSatSurfaces(s"${rt}_$base", satHkOf(base, cols))
+        registerSatSurfaces(s"${rt}_$base", satHkOf(base, cols), registerDv = made.isEmpty)
         made
       }
   }
@@ -275,8 +276,9 @@ final class Graft(
     *  - `dv.<name>`: a view selecting exactly the declared columns, i.e.
     *    the reference's column surface without the internal bucket column.
     *
-    * Generation-following: re-registered by [[Lake.onGenerationSwap]] on
-    * compact/rebucket (the location must move); within a generation,
+    * Generation-following: (re-)registered by [[Lake.onGenerationSwap]] on
+    * every generation commit — a table's first write, compact/rebucket (the
+    * location must move); within a generation,
     * appends are covered by the lake's refresh + the [[Lake.onRefresh]]
     * hook below (the backing table's relation cache pins its file
     * listing). Undeclared or not-yet-created tables are skipped. */
@@ -366,9 +368,11 @@ final class Graft(
     * dv view first (bv.<sat>_cv is defined over it; a fresh session over
     * an existing lake reaches here without createSat having run), then
     * the unqualified temp view, then the qualified bv view. The single
-    * definition createSat and createCurrentSat share. */
-  private def registerSatSurfaces(satTable: String, hk: String): Unit = {
-    registerDvTable(satTable)
+    * definition createSat and createCurrentSat share; `registerDv` is false
+    * for a table just created, which its first commit already registered
+    * ([[Lake.onGenerationSwap]]). */
+  private def registerSatSurfaces(satTable: String, hk: String, registerDv: Boolean = true): Unit = {
+    if (registerDv) registerDvTable(satTable)
     registerCurrentView(satTable, hk)
     registerBvCurrentView(satTable, hk)
   }

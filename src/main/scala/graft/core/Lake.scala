@@ -113,20 +113,24 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
 
   /** The table root's entries and its COMMITTED generations (those whose
     * `_graft_committed` marker exists), ascending. Cost: one listStatus of
-    * the root plus one exists per generation dir (≤ 2 in steady state). A
-    * root holding parquet files or `hk_bucket=` dirs outside any generation
-    * was written in the older flat layout: refused, never read as absent —
-    * an [[overwrite]] (initVault's ensure) would otherwise delete its data. */
+    * the root plus one exists per generation dir (≤ 2 in steady state).
+    * The root holds only `gen-N` dirs and the compaction claim; any other
+    * entry (flat parquet files, `hk_bucket=` dirs, `_gen-N` dirs or a root
+    * layout record) was written by graft's older layout and is refused,
+    * never read as absent — an [[overwrite]] (initVault's ensure) would
+    * otherwise delete its data. */
   private def generations(
       fs: org.apache.hadoop.fs.FileSystem, root: Path): (Array[org.apache.hadoop.fs.FileStatus], Array[(Long, Path)]) = {
     if (!fs.exists(root)) return (Array.empty, Array.empty)
     val entries = fs.listStatus(root)
-    entries.map(_.getPath.getName).find(n => n.startsWith("hk_bucket=") || n.endsWith(".parquet"))
-      .foreach { n =>
+    entries.find(s => !(s.isDirectory && genNumber(s.getPath).isDefined) &&
+        !(s.isFile && s.getPath.getName == Lake.CompactClaim))
+      .foreach { s =>
         throw new DvException(DvError.Configuration(
-          s"$root holds $n outside any generation directory: the table was written in " +
-            s"graft's older flat layout, which has no migration. Rewrite it into a new lake " +
-            s"(read the directory with Spark, append through a Lake)."))
+          s"$root holds ${s.getPath.getName}, which is neither a ${Lake.GenPrefix}N generation " +
+            s"directory nor the ${Lake.CompactClaim} claim: the table was written in graft's " +
+            s"older layout, which has no migration. Rewrite it into a new lake (read its data " +
+            s"with Spark, append through a Lake)."))
       }
     val committed = entries.iterator
       .filter(_.isDirectory)
@@ -324,20 +328,23 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * listings under their own catalog names). Must not throw. */
   private[graft] var onRefresh: (String, String) => Unit = (_, _) => ()
 
-  /** Truncate-and-load: deletes the table, then commits `df` as generation
-    * 1 — an overwritten table is reborn like a new one, with no layout
+  /** Truncate-and-load under the table's compaction claim: deletes the
+    * table's generations, then commits `df` as generation 1 with no layout
     * record (engine paths only overwrite staging/metadata tables, which are
     * never bucketed). A crash mid-write leaves the table absent, never
     * partially written. An empty `df` still commits: the table reads 0 rows.
-    * Refused before anything is deleted: a flat-layout root, and (as by
+    * Refused before anything is deleted: an older-layout root, and (as by
     * Spark's own overwrite) a `df` that reads this table. */
   def overwrite(df: DataFrame, layer: String, name: String): Unit = {
     resolution(layer, name).foreach(r => org.apache.spark.sql.execution.command.DDLUtils
       .verifyNotReadPath(df.queryExecution.analyzed, new Path(r.dataDir)))
     val root = new Path(tablePath(layer, name))
-    fsOf(root).delete(root, true)
-    Lake.resolutionCache.remove(qualifiedKey(layer, name))
-    commitGeneration(layer, name, 1L, None, s"overwrite($layer.$name)")(writeParquet(df, _, Nil))
+    val fs = fsOf(root)
+    withCompactionClaim(layer, name, "overwrite") {
+      generations(fs, root)._1.filter(_.isDirectory).foreach(s => fs.delete(s.getPath, true))
+      Lake.resolutionCache.remove(qualifiedKey(layer, name))
+      commitGeneration(layer, name, 1L, None, s"overwrite($layer.$name)")(writeParquet(df, _, Nil))
+    }
   }
 
   /** Plain (non-bucketed) append — the runinfo ledger's write path. Lands
@@ -700,7 +707,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
 
   private[graft] def withCompactionClaim[A](layer: String, name: String, what: String)(body: => A): A =
     withClaim(compactClaimPath(layer, name), "compaction", waitMs = 0L,
-      s"$what($layer.$name): another compact/rebucket/expireSuperseded holds this " +
+      s"$what($layer.$name): another compact/rebucket/overwrite/expireSuperseded holds this " +
         s"table's claim (${Lake.CompactClaim}) — concurrent generation writers would " +
         s"delete each other's staged data. If a crashed run left the claim behind, " +
         s"clear it with releaseCompactionClaim.")(body)
@@ -755,11 +762,9 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
   }
 
   /** Fail instead of committing when the staged generation's data did not
-    * survive to the commit point (defense-in-depth under the claim: an
-    * unclaimed concurrent expireSuperseded used to be able to delete the
-    * staged dir mid-write, after which the marker create would have
-    * committed an EMPTY generation and the next expire would have deleted
-    * all real data as superseded — total table loss, r18 ADVICE finding). */
+    * survive to the commit point: the marker create would otherwise commit
+    * an EMPTY generation, and the next expire would delete all real data as
+    * superseded (defense-in-depth under the claim). */
   private def verifyStaged(
       fs: org.apache.hadoop.fs.FileSystem, staged: Path, what: String): Unit = {
     val ok = fs.exists(staged) &&
@@ -779,9 +784,8 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * with the partition column: the V1 partitionBy write requires its
     * output ordered by partition columns and inserts its OWN (non-stable)
     * sort when the child's ordering doesn't already satisfy that — which
-    * would silently scramble the sortBy order the caller asked for
-    * (measured: identical decoded-rows before/after on the first cut of
-    * the r18 as-of bench). Leading with hk_bucket makes the child ordering
+    * would silently scramble the sortBy order the caller asked for (measured
+    * on the as-of bench). Leading with hk_bucket makes the child ordering
     * a superset of the writer's requirement, so no extra sort is inserted
     * and the within-file order survives. */
   private def sortedWithin(d: DataFrame, sortBy: Seq[String]): DataFrame =
@@ -992,8 +996,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       // Reclaim data superseded by the CURRENT generation (kept one cycle
       // for in-flight readers; kept at least retainMillis under the policy)
       // and any uncommitted staged generation a crashed writer left.
-      expireInternal(fs, root, layer, name,
-        math.max(0L, Confs.genRetainMillis(spark.conf)))
+      expireInternal(layer, name, math.max(0L, Confs.genRetainMillis(spark.conf)))
       val (n, curDir) = generations(fs, root)._2.lastOption.getOrElse(throw absent)
       // ONE pre-rewrite walk serves the before-count, the rewrite's sizing
       // and the source-unchanged check.
@@ -1028,27 +1031,27 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * generation and on absent tables. */
   def expireSuperseded(layer: String, name: String): Long = {
     val root = new Path(tablePath(layer, name))
-    val fs = fsOf(root)
     // absent-table guard BEFORE the claim: the claim marker's create would
     // otherwise materialize an empty table dir
-    if (!fs.exists(root)) return 0L
-    withCompactionClaim(layer, name, "expireSuperseded") {
-      expireInternal(fs, root, layer, name, minAgeMillis = 0L)
-    }
+    if (!fsOf(root).exists(root)) return 0L
+    withCompactionClaim(layer, name, "expireSuperseded")(expireInternal(layer, name, minAgeMillis = 0L))
   }
 
   /** The expire pass itself — callers hold the compaction claim. A
     * generation is reclaimable when it is superseded (a committed
     * generation above it exists) AND its superseding generation's commit
-    * marker is at least `minAgeMillis` old (0 = immediately). Uncommitted
-    * generations are crashed leftovers by definition under the claim (a
-    * live compaction would hold it) and are reclaimed regardless of age.
-    * The claim marker and the current generation are never touched. */
-  private def expireInternal(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      layer: String, name: String, minAgeMillis: Long): Long = {
+    * marker is at least `minAgeMillis` old (0 = immediately). Only a first
+    * write stages without the claim, and only while the table has no
+    * committed generation — so such a table is left alone (the next first
+    * write replaces a crashed `gen-1`), and on a committed table an
+    * uncommitted generation is a crashed leftover, reclaimed regardless of
+    * age. The claim marker and the current generation are never touched. */
+  private def expireInternal(layer: String, name: String, minAgeMillis: Long): Long = {
+    val root = new Path(tablePath(layer, name))
+    val fs = fsOf(root)
     val (entries, committed) = generations(fs, root)
     val cur = committed.lastOption.map(_._1)
+    if (cur.isEmpty) return 0L
     val now = System.currentTimeMillis()
     def agedOut(supersederDir: Path): Boolean =
       minAgeMillis <= 0L || {
@@ -1140,8 +1143,6 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
   private def maybeExpireAged(layer: String, name: String): Unit = {
     val retain = Confs.genRetainMillis(spark.conf)
     if (retain < 0L || !exists(layer, name)) return
-    val root = new Path(tablePath(layer, name))
-    val fs = fsOf(root)
     val claimed =
       try tryCompactionClaim(layer, name)
       catch {
@@ -1155,15 +1156,12 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
           false
       }
     if (claimed) {
-      // Best-effort holds for the reclaim PASS too, not just the claim gate:
-      // expireInternal can throw the orphan-write Concurrency refusal (or a
-      // transient IO error), and this hook runs AFTER the append's rows
-      // committed — letting it escape would fail every subsequent append and
-      // streaming micro-batch on a table with one orphaned file, a
-      // persistent crash loop until manual cleanup (r19 ADVICE finding).
-      // Loud once per table, then quiet: the explicit
+      // Best-effort holds for the reclaim PASS too: the orphan-write refusal
+      // (or an IO error) escaping after the append committed would fail
+      // every later append and micro-batch of a table with one orphaned
+      // file. Loud once per table, then quiet: the explicit
       // compact/expireSuperseded calls keep the full refusal.
-      try { expireInternal(fs, root, layer, name, retain); () }
+      try { expireInternal(layer, name, retain); () }
       catch {
         case scala.util.control.NonFatal(e) =>
           if (Lake.notedPolicyExpireFailed.add(qualifiedKey(layer, name)))

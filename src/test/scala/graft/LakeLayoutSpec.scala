@@ -226,6 +226,9 @@ class LakeLayoutSpec extends SparkSpec {
       assert(e2.error.isInstanceOf[DvError.Concurrency], e2.error.render)
       val e3 = intercept[DvException](lake.rebucket("dv", "t", 8))
       assert(e3.error.isInstanceOf[DvError.Concurrency], e3.error.render)
+      // overwrite deletes and restages the table: claim-gated like them
+      val e4 = intercept[DvException](lake.overwrite(Seq(("x", 0L)).toDF("hk", "v"), "dv", "t"))
+      assert(e4.error.isInstanceOf[DvError.Concurrency], e4.error.render)
     } finally lake.releaseCompactionClaim("dv", "t")
 
     // refusals left the committed generation untouched; the released claim
@@ -440,6 +443,12 @@ class LakeLayoutSpec extends SparkSpec {
     assert(lake.readOr("dv", "t", Seq(("a", 0L)).toDF("hk", "v").schema).count() == 0L)
     val e = intercept[DvException](lake.dataPath("dv", "t"))
     assert(e.error.isInstanceOf[DvError.Entity], e.error.render)
+    // a first write stages without the claim, so expire cannot tell this
+    // leftover from a live one and leaves a table with no committed
+    // generation alone
+    assert(lake.expireSuperseded("dv", "t") == 0L)
+    assert(rootChildren(lake, "dv", "t") == Set(gen(1)))
+    assert(localDir(s"${lake.tablePath("dv", "t")}/${gen(1)}").list().exists(_.endsWith(".parquet")))
 
     assert(lake.appendBucketed((1 to 10).map(i => (s"k$i", i.toLong)).toDF("hk", "v"),
       "dv", "t", "hk") == 10L)
@@ -455,31 +464,50 @@ class LakeLayoutSpec extends SparkSpec {
     val root = tmpDir("lake_flatroot_")
     val lake = new Lake(spark, root, buckets = 4)
     val rows = (1 to 8).map(i => (s"k$i", i.toLong)).toDF("hk", "v")
-    // the two shapes the older flat layout left: plain part files, and
-    // hk_bucket= partition dirs, directly in the table root
+    val bucketed = rows.withColumn("hk_bucket", lake.bucketOf(col("hk")))
+    // the shapes the older layout left: plain part files and hk_bucket=
+    // partition dirs directly in the table root, and — once compacted and
+    // its superseded data expired — only `_gen-N` dirs beside a root layout
+    // record
     rows.write.parquet(lake.tablePath("metadata", "flat"))
-    rows.withColumn("hk_bucket", lake.bucketOf(col("hk")))
-      .write.partitionBy("hk_bucket").parquet(lake.tablePath("dv", "flat"))
-    def files(layer: String): Set[String] = {
-      val p = new Path(lake.tablePath(layer, "flat"))
+    bucketed.write.partitionBy("hk_bucket").parquet(lake.tablePath("dv", "flat"))
+    val oldGen = s"${lake.tablePath("dv", "hub_customer")}/_gen-2"
+    bucketed.write.partitionBy("hk_bucket").parquet(oldGen)
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(oldGen, Lake.CommitMarker))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(lake.tablePath("dv", "hub_customer"), Lake.LayoutFile),
+      """{"version":1,"bucketCount":4,"keyCol":"hk","sortBy":[]}""")
+    def files(layer: String, name: String): Set[String] = {
+      val p = new Path(lake.tablePath(layer, name))
       val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
       Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSet
     }
-    Seq("metadata", "dv").foreach { layer =>
-      val before = files(layer)
-      def refused(what: String)(op: => Any): Unit = {
-        val e = intercept[DvException](op)
-        assert(e.error.isInstanceOf[DvError.Configuration], s"$what: ${e.error.render}")
-        assert(e.error.message.contains(lake.tablePath(layer, "flat")), s"$what: ${e.error.message}")
-      }
-      refused("exists")(lake.exists(layer, "flat"))
-      refused("readOr")(lake.readOr(layer, "flat", rows.schema))
-      refused("appendBucketed")(lake.appendBucketed(rows, layer, "flat", "hk"))
-      refused("overwrite")(lake.overwrite(rows, layer, "flat"))
-      refused("compact")(lake.compact(layer, "flat"))
-      refused("expireSuperseded")(lake.expireSuperseded(layer, "flat"))
-      assert(files(layer) == before, s"$layer.flat: a refusal deleted or wrote files")
+    def refused(layer: String, name: String, what: String)(op: => Any): Unit = {
+      val e = intercept[DvException](op)
+      assert(e.error.isInstanceOf[DvError.Configuration], s"$what: ${e.error.render}")
+      assert(e.error.message.contains(lake.tablePath(layer, name)), s"$what: ${e.error.message}")
     }
+    Seq("metadata" -> "flat", "dv" -> "flat", "dv" -> "hub_customer").foreach { case (layer, name) =>
+      val before = files(layer, name)
+      def refusedHere(what: String)(op: => Any): Unit = refused(layer, name, what)(op)
+      refusedHere("exists")(lake.exists(layer, name))
+      refusedHere("readOr")(lake.readOr(layer, name, rows.schema))
+      refusedHere("appendBucketed")(lake.appendBucketed(rows, layer, name, "hk"))
+      refusedHere("overwrite")(lake.overwrite(rows, layer, name))
+      refusedHere("compact")(lake.compact(layer, name))
+      refusedHere("expireSuperseded")(lake.expireSuperseded(layer, name))
+      assert(files(layer, name) == before, s"$layer.$name: a refusal deleted or wrote files")
+    }
+    // initVault's ensure would overwrite an absent table: it must see the
+    // refusal, not an absent hub
+    val before = files("dv", "hub_customer")
+    val meta = graft.meta.MetaStore(
+      tables = Seq(graft.meta.TableColumn("customer", "hub", "c_custkey", "BIGINT", 1, "bk")),
+      transitions = Nil)
+    val g = new Graft(spark, root, meta, None, graft.dv.HashGen.Md5)
+    refused("dv", "hub_customer", "initVault")(g.initVault())
+    assert(files("dv", "hub_customer") == before, "initVault deleted or wrote files")
+    assert(spark.read.parquet(oldGen).count() == rows.count())
   }
 
   test("empty writes: an empty overwrite commits a 0-row table, an empty first appendBucketed leaves none") {
