@@ -45,42 +45,37 @@ final class Graft(
   val lake = new Lake(spark, lakeRoot, buckets)
   val flow = new FlowExecutor(lake, meta, algo)
 
-  // `dv.<table>` catalog names must follow the table's current GENERATION
-  // (compact/rebucket relocate the data dir) — hook the re-registration
-  // into the lake's swap commit so reference-style qualified SQL keeps
-  // working across compactions (r19 verdict #2). Best-effort: a catalog
-  // hiccup must not fail the compaction that already committed — but it
-  // must not be SILENT either (a stale registration serves the superseded
-  // generation until expire turns it into FILE_NOT_FOUND with no trace):
-  // failures print a stderr note naming the fix (re-run createHub/
-  // createSat or any initVault to re-register).
-  lake.onGenerationSwap = (layer, name) =>
-    if (layer == "dv") {
-      try registerDvTable(name)
-      catch {
+  // After every lake write, the catalog tables over the written table
+  // (`stg.<name>`, the `dv.__<name>__data` backing table) drop the
+  // relation the session catalog cached under their names, file listing
+  // included — a map removal, no listing; the next query re-lists. Without
+  // it `stg.<name>` and `dv.<name>` would miss appended files and chase
+  // overwritten or expired ones. `dv.<name>` is re-registered only when
+  // the generation moved (registerDvTable's location check), so
+  // reference-style qualified SQL keeps working across compactions.
+  // Best-effort: a catalog hiccup must not fail the write that already
+  // landed — but it must not be SILENT either (a stale registration serves
+  // the superseded generation until expire turns it into FILE_NOT_FOUND
+  // with no trace): failures print a stderr note naming the fix.
+  lake.onWrite = (layer, name) =>
+    if (layer == "stg") invalidateCached(layer, name)
+    else if (layer == "dv") {
+      try {
+        invalidateCached(layer, Graft.dvBackingName(name))
+        registerDvTable(name)
+      } catch {
         case scala.util.control.NonFatal(e) =>
           Console.err.println(
-            s"[graft] NOTE: re-registering dv.$name after a generation swap failed " +
+            s"[graft] NOTE: re-registering dv.$name after a write failed " +
               s"(${Option(e.getMessage).getOrElse(e.getClass.getName).linesIterator.mkString(" ")}); " +
               s"the catalog name may serve the superseded generation until re-registered " +
               s"(initVault or createHub/createLink/createSat re-register it).")
       }
     }
-  // Within-generation appends: the backing table caches its resolved
-  // relation (file listing included) under its CATALOG NAME, which
-  // refreshByPath alone does not invalidate — refresh it whenever the
-  // lake refreshes the table, or `dv.<name>` queries would miss freshly
-  // appended files (and chase expired ones). Quiet best-effort is right
-  // HERE (unlike the swap hook): the next refresh repeats it every append,
-  // and a transient failure self-heals.
-  lake.onRefresh = (layer, name) =>
-    if (layer == "dv") {
-      scala.util.Try {
-        val backing = s"dv.${Graft.dvBackingName(name)}"
-        if (spark.catalog.tableExists(backing)) spark.catalog.refreshTable(backing)
-      }
-      ()
-    }
+
+  private def invalidateCached(db: String, table: String): Unit =
+    spark.sessionState.catalog.invalidateCachedTable(
+      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(db)))
 
   /** Raw SQL escape hatch (reference mallarddv.py:87). */
   def sql(sqlText: String): DataFrame = spark.sql(sqlText)
@@ -194,7 +189,7 @@ final class Graft(
     ensureLayerDatabases()
     metaEntities(Set("hub"), baseName).flatMap { case ((_, base), cols) =>
       val made = ensure("dv", s"hub_$base", VaultSchemas.hub(base, cols))
-      // a table ensure just made was registered by its first commit's swap hook
+      // a table ensure just made was registered by its first commit's write hook
       if (made.isEmpty) registerDvTable(s"hub_$base")
       made
     }
@@ -276,12 +271,11 @@ final class Graft(
     *  - `dv.<name>`: a view selecting exactly the declared columns, i.e.
     *    the reference's column surface without the internal bucket column.
     *
-    * Generation-following: (re-)registered by [[Lake.onGenerationSwap]] on
-    * every generation commit — a table's first write, compact/rebucket (the
-    * location must move); within a generation,
-    * appends are covered by the lake's refresh + the [[Lake.onRefresh]]
-    * hook below (the backing table's relation cache pins its file
-    * listing). Undeclared or not-yet-created tables are skipped. */
+    * Generation-following: called by the [[Lake.onWrite]] hook after every
+    * write, it re-registers only when the generation moved (a table's
+    * first write, compact/rebucket); within a generation the hook's
+    * invalidation of the backing table's cached relation is enough.
+    * Undeclared or not-yet-created tables are skipped. */
   private def registerDvTable(name: String): Unit =
     dvSchemaOf(name).foreach { schema =>
       if (lake.exists("dv", name)) {
@@ -370,7 +364,7 @@ final class Graft(
     * the unqualified temp view, then the qualified bv view. The single
     * definition createSat and createCurrentSat share; `registerDv` is false
     * for a table just created, which its first commit already registered
-    * ([[Lake.onGenerationSwap]]). */
+    * ([[Lake.onWrite]]). */
   private def registerSatSurfaces(satTable: String, hk: String, registerDv: Boolean = true): Unit = {
     if (registerDv) registerDvTable(satTable)
     registerCurrentView(satTable, hk)
@@ -447,9 +441,7 @@ final class Graft(
         graft.etl.DvError.Configuration("no scripts path configured"))))
   }
 
-  /** Run a complete load flow (reference execute_flow). Catalog-registered
-    * staging tables are refreshed afterwards so `stg.<table>` views see the
-    * truncate-and-loaded data. */
+  /** Run a complete load flow (reference execute_flow). */
   def executeFlow(
       sourceTable: String,
       recordSource: String,
@@ -458,7 +450,6 @@ final class Graft(
       forceLoad: Boolean = false
   ): FlowResult = {
     val r = flow.executeFlow(sourceTable, recordSource, filePath, loadDts, forceLoad)
-    scala.util.Try(spark.catalog.refreshByPath(lake.tablePath("stg", sourceTable)))
     // Current views pin their file listing at registration — refresh the
     // ones this flow touched so `<sat>_cv` reflects the appends (reference
     // views are live). A FAILED flow refreshes ALL of them: its earlier

@@ -95,10 +95,10 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * (resolution cache, compaction claims, drift notes) uses. Two Lake
     * instances can spell one directory differently ("/data/lake" vs
     * "file:/data/lake/", a scheme-qualified vs a relative root); Hadoop
-    * resolves them to the same place, and Spark's own refreshByPath
-    * normalizes — so the cache keys must too, or instance A's compact
-    * would invalidate only A's spelling and B would keep serving the
-    * superseded generation (and plain-append INTO it) indefinitely.
+    * resolves them to the same place — so the cache keys must too, or
+    * instance A's compact would invalidate only A's spelling and B would
+    * keep serving the superseded generation (and plain-append INTO it)
+    * indefinitely.
     * makeQualified is pure path arithmetic: no filesystem RPC. */
   private def qualifiedKey(layer: String, name: String): String = {
     val p = new Path(tablePath(layer, name))
@@ -144,11 +144,11 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * when it has none. Positive results are cached JVM-wide per table —
     * resolution sits on the hottest paths (a streaming foreachBatch reads
     * and appends per micro-batch), each a driver metadata RPC on a remote
-    * store. Every Lake WRITE invalidates through [[refresh]], so within the
-    * single-writer-per-table contract the cache is coherent; a table
-    * compacted by ANOTHER process keeps serving the superseded (retained)
-    * generation to this JVM until a local write or [[refresh]] — the
-    * staleness class of Spark's own file-listing cache. */
+    * store. Every Lake write drops it ([[refresh]]), and so does taking a
+    * flow or load claim, so within the single-writer-per-table contract the
+    * cache is coherent; a table compacted by ANOTHER process keeps serving
+    * the superseded (retained) generation to this JVM until a local write
+    * or claim. */
   private def resolution(layer: String, name: String): Option[Lake.Resolution] =
     Option(Lake.resolutionCache.computeIfAbsent(qualifiedKey(layer, name), _ => {
       val rootP = new Path(tablePath(layer, name))
@@ -305,28 +305,25 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       else Iterator.empty
     }
 
-  /** Spark shares a JVM-wide file-listing cache across path reads and
-    * catalog tables; any write must invalidate it or later readers can chase
-    * deleted part files (FAILED_READ_FILE.FILE_NOT_EXIST). The lake's own
-    * [[resolution]] cache is invalidated here too — every mutating lake
-    * operation funnels through refresh. */
-  private def refresh(layer: String, name: String): Unit = {
+  private def dropResolution(layer: String, name: String): Unit =
     Lake.resolutionCache.remove(qualifiedKey(layer, name))
-    spark.catalog.refreshByPath(tablePath(layer, name))
-    // A catalog table registered over this path (Graft.initVault) caches its
-    // own relation keyed by name; refreshByPath alone can miss it.
-    scala.util.Try {
-      if (spark.catalog.tableExists(s"$layer.$name"))
-        spark.catalog.refreshTable(s"$layer.$name")
-    }
-    onRefresh(layer, name)
+
+  /** Every mutating lake operation ends here: drops the table's cached
+    * [[resolution]] and fires [[onWrite]]. Nothing is re-listed: the next
+    * reader resolves and lists afresh, and Spark's own write command
+    * already re-caches any cached plan over the directory it wrote. */
+  private def refresh(layer: String, name: String): Unit = {
+    dropResolution(layer, name)
+    onWrite(layer, name)
   }
 
-  /** Invoked at the end of every [[refresh]] — the Graft facade hooks the
-    * refresh of its differently-named catalog objects here (the hidden
-    * `dv.__<name>__data` backing tables, whose relation caches pin file
-    * listings under their own catalog names). Must not throw. */
-  private[graft] var onRefresh: (String, String) => Unit = (_, _) => ()
+  /** Invoked with (layer, name) after every write: an append, a generation
+    * commit (a table's first write, overwrite, compact, rebucket) and an
+    * expire that deleted data. The Graft facade, which creates every
+    * catalog name over the lake, drops those names' cached relations here
+    * and re-registers `dv.<table>` when the generation moved. Must not
+    * throw. */
+  private[graft] var onWrite: (String, String) => Unit = (_, _) => ()
 
   /** Truncate-and-load under the table's compaction claim: deletes the
     * table's generations, then commits `df` as generation 1 with no layout
@@ -342,7 +339,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     val fs = fsOf(root)
     withCompactionClaim(layer, name, "overwrite") {
       generations(fs, root)._1.filter(_.isDirectory).foreach(s => fs.delete(s.getPath, true))
-      Lake.resolutionCache.remove(qualifiedKey(layer, name))
+      dropResolution(layer, name)
       commitGeneration(layer, name, 1L, None, s"overwrite($layer.$name)")(writeParquet(df, _, Nil))
     }
   }
@@ -470,7 +467,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     res.filter(_.layout.isEmpty).foreach { r =>
       val dir = new Path(r.dataDir)
       writeLayout(fsOf(dir), dir, record)
-      Lake.resolutionCache.remove(qualifiedKey(layer, name))
+      dropResolution(layer, name)
     }
     val (rows, _) = writeTable(
       df.withColumn("hk_bucket", bucketOfN(col(keyCol), n)).repartition(n, col("hk_bucket")),
@@ -680,29 +677,34 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * scan's file listing when the DataFrame is built, so a probe built
     * before the previous loader released would anti-join against a listing
     * missing its rows even though the append itself came later. On acquire
-    * the table's caches are refreshed (resolution + Spark's file-listing
-    * cache) so the probe lists fresh — that is what makes the claim close
-    * the cross-process double-insert, where the winner's own post-append
-    * refresh only fixed its JVM. Waits [[Confs.loadClaimWaitMillis]].
+    * the table's cached [[resolution]] is dropped, so the probe resolves
+    * the generation another process may have committed and lists it fresh
+    * — that is what makes the claim close the cross-process double-insert,
+    * where the winner's own post-append drop only fixed its JVM. Waits
+    * [[Confs.loadClaimWaitMillis]].
     * Cost when uncontended: one create + one delete of a marker file per
     * table per load — noise against the load's own jobs. */
   def withLoadClaim[A](layer: String, name: String, what: String)(body: => A): A =
-    withLoaderClaim(loadClaimPath(layer, name), "load", s"$what($layer.$name)", refresh(layer, name))(body)
+    withLoaderClaim(loadClaimPath(layer, name), "load", s"$what($layer.$name)", (layer, name))(body)
 
   /** Per-source flow claim around a flow's staging + loads: staging is
     * truncate-and-load, so a second flow of the same source would swap the
-    * data under the first flow's lazily-evaluated hash view. */
+    * data under the first flow's lazily-evaluated hash view. On acquire the
+    * staging table's cached [[resolution]] is dropped, so a flow over a
+    * table deleted or rewritten out of band fails typed or reads it fresh. */
   private[graft] def withFlowClaim[A](sourceTable: String)(body: => A): A =
-    withLoaderClaim(flowClaimPath(sourceTable), "flow", s"executeFlow($sourceTable)", ())(body)
+    withLoaderClaim(flowClaimPath(sourceTable), "flow", s"executeFlow($sourceTable)", ("stg", sourceTable))(body)
 
-  private def withLoaderClaim[A](p: Path, kind: String, what: String, onAcquire: => Unit)(body: => A): A = {
+  /** [[withClaim]] with the loaders' wait and refusal; on acquire drops the
+    * cached resolution of `table` (layer, name). */
+  private def withLoaderClaim[A](p: Path, kind: String, what: String, table: (String, String))(body: => A): A = {
     val waitMs = Confs.loadClaimWaitMillis(spark.conf)
     withClaim(p, kind, waitMs,
       s"$what: another loader holds the claim marker $p after ${waitMs} ms " +
         s"(${Confs.LoadClaimWaitMillisKey}) — a concurrent flow/stream is loading, or a " +
         s"crashed loader left a stale marker. Wait it out, raise the conf, or clear a " +
         s"stale marker (releaseLoadClaim for a table's ${Lake.LoadClaim}; delete the " +
-        s"marker file otherwise).", onAcquire)(body)
+        s"marker file otherwise).", dropResolution(table._1, table._2))(body)
   }
 
   private[graft] def withCompactionClaim[A](layer: String, name: String, what: String)(body: => A): A =
@@ -838,7 +840,6 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     verifyStaged(fs, staged, what)
     fs.create(new Path(staged, Lake.CommitMarker), /* overwrite = */ false).close()
     refresh(layer, name)
-    onGenerationSwap(layer, name)
     written
   }
 
@@ -868,7 +869,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * drained. With retainMillis set, the compact-start expire ALSO
     * respects the window (young superseded generations survive a rapid
     * re-compact). A catalog table registered at [[dataPath]] must follow
-    * the swap ([[onGenerationSwap]]).
+    * the swap ([[onWrite]]).
     *
     * `sortBy`: optional within-chunk sort columns for the rewrite. Vault
     * satellites pass (hk, load_dts): as-of queries filter `load_dts` over
@@ -927,14 +928,6 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       // input files per output file.
       else (sortedWithin(df.coalesce(math.max(1, df.inputFiles.length / 8)), sortBy), Nil, recorded)
     }
-
-  /** Invoked with (layer, name) after every generation commit (a table's
-    * first write, overwrite, compact, rebucket), after the caches are
-    * refreshed. The Graft facade hooks catalog re-registration here so
-    * `dv.<table>` names follow the generation; appends into the current
-    * generation never fire it ([[refresh]]'s listing-cache invalidation is
-    * already sufficient there). */
-  private[graft] var onGenerationSwap: (String, String) => Unit = (_, _) => ()
 
   /** Rewrite a bucketed table at a NEW bucket count, as a committed
     * generation — the explicit (and only) way a table's bucket count

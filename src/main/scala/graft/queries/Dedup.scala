@@ -686,9 +686,7 @@ object Dedup {
     * rounds for those 490 edges; the union-find is microseconds). 2^20
     * edges = 16 MB of (long, long) on the driver — bounded, and far below
     * any size where the distributed loop's rounds amortize. A 100 TB
-    * crawl's pair graph blows the gate and takes the loop unchanged.
-    * Conf-overridable (`spark.graft.cc.driverMaxEdges`) so tests can pin
-    * either path; 0 forces the loop. */
+    * crawl's pair graph blows the gate and takes the loop unchanged. */
   private val DriverCcMaxEdges = 1L << 20
 
   /** Connected components — gated dispatch (see [[DriverCcMaxEdges]]):
@@ -696,8 +694,10 @@ object Dedup {
     * (the seed aggregate used to do the same work), then either the
     * driver union-find or the distributed min-label loop runs. Both
     * return the same persisted (node, label, __chg) handle contract with
-    * label = component-min node id. */
-  private[graft] def connectedComponents(edges: DataFrame): DataFrame = {
+    * label = component-min node id. `maxDriverEdges` lets tests pin either
+    * path; 0 forces the loop. */
+  private[graft] def connectedComponents(
+      edges: DataFrame, maxDriverEdges: Long = DriverCcMaxEdges): DataFrame = {
     // String node ids would fail differently per path — NPE deep in the
     // union-find vs a silent lexicographic-min label from the loop's
     // least()/min() — so require numeric ids BEFORE the gate dispatch and
@@ -707,9 +707,7 @@ object Dedup {
         s"connectedComponents requires numeric node ids; column '${f.name}' is " +
           s"${f.dataType.simpleString} — hash string ids to long (e.g. xxhash64) first")
     }
-    val gate = graft.core.Confs.long(
-      edges.sparkSession.conf, "spark.graft.cc.driverMaxEdges", DriverCcMaxEdges)
-    if (edges.count() <= gate) driverCc(edges) else loopCc(edges)
+    if (edges.count() <= maxDriverEdges) driverCc(edges) else loopCc(edges)
   }
 
   /** Driver-side union-find with union-by-min-root + path compression:

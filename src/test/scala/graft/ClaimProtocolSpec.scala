@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException, FileStatus, FilterFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.scalacheck.Gen
@@ -247,8 +247,9 @@ object ClaimProtocolSpec {
 /** The local filesystem under the `faulty://lake` store (a path with no
   * authority means this store too); throws an
   * [[ClaimProtocolSpec.InjectedFault]] at the k-th create (before it
-  * happens), close (after the bytes land) or delete (before it happens)
-  * once [[FaultyFs.arm]]ed. */
+  * happens), close (after the bytes land), delete or listStatus (before
+  * it happens) once [[FaultyFs.arm]]ed, and counts listStatus calls per
+  * directory ([[FaultyFs.listed]]). */
 final class FaultyFs extends FilterFileSystem(new RawLocalFileSystem {
       override def getUri: URI = FaultyFs.Uri
       override protected def checkPath(path: Path): Unit = ()
@@ -273,6 +274,12 @@ final class FaultyFs extends FilterFileSystem(new RawLocalFileSystem {
     FaultyFs.hit("delete")
     super.delete(f, recursive)
   }
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    FaultyFs.hit("list")
+    FaultyFs.listed.computeIfAbsent(f.toUri.getPath, _ => new AtomicInteger).incrementAndGet()
+    super.listStatus(f)
+  }
 }
 
 object FaultyFs {
@@ -285,6 +292,10 @@ object FaultyFs {
   @volatile var releaseOnClash = false
   @volatile private var hitPlan = false
   private val counts = new ConcurrentHashMap[String, AtomicInteger]()
+
+  /** listStatus calls per directory (its path without scheme and
+    * authority) since the last clear. */
+  val listed = new ConcurrentHashMap[String, AtomicInteger]()
 
   /** Fail the k-th call of one operation from now on (None = no faults). */
   def arm(p: Option[(String, Int)]): Unit = synchronized {

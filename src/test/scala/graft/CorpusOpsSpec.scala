@@ -142,17 +142,14 @@ class CorpusOpsSpec extends SparkSpec {
     // into every round must close it in O(log n) rounds. Gate pinned to 0
     // so the DISTRIBUTED loop runs (the driver union-find would otherwise
     // absorb this graph).
-    spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
-    try {
-      val n = 60
-      val chain = (0L until n - 1).flatMap(i => Seq((i, i + 1), (i + 1, i)))
-        .toDF("src", "dst")
-      val labels = graft.queries.Dedup.connectedComponents(chain)
-      val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      labels.unpersist()
-      assert(got.keySet == (0L until n).toSet)
-      assert(got.values.forall(_ == 0L), s"all labels must be the component min: $got")
-    } finally spark.conf.unset("spark.graft.cc.driverMaxEdges")
+    val n = 60
+    val chain = (0L until n - 1).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+      .toDF("src", "dst")
+    val labels = graft.queries.Dedup.connectedComponents(chain, maxDriverEdges = 0L)
+    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    labels.unpersist()
+    assert(got.keySet == (0L until n).toSet)
+    assert(got.values.forall(_ == 0L), s"all labels must be the component min: $got")
   }
 
   test("connectedComponents: driver union-find equals the distributed loop") {
@@ -165,8 +162,7 @@ class CorpusOpsSpec extends SparkSpec {
       Seq((200L, 300L), (300L, 400L), (500L, 500L))          // path + self-loop
     )
     def symOf(es: Seq[(Long, Long)]) = es.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
-    def run(sym: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
-      val h = graft.queries.Dedup.connectedComponents(sym)
+    def labelsOf(h: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
       val m = h.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       h.unpersist()
       m
@@ -174,10 +170,8 @@ class CorpusOpsSpec extends SparkSpec {
     // default gate: 2^20 edges — takes the union-find; gate 0 takes the loop
     def both(es: Seq[(Long, Long)]): (Map[Long, Long], Map[Long, Long]) = {
       val sym = symOf(es)
-      val viaDriver = run(sym)
-      spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
-      val viaLoop = try run(sym) finally spark.conf.unset("spark.graft.cc.driverMaxEdges")
-      (viaDriver, viaLoop)
+      (labelsOf(graft.queries.Dedup.connectedComponents(sym)),
+        labelsOf(graft.queries.Dedup.connectedComponents(sym, maxDriverEdges = 0L)))
     }
     val (viaDriver, viaLoop) = both(edges0)
     assert(viaDriver == viaLoop)

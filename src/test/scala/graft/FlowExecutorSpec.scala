@@ -292,6 +292,12 @@ class FlowExecutorSpec extends SparkSpec {
     stg.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(stg, true)
     val r = flow.executeFlow("customer", "unit", None)
     assert(r.status == "failure", r)
+    // typed: the flow claim drops the staging table's cached resolution, so
+    // the deleted generation is not chased as a raw FileNotFoundException
+    assert(r.errors.exists {
+      case DvError.Entity(m, _) => m.contains("stg.customer")
+      case _ => false
+    }, r.errors)
     assert(lake.read("dv", "hsat_customer").filter(col("del_flag")).count() == 0L)
   }
 

@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.dv.HashGen
@@ -72,7 +74,6 @@ class GraftFacadeSpec extends SparkSpec {
     // Spark's DataSource warns when every path it is given is hidden (a
     // `_`/`.` prefix); generation dirs are read directly, so their names
     // must not be hidden ones
-    import scala.jdk.CollectionConverters._
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
@@ -113,6 +114,38 @@ class GraftFacadeSpec extends SparkSpec {
       logger.setLevel(level)
       appender.stop()
     }
+  }
+
+  test("a bucketed append re-lists no committed generation, and catalog names still see every write") {
+    // A write drops the lake's cached resolution and the catalog's cached
+    // relations instead of re-listing them; the next reader lists afresh.
+    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val root = tmpDir("graftlist")
+    val g = new Graft(spark, s"faulty://lake$root/lake", meta, None, HashGen.Md5)
+    g.initVault()
+    def load(file: String, rows: String*): Unit = {
+      val f = s"$root/$file.csv"
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(f), ("c_custkey,c_name" +: rows).mkString("\n"))
+      val r = g.executeFlow("customer", "list", Some(f), Some(Timestamp.valueOf("2026-01-01 00:00:00")))
+      assert(r.status == "success", r.errors.mkString("; "))
+    }
+    load("c1", "1,ann", "2,bob")
+    // both catalog tables now hold a cached relation
+    assert(g.sql("SELECT * FROM dv.hub_customer").count() == 2L)
+    assert(g.sql("SELECT * FROM stg.customer").count() == 2L)
+
+    val generation = s"$root/lake/dv/hub_customer/gen-[0-9]+(/hk_bucket=[^/]+)?".r
+    FaultyFs.listed.clear()
+    g.lake.appendBucketed(
+      Seq(("hk9", Timestamp.valueOf("2026-01-02 00:00:00"), "lit", 99L, 9L))
+        .toDF("customer_hk", "load_dts", "record_source", "run_id", "c_custkey_bk"),
+      "dv", "hub_customer", "customer_hk")
+    val relisted = FaultyFs.listed.asScala.collect { case (p, n) if generation.matches(p) => p -> n.get }
+    assert(relisted.isEmpty, s"the append re-listed committed generation dirs: $relisted")
+    assert(g.sql("SELECT * FROM dv.hub_customer").count() == 3L)
+
+    load("c2", "7,gus")
+    assert(g.sql("SELECT c_custkey FROM stg.customer").as[Long].collect().toSeq == Seq(7L))
   }
 
   test("facade: compact rewrites a live satellite sorted and re-registers its current view") {

@@ -162,14 +162,4 @@ class SkewGuardSpec extends SparkSpec {
       }
     } finally spark.conf.unset("spark.graft.skewGuard")
   }
-
-  test("malformed cc.driverMaxEdges fails naming the key") {
-    spark.conf.set("spark.graft.cc.driverMaxEdges", "many")
-    try {
-      val edges = Seq((1L, 2L)).toDF("src", "dst")
-      val e = intercept[IllegalArgumentException](
-        graft.queries.Dedup.connectedComponents(edges))
-      assert(e.getMessage.contains("spark.graft.cc.driverMaxEdges"))
-    } finally spark.conf.unset("spark.graft.cc.driverMaxEdges")
-  }
 }
