@@ -51,18 +51,19 @@ final class Graft(
   // included — a map removal, no listing; the next query re-lists. Without
   // it `stg.<name>` and `dv.<name>` would miss appended files and chase
   // overwritten or expired ones. `dv.<name>` is re-registered only when
-  // the generation moved (registerDvTable's location check), so
-  // reference-style qualified SQL keeps working across compactions.
+  // the write committed a generation (a first write, compact, rebucket,
+  // overwrite), so reference-style qualified SQL keeps working across
+  // compactions while a plain append pays no registration check.
   // Best-effort: a catalog hiccup must not fail the write that already
   // landed — but it must not be SILENT either (a stale registration serves
   // the superseded generation until expire turns it into FILE_NOT_FOUND
   // with no trace): failures print a stderr note naming the fix.
-  lake.onWrite = (layer, name) =>
+  lake.onWrite = (layer, name, committed) =>
     if (layer == "stg") invalidateCached(layer, name)
     else if (layer == "dv") {
       try {
         invalidateCached(layer, Graft.dvBackingName(name))
-        registerDvTable(name)
+        if (committed) registerDvTable(name)
       } catch {
         case scala.util.control.NonFatal(e) =>
           Console.err.println(
@@ -272,9 +273,9 @@ final class Graft(
     *    the reference's column surface without the internal bucket column.
     *
     * Generation-following: called by the [[Lake.onWrite]] hook after every
-    * write, it re-registers only when the generation moved (a table's
-    * first write, compact/rebucket); within a generation the hook's
-    * invalidation of the backing table's cached relation is enough.
+    * generation commit (a table's first write, compact/rebucket), it
+    * re-registers only when the location moved; within a generation the
+    * hook's invalidation of the backing table's cached relation is enough.
     * Undeclared or not-yet-created tables are skipped. */
   private def registerDvTable(name: String): Unit =
     dvSchemaOf(name).foreach { schema =>

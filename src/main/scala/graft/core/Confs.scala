@@ -14,7 +14,6 @@ object Confs {
   val SkewGuardKey = "spark.graft.skewGuard"
   val SampleFractionKey = "spark.graft.skewGuard.sampleFraction"
   val HotShareKey = "spark.graft.skewGuard.hotShare"
-  val SaltKey = "spark.graft.skewGuard.salt"
 
   def double(conf: RuntimeConfig, key: String, default: Double): Double =
     conf.getOption(key).map { v =>
@@ -48,19 +47,9 @@ object Confs {
     s
   }
 
-  /** Hot-key fan-out width when `spark.graft.skewGuard=auto` engages the
-    * salted satellite-delta shape (DvOps.satNewRows). 16 is the measured
-    * sweet spot at sf10 (BASELINE.md vault-skew table); 1 would make the
-    * fan-out a no-op, so require >= 2. */
-  def salt(conf: RuntimeConfig): Int = {
-    val n = long(conf, SaltKey, 16L)
-    require(n >= 2L && n <= 4096L, s"$SaltKey must be in [2, 4096], got $n")
-    n.toInt
-  }
-
   val MinBytesKey = "spark.graft.skewGuard.minBytes"
 
-  /** Input-size floor (optimized-plan estimate, compressed bytes) below
+  /** Input-size floor (real leaf bytes, [[Tables.estBytesKnown]]) below
     * which `auto` skips its sampled histogram entirely and keeps the
     * default plan. Skew only hurts when one key's pileup exceeds a few
     * tasks' worth of work: below this floor even a 100%-hot key is a
@@ -264,20 +253,15 @@ object Confs {
         s"$LatestShapeKey must be auto|partial|hash, got '$other'")
     }
 
-  /** The `spark.graft.skewGuard` mode itself: off | force | auto.
-    *
-    * DEFAULT `auto` (flipped r15): the size-gated, file-memoized histogram
-    * measured NEUTRAL on the full bench at both scales once the gate read
-    * real leaf bytes (off-vs-auto interleaved floors: sf0.1 -3.4%, sf1
-    * -1.2% — `bench/r15{d,e,f}_*`, BASELINE.md "Skew-guard DEFAULT
-    * decision"), and a hostile key under the default plan is the 22.6 s
-    * max-task / 330 MB-spill class the guard cuts to 1.2× of stage median.
-    * Zero measured cost, bounded worst case — protection on by default;
-    * `off` remains the bit-identical-plans escape hatch. */
+  /** The `spark.graft.skewGuard` mode: off | auto (default) — see
+    * [[SkewGuard]]. `auto` measured neutral on the full bench at both
+    * scales once gated on real leaf bytes (off-vs-auto interleaved floors:
+    * sf0.1 -3.4%, sf1 -1.2% — `bench/r15{d,e,f}_*`); `off` is the
+    * bit-identical-plans escape hatch. */
   def skewGuard(conf: RuntimeConfig): String =
     conf.getOption(SkewGuardKey).getOrElse("auto") match {
-      case m @ ("off" | "force" | "auto") => m
+      case m @ ("off" | "auto") => m
       case other => throw new IllegalArgumentException(
-        s"$SkewGuardKey must be off|force|auto, got '$other'")
+        s"$SkewGuardKey must be off|auto, got '$other'")
     }
 }

@@ -251,7 +251,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     val engaged = gate.getOrElse {
       val known = Tables.estBytesKnown(full)
       val e = known.exists(_ >= Confs.probePruneMinBytes(spark.conf))
-      Tables.gateTrace(spark.conf, s"readOrProbe($layer.$name)", e, known)
+      SkewGuard.logGate(s"readOrProbe($layer.$name)", e, known)
       e
     }
     if (!engaged) return full
@@ -309,21 +309,23 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     Lake.resolutionCache.remove(qualifiedKey(layer, name))
 
   /** Every mutating lake operation ends here: drops the table's cached
-    * [[resolution]] and fires [[onWrite]]. Nothing is re-listed: the next
-    * reader resolves and lists afresh, and Spark's own write command
-    * already re-caches any cached plan over the directory it wrote. */
-  private def refresh(layer: String, name: String): Unit = {
+    * [[resolution]] and fires [[onWrite]]; `committed` says the write
+    * committed a generation. Nothing is re-listed: the next reader
+    * resolves and lists afresh, and Spark's own write command already
+    * re-caches any cached plan over the directory it wrote. */
+  private def refresh(layer: String, name: String, committed: Boolean): Unit = {
     dropResolution(layer, name)
-    onWrite(layer, name)
+    onWrite(layer, name, committed)
   }
 
-  /** Invoked with (layer, name) after every write: an append, a generation
-    * commit (a table's first write, overwrite, compact, rebucket) and an
-    * expire that deleted data. The Graft facade, which creates every
-    * catalog name over the lake, drops those names' cached relations here
-    * and re-registers `dv.<table>` when the generation moved. Must not
-    * throw. */
-  private[graft] var onWrite: (String, String) => Unit = (_, _) => ()
+  /** Invoked with (layer, name, committed) after every write: an append
+    * into the current generation and an expire that deleted data
+    * (committed = false), or a generation commit — a table's first write,
+    * overwrite, compact, rebucket (committed = true). The Graft facade,
+    * which creates every catalog name over the lake, drops those names'
+    * cached relations here and re-registers `dv.<table>` only on a
+    * commit. Must not throw. */
+  private[graft] var onWrite: (String, String, Boolean) => Unit = (_, _, _) => ()
 
   /** Truncate-and-load under the table's compaction claim: deletes the
     * table's generations, then commits `df` as generation 1 with no layout
@@ -360,7 +362,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     res match {
       case Some(r) =>
         val written = writeParquet(df, r.dataDir, partitionColumns)
-        refresh(layer, name)
+        refresh(layer, name, committed = false)
         written
       case None =>
         commitGeneration(layer, name, 1L, layout, s"append($layer.$name)", commitEmpty = commitEmpty)(
@@ -839,7 +841,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     }
     verifyStaged(fs, staged, what)
     fs.create(new Path(staged, Lake.CommitMarker), /* overwrite = */ false).close()
-    refresh(layer, name)
+    refresh(layer, name, committed = true)
     written
   }
 
@@ -1112,7 +1114,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     }
     val paths = doomed.map(_._1.getPath)
     paths.foreach(fs.delete(_, true))
-    if (paths.nonEmpty) refresh(layer, name)
+    if (paths.nonEmpty) refresh(layer, name, committed = false)
     paths.length.toLong
   }
 

@@ -3,19 +3,21 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** Session-scoped memo for the skew-guard's sampled histograms.
+/** [[SkewGuard]]'s memo of sampled hot-key sets.
   *
-  * `clusterByGuarded` / `sampledHotKeys` pay their (sample → aggregate →
-  * collect) cost at every PLAN CONSTRUCTION — so a loop that re-plans over
-  * unchanged inputs (the flow executor's per-entity fold, a streaming
-  * micro-batch re-probing a slowly-growing satellite) re-pays the same
-  * histogram each iteration. The histogram is a pure function of the input
-  * FILES and the sampling confs, so it memoizes on a file-level identity:
+  * The guard samples its histogram at every PLAN CONSTRUCTION, so a loop
+  * that re-plans over unchanged inputs (the flow executor's per-entity
+  * fold, a streaming micro-batch re-probing a slowly-growing satellite)
+  * would re-pay the same histogram each iteration. The histogram is a pure
+  * function of the input FILES and the sampling confs, so it memoizes on a
+  * file-level identity of the key projection the guard samples:
   *
   *   fingerprint = every leaf's parquet root paths + the optimized plan's
   *   size-in-bytes estimate + the plan's semantic hash + the caller's tag
-  *   (key columns, confs).
+  *   (key column, confs).
   *
+  * Keying on the projection (not the caller's wider frame) lets every
+  * guarded site that samples one key of the same files share one entry.
   * An append to any side changes its file listing and therefore its
   * `sizeInBytes` at the next read — a fresh fingerprint, a fresh histogram.
   * The semantic hash (canonicalized optimized plan) separates DIFFERENT
@@ -33,25 +35,22 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * semantic one — every guarded operator produces identical rows for ANY
   * hot-key set (DvOpsSpec/SkewGuardSpec pin salted == unsalted equality).
   *
-  * Bounded at [[MaxEntries]] (each value ≤ 64 key literals or a Boolean);
-  * on overflow ONE arbitrary entry is dropped to make room. A full clear
-  * would zero the hit rate exactly where the memo earns its keep — a vault
-  * with more than [[MaxEntries]] guarded (plan, conf) sites would thrash
-  * every iteration of the flow executor's per-entity loop; single-entry
-  * eviction keeps the other entries warm at the same code complexity.
+  * Bounded at [[MaxEntries]] (each value ≤ 64 key literals); on overflow
+  * ONE arbitrary entry is dropped to make room. A full clear would zero the
+  * hit rate exactly where the memo earns its keep — a vault with more than
+  * [[MaxEntries]] guarded (plan, conf) sites would thrash every iteration
+  * of the flow executor's per-entity loop.
   */
-object SkewMemo {
+private[graft] object SkewMemo {
   private val MaxEntries = 128
   private val memo = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  private[graft] def clear(): Unit = memo.clear()
-  private[graft] def size: Int = memo.size()
+  def clear(): Unit = memo.clear()
+  def size: Int = memo.size()
 
   /** File-level identity of ONE side, or None when any leaf is not a file
-    * scan (no stable identity). Exposed to callers that want to split a
-    * side list into memoizable and non-memoizable halves (the streaming
-    * satellite probe — see DvOps.sampledHotKeys). */
-  private[graft] def sideFingerprint(df: DataFrame): Option[String] = {
+    * scan (no stable identity). */
+  def sideFingerprint(df: DataFrame): Option[String] = {
     val plan = df.queryExecution.optimizedPlan
     val paths = plan.collectLeaves().map {
       case lr: LogicalRelation =>

@@ -84,16 +84,8 @@ object Tables {
   // ~16 MB estimate and the ClusterWaves cap binds from ~64 MB up.
   val ClusterTaskBytes: Long = 1L << 19
 
-  /** Data-scaled partition count for [[clusterBy]] — exposed so callers that
-    * need TWO exchanges to land co-partitioned (e.g. DvOps.satNewRows's
-    * probe/staged ShuffledHashJoin) can size the join ONCE from both sides'
-    * estimates. Independently-sized sides diverge in the transition region
-    * (estimates between cores×ClusterTaskBytes and ClusterWaves×cores×
-    * ClusterTaskBytes), and EnsureRequirements then re-exchanges one side —
-    * invisible at sf0.001 where both clamp to the floor. */
   /** Optimized-plan size estimate (compressed bytes for parquet scans) —
-    * the same number [[clusterParts]] sizes exchanges from; also gates the
-    * skew-guard histogram ([[clusterByGuarded]] `auto`). */
+    * the same number [[clusterParts]] sizes exchanges from. */
   def estBytes(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** Summed LEAF bytes of the plan, or None when any leaf's statistics are
@@ -135,18 +127,13 @@ object Tables {
     if (sizes.exists(_ == default)) None else Some(sizes.sum)
   }
 
-  /** One stderr line per skew-guard gate decision when
-    * `spark.graft.skewGuard.debug=true` — the production observability for
-    * "did auto sample here, and off what size": every engagement is a
-    * sampling job, so a deployment (or a bench A/B) can grep its logs and
-    * attribute the cost precisely. */
-  private[graft] def gateTrace(
-      conf: org.apache.spark.sql.RuntimeConfig, site: String,
-      engaged: Boolean, bytes: Option[BigInt]): Unit =
-    if (conf.getOption("spark.graft.skewGuard.debug").contains("true"))
-      System.err.println(
-        s"[skewGuard] $site engaged=$engaged knownBytes=${bytes.getOrElse("unknown")}")
-
+  /** Data-scaled partition count for [[clusterBy]] — exposed so callers that
+    * need TWO exchanges to land co-partitioned (e.g. DvOps.satNewRows's
+    * probe/staged ShuffledHashJoin) can size the join ONCE from both sides'
+    * estimates. Independently-sized sides diverge in the transition region
+    * (estimates between cores×ClusterTaskBytes and ClusterWaves×cores×
+    * ClusterTaskBytes), and EnsureRequirements then re-exchanges one side —
+    * invisible at sf0.001 where both clamp to the floor. */
   def clusterParts(df: DataFrame): Int = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val est = estBytes(df)
@@ -186,78 +173,17 @@ object Tables {
     * ~10% of all rows lands its ENTIRE history in one task (SkewBench sf10:
     * 22.6 s max task vs 3.4 s stage median + 318-334 MB spill — BASELINE.md
     * vault-skew table, raw sessions bench/r13_skew_vault.jsonl). Skipping
-    * the pre-clustering
-    * restores Spark's partial-before-exchange aggregation, which collapses
-    * the hot key to one row per map task — skew-immune, at the price of the
-    * partial pass clusterBy exists to avoid.
+    * the pre-clustering restores Spark's partial-before-exchange
+    * aggregation, which collapses the hot key to one row per map task —
+    * skew-immune, at the price of the partial pass clusterBy exists to
+    * avoid.
     *
-    * Selection via `spark.graft.skewGuard`:
-    *  - `off` — always cluster: uniform-key fast path, bit-identical plans
-    *    to a bare [[clusterBy]];
-    *  - `force` — never cluster: callers that KNOW the batch is hot;
-    *  - `auto` (default since r15 — measured neutral on the full bench at
-    *    both scales once size-gated on real leaf bytes; see
-    *    [[Confs.skewGuard]]) — one sampled key histogram (column-pruned
-    *    scan of the keys
-    *    at `spark.graft.skewGuard.sampleFraction`, default 0.01) decides:
-    *    if the hottest key's row share exceeds
-    *    `spark.graft.skewGuard.hotShare` (default 0.05) the clustering is
-    *    skipped. The sample only picks the PLAN — query results are
-    *    identical either way — so sampling noise can cost performance,
-    *    never correctness. Samples below ~200 rows fall back to clustered
-    *    (too noisy to overrule the uniform-key default).
-    *
-    * `auto` runs its sampled histogram EAGERLY at plan-construction time,
-    * size-gated by `spark.graft.skewGuard.minBytes` on [[estBytesKnown]]
-    * bytes and memoized per input files via [[SkewMemo]] — a loop that
-    * re-plans over unchanged file inputs pays the sample once; non-file
-    * inputs (no stable identity) re-pay per construction. */
-  def clusterByGuarded(df: DataFrame, keys: String*): DataFrame = {
-    val conf = df.sparkSession.conf
-    Confs.skewGuard(conf) match {
-      case "off"   => clusterBy(df, keys: _*)
-      case "force" => df
-      case "auto" =>
-        // Confs parse/validate EAGERLY — a misconfigured guard fails even
-        // on inputs the size gate would skip.
-        val frac = Confs.sampleFraction(conf)
-        val hotShare = Confs.hotShare(conf)
-        // Size gate: below minBytes skew cannot cost more than a couple of
-        // bounded tasks, while the histogram's fixed cost is pure overhead
-        // — skip it and keep the uniform-key plan. This is what makes auto
-        // safe as a DEFAULT: small/bench-scale inputs pay nothing, and the
-        // 100 TB loads the guard exists for amortize the sample to noise.
-        // estBytesKnown: a plan without real leaf stats (sentinel size)
-        // must keep the default shape, not pay the histogram — see its doc.
-        val known = estBytesKnown(df)
-        val engaged = known.exists(_ >= Confs.minBytes(conf))
-        gateTrace(conf, s"clusterByGuarded(${keys.mkString(",")})", engaged, known)
-        if (!engaged) clusterBy(df, keys: _*)
-        else {
-          // Memoized per (files, bytes, keys, confs): loops that re-plan
-          // over unchanged inputs (flow executor) pay the sample once.
-          val hot: java.lang.Boolean = SkewMemo.cached(
-            Seq(df), s"cbg:${keys.mkString(",")}:$frac:$hotShare") {
-            // count(1) aliased to a reserved name instead of .count(): the
-            // latter appends a column literally named "count", so a guarded
-            // KEY column itself named "count" (a plausible fact column)
-            // would make the max/sum references ambiguous and crash the
-            // guard at plan time
-            val cnt = org.apache.spark.sql.functions
-              .count(org.apache.spark.sql.functions.lit(1)).as("__graft_cnt")
-            val stats = df.select(keys.map(df.col): _*)
-              .sample(withReplacement = false, frac, seed = 42L)
-              .groupBy(keys.map(df.col): _*).agg(cnt)
-              .agg(org.apache.spark.sql.functions.max(expr("__graft_cnt")).as("mx"),
-                   org.apache.spark.sql.functions.sum(expr("__graft_cnt")).as("tot"))
-              .head()
-            java.lang.Boolean.valueOf(!stats.isNullAt(0) && stats.getLong(1) >= 200 &&
-              stats.getLong(0).toDouble / stats.getLong(1) > hotShare)
-          }
-          if (hot) df else clusterBy(df, keys: _*)
-        }
-    }
-  }
+    * [[SkewGuard.hotKeys]] decides: clustering is skipped when it names
+    * any hot key, so `off`, sub-gate inputs and uniform keys keep the
+    * exact [[clusterBy]] plan. Rows are identical either way. */
+  def clusterByGuarded(df: DataFrame, key: String): DataFrame =
+    if (SkewGuard.hotKeys(Seq(df), key, s"clusterByGuarded($key)").nonEmpty) df
+    else clusterBy(df, key)
 
   /** The `events` table carries a TIMESTAMP(NANOS) parquet column, which Spark
     * rejects outright ([PARQUET_TYPE_ILLEGAL]). Read nanos as raw longs and

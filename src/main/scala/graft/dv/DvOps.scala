@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{SkewGuard, Tables}
 
 /** Load metadata attached to every vault row (mirrors the reference's
   * `load_dts, record_source, run_id` audit columns). */
@@ -41,23 +41,6 @@ object DvOps {
       .select(sat.columns.map(col).toIndexedSeq: _*) // original column order
   }
 
-  /** [[latestRows]] carrying only `payload` columns (plus the key): the
-    * aggregated struct is what travels through the shuffle, so callers that
-    * only need a column or two (e.g. the delta-load's (hash_diff, del_flag)
-    * probe) should not drag the full satellite payload along.
-    *
-    * ONE struct, not max_by(picked, ord): the ordering prefix
-    * (load_dts, run_id, hash_diff) leads a single struct and the remaining
-    * payload follows, so `max` picks the same row max_by would — struct
-    * comparison is field-by-field left to right — without shipping the
-    * ordering columns twice. hash_diff alone is a 32-char hex string, so the
-    * max_by shape paid ~48 duplicated bytes per aggregation-buffer row and
-    * per shuffled partial; at the sf10 stress scale that was ~40% of the
-    * dv_sat_current exchange. Ties beyond the ordering prefix (only possible
-    * for fully identical version rows, since hash_diff is a content hash)
-    * resolve deterministically by the remaining fields instead of max_by's
-    * arbitrary-row pick — strictly more deterministic, same latest-row
-    * semantics, bit-identical on any corpus without full-row duplicates. */
   /** [[graft.functions.MaxStruct]] as a Column — hash-based latest-row
     * aggregation (ObjectHashAggregate) instead of the SortAggregate Spark
     * plans for declarative max over a struct buffer. Ordering identical to
@@ -80,6 +63,23 @@ object DvOps {
       case forced => forced
     }
 
+  /** [[latestRows]] carrying only `payload` columns (plus the key): the
+    * aggregated struct is what travels through the shuffle, so callers that
+    * only need a column or two (e.g. the delta-load's (hash_diff, del_flag)
+    * probe) should not drag the full satellite payload along.
+    *
+    * ONE struct, not max_by(picked, ord): the ordering prefix
+    * (load_dts, run_id, hash_diff) leads a single struct and the remaining
+    * payload follows, so `max` picks the same row max_by would — struct
+    * comparison is field-by-field left to right — without shipping the
+    * ordering columns twice. hash_diff alone is a 32-char hex string, so the
+    * max_by shape paid ~48 duplicated bytes per aggregation-buffer row and
+    * per shuffled partial; at the sf10 stress scale that was ~40% of the
+    * dv_sat_current exchange. Ties beyond the ordering prefix (only possible
+    * for fully identical version rows, since hash_diff is a content hash)
+    * resolve deterministically by the remaining fields instead of max_by's
+    * arbitrary-row pick — strictly more deterministic, same latest-row
+    * semantics, bit-identical on any corpus without full-row duplicates. */
   def latestRowsProjected(
       sat: DataFrame, hk: String, payload: Seq[String],
       ordering: Seq[String] = DefaultOrdering,
@@ -122,7 +122,7 @@ object DvOps {
     * columns attached. ONE definition so a change to the load shape (audit
     * column order, distinct placement) cannot desynchronize hub vs link
     * semantics. */
-  private def newKeyedRows(
+  private[graft] def newKeyedRows(
       hashView: DataFrame,
       existing: DataFrame,
       groupName: String,
@@ -172,36 +172,6 @@ object DvOps {
       ctx: LoadContext
   ): DataFrame = newKeyedRows(hashView, existingLink, groupName, legFields, hkName, ctx)
 
-  /** Satellite delta insert: staged rows whose (hk, hash_diff) does NOT match
-    * the latest active (del_flag=false) satellite row for that key. Covers
-    * brand-new keys, changed payloads, and re-activation after deletion —
-    * reference INSERT_SAT_NEW semantics.
-    *
-    * @param hkSource      hash-view column holding the parent hub/link hash key
-    * @param hashdiffField hash-view column holding the payload hashdiff
-    * @param fields        staged source field → satellite column
-    */
-  /** @param salt hot-key fan-out (default 1 = off). The default shape
-    *   assumes per-key staged/history cardinality is batch-bounded; a
-    *   pathological key holding ~10% of all version rows concentrates its
-    *   whole history + staged set in ONE task (SkewBench sf10: max task
-    *   9.45 s vs 0.67 s stage median — BASELINE.md vault-skew table,
-    *   raw sessions bench/r13_skew_vault.jsonl). With salt = n, a sampled key
-    *   histogram (skewGuard confs: `spark.graft.skewGuard.sampleFraction`
-    *   / `.hotShare`) names the hot keys (≤ 64) and ONLY their rows fan
-    *   out over n (key, cell) cells — probe history by salt-of-row, staged
-    *   distinct by salt-of-hashdiff, the one-row-per-key probe replicated
-    *   ×n into the co-partitioned join — while every other key keeps cell
-    *   0, preserving the unsalted shape's bytes and per-key collapse (an
-    *   earlier salt-everything variant cost 2× wall at sf10 by
-    *   re-shuffling uncollapsed version rows at level 2). Same rows out
-    *   for ANY hot-key set, including empty (DvOpsSpec "salted delta load
-    *   matches unsalted on a hot-key batch" pins salted ≡ unsalted); costs
-    *   one sampled key-column pass + a narrow one-row-per-key exchange, so
-    *   leave it off unless the batch may be hot. The histogram runs
-    *   EAGERLY at plan-construction time — calling satNewRows in a loop
-    *   over the same inputs re-pays the sample per call. Measured numbers:
-    *   BASELINE.md vault-skew table (SkewBench `sat_delta_salted`). */
   /** Hot-set membership that treats a NULL key as a real key.
     * `Column.isin` yields NULL (falsy under `when()`) for a null-valued
     * input, so a bare isin over a hot set containing null would silently
@@ -217,64 +187,46 @@ object DvOps {
     else c.isNotNull && c.isin(nonNullHot: _*)
   }
 
-  /** Sampled hot-key histogram shared by the salted satellite shapes
-    * ([[satNewRows]], [[satDeleteRows]]): union the sides' key columns at
-    * `spark.graft.skewGuard.sampleFraction`, count, and name the keys whose
-    * sampled share clears `spark.graft.skewGuard.hotShare` (≤ 64, hottest
-    * first). Below ~200 sampled rows the histogram is too noisy to overrule
-    * the default plan — returns empty and callers keep the unsalted shape.
-    * Runs EAGERLY (two actions) at plan-construction time; memoized per
-    * (input files, bytes, plan hash, key, confs) via
-    * [[graft.core.SkewMemo]] so loops that re-plan over unchanged inputs
-    * pay the sample once.
+  /** Hot keys and fan-out width of a salted satellite shape: an explicit
+    * `salt > 1` samples at that width without the size gate; the default
+    * asks the skew guard, which fans out [[SkewGuard.SaltWidth]] ways. An
+    * empty hot set means the unsalted plan. */
+  private def saltPlan(
+      sides: Seq[DataFrame], satHk: String, salt: Int, site: String): (Array[Any], Int) = {
+    require(salt >= 1, s"$site salt must be >= 1, got $salt")
+    if (salt > 1) (SkewGuard.sampledHotKeys(sides, satHk), salt)
+    else (SkewGuard.hotKeys(sides, satHk, s"$site($satHk)"), SkewGuard.SaltWidth)
+  }
+
+  /** Satellite delta insert: staged rows whose (hk, hash_diff) does NOT match
+    * the latest active (del_flag=false) satellite row for that key. Covers
+    * brand-new keys, changed payloads, and re-activation after deletion —
+    * reference INSERT_SAT_NEW semantics.
     *
-    * When the side list MIXES file-backed and non-file inputs — the
-    * streaming satellite shape, where the staged micro-batch is a
-    * LogicalRDD with no stable identity — the non-file sides are DROPPED
-    * and the histogram samples (and memoizes on) the file-backed sides
-    * alone. Keeping the micro-batch in the union would make every batch's
-    * fingerprint None, so once the satellite clears the size gate each
-    * micro-batch would re-pay the two-action histogram uncached — the
-    * +0.5 s/batch cost class r15 eliminated, returning at production
-    * satellite sizes. The drop is sound because the hot-key set is a
-    * perf-only plan choice (same rows out for ANY set) and the pileup the
-    * split exists for lives in the persisted history: a batch-bounded
-    * micro-batch can add at most one batch of rows per key, which the
-    * unsalted shape's wave-bounded tasks already absorb. All-file and
-    * all-non-file side lists keep their previous behavior (memoized /
-    * computed-every-time over ALL sides). */
-  private[graft] def sampledHotKeys(
-      sides: Seq[DataFrame], keyCol: String,
-      conf: org.apache.spark.sql.RuntimeConfig): Array[Any] = {
-    val frac = graft.core.Confs.sampleFraction(conf)
-    val hotShare = graft.core.Confs.hotShare(conf)
-    val fileSides = sides.filter(graft.core.SkewMemo.sideFingerprint(_).isDefined)
-    val effective = if (fileSides.nonEmpty) fileSides else sides
-    graft.core.SkewMemo.cached(effective, s"shk:$keyCol:$frac:$hotShare") {
-      sampledHotKeysUncached(effective, keyCol, frac, hotShare)
-    }
-  }
-
-  private def sampledHotKeysUncached(
-      sides: Seq[DataFrame], keyCol: String,
-      frac: Double, hotShare: Double): Array[Any] = {
-    // count(1) aliased, not .count(): a key column literally named "count"
-    // would otherwise make the references below ambiguous (Tables
-    // .clusterByGuarded has the same posture)
-    val sampled = sides
-      .map(_.select(col(keyCol)).sample(withReplacement = false, frac, seed = 42L))
-      .reduce(_ union _)
-      .groupBy(col(keyCol)).agg(count(lit(1)).as("__graft_cnt"))
-    sampled.persist()
-    try {
-      val tot = Option(sampled.agg(sum("__graft_cnt")).head().get(0)).fold(0L)(_.asInstanceOf[Long])
-      if (tot < 200) Array.empty
-      else sampled.filter(col("__graft_cnt") >= lit(math.max(2.0, tot * hotShare)))
-        .orderBy(col("__graft_cnt").desc).limit(64)
-        .select(col(keyCol)).collect().map(_.get(0))
-    } finally { sampled.unpersist(); () }
-  }
-
+    * @param hkSource      hash-view column holding the parent hub/link hash key
+    * @param hashdiffField hash-view column holding the payload hashdiff
+    * @param fields        staged source field → satellite column
+    * @param salt hot-key fan-out (default 1: the skew guard decides). The
+    *   default shape assumes per-key staged/history cardinality is
+    *   batch-bounded; a pathological key holding ~10% of all version rows
+    *   concentrates its whole history + staged set in ONE task (SkewBench sf10: max task
+    *   9.45 s vs 0.67 s stage median — BASELINE.md vault-skew table,
+    *   raw sessions bench/r13_skew_vault.jsonl). With salt = n, the skew
+    *   guard's sampled histogram ([[SkewGuard.sampledHotKeys]], ungated)
+    *   names the hot keys (≤ 64) and ONLY their rows fan out over n
+    *   (key, cell) cells — probe history by salt-of-row, staged
+    *   distinct by salt-of-hashdiff, the one-row-per-key probe replicated
+    *   ×n into the co-partitioned join — while every other key keeps cell
+    *   0, preserving the unsalted shape's bytes and per-key collapse (an
+    *   earlier salt-everything variant cost 2× wall at sf10 by
+    *   re-shuffling uncollapsed version rows at level 2). Same rows out
+    *   for ANY hot-key set, including empty (DvOpsSpec "salted delta load
+    *   matches unsalted on a hot-key batch" pins salted ≡ unsalted); costs
+    *   one sampled key-column pass + a narrow one-row-per-key exchange, so
+    *   leave it at 1 unless the batch is known hot: at 1, `auto` engages a
+    *   [[SkewGuard.SaltWidth]]-way split above the size gate
+    *   ([[SkewGuard.hotKeys]]). Measured numbers: BASELINE.md vault-skew
+    *   table (SkewBench `sat_delta_salted`). */
   def satNewRows(
       hashView: DataFrame,
       existingSat: DataFrame,
@@ -318,47 +270,18 @@ object DvOps {
       col(hkSource).as(satHk),
       col(hashdiffField).as("hash_diff"),
       payload.as("__p"))
+    // Hot keys first: empty under `off`, below the size gate, or when the
+    // sampled histogram finds nothing hot — each of those takes the ONE
+    // unsalted branch below, so the explicit-salt, guarded and nothing-hot
+    // paths can never silently diverge in plan shape.
+    val (hotKeys, width) = saltPlan(Seq(probeIn, stagedIn), satHk, salt, "satNewRows")
     // Size the join's partitioning ONCE from both sides (max of the two
     // estimates): independently-sized clusterBy calls can land on different
     // counts in the transition region, and EnsureRequirements then inserts a
     // third exchange above one side — exactly the co-partitioned shape the
     // PlanSpec dv_sat_delta guard pins against.
-    require(salt >= 1, s"satNewRows salt must be >= 1, got $salt")
-    // `spark.graft.skewGuard=auto` engages the hot-key split for callers
-    // that left salt at its default — the internal sampled histogram still
-    // decides, and an empty hot set falls through to the UNSALTED plan, so
-    // auto on a uniform batch costs exactly one histogram and nothing else.
-    // Size-gated like Tables.clusterByGuarded: when BOTH sides sit under
-    // skewGuard.minBytes, even a fully-hot key is a couple of bounded tasks
-    // and the histogram is pure overhead (measured +14% on the ungated
-    // sf0.1 bench, dominated by per-micro-batch histograms on small staged
-    // sets — BASELINE.md r14 skew-guard table). An explicit salt always
-    // wins over the conf, gate included.
-    val conf = hashView.sparkSession.conf
-    val effSalt =
-      if (salt == 1 && graft.core.Confs.skewGuard(conf) == "auto") {
-        val autoSalt = graft.core.Confs.salt(conf) // validate even when gated
-        // KNOWN bytes only: a streaming micro-batch's staged side is a
-        // LogicalRDD whose default "size" is the Long.MaxValue sentinel —
-        // counting it engaged the histogram on every micro-batch (r15 A/B,
-        // +0.5 s/batch on dv_stream_sat). A side with unknown stats cannot
-        // justify the sample; the probe (history) side — whose pileup the
-        // split exists for — is a file scan with real stats wherever the
-        // guard matters.
-        val known = Seq(probeIn, stagedIn).flatMap(Tables.estBytesKnown)
-        val engaged = known.nonEmpty && known.max >= graft.core.Confs.minBytes(conf)
-        Tables.gateTrace(conf, s"satNewRows($satHk)", engaged, known.maxOption)
-        if (engaged) autoSalt else salt
-      } else salt
     val parts = math.max(Tables.clusterParts(probeIn), Tables.clusterParts(stagedIn))
     val activeStruct = struct(col("load_dts"), col("run_id"), col("hash_diff"), col("del_flag"))
-    // Hot keys first: empty when effSalt == 1 (no sampling job), or when the
-    // sampled histogram finds nothing hot — either way ONE unsalted branch
-    // below, so the explicit-salt, auto-guarded, and nothing-hot paths can
-    // never silently diverge in plan shape.
-    val hotKeys: Array[Any] =
-      if (effSalt == 1) Array.empty
-      else sampledHotKeys(Seq(probeIn, stagedIn), satHk, conf)
     val (staged, probe, joinKeys) =
       if (hotKeys.isEmpty) {
         val probe1 = Tables.clusterBy(probeIn, parts, satHk)
@@ -372,18 +295,17 @@ object DvOps {
         // key with ~10 versions and salt 16, almost every (key, cell) holds
         // one row, so the second level re-shuffles ≈ the whole satellite
         // (measured 2× wall at sf10). Instead a sampled key histogram
-        // (reusing the skewGuard confs) names the hot keys (≤ 64), and ONLY
-        // their rows fan out over `salt` cells; every other key keeps cell
-        // 0. The (key, cell) exchange then carries exactly the unsalted
-        // shape's bytes, level 2 ships one narrow row per key (+`salt` per
-        // hot key), and the hot keys' history/staged sets are bounded at
-        // 1/salt per task.
+        // names the hot keys (≤ 64), and ONLY their rows fan out over
+        // `width` cells; every other key keeps cell 0. The (key, cell)
+        // exchange then carries exactly the unsalted shape's bytes, level 2
+        // ships one narrow row per key (+`width` per hot key), and the hot
+        // keys' history/staged sets are bounded at 1/width per task.
         def isHot(c: Column) = hotKeyPredicate(hotKeys.toIndexedSeq, c)
         // salt-of-row for the probe history; the salt is a pure function
         // of the row, so `max` over any cell partition is associative-
         // safe and the two-level result equals the one-level max.
         val rowSalt = when(isHot(col(satHk)),
-          pmod(xxhash64(col("hash_diff"), col("load_dts"), col("run_id")), lit(effSalt)))
+          pmod(xxhash64(col("hash_diff"), col("load_dts"), col("run_id")), lit(width)))
           .otherwise(lit(0)).cast("int")
         val level1 = Tables.clusterBy(probeIn.withColumn("__salt", rowSalt), parts, satHk, "__salt")
           .groupBy(col(satHk), col("__salt"))
@@ -394,14 +316,14 @@ object DvOps {
         // land in: ×salt for hot keys, cell 0 only for the rest
         val probeN = Tables.clusterBy(
           probeRow.withColumn("__salt",
-            explode(sequence(lit(0), when(isHot(col(satHk)), lit(effSalt - 1)).otherwise(lit(0))))),
+            explode(sequence(lit(0), when(isHot(col(satHk)), lit(width - 1)).otherwise(lit(0))))),
           parts, satHk, "__salt")
         // salt-of-hashdiff, NOT salt-of-row: duplicate staged rows share
         // their hash_diff, so they land in the same cell and the
         // partition-local distinct still collapses them. __salt rides
         // along as a distinct column — a pure function of (key,
         // hash_diff), so the groups are unchanged.
-        val stagedSalt = when(isHot(col(satHk)), pmod(xxhash64(col("hash_diff")), lit(effSalt)))
+        val stagedSalt = when(isHot(col(satHk)), pmod(xxhash64(col("hash_diff")), lit(width)))
           .otherwise(lit(0)).cast("int")
         val stagedN = Tables.clusterBy(
           stagedIn.withColumn("__salt", stagedSalt), parts, satHk, "__salt")
@@ -424,11 +346,10 @@ object DvOps {
     * absent from the staged batch become `del_flag=true` rows carrying the
     * previous payload and hash_diff — reference INSERT_SAT_DELETE semantics.
     *
-    * @param salt hot-key fan-out for the anti-join (default 1 = off; engaged
-    *   by `spark.graft.skewGuard=auto` above the size gate, like
-    *   [[satNewRows]]). The skew exposure here is the anti-join's OWN key
-    *   exchange, not the aggregation above it: the join shuffles the whole
-    *   satellite on the key, so a degenerate key's entire version history
+    * @param salt hot-key fan-out for the anti-join (default 1: the skew
+    *   guard decides, like [[satNewRows]]). The skew exposure here is the
+    *   anti-join's OWN key exchange, not the aggregation above it: the
+    *   join shuffles the whole satellite on the key, so a degenerate key's entire version history
     *   lands in one join task (the 22.6 s / 330 MB-spill class from the
     *   BASELINE vault-skew table) — and the latest-row aggregation then
     *   fuses onto that same stage with no exchange between, inheriting the
@@ -457,23 +378,7 @@ object DvOps {
     // exchange it introduces is exactly the partitioning the join needs, and
     // AQE plans the join off the aggregated exchange's statistics.
     val stagedKeys = hashView.select(col(hkSource).as(satHk)).distinct()
-    require(salt >= 1, s"satDeleteRows salt must be >= 1, got $salt")
-    // auto engagement mirrors satNewRows: explicit salt wins, the size gate
-    // keeps small loads on the default plan at zero extra jobs, and an empty
-    // histogram falls through to the unsalted shape.
-    val conf = hashView.sparkSession.conf
-    val effSalt =
-      if (salt == 1 && graft.core.Confs.skewGuard(conf) == "auto") {
-        val autoSalt = graft.core.Confs.salt(conf) // validate even when gated
-        // estBytesKnown: unknown stats (sentinel) must not engage — see satNewRows
-        val known = Tables.estBytesKnown(existingSat)
-        val engaged = known.exists(_ >= graft.core.Confs.minBytes(conf))
-        Tables.gateTrace(conf, s"satDeleteRows($satHk)", engaged, known)
-        if (engaged) autoSalt else salt
-      } else salt
-    val hotKeys: Array[Any] =
-      if (effSalt == 1) Array.empty
-      else sampledHotKeys(Seq(existingSat), satHk, conf)
+    val (hotKeys, width) = saltPlan(Seq(existingSat), satHk, salt, "satDeleteRows")
     val absent =
       if (hotKeys.isEmpty) existingSat.join(stagedKeys, Seq(satHk), "left_anti")
       else {
@@ -482,10 +387,10 @@ object DvOps {
         // so membership semantics are unchanged (every cell of a staged hot
         // key exists on the probe side).
         val rowSalt = when(isHot(col(satHk)),
-        pmod(xxhash64(col("hash_diff"), col("load_dts"), col("run_id")), lit(effSalt)))
+        pmod(xxhash64(col("hash_diff"), col("load_dts"), col("run_id")), lit(width)))
         .otherwise(lit(0)).cast("int")
         val stagedN = stagedKeys.withColumn("__salt",
-        explode(sequence(lit(0), when(isHot(col(satHk)), lit(effSalt - 1)).otherwise(lit(0)))))
+        explode(sequence(lit(0), when(isHot(col(satHk)), lit(width - 1)).otherwise(lit(0)))))
         existingSat.withColumn("__salt", rowSalt)
         .join(stagedN, Seq(satHk, "__salt"), "left_anti")
         .drop("__salt")

@@ -184,7 +184,7 @@ final class FlowExecutor(
       // the ingestion claim lets two flows of one source with DIFFERENT
       // files both proceed, and the second one's truncate-and-load would
       // swap the staging data under the first. The per-TARGET load claims
-      // (hubLoads doc) nest inside, because flows of DIFFERENT sources
+      // (keyedLoads) nest inside, because flows of DIFFERENT sources
       // sharing a hub serialize only on that hub. View-backed sources skip
       // the claim: nothing stages, and the view is the user's to manage.
       val loaded =
@@ -279,58 +279,47 @@ final class FlowExecutor(
   private def merge(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
     b.foldLeft(a) { case (acc, (k, v)) => acc + (k -> (acc.getOrElse(k, 0L) + v)) }
 
-  /** Hubs: bk transitions grouped by (target_table, group_name). */
-  private def hubLoads(hv: DataFrame, transitions: Seq[Transition], ctx: LoadContext): Map[String, Long] = {
+  /** Hubs: bk transitions into `hub_*`, grouped by (target_table, group_name). */
+  private def hubLoads(hv: DataFrame, transitions: Seq[Transition], ctx: LoadContext): Map[String, Long] =
+    keyedLoads(hv, transitions, ctx, "hubLoad", Set("bk"), Seq("hub_"))
+
+  /** Links: ll/dk transitions into `link_*`/`nhl_*`, grouped likewise. */
+  private def linkLoads(hv: DataFrame, transitions: Seq[Transition], ctx: LoadContext): Map[String, Long] =
+    keyedLoads(hv, transitions, ctx, "linkLoad", Set("ll", "dk"), Seq("link_", "nhl_"))
+
+  /** One anti-join load per (target_table, group_name) of the `types`
+    * transitions into tables named with one of `prefixes`; the prefixes,
+    * stripped in order, name the target's `<base>_hk`. An `ll` leg reads
+    * its hub's `<source>_hk` column, every other field its source column
+    * (the shared row builder is [[DvOps.newKeyedRows]]). */
+  private def keyedLoads(
+      hv: DataFrame, transitions: Seq[Transition], ctx: LoadContext,
+      claim: String, types: Set[String], prefixes: Seq[String]): Map[String, Long] = {
     var loaded = Map.empty[String, Long]
-    val hubGroups = transitions
-      .filter(t => t.transferType == "bk" && t.targetTable.startsWith("hub_"))
+    val groups = transitions
+      .filter(t => types(t.transferType) && prefixes.exists(t.targetTable.startsWith))
       .groupBy(t => (t.targetTable, t.groupName)).toSeq.sortBy(_._1)
-    hubGroups.foreach { case ((target, group), fields) =>
-      val hkName = s"${target.stripPrefix("hub_")}_hk"
-      val bkFields = fields.sortBy(_.position).map(f => f.sourceField -> f.targetField)
-      val existingSchema = StructType(StructField(hkName, StringType) :: Nil)
+    groups.foreach { case ((target, group), fields) =>
+      val hkName = s"${prefixes.foldLeft(target)(_ stripPrefix _)}_hk"
+      val attrFields = fields.sortBy(_.position).map { f =>
+        if (f.transferType == "ll") s"${f.sourceField}_hk" -> f.targetField
+        else f.sourceField -> f.targetField
+      }
       // Per-table LOAD claim around probe + append: two processes flowing
       // DIFFERENT files into one hub could otherwise both pass the
       // anti-join probe and double-insert a business key (the reference's
       // DuckDB serializes its transactions; Lake.withLoadClaim is the
       // Spark-side serializer). The claim must open BEFORE the probe is
       // built — its file listing pins at construction.
-      val n = lake.withLoadClaim("dv", target, "hubLoad") {
-        insideLoadClaimHook(target)
-        val existing = lake.readOrProbe("dv", target, existingSchema, hv, col(s"${group}_hk"))
-        val rows = DvOps.newHubRows(hv, existing, group, bkFields, hkName, ctx)
-        lake.appendBucketed(rows, "dv", target, hkName)
-      }
-      // several bk groups may feed one hub (self-referencing entities) —
-      // accumulate, don't overwrite
-      loaded += target -> (loaded.getOrElse(target, 0L) + n)
-    }
-    loaded
-  }
-
-  /** Links: ll/dk transitions grouped by (target_table, group_name). */
-  private def linkLoads(hv: DataFrame, transitions: Seq[Transition], ctx: LoadContext): Map[String, Long] = {
-    var loaded = Map.empty[String, Long]
-    val linkGroups = transitions
-      .filter(t =>
-        (t.transferType == "ll" || t.transferType == "dk") &&
-          (t.targetTable.startsWith("link_") || t.targetTable.startsWith("nhl_")))
-      .groupBy(t => (t.targetTable, t.groupName)).toSeq.sortBy(_._1)
-    linkGroups.foreach { case ((target, group), fields) =>
-      val base = target.stripPrefix("link_").stripPrefix("nhl_")
-      val hkName = s"${base}_hk"
-      val legFields = fields.sortBy(_.position).map { f =>
-        if (f.transferType == "ll") s"${f.sourceField}_hk" -> f.targetField
-        else f.sourceField -> f.targetField
-      }
-      // load claim spanning probe construction + append (hubLoads doc)
-      val n = lake.withLoadClaim("dv", target, "linkLoad") {
+      val n = lake.withLoadClaim("dv", target, claim) {
         insideLoadClaimHook(target)
         val existing = lake.readOrProbe("dv", target,
           StructType(StructField(hkName, StringType) :: Nil), hv, col(s"${group}_hk"))
-        val rows = DvOps.newLinkRows(hv, existing, group, legFields, hkName, ctx)
+        val rows = DvOps.newKeyedRows(hv, existing, group, attrFields, hkName, ctx)
         lake.appendBucketed(rows, "dv", target, hkName)
       }
+      // several groups may feed one target (self-referencing entities) —
+      // accumulate, don't overwrite
       loaded += target -> (loaded.getOrElse(target, 0L) + n)
     }
     loaded
@@ -356,7 +345,7 @@ final class FlowExecutor(
         // this schema on the scan, so a declared-vs-written mismatch would
         // fail the read instead of being silently reconciled.
         graft.dv.VaultSchemas.satFromFields(satHk, fields.map { case (s, t) => t -> hv.schema(s).dataType })
-      // ONE load claim around BOTH append phases (hubLoads doc; reentrant,
+      // ONE load claim around BOTH append phases (keyedLoads; reentrant,
       // so the inner appends under a future claim-at-append refactor can't
       // self-deadlock): a concurrent loader interleaving between a
       // sat_full's insert and delete-detection phases would feed the

@@ -297,9 +297,10 @@ object DvQueries {
   // UNIONS this frame with the key set before its own single aggregation
   // exchange, and a union destroys co-partitioning — pre-clustering there
   // ships the whole satellite through an exchange that buys nothing.
-  // clusterByGuarded: `spark.graft.skewGuard` lets a deployment facing a
-  // degenerate key distribution (null/sentinel keys) drop to the skew-immune
-  // partial-before-exchange shape — default off keeps this exact plan.
+  // clusterByGuarded: under the default `spark.graft.skewGuard=auto` a
+  // degenerate key distribution (null/sentinel keys) above the size gate
+  // drops to the skew-immune partial-before-exchange shape; `off`, and any
+  // input under the gate, keep this exact plan.
   private def lineitemSatNat(s: SparkSession, dir: String, clustered: Boolean = true): DataFrame = {
     val li = Tables.load(s, dir, "lineitem")
     (if (clustered) Tables.clusterByGuarded(li, "l_orderkey") else li).select(

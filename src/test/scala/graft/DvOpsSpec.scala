@@ -165,16 +165,10 @@ class DvOpsSpec extends SparkSpec {
       val autoRows = auto.select("hk", "hash_diff", "payload")
         .as[(String, String, String)].collect().sorted.toSeq
       assert(autoRows == offRows)
-      // malformed fan-out width fails naming the key (even when gated)
-      spark.conf.unset(graft.core.Confs.MinBytesKey)
-      spark.conf.set(graft.core.Confs.SaltKey, "1")
-      val e = intercept[IllegalArgumentException](run())
-      assert(e.getMessage.contains(graft.core.Confs.SaltKey))
     } finally {
       spark.conf.unset("spark.graft.skewGuard")
       spark.conf.unset("spark.graft.skewGuard.sampleFraction")
       spark.conf.unset(graft.core.Confs.MinBytesKey)
-      spark.conf.unset(graft.core.Confs.SaltKey)
     }
   }
 

@@ -135,6 +135,7 @@ class GraftFacadeSpec extends SparkSpec {
     assert(g.sql("SELECT * FROM stg.customer").count() == 2L)
 
     val generation = s"$root/lake/dv/hub_customer/gen-[0-9]+(/hk_bucket=[^/]+)?".r
+    assert(g.lake.exists("dv", "hub_customer")) // the append's own resolution, cached
     FaultyFs.listed.clear()
     g.lake.appendBucketed(
       Seq(("hk9", Timestamp.valueOf("2026-01-02 00:00:00"), "lit", 99L, 9L))
@@ -142,6 +143,10 @@ class GraftFacadeSpec extends SparkSpec {
       "dv", "hub_customer", "customer_hk")
     val relisted = FaultyFs.listed.asScala.collect { case (p, n) if generation.matches(p) => p -> n.get }
     assert(relisted.isEmpty, s"the append re-listed committed generation dirs: $relisted")
+    // a plain append commits no generation, so the write hook skips the
+    // dv.<name> registration check and nothing lists the table root
+    val rootListed = Option(FaultyFs.listed.get(s"$root/lake/dv/hub_customer")).fold(0)(_.get)
+    assert(rootListed == 0, s"the append listed the table root $rootListed times")
     assert(g.sql("SELECT * FROM dv.hub_customer").count() == 3L)
 
     load("c2", "7,gus")

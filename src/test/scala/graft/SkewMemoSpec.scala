@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{SkewMemo, Tables}
+import graft.core.{SkewGuard, SkewMemo, Tables}
 
 /** [[graft.core.SkewMemo]]: the skew-guard histogram memo must (a) skip the
   * sample jobs on a re-plan over unchanged parquet inputs, (b) invalidate
@@ -89,9 +89,9 @@ class SkewMemoSpec extends SparkSpec {
       // fingerprint would hand B a memo hit with A's histogram.
       val hotView = spark.read.parquet(dir).filter(col("v") >= 0)
       val coldView = spark.read.parquet(dir).filter(col("k") =!= 0L)
-      val a = graft.dv.DvOps.sampledHotKeys(Seq(hotView), "k", spark.conf)
+      val a = SkewGuard.sampledHotKeys(Seq(hotView), "k")
       assert(a.contains(0L), "filter A keeps the hot key")
-      val b = graft.dv.DvOps.sampledHotKeys(Seq(coldView), "k", spark.conf)
+      val b = SkewGuard.sampledHotKeys(Seq(coldView), "k")
       assert(!b.contains(0L), "filter B's histogram must be its own, not A's memo entry")
       assert(SkewMemo.size == 2, "two distinct fingerprints")
     } finally {
@@ -113,14 +113,14 @@ class SkewMemoSpec extends SparkSpec {
       // class, deferred past the size gate).
       def batch(n: Int) = spark.range(n)
         .select((col("id") + 1000000L).as("k"), col("id").as("v"))
-      val first = graft.dv.DvOps.sampledHotKeys(
-        Seq(spark.read.parquet(dir), batch(50)), "k", spark.conf)
+      val first = SkewGuard.sampledHotKeys(
+        Seq(spark.read.parquet(dir), batch(50)), "k")
       assert(first.contains(0L))
       assert(SkewMemo.size == 1, "file side fingerprint must land in the memo")
       val df2 = spark.read.parquet(dir)
       df2.queryExecution.optimizedPlan.stats // pre-pay the listing job
       val b1 = jobs
-      val second = graft.dv.DvOps.sampledHotKeys(Seq(df2, batch(75)), "k", spark.conf)
+      val second = SkewGuard.sampledHotKeys(Seq(df2, batch(75)), "k")
       assert(jobs == b1, s"fresh micro-batch must not defeat the memo, ran ${jobs - b1} jobs")
       assert(second.toSeq == first.toSeq)
     } finally {
@@ -161,14 +161,14 @@ class SkewMemoSpec extends SparkSpec {
     SkewMemo.clear()
     spark.conf.set("spark.graft.skewGuard.sampleFraction", "1.0")
     try {
-      def hot() = graft.dv.DvOps.sampledHotKeys(
-        Seq(spark.read.parquet(dir)), "k", spark.conf)
+      def hot() = SkewGuard.sampledHotKeys(
+        Seq(spark.read.parquet(dir)), "k")
       val first = hot()
       assert(first.nonEmpty && first.contains(0L), "30%-hot key must be named")
       val df2 = spark.read.parquet(dir)
       df2.queryExecution.optimizedPlan.stats // pre-pay the listing job
       val b1 = jobs
-      val second = graft.dv.DvOps.sampledHotKeys(Seq(df2), "k", spark.conf)
+      val second = SkewGuard.sampledHotKeys(Seq(df2), "k")
       assert(jobs == b1, s"memo hit must run zero jobs, ran ${jobs - b1}")
       assert(second.toSeq == first.toSeq)
       // a different hotShare is a different histogram — must recompute
