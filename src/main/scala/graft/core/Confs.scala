@@ -170,7 +170,7 @@ object Confs {
   val LoadClaimWaitMillisKey = "spark.graft.loadClaim.waitMillis"
 
   /** How long an incremental LOAD ([[graft.core.Lake.withLoadClaim]] — flow
-    * executor targets, streaming dv sinks) waits for another loader's
+    * executor targets, streamFlow micro-batches) waits for another loader's
     * per-table claim before refusing with a typed Concurrency error.
     * Default 5 minutes: the reference's DuckDB serializes concurrent flow
     * transactions, so the parity posture is "wait for the other loader,

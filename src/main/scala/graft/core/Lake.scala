@@ -144,11 +144,12 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * when it has none. Positive results are cached JVM-wide per table —
     * resolution sits on the hottest paths (a streaming foreachBatch reads
     * and appends per micro-batch), each a driver metadata RPC on a remote
-    * store. Every Lake write drops it ([[refresh]]), and so does taking a
-    * flow or load claim, so within the single-writer-per-table contract the
-    * cache is coherent; a table compacted by ANOTHER process keeps serving
-    * the superseded (retained) generation to this JVM until a local write
-    * or claim. */
+    * store. A generation commit drops it ([[refresh]]), and so does taking
+    * a flow or load claim; an append into the current generation moves
+    * neither the generation nor its layout record, so it keeps it. Within
+    * the single-writer-per-table contract the cache is coherent; a table
+    * compacted by ANOTHER process keeps serving the superseded (retained)
+    * generation to this JVM until a local generation commit or claim. */
   private def resolution(layer: String, name: String): Option[Lake.Resolution] =
     Option(Lake.resolutionCache.computeIfAbsent(qualifiedKey(layer, name), _ => {
       val rootP = new Path(tablePath(layer, name))
@@ -206,7 +207,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     }.getOrElse(
       // empty LOCAL relation, not an empty RDD: a LogicalRDD's stats are the
       // defaultSizeInBytes SENTINEL, so every plan built over an
-      // absent-table probe (a first flow load, a streaming sink's batch 0)
+      // absent-table probe (a first flow load, a stream's batch 0)
       // claimed Long.MaxValue-ish input — Tables.clusterParts then sized
       // the delta load's exchange to the 4-wave cap (128 tasks for a
       // 15k-row micro-batch) and estBytesKnown-gated sites
@@ -235,25 +236,15 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * (DvOps.satDeleteRows): there the ABSENT keys are the signal, and
     * pruning would mass-delete the unscanned buckets. Bucket derivation
     * uses the TABLE's persisted count ([[tableBuckets]]), so a
-    * session-conf drift cannot mis-prune.
-    *
-    * `gate`: a caller that already evaluated [[probeWouldEngage]] this
-    * batch (the streaming sinks do, to decide hash-view caching BEFORE the
-    * bucket collect runs) passes the decision here — the gate's
-    * estBytesKnown walks the optimized plan, a per-call driver optimizer
-    * pass worth skipping twice per micro-batch. None = evaluate here. */
+    * session-conf drift cannot mis-prune. */
   def readOrProbe(
       layer: String, name: String, schema: StructType,
-      staged: DataFrame, stagedKey: org.apache.spark.sql.Column,
-      gate: Option[Boolean] = None): DataFrame = {
+      staged: DataFrame, stagedKey: org.apache.spark.sql.Column): DataFrame = {
     val full = readOr(layer, name, schema)
     if (!exists(layer, name)) return full
-    val engaged = gate.getOrElse {
-      val known = Tables.estBytesKnown(full)
-      val e = known.exists(_ >= Confs.probePruneMinBytes(spark.conf))
-      SkewGuard.logGate(s"readOrProbe($layer.$name)", e, known)
-      e
-    }
+    val known = Tables.estBytesKnown(full)
+    val engaged = known.exists(_ >= Confs.probePruneMinBytes(spark.conf))
+    SkewGuard.logGate(s"readOrProbe($layer.$name)", engaged, known)
     if (!engaged) return full
     val n = tableBuckets(layer, name)
     val buckets = staged.select(bucketOfN(stagedKey, n).as("__b")).distinct()
@@ -274,18 +265,6 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       .filter(col("hk_bucket").cast("long").isin(buckets.map(java.lang.Long.valueOf): _*))
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
   }
-
-  /** True when [[readOrProbe]] would engage the bucket-pruned probe
-    * for this table (exists + above the size gate). Callers use it to
-    * decide whether materializing a shared input pays: above the gate the
-    * bucket distinct-collect is a SECOND action over the staged batch (the
-    * streaming sinks cache their per-batch hash view for it); below it the
-    * append is the only action and a cache is pure overhead (measured
-    * +0.2–0.4 s per micro-batch on the KB-scale driver bench rows). */
-  def probeWouldEngage(layer: String, name: String, schema: StructType): Boolean =
-    exists(layer, name) &&
-      Tables.estBytesKnown(readOr(layer, name, schema))
-        .exists(_ >= Confs.probePruneMinBytes(spark.conf))
 
   /** Lazy recursive iterator of the parquet leaf FileStatuses under `p` —
     * THE tree walk every lake metadata operation shares (compact's count +
@@ -308,13 +287,14 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
   private def dropResolution(layer: String, name: String): Unit =
     Lake.resolutionCache.remove(qualifiedKey(layer, name))
 
-  /** Every mutating lake operation ends here: drops the table's cached
-    * [[resolution]] and fires [[onWrite]]; `committed` says the write
-    * committed a generation. Nothing is re-listed: the next reader
-    * resolves and lists afresh, and Spark's own write command already
-    * re-caches any cached plan over the directory it wrote. */
+  /** Every mutating lake operation ends here: fires [[onWrite]], and when
+    * the write `committed` a generation drops the table's cached
+    * [[resolution]] (an append or an expire leaves the current generation
+    * and its layout record as they were). Nothing is re-listed: the next
+    * reader after a commit resolves and lists afresh, and Spark's own write
+    * command already re-caches any cached plan over the directory it wrote. */
   private def refresh(layer: String, name: String, committed: Boolean): Unit = {
-    dropResolution(layer, name)
+    if (committed) dropResolution(layer, name)
     onWrite(layer, name, committed)
   }
 
@@ -447,7 +427,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * no deleted-file FILE_NOT_EXIST. The one hazard is an increment built
     * from a STALE DataFrame (resolved before an intervening append by a
     * concurrent writer) — out of scope: the lake's single-writer-per-table
-    * contract (flow executor / one streaming query per sink table).
+    * contract (one flow executor or streamFlow query per table).
     *
     * An empty increment appended to an existing table writes no part files
     * (per-partition writers skip empty tasks) and is harmless; an empty

@@ -58,12 +58,12 @@ object Scratch {
     * reaped at JVM exit). Structured Streaming fsyncs its checkpoint
     * (offset log, commit log, state store snapshots) once per micro-batch
     * per partition — on this container's disk that I/O held
-    * events_stream_join at a ~7 s floor that RAM backing removes (r11
-    * verdict ask; measurements in BASELINE.md). Resolution: the
+    * events_stream_join at a ~7 s floor that RAM backing removes
+    * (measurements in BASELINE.md). Resolution: the
     * [[ConfKey]] override wins as usual; else `/dev/shm` when present and
     * writable (Linux tmpfs); else the JVM tmpdir. NOT for production
     * streams — a durable checkpoint on shared storage is what makes a
-    * real stream recoverable, and the StreamingDv sinks take that path
+    * real stream recoverable, and `FlowExecutor.streamFlow` takes that path
     * explicitly from the caller. */
   def streamRoot(spark: SparkSession): String =
     spark.conf.getOption(ConfKey).getOrElse {

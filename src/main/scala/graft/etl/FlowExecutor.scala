@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.core.Lake
@@ -35,6 +36,8 @@ final case class FlowResult(
   * hubs = target_table `hub_*` grouped by (target, group); links = `link_*` /
   * `nhl_*`; satellites = one per `sat_delta` / `sat_full` transition whose
   * group names the `f` payload group (satellite_manager.py:236-267).
+  * [[streamFlow]] runs the same hash view and loads on each micro-batch
+  * of a stream.
   *
   * Scale: the ledger is the only driver-side state (tiny, two actions per
   * flow); every load is a pure DataFrame pipeline appended bucketed-by-hk,
@@ -45,6 +48,8 @@ final class FlowExecutor(
     val meta: MetaStore,
     val algo: HashGen.Algo = HashGen.Sha1
 ) {
+  import FlowExecutor.TargetLoad
+
   private def spark: SparkSession = lake.spark
 
   val runinfoSchema: StructType = StructType(Seq(
@@ -149,9 +154,7 @@ final class FlowExecutor(
     try {
       runId = allocateRunId()
       logRun(sourceTable, runId, filePath, "start")
-      val ctx = LoadContext(
-        loadDtsOverwrite.getOrElse(new Timestamp(System.currentTimeMillis())),
-        recordSource, runId)
+      val ctx = ctxOf(runId, recordSource, loadDtsOverwrite)
 
       // Stage (truncate-and-load) when a file is given and the source is a
       // staging table (reference CHECK_SOURCE_FOR_INGESTION). A non-stg
@@ -170,21 +173,13 @@ final class FlowExecutor(
             lake.overwrite(Staging.loadFile(spark, meta, sourceTable, fp), "stg", sourceTable)
           }
         }
-        val transitions = meta.getTransitions(sourceTable)
-        val hv = HashView.build(stagingDf(sourceTable), transitions, algo)
-        // The hash view feeds every hub/link/sat load below — materialize it
-        // once instead of recomputing the projection per target. Unpersisted
-        // in the finally so a failing load can't leak the cached copy.
-        hv.cache()
-        try merge(hubLoads(hv, transitions, ctx),
-          merge(linkLoads(hv, transitions, ctx), satLoads(hv, transitions, ctx)))
-        finally hv.unpersist()
+        load(stagingDf(sourceTable), meta.getTransitions(sourceTable), ctx)(allTargets)
       }
       // Per-SOURCE flow claim around staging + loads (Lake.withFlowClaim):
       // the ingestion claim lets two flows of one source with DIFFERENT
       // files both proceed, and the second one's truncate-and-load would
       // swap the staging data under the first. The per-TARGET load claims
-      // (keyedLoads) nest inside, because flows of DIFFERENT sources
+      // (keyedTargets) nest inside, because flows of DIFFERENT sources
       // sharing a hub serialize only on that hub. View-backed sources skip
       // the claim: nothing stages, and the view is the user's to manage.
       val loaded =
@@ -232,17 +227,15 @@ final class FlowExecutor(
 
   /** Load just the hubs fed by `stgTable` — the reference's standalone
     * `load_related_hubs(stg_table, run_id, record_source, load_date)`
-    * (mallarddv.py:189-215, hub_manager.py). Used by executeFlow and
-    * callable on its own for incremental/partial loads. */
+    * (mallarddv.py:189-215, hub_manager.py). Callable on its own for
+    * incremental/partial loads. */
   def loadRelatedHubs(
       stgTable: String,
       runId: Long,
       recordSource: String,
       loadDts: Option[Timestamp] = None
   ): Map[String, Long] =
-    withHashView(stgTable) { (hv, transitions) =>
-      hubLoads(hv, transitions, ctxOf(runId, recordSource, loadDts))
-    }
+    loadRelated(stgTable, runId, recordSource, loadDts)(hubTargets)
 
   /** Standalone link loads (reference load_related_links, mallarddv.py:215-240). */
   def loadRelatedLinks(
@@ -251,9 +244,7 @@ final class FlowExecutor(
       recordSource: String,
       loadDts: Option[Timestamp] = None
   ): Map[String, Long] =
-    withHashView(stgTable) { (hv, transitions) =>
-      linkLoads(hv, transitions, ctxOf(runId, recordSource, loadDts))
-    }
+    loadRelated(stgTable, runId, recordSource, loadDts)(linkTargets)
 
   /** Standalone satellite loads (reference load_related_sats, mallarddv.py:240-262). */
   def loadRelatedSats(
@@ -262,124 +253,192 @@ final class FlowExecutor(
       recordSource: String,
       loadDts: Option[Timestamp] = None
   ): Map[String, Long] =
-    withHashView(stgTable) { (hv, transitions) =>
-      satLoads(hv, transitions, ctxOf(runId, recordSource, loadDts))
-    }
+    loadRelated(stgTable, runId, recordSource, loadDts)(satTargets)
+
+  private def loadRelated(stgTable: String, runId: Long, recordSource: String, loadDts: Option[Timestamp])(
+      plan: Seq[Transition] => Seq[TargetLoad]): Map[String, Long] =
+    load(stagingDf(stgTable), meta.getTransitions(stgTable), ctxOf(runId, recordSource, loadDts))(plan)
 
   private def ctxOf(runId: Long, recordSource: String, loadDts: Option[Timestamp]): LoadContext =
     LoadContext(loadDts.getOrElse(new Timestamp(System.currentTimeMillis())), recordSource, runId)
 
-  private def withHashView[A](stgTable: String)(f: (DataFrame, Seq[Transition]) => A): A = {
-    val transitions = meta.getTransitions(stgTable)
-    val hv = HashView.build(stagingDf(stgTable), transitions, algo)
-    hv.cache()
-    try f(hv, transitions) finally hv.unpersist()
+  /** Streams `staged` (a streaming DataFrame of `sourceTable`'s rows) into
+    * the vault: one query, one checkpoint, one scan of the source. Each
+    * micro-batch runs the load routine [[executeFlow]] runs after staging —
+    * the hash view from `sourceTable`'s transitions, then every hub, link
+    * and satellite load, each under its own load claim — stamped
+    * `LoadContext(loadDts or now, recordSource, batchId)`, so `run_id` is
+    * the micro-batch id. No ledger row is written. `trigger` defaults to
+    * AvailableNow (drain what the source holds at start, then stop); pass
+    * `Trigger.ProcessingTime(...)` to keep ingesting an unbounded source.
+    *
+    * A `sat_full` transition is refused before the query starts, with a
+    * typed [[DvError.Configuration]] naming the satellite: delete detection
+    * over one micro-batch would tombstone every key absent from the batch.
+    *
+    * Crash recovery: the appends are not transactional. A crash after a
+    * batch's appends landed but before Spark wrote the batch's commit-log
+    * entry re-delivers the whole batch on restart (same batchId, same data;
+    * the offset log pins the range). Every load is idempotent under that
+    * replay: re-delivered hub/link keys anti-join away against the rows the
+    * crashed attempt wrote, and re-delivered satellite rows equal the latest
+    * hash_diff and insert nothing. So the recovered vault is row-identical
+    * to a clean run, `run_id` included. Pass `loadDts` for bit-stable audit
+    * columns across a restart; with the wall-clock default a replayed batch
+    * stamps a new load_dts on the rows it still inserts, but no second
+    * version row appears either way. Pinned by StreamingSpec's two crash
+    * tests. */
+  def streamFlow(
+      sourceTable: String,
+      staged: DataFrame,
+      recordSource: String,
+      checkpoint: String,
+      loadDts: Option[Timestamp] = None,
+      trigger: Trigger = Trigger.AvailableNow()
+  ): StreamingQuery = {
+    val transitions = meta.getTransitions(sourceTable)
+    transitions.find(_.transferType == "sat_full").foreach { t =>
+      throw new DvException(DvError.Configuration(
+        s"streamFlow($sourceTable): satellite ${t.targetTable} is sat_full — delete detection " +
+          "on a micro-batch would tombstone every key absent from the batch; load it with executeFlow"))
+    }
+    staged.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        load(batch, transitions, ctxOf(batchId, recordSource, loadDts))(allTargets)
+        afterBatchHook(batchId)
+      }
+      .start()
   }
 
-  private def merge(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
-    b.foldLeft(a) { case (acc, (k, v)) => acc + (k -> (acc.getOrElse(k, 0L) + v)) }
+  /** The one load routine of [[executeFlow]], the `loadRelated*` calls and
+    * [[streamFlow]]: builds the hash view of `staged` from `transitions`
+    * and runs the target loads `plan` picks, in order, summing rows per
+    * table. The hash view is cached only when it is read more than once —
+    * two or more loads, or a `sat_full` load (insert, then delete
+    * detection); a single read is the load's own job, where a cache only
+    * adds a materialization. Unpersisted in the finally, so a failing load
+    * cannot leak the cached copy. */
+  private def load(staged: DataFrame, transitions: Seq[Transition], ctx: LoadContext)(
+      plan: Seq[Transition] => Seq[TargetLoad]): Map[String, Long] = {
+    val targets = plan(transitions)
+    val hv = HashView.build(staged, transitions, algo)
+    val shared = targets.map(_.reads).sum > 1
+    if (shared) hv.cache()
+    try targets.foldLeft(Map.empty[String, Long]) { (loaded, t) =>
+      loaded + (t.table -> (loaded.getOrElse(t.table, 0L) + t.run(hv, ctx)))
+    } finally if (shared) hv.unpersist()
+  }
+
+  /** Hubs, then links, then satellites. */
+  private def allTargets(transitions: Seq[Transition]): Seq[TargetLoad] =
+    hubTargets(transitions) ++ linkTargets(transitions) ++ satTargets(transitions)
 
   /** Hubs: bk transitions into `hub_*`, grouped by (target_table, group_name). */
-  private def hubLoads(hv: DataFrame, transitions: Seq[Transition], ctx: LoadContext): Map[String, Long] =
-    keyedLoads(hv, transitions, ctx, "hubLoad", Set("bk"), Seq("hub_"))
+  private def hubTargets(transitions: Seq[Transition]): Seq[TargetLoad] =
+    keyedTargets(transitions, "hubLoad", Set("bk"), Seq("hub_"))
 
   /** Links: ll/dk transitions into `link_*`/`nhl_*`, grouped likewise. */
-  private def linkLoads(hv: DataFrame, transitions: Seq[Transition], ctx: LoadContext): Map[String, Long] =
-    keyedLoads(hv, transitions, ctx, "linkLoad", Set("ll", "dk"), Seq("link_", "nhl_"))
+  private def linkTargets(transitions: Seq[Transition]): Seq[TargetLoad] =
+    keyedTargets(transitions, "linkLoad", Set("ll", "dk"), Seq("link_", "nhl_"))
 
   /** One anti-join load per (target_table, group_name) of the `types`
-    * transitions into tables named with one of `prefixes`; the prefixes,
+    * transitions into tables named with one of `prefixes`; several groups
+    * may feed one target (self-referencing entities). The prefixes,
     * stripped in order, name the target's `<base>_hk`. An `ll` leg reads
     * its hub's `<source>_hk` column, every other field its source column
     * (the shared row builder is [[DvOps.newKeyedRows]]). */
-  private def keyedLoads(
-      hv: DataFrame, transitions: Seq[Transition], ctx: LoadContext,
-      claim: String, types: Set[String], prefixes: Seq[String]): Map[String, Long] = {
-    var loaded = Map.empty[String, Long]
-    val groups = transitions
+  private def keyedTargets(
+      transitions: Seq[Transition], claim: String, types: Set[String], prefixes: Seq[String]): Seq[TargetLoad] =
+    transitions
       .filter(t => types(t.transferType) && prefixes.exists(t.targetTable.startsWith))
       .groupBy(t => (t.targetTable, t.groupName)).toSeq.sortBy(_._1)
-    groups.foreach { case ((target, group), fields) =>
-      val hkName = s"${prefixes.foldLeft(target)(_ stripPrefix _)}_hk"
-      val attrFields = fields.sortBy(_.position).map { f =>
-        if (f.transferType == "ll") s"${f.sourceField}_hk" -> f.targetField
-        else f.sourceField -> f.targetField
+      .map { case ((target, group), fields) =>
+        val hkName = s"${prefixes.foldLeft(target)(_ stripPrefix _)}_hk"
+        val attrFields = fields.sortBy(_.position).map { f =>
+          if (f.transferType == "ll") s"${f.sourceField}_hk" -> f.targetField
+          else f.sourceField -> f.targetField
+        }
+        TargetLoad(target, 1, (hv, ctx) =>
+          // Per-table LOAD claim around probe + append: two processes flowing
+          // DIFFERENT files into one hub could otherwise both pass the
+          // anti-join probe and double-insert a business key (the reference's
+          // DuckDB serializes its transactions; Lake.withLoadClaim is the
+          // Spark-side serializer). The claim must open BEFORE the probe is
+          // built — its file listing pins at construction.
+          lake.withLoadClaim("dv", target, claim) {
+            insideLoadClaimHook(target)
+            val existing = lake.readOrProbe("dv", target,
+              StructType(StructField(hkName, StringType) :: Nil), hv, col(s"${group}_hk"))
+            val rows = DvOps.newKeyedRows(hv, existing, group, attrFields, hkName, ctx)
+            lake.appendBucketed(rows, "dv", target, hkName)
+          })
       }
-      // Per-table LOAD claim around probe + append: two processes flowing
-      // DIFFERENT files into one hub could otherwise both pass the
-      // anti-join probe and double-insert a business key (the reference's
-      // DuckDB serializes its transactions; Lake.withLoadClaim is the
-      // Spark-side serializer). The claim must open BEFORE the probe is
-      // built — its file listing pins at construction.
-      val n = lake.withLoadClaim("dv", target, claim) {
-        insideLoadClaimHook(target)
-        val existing = lake.readOrProbe("dv", target,
-          StructType(StructField(hkName, StringType) :: Nil), hv, col(s"${group}_hk"))
-        val rows = DvOps.newKeyedRows(hv, existing, group, attrFields, hkName, ctx)
-        lake.appendBucketed(rows, "dv", target, hkName)
-      }
-      // several groups may feed one target (self-referencing entities) —
-      // accumulate, don't overwrite
-      loaded += target -> (loaded.getOrElse(target, 0L) + n)
-    }
-    loaded
-  }
 
   /** Satellites: one per sat_delta / sat_full transition; the transition's
     * source_field is the hash-view hk column, target_field the sat key
     * base, group_name the `f` payload group. */
-  private def satLoads(hv: DataFrame, transitions: Seq[Transition], ctx: LoadContext): Map[String, Long] = {
-    var loaded = Map.empty[String, Long]
-    val sats = transitions.filter(t => t.transferType == "sat_delta" || t.transferType == "sat_full")
-    sats.foreach { satT =>
+  private def satTargets(transitions: Seq[Transition]): Seq[TargetLoad] =
+    transitions.filter(t => t.transferType == "sat_delta" || t.transferType == "sat_full").map { satT =>
       val satName = satT.targetTable
       val satHk = s"${satT.targetField}_hk"
+      val full = satT.transferType == "sat_full"
       val fields = transitions
         .filter(t => t.targetTable == satName && t.groupName == satT.groupName && t.transferType == "f")
         .sortBy(_.position).map(f => f.sourceField -> f.targetField)
       val hashdiffField =
         if (fields.nonEmpty) s"${satT.groupName}_hashdiff" else satT.sourceField
-      val satSchema =
-        // Payload types from the hash view (what the writes actually carry,
-        // e.g. BIGINT staging columns stay LongType) — readOr now IMPOSES
-        // this schema on the scan, so a declared-vs-written mismatch would
-        // fail the read instead of being silently reconciled.
-        graft.dv.VaultSchemas.satFromFields(satHk, fields.map { case (s, t) => t -> hv.schema(s).dataType })
-      // ONE load claim around BOTH append phases (keyedLoads; reentrant,
-      // so the inner appends under a future claim-at-append refactor can't
-      // self-deadlock): a concurrent loader interleaving between a
-      // sat_full's insert and delete-detection phases would feed the
-      // tombstone scan a vault state neither run staged.
-      val n = lake.withLoadClaim("dv", satName, "satLoad") {
-        insideLoadClaimHook(satName)
-        // DELTA probe: bucket-pruned above the gate. The sat_full delete
-        // detection below stays UNPRUNED by design — absent keys are its
-        // signal (Lake.readOrProbe doc).
-        val existing = lake.readOrProbe("dv", satName, satSchema, hv, col(satT.sourceField))
-        val newRows = DvOps.satNewRows(hv, existing, satT.sourceField, hashdiffField, fields, satHk, ctx)
-        var m = lake.appendBucketed(newRows, "dv", satName, satHk)
-        if (satT.transferType == "sat_full") {
-          // Delete detection must see the vault INCLUDING this run's inserts
-          // (reference runs the two INSERTs sequentially on the same table).
-          val afterNew = lake.readOr("dv", satName, satSchema)
-          val delRows = DvOps.satDeleteRows(hv, afterNew, satT.sourceField, fields.map(_._2), satHk, ctx)
-          m += lake.appendBucketed(delRows, "dv", satName, satHk)
+      TargetLoad(satName, if (full) 2 else 1, (hv, ctx) => {
+        val satSchema =
+          // Payload types from the hash view (what the writes actually carry,
+          // e.g. BIGINT staging columns stay LongType) — readOr now IMPOSES
+          // this schema on the scan, so a declared-vs-written mismatch would
+          // fail the read instead of being silently reconciled.
+          graft.dv.VaultSchemas.satFromFields(satHk, fields.map { case (s, t) => t -> hv.schema(s).dataType })
+        // ONE load claim around BOTH append phases (keyedTargets; reentrant,
+        // so the inner appends under a future claim-at-append refactor can't
+        // self-deadlock): a concurrent loader interleaving between a
+        // sat_full's insert and delete-detection phases would feed the
+        // tombstone scan a vault state neither run staged.
+        lake.withLoadClaim("dv", satName, "satLoad") {
+          insideLoadClaimHook(satName)
+          // DELTA probe: bucket-pruned above the gate. The sat_full delete
+          // detection below stays UNPRUNED by design — absent keys are its
+          // signal (Lake.readOrProbe doc).
+          val existing = lake.readOrProbe("dv", satName, satSchema, hv, col(satT.sourceField))
+          val newRows = DvOps.satNewRows(hv, existing, satT.sourceField, hashdiffField, fields, satHk, ctx)
+          var m = lake.appendBucketed(newRows, "dv", satName, satHk)
+          if (full) {
+            // Delete detection must see the vault INCLUDING this run's inserts
+            // (reference runs the two INSERTs sequentially on the same table).
+            val afterNew = lake.readOr("dv", satName, satSchema)
+            val delRows = DvOps.satDeleteRows(hv, afterNew, satT.sourceField, fields.map(_._2), satHk, ctx)
+            m += lake.appendBucketed(delRows, "dv", satName, satHk)
+          }
+          m
         }
-        m
-      }
-      loaded += satName -> (loaded.getOrElse(satName, 0L) + n)
+      })
     }
-    loaded
-  }
 
   /** Test seam for the concurrent-loader race proof: invoked with the
     * target table name INSIDE that table's load claim, after acquire and
     * before the probe is built — i.e. at the point where a second loader
     * must be excluded. No-op in production. */
   private[graft] var insideLoadClaimHook: String => Unit = _ => ()
+
+  /** Test seam for the crash-recovery proof: invoked with the batch id
+    * after a [[streamFlow]] micro-batch's last append and before Spark
+    * writes the batch's commit-log entry. No-op in production. */
+  private[graft] var afterBatchHook: Long => Unit = _ => ()
 }
 
 object FlowExecutor {
   /** Serializes same-process runinfo appends (see logRun). */
   private val ledgerLock = new Object
+
+  /** One target load the transitions call for: its vault table, how many
+    * times it reads the hash view, and the load. */
+  private final case class TargetLoad(table: String, reads: Int, run: (DataFrame, LoadContext) => Long)
 }

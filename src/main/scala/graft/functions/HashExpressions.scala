@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * concat_ws copy, upper copy, cast-to-binary copy, then a commons-codec
   * digest that calls `MessageDigest.getInstance` PER ROW — and this hash is
   * the innermost loop of every vault load (hash views, hub/link/sat loads,
-  * PIT, streaming sinks; reference semantics
+  * PIT, streamFlow micro-batches; reference semantics
   * mallarddv/datavault/hash_generator.py:43-46). Here: fields are written
   * once into a reused thread-local buffer (separators inline, nulls as ''
   * ≡ the coalesce), ASCII bytes are uppercased in place during the scan,

@@ -500,22 +500,7 @@ object DvQueries {
        |       c_name, c_mktsegment
        |FROM customer""".stripMargin
 
-  /** #16: streaming hub ingestion under the driver's oracle — customer.parquet
-    * fed through [[graft.streaming.StreamingDv.hubSink]] (Structured
-    * Streaming file source, AvailableNow trigger completes synchronously)
-    * into a fresh temp lake; result is the streamed hub table. The single
-    * input file lands in micro-batch 0, so run_id (= batchId) and the pinned
-    * load_dts are deterministic and the WHOLE row is hash-comparable. */
-  /** Scratch lake + staged file-stream source for the streaming oracle
-    * queries. The file-stream source watches a DIRECTORY; stage the input
-    * into one (testdata is read-only, so copy rather than symlink). The
-    * table may be a single file (driver testdata) or a Spark-written
-    * directory of part files (scaled bench data) — flatten either shape.
-    * The lake root is unique per call (concurrent sessions/bench reps must
-    * not clobber each other's lake/checkpoint) and reaped at JVM exit —
-    * the returned DataFrame lazily reads this lake, so not earlier. */
-  /** Session confs scoped to the streaming REPLAY queries (r12, closing the
-    * r11 streaming-floor adjudication with code):
+  /** Session confs scoped to the streaming REPLAY queries:
     *
     *  - `fileChecksum.enabled=false` — Spark 4.1 writes a checksum sidecar
     *    per checkpoint file and BLOCKS the state commit on it
@@ -524,9 +509,12 @@ object DvQueries {
     *    checkpoints are ephemeral (JVM-exit reaped) and never resumed, so
     *    checksum protection buys nothing here. Production streams passing
     *    their own durable checkpoint keep Spark's default.
-    *  - 8 shuffle partitions — streaming state tasks pay a fixed per-task
-    *    setup (4 OneSideHashJoiner codegen inits per join task + state
-    *    store commit files); at 32 partitions that fixed cost dominated
+    *  - 8 shuffle partitions, for `stateful` rows only (the
+    *    `events_stream_*` replays; the DV replays are stateless
+    *    foreachBatch loads whose hash-view and anti-join plans run at the
+    *    session width) — streaming state tasks pay a fixed per-task setup
+    *    (4 OneSideHashJoiner codegen inits per join task + state store
+    *    commit files); at 32 partitions that fixed cost dominated
     *    (task stacks: ~3 s blocked, <0.1 s CPU). 8 tasks bound the replay's
     *    per-partition state at sf10-stress scale to ~1M rows — in-map —
     *    while cutting the floor 4.5 -> 2.5 s. A production stream sizes
@@ -536,15 +524,14 @@ object DvQueries {
     * The stream runs to completion inside `body` (AvailableNow +
     * awaitTermination), so restoring the confs afterwards is sound;
     * registered queries run sequentially under Verify/Bench. */
-  private def streamReplay[A](s: SparkSession)(body: => A): A = {
-    val kvs = Seq(
-      "spark.sql.shuffle.partitions" -> "8",
+  private def streamReplay[A](s: SparkSession, stateful: Boolean = true)(body: => A): A = {
+    val kvs = (if (stateful) Seq("spark.sql.shuffle.partitions" -> "8") else Nil) ++ Seq(
       "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
       // events replays need NANOS-typed driver parquet readable as long
       // (Tables.normalizeTs handles both encodings); set + RESTORED here
       // rather than inside each query body, where it silently leaked into
-      // the session past the replay scope this helper exists to contain
-      // (r20 review finding) — micros-typed DV replays are unaffected
+      // the session past the replay scope this helper exists to contain —
+      // micros-typed DV replays are unaffected
       "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
     kvs.foreach { case (k, v) => s.conf.set(k, v) }
@@ -554,13 +541,21 @@ object DvQueries {
     }
   }
 
+  /** Scratch lake + staged file-stream source for the streaming oracle
+    * queries. The file-stream source watches a DIRECTORY; stage the input
+    * into one (testdata is read-only, so copy rather than symlink). The
+    * table may be a single file (driver testdata) or a Spark-written
+    * directory of part files (scaled bench data) — flatten either shape.
+    * The lake root is unique per call (concurrent sessions/bench reps must
+    * not clobber each other's lake/checkpoint) and reaped at JVM exit —
+    * the returned DataFrame lazily reads this lake, so not earlier. */
   private def stagedStream(s: SparkSession, dir: String, table: String): (graft.core.Lake, DataFrame, String) = {
     // RAM-backed root (Scratch.streamRoot): the checkpoint fsync-per-batch
     // was the dominant cost of every streaming row on this container's
-    // disk — events_stream_join floor 7.1 -> ~2 s with the same code (r11
-    // verdict ask; BASELINE.md has the A/B). These lakes are ephemeral
+    // disk — events_stream_join floor 7.1 -> ~2 s with the same code
+    // (BASELINE.md has the A/B). These lakes are ephemeral
     // replay harnesses (AvailableNow + JVM-exit reap), so tmpfs is sound;
-    // production streams pass their own durable checkpoint to StreamingDv.
+    // production streams pass their own durable checkpoint to streamFlow.
     // All staging-dir handling goes through the Hadoop FS API: the Scratch
     // root honors spark.graft.scratch.dir, which may be a non-local URI
     // (hdfs://, s3a://) — java.nio.Paths would then create a bogus local
@@ -602,21 +597,24 @@ object DvQueries {
     (lake, staged, root)
   }
 
-  def streamHub(s: SparkSession, dir: String): DataFrame = streamReplay(s) {
+  /** Runs `staged` through [[graft.etl.FlowExecutor.streamFlow]] over
+    * `transitions` (one source) with the pinned load_dts, to completion. */
+  private def streamLoad(
+      lake: graft.core.Lake, staged: DataFrame, root: String, transitions: Seq[Transition]): Unit =
+    new graft.etl.FlowExecutor(lake, graft.meta.MetaStore(Nil, transitions), Algo)
+      .streamFlow(transitions.head.sourceTable, staged, "verify", s"$root/ckpt", Some(ctx.loadDts))
+      .awaitTermination()
+
+  /** #16: streaming hub ingestion under the driver's oracle — customer.parquet
+    * fed through [[streamLoad]] (Structured Streaming file source,
+    * AvailableNow trigger completes synchronously) into a fresh temp lake;
+    * result is the streamed hub table. The single input file lands in
+    * micro-batch 0, so run_id (= batchId) and the pinned load_dts are
+    * deterministic and the WHOLE row is hash-comparable. */
+  def streamHub(s: SparkSession, dir: String): DataFrame = streamReplay(s, stateful = false) {
     val (lake, staged, root) = stagedStream(s, dir, "customer")
-    val transitions = Seq(
-      Transition("customer", "c_custkey", "hub_customer", "c_custkey_bk", "customer", 1, raw = false, None, "bk"))
-    // statePartitions: the replay harness's 8-partition conf (streamReplay)
-    // is sized for the STATE-store rows' per-task commit overhead; these DV
-    // sinks are stateless foreachBatch loads whose batch plans (hash-view
-    // distinct + anti-join) want full cores — the knob scopes the width to
-    // this stream's cloned session.
-    val q = graft.streaming.StreamingDv.hubSink(
-      lake, staged, transitions, "hub_customer", "customer",
-      Seq("c_custkey" -> "c_custkey_bk"), "verify", s"$root/ckpt",
-      Algo, loadDts = Some(ctx.loadDts),
-      statePartitions = Some(s.sparkContext.defaultParallelism))
-    q.awaitTermination()
+    streamLoad(lake, staged, root, Seq(
+      Transition("customer", "c_custkey", "hub_customer", "c_custkey_bk", "customer", 1, raw = false, None, "bk")))
     lake.read("dv", "hub_customer")
       .select(col("customer_hk"), col("load_dts"), col("record_source"), col("run_id"), col("c_custkey_bk"))
   }
@@ -629,26 +627,24 @@ object DvQueries {
        |       c_custkey AS c_custkey_bk
        |FROM customer""".stripMargin
 
+  /** The customer hub and its `sat_delta` satellite, the transitions of
+    * the two streaming satellite replays. */
+  private val customerSatTransitions = Seq(
+    Transition("customer", "c_custkey", "hub_customer", "c_custkey_bk", "customer", 1, raw = false, None, "bk"),
+    Transition("customer", "customer_hk", "hsat_customer", "customer", "customer_details", 1, raw = false, None, "sat_delta"),
+    Transition("customer", "c_name", "hsat_customer", "c_name", "customer_details", 1, raw = false, None, "f"),
+    Transition("customer", "c_mktsegment", "hsat_customer", "c_mktsegment", "customer_details", 2, raw = false, None, "f"))
+
   /** #39a: streaming satellite (SCD2) ingestion under the driver's oracle —
-    * customer.parquet through [[graft.streaming.StreamingDv.satSink]] into a
-    * fresh temp lake (empty initial satellite, so every distinct staged
-    * version row inserts); result is the streamed satellite table. Single
-    * micro-batch ⇒ run_id (= batchId) 0 and the pinned load_dts are
-    * deterministic, making the whole row hash-comparable. */
-  def streamSat(s: SparkSession, dir: String): DataFrame = streamReplay(s) {
+    * customer.parquet through [[streamLoad]] into a fresh temp lake (empty
+    * initial satellite, so every distinct staged version row inserts; the
+    * same micro-batch also loads `hub_customer`); result is the streamed
+    * satellite table. Single micro-batch ⇒ run_id (= batchId) 0 and the
+    * pinned load_dts are deterministic, making the whole row
+    * hash-comparable. */
+  def streamSat(s: SparkSession, dir: String): DataFrame = streamReplay(s, stateful = false) {
     val (lake, staged, root) = stagedStream(s, dir, "customer")
-    val transitions = Seq(
-      Transition("customer", "c_custkey", "hub_customer", "c_custkey_bk", "customer", 1, raw = false, None, "bk"),
-      Transition("customer", "c_name", "hsat_customer", "c_name", "customer_details", 1, raw = false, None, "f"),
-      Transition("customer", "c_mktsegment", "hsat_customer", "c_mktsegment", "customer_details", 2, raw = false, None, "f"))
-    val q = graft.streaming.StreamingDv.satSink(
-      lake, staged, transitions, "hsat_customer",
-      hkSource = "customer_hk", hashdiffField = "customer_details_hashdiff",
-      fields = Seq("c_name" -> "c_name", "c_mktsegment" -> "c_mktsegment"),
-      satHk = "customer_hk", "verify", s"$root/ckpt",
-      Algo, loadDts = Some(ctx.loadDts),
-      statePartitions = Some(s.sparkContext.defaultParallelism)) // see streamHub
-    q.awaitTermination()
+    streamLoad(lake, staged, root, customerSatTransitions)
     lake.read("dv", "hsat_customer")
       .select(
         col("customer_hk"), col("load_dts"), col("del_flag"), col("hash_diff"),
@@ -666,26 +662,20 @@ object DvQueries {
        |FROM customer""".stripMargin
 
   /** #39b: streaming link ingestion under the driver's oracle —
-    * orders.parquet through [[graft.streaming.StreamingDv.linkSink]] into a
-    * fresh temp lake (empty initial link, so every distinct staged
-    * relationship inserts); result is the streamed link table. Single
-    * micro-batch ⇒ run_id (= batchId) 0 and the pinned load_dts are
-    * deterministic, making the whole row hash-comparable. Completes the
-    * streaming trio: hub + sat + link all oracle-checked end-to-end. */
-  def streamLink(s: SparkSession, dir: String): DataFrame = streamReplay(s) {
+    * orders.parquet through [[streamLoad]] into a fresh temp lake (empty
+    * initial link, so every distinct staged relationship inserts; the same
+    * micro-batch also loads `hub_customer` and `hub_order`); result is the
+    * streamed link table. Single micro-batch ⇒ run_id (= batchId) 0 and the
+    * pinned load_dts are deterministic, making the whole row
+    * hash-comparable. Completes the streaming trio: hub + sat + link all
+    * oracle-checked end-to-end. */
+  def streamLink(s: SparkSession, dir: String): DataFrame = streamReplay(s, stateful = false) {
     val (lake, staged, root) = stagedStream(s, dir, "orders")
-    val transitions = Seq(
+    streamLoad(lake, staged, root, Seq(
       Transition("orders", "o_custkey", "hub_customer", "c_custkey_bk", "customer", 1, raw = false, None, "bk"),
       Transition("orders", "o_orderkey", "hub_order", "o_orderkey_bk", "order", 1, raw = false, None, "bk"),
       Transition("orders", "customer", "link_order_customer", "customer_hk", "oc", 1, raw = false, None, "ll"),
-      Transition("orders", "order", "link_order_customer", "order_hk", "oc", 2, raw = false, None, "ll"))
-    val q = graft.streaming.StreamingDv.linkSink(
-      lake, staged, transitions, "link_order_customer", "oc",
-      Seq("customer_hk" -> "customer_hk", "order_hk" -> "order_hk"),
-      "order_customer_hk", "verify", s"$root/ckpt",
-      Algo, loadDts = Some(ctx.loadDts),
-      statePartitions = Some(s.sparkContext.defaultParallelism)) // see streamHub
-    q.awaitTermination()
+      Transition("orders", "order", "link_order_customer", "order_hk", "oc", 2, raw = false, None, "ll")))
     lake.read("dv", "link_order_customer")
       .select(
         col("order_customer_hk"), col("load_dts"), col("record_source"),
@@ -761,18 +751,12 @@ object DvQueries {
     * therefore carries run_id = the first batch that contained it
     * = c_custkey % 3 — advancing run_ids and cross-batch state, the two
     * things the single-batch `dv_stream_hub` row can't check. */
-  def streamHubMulti(s: SparkSession, dir: String): DataFrame = streamReplay(s) {
+  def streamHubMulti(s: SparkSession, dir: String): DataFrame = streamReplay(s, stateful = false) {
     val cust = Tables.load(s, dir, "customer")
     val gens = (0 to 2).map(g => cust.filter(pmod(col("c_custkey"), lit(3)) <= g))
     val (lake, staged, root) = stagedGenStream(s, gens)
-    val transitions = Seq(
-      Transition("customer", "c_custkey", "hub_customer", "c_custkey_bk", "customer", 1, raw = false, None, "bk"))
-    val q = graft.streaming.StreamingDv.hubSink(
-      lake, staged, transitions, "hub_customer", "customer",
-      Seq("c_custkey" -> "c_custkey_bk"), "verify", s"$root/ckpt",
-      Algo, loadDts = Some(ctx.loadDts),
-      statePartitions = Some(s.sparkContext.defaultParallelism)) // see streamHub
-    q.awaitTermination()
+    streamLoad(lake, staged, root, Seq(
+      Transition("customer", "c_custkey", "hub_customer", "c_custkey_bk", "customer", 1, raw = false, None, "bk")))
     lake.read("dv", "hub_customer")
       .select(col("customer_hk"), col("load_dts"), col("record_source"), col("run_id"), col("c_custkey_bk"))
   }
@@ -796,7 +780,7 @@ object DvQueries {
     * each key's payload sequence — which is what the SQL twin's LAG
     * reproduces (latest-after-batch-g always equals payload g, inserted or
     * not, so "differs from latest" ⇔ "differs from previous generation"). */
-  def streamSatMulti(s: SparkSession, dir: String): DataFrame = streamReplay(s) {
+  def streamSatMulti(s: SparkSession, dir: String): DataFrame = streamReplay(s, stateful = false) {
     val cust = Tables.load(s, dir, "customer")
     def seg(g: Int): Column = {
       val gen1 = when(pmod(col("c_custkey"), lit(5)) === 0, lit("GEN1")).otherwise(col("c_mktsegment"))
@@ -807,18 +791,7 @@ object DvQueries {
     val gens = (0 to 2).map(g =>
       cust.select(col("c_custkey"), col("c_name"), seg(g).as("c_mktsegment")))
     val (lake, staged, root) = stagedGenStream(s, gens)
-    val transitions = Seq(
-      Transition("customer", "c_custkey", "hub_customer", "c_custkey_bk", "customer", 1, raw = false, None, "bk"),
-      Transition("customer", "c_name", "hsat_customer", "c_name", "customer_details", 1, raw = false, None, "f"),
-      Transition("customer", "c_mktsegment", "hsat_customer", "c_mktsegment", "customer_details", 2, raw = false, None, "f"))
-    val q = graft.streaming.StreamingDv.satSink(
-      lake, staged, transitions, "hsat_customer",
-      hkSource = "customer_hk", hashdiffField = "customer_details_hashdiff",
-      fields = Seq("c_name" -> "c_name", "c_mktsegment" -> "c_mktsegment"),
-      satHk = "customer_hk", "verify", s"$root/ckpt",
-      Algo, loadDts = Some(ctx.loadDts),
-      statePartitions = Some(s.sparkContext.defaultParallelism)) // see streamHub
-    q.awaitTermination()
+    streamLoad(lake, staged, root, customerSatTransitions)
     lake.read("dv", "hsat_customer")
       .select(
         col("customer_hk"), col("load_dts"), col("del_flag"), col("hash_diff"),

@@ -9,17 +9,16 @@ import graft.core.{Confs, Lake}
 import graft.dv.{DvOps, HashGen}
 import graft.etl.FlowExecutor
 import graft.meta.{MetaStore, TableColumn, Transition}
-import graft.streaming.StreamingDv
 
-/** Multi-executor smoke of the DV family (SURVEY §5; VERDICT r16 ask #2).
+/** Multi-executor smoke of the DV family (SURVEY §5).
   *
   * Everything else in the repo runs `local[n]` — ONE JVM — so the
   * driver/executor serialization seams (foreachBatch closures capturing the
   * Lake, typed aggregate buffers in graft_latest, Catalyst hash expressions,
   * the driver-only SkewMemo, per-JVM lazy resolution) are never crossed by a
   * real process boundary. This main runs the flow executor (hub + sat_full
-  * including delete detection), the streaming hub/sat sinks across two
-  * overlapping micro-batches, and the current view under
+  * including delete detection), one `streamFlow` query into a hub and its
+  * satellite across two overlapping micro-batches, and the current view under
   * `local-cluster[2,2,2048]` — two REAL executor JVMs launched through the
   * standalone Worker — with the probe-prune gate forced open so the
   * bucket-span probe + counted-append paths also cross the boundary.
@@ -208,12 +207,13 @@ object ClusterSmoke {
         "dv.hub_customer after compact (catalog must follow the generation)")
       println("[cluster-smoke] qualified dv/bv SQL OK across compact")
 
-      // ── 3. Streaming hub + sat sinks, two overlapping micro-batches ──
+      // ── 3. One streamFlow query into a hub + sat, two overlapping micro-batches ──
       val srcDir = s"$root/src"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
-      val streamTransitions = Seq(
+      val userFlow = new FlowExecutor(lake, MetaStore(Nil, Seq(
         Transition("s", "id", "hub_user", "id_bk", "user", 1, raw = false, None, "bk"),
-        Transition("s", "name", "hsat_user", "name", "user_details", 1, raw = false, None, "f"))
+        Transition("s", "user_hk", "hsat_user", "user", "user_details", 1, raw = false, None, "sat_delta"),
+        Transition("s", "name", "hsat_user", "name", "user_details", 1, raw = false, None, "f"))), HashGen.Md5)
       def addBatch(name: String, rows: Seq[(Long, String)]): Unit = {
         val stage = s"$root/stage_$name"
         rows.toDF("id", "name").coalesce(1).write.parquet(stage)
@@ -221,17 +221,9 @@ object ClusterSmoke {
           .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
         java.nio.file.Files.move(part, java.nio.file.Paths.get(srcDir, s"$name.parquet"))
       }
-      def runOnce(): Unit = {
-        StreamingDv.hubSink(lake,
-          spark.readStream.schema("id LONG, name STRING").parquet(srcDir),
-          streamTransitions, "hub_user", "user", Seq("id" -> "id_bk"),
-          "smoke", s"$root/ckpt_hub", HashGen.Md5).awaitTermination()
-        StreamingDv.satSink(lake,
-          spark.readStream.schema("id LONG, name STRING").parquet(srcDir),
-          streamTransitions, "hsat_user", hkSource = "user_hk",
-          hashdiffField = "user_details_hashdiff", fields = Seq("name" -> "name"),
-          satHk = "user_hk", "smoke", s"$root/ckpt_sat", HashGen.Md5).awaitTermination()
-      }
+      def runOnce(): Unit =
+        userFlow.streamFlow("s", spark.readStream.schema("id LONG, name STRING").parquet(srcDir),
+          "smoke", s"$root/ckpt").awaitTermination()
       addBatch("b1", Seq((1L, "ann"), (2L, "bob")))
       runOnce()
       addBatch("b2", Seq((1L, "ann"), (2L, "bobby"), (3L, "cat")))

@@ -147,6 +147,11 @@ class GraftFacadeSpec extends SparkSpec {
     // dv.<name> registration check and nothing lists the table root
     val rootListed = Option(FaultyFs.listed.get(s"$root/lake/dv/hub_customer")).fold(0)(_.get)
     assert(rootListed == 0, s"the append listed the table root $rootListed times")
+    // nor does the next lake read: the append kept the generation and its
+    // layout record, so the table's cached resolution still holds
+    g.lake.read("dv", "hub_customer")
+    val readListed = Option(FaultyFs.listed.get(s"$root/lake/dv/hub_customer")).fold(0)(_.get)
+    assert(readListed == 0, s"the read after the append listed the table root $readListed times")
     assert(g.sql("SELECT * FROM dv.hub_customer").count() == 3L)
 
     load("c2", "7,gus")

@@ -1,9 +1,13 @@
 package graft
 
+import java.sql.Timestamp
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Lake
-import graft.meta.Transition
+import graft.etl.{DvError, DvException, FlowExecutor}
+import graft.meta.{MetaStore, Transition}
 import graft.streaming.StreamingDv
 
 class StreamingSpec extends SparkSpec {
@@ -11,6 +15,65 @@ class StreamingSpec extends SparkSpec {
 
   private val transitions = Seq(
     Transition("s", "id", "hub_user", "id_bk", "user", 1, raw = false, None, "bk"))
+
+  /** The user hub plus its `sat_delta` satellite over `name`. */
+  private val satTransitions = transitions ++ Seq(
+    Transition("s", "user_hk", "hsat_user", "user", "user_details", 1, raw = false, None, "sat_delta"),
+    Transition("s", "name", "hsat_user", "name", "user_details", 1, raw = false, None, "f"))
+
+  /** Two hubs, the link between them (`ll` legs plus a `dk`), and a
+    * `sat_delta` satellite on the customer hub. */
+  private val orderTransitions = Seq(
+    Transition("s", "cust_id", "hub_customer", "cust_id_bk", "customer", 1, raw = false, None, "bk"),
+    Transition("s", "order_id", "hub_order", "order_id_bk", "order", 1, raw = false, None, "bk"),
+    Transition("s", "customer", "link_order_customer", "customer_hk", "oc", 1, raw = false, None, "ll"),
+    Transition("s", "order", "link_order_customer", "order_hk", "oc", 2, raw = false, None, "ll"),
+    Transition("s", "channel", "link_order_customer", "channel_dk", "oc", 3, raw = false, None, "dk"),
+    Transition("s", "customer_hk", "hsat_customer", "customer", "customer_details", 1, raw = false, None, "sat_delta"),
+    Transition("s", "name", "hsat_customer", "name", "customer_details", 1, raw = false, None, "f"))
+  private val orderSchema = "cust_id LONG, order_id LONG, channel STRING, name STRING"
+  private val orderBatches = Seq(
+    Seq((1L, 10L, "web", "ann"), (2L, 20L, "app", "bob")),
+    // a re-delivery of order 20 with a changed name, and a new order
+    Seq((2L, 20L, "app", "bobby"), (3L, 30L, "web", "cat")))
+
+  private val loadDts = Timestamp.valueOf("2026-01-01 00:00:00")
+
+  private def flowOf(lake: Lake, ts: Seq[Transition]): FlowExecutor =
+    new FlowExecutor(lake, MetaStore(Nil, ts), graft.dv.HashGen.Md5)
+
+  /** Moves `df`'s single part file into `srcDir` as `<name>.parquet` (the
+    * file-stream source lists only top-level files); `mtime` orders the
+    * files, one micro-batch each under maxFilesPerTrigger=1. Returns the
+    * file's path. */
+  private def addFile(srcDir: String, name: String, df: DataFrame, mtime: Option[Long] = None): String = {
+    val src = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
+    val stage = src.resolveSibling(s"stage_$name")
+    df.coalesce(1).write.parquet(stage.toString)
+    val part = java.nio.file.Files.list(stage)
+      .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
+    val dst = src.resolve(s"$name.parquet")
+    java.nio.file.Files.move(part, dst)
+    mtime.foreach(t => assert(dst.toFile.setLastModified(t)))
+    dst.toString
+  }
+
+  /** `srcDir` holding `batches` as mtime-ordered files b0, b1, … */
+  private def orderedSource(srcDir: String, batches: Seq[DataFrame]): Seq[String] = {
+    val base = System.currentTimeMillis() - 3600000L
+    batches.zipWithIndex.map { case (df, i) => addFile(srcDir, s"b$i", df, Some(base + i * 60000L)) }
+  }
+
+  private def oneFilePerBatch(schema: String, srcDir: String): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(srcDir)
+
+  /** Every row of a vault table, audit columns included, as sorted strings. */
+  private def rowsOf(lake: Lake, table: String): Seq[String] =
+    lake.read("dv", table).drop("hk_bucket").collect()
+      .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+
+  private def commitExists(ckpt: String, batch: Long): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(ckpt, "commits", batch.toString))
 
   test("multi-batch oracle replays drive >= 3 micro-batches with advancing run_ids") {
     // The single-batch streaming oracles pin everything into batch 0; these
@@ -33,40 +96,74 @@ class StreamingSpec extends SparkSpec {
     assert(byKey.values.exists(_ == Seq(0L)), "unchanged single-version keys missing")
   }
 
+  test("one streamFlow query loads hub, link and sat_delta targets: keys and payloads equal two executeFlow runs") {
+    val root = tmpDir("streamvsflow")
+    val files = orderedSource(s"$root/src", orderBatches.map(_.toDF("cust_id", "order_id", "channel", "name")))
+    val streamLake = new Lake(spark, s"$root/stream", buckets = 4)
+    val q = flowOf(streamLake, orderTransitions)
+      .streamFlow("s", oneFilePerBatch(orderSchema, s"$root/src"), "stream", s"$root/ckpt", Some(loadDts))
+    q.awaitTermination()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2, "expected two micro-batches")
+
+    // the batch path: one executeFlow per file, over a view-backed source
+    val flowLake = new Lake(spark, s"$root/flow", buckets = 4)
+    val batchFlow = flowOf(flowLake, orderTransitions.map(_.copy(sourceTable = "stream_vs_flow_src")))
+    files.foreach { f =>
+      spark.read.parquet(f).createOrReplaceTempView("stream_vs_flow_src")
+      val r = batchFlow.executeFlow("stream_vs_flow_src", "flow", None, Some(loadDts))
+      assert(r.status == "success", r.errors.mkString("; "))
+    }
+
+    val audit = Seq("load_dts", "record_source", "run_id", "hk_bucket")
+    def keysAndPayload(lake: Lake, table: String): Seq[String] =
+      lake.read("dv", table).drop(audit: _*).collect()
+        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    val expectedRows = Map("hub_customer" -> 3, "hub_order" -> 3, "link_order_customer" -> 3, "hsat_customer" -> 4)
+    expectedRows.foreach { case (t, n) =>
+      val streamed = keysAndPayload(streamLake, t)
+      assert(streamed.length == n, s"$t: $streamed")
+      assert(streamed == keysAndPayload(flowLake, t), t)
+    }
+    // run_id = batchId: bobby and cat arrived in batch 1
+    val sat = streamLake.read("dv", "hsat_customer")
+      .select($"name", $"run_id".cast("long")).as[(String, Long)].collect().sorted.toSeq
+    assert(sat == Seq(("ann", 0L), ("bob", 0L), ("bobby", 1L), ("cat", 1L)), sat)
+  }
+
+  test("streamFlow refuses a sat_full transition with a typed Configuration error before any query starts") {
+    val root = tmpDir("streamsatfull")
+    addFile(s"$root/src", "b0", Seq((1L, "ann")).toDF("id", "name"))
+    val lakeRoot = s"$root/lake"
+    val full = transitions ++ Seq(
+      Transition("s", "user_hk", "hsat_user", "user", "user_details", 1, raw = false, None, "sat_full"),
+      Transition("s", "name", "hsat_user", "name", "user_details", 1, raw = false, None, "f"))
+    val activeBefore = spark.streams.active.length
+    val e = intercept[DvException](flowOf(new Lake(spark, lakeRoot, buckets = 4), full)
+      .streamFlow("s", spark.readStream.schema("id LONG, name STRING").parquet(s"$root/src"),
+        "t", s"$root/ckpt"))
+    assert(e.error.isInstanceOf[DvError.Configuration], e.error)
+    assert(e.error.message.contains("hsat_user"), e.error.message)
+    assert(spark.streams.active.length == activeBefore)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$root/ckpt")), "a checkpoint was created")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(lakeRoot, "dv")), "a vault table was created")
+  }
+
   test("streaming hub load is incremental and idempotent across micro-batches") {
     val root = tmpDir("stream")
     val srcDir = s"$root/src"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     val lake = new Lake(spark, root, buckets = 4)
+    def runOnce(): Unit =
+      flowOf(lake, transitions).streamFlow("s",
+        spark.readStream.schema("id LONG, name STRING").parquet(srcDir), "stream-test", s"$root/ckpt")
+        .awaitTermination()
 
-    def runOnce(): Unit = {
-      val staged = spark.readStream
-        .schema("id LONG, name STRING")
-        .parquet(srcDir)
-      val q = StreamingDv.hubSink(
-        lake, staged, transitions, "hub_user", "user",
-        Seq("id" -> "id_bk"), "stream-test", s"$root/ckpt",
-        graft.dv.HashGen.Md5)
-      q.awaitTermination()
-    }
-
-    // The file-stream source lists only top-level files: flatten each batch's
-    // part file directly into the watched directory.
-    def addBatch(name: String, rows: Seq[(Long, String)]): Unit = {
-      val stage = s"$root/stage_$name"
-      rows.toDF("id", "name").coalesce(1).write.parquet(stage)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-        .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.move(part, java.nio.file.Paths.get(srcDir, s"$name.parquet"))
-    }
-
-    addBatch("b1", Seq((1L, "ann"), (2L, "bob")))
+    addFile(srcDir, "b1", Seq((1L, "ann"), (2L, "bob")).toDF("id", "name"))
     runOnce()
     assert(lake.read("dv", "hub_user").count() == 2)
 
     // Second batch overlaps the first: only the new key lands (anti-join),
     // and the already-seen file is not reprocessed (checkpoint).
-    addBatch("b2", Seq((2L, "bob"), (3L, "cat")))
+    addFile(srcDir, "b2", Seq((2L, "bob"), (3L, "cat")).toDF("id", "name"))
     runOnce()
     val hub = lake.read("dv", "hub_user")
     assert(hub.count() == 3)
@@ -74,41 +171,23 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming hub + sat sinks stay idempotent with the probe-prune gate FORCED OPEN") {
-    // The wired readOrProbe path (bucket-pruned existing-table probe) under
-    // real micro-batches: results must match the unpruned semantics —
-    // anti-join dedup across batches, sat delta versioning — with the gate
-    // at 0 so pruning engages even on this KB-sized vault.
+    // The bucket-pruned existing-table probe under real micro-batches:
+    // results must match the unpruned semantics — anti-join dedup across
+    // batches, sat delta versioning — with the gate at 0 so pruning engages
+    // even on this KB-sized vault.
     val root = tmpDir("streamprune")
     val srcDir = s"$root/src"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     val lake = new Lake(spark, root, buckets = 4)
-    val satTransitions = transitions ++ Seq(
-      Transition("s", "name", "hsat_user", "name", "user_details", 1, raw = false, None, "f"))
-    def addBatch(name: String, rows: Seq[(Long, String)]): Unit = {
-      val stage = s"$root/stage_$name"
-      rows.toDF("id", "name").coalesce(1).write.parquet(stage)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-        .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.move(part, java.nio.file.Paths.get(srcDir, s"$name.parquet"))
-    }
-    def runOnce(): Unit = {
-      val staged = spark.readStream.schema("id LONG, name STRING").parquet(srcDir)
-      StreamingDv.hubSink(lake, staged, satTransitions, "hub_user", "user",
-        Seq("id" -> "id_bk"), "t", s"$root/ckpt_hub", graft.dv.HashGen.Md5)
+    def runOnce(): Unit =
+      flowOf(lake, satTransitions).streamFlow("s",
+        spark.readStream.schema("id LONG, name STRING").parquet(srcDir), "t", s"$root/ckpt")
         .awaitTermination()
-      val staged2 = spark.readStream.schema("id LONG, name STRING").parquet(srcDir)
-      StreamingDv.satSink(lake, staged2, satTransitions, "hsat_user",
-        hkSource = "user_hk", hashdiffField = "user_details_hashdiff",
-        fields = Seq("name" -> "name"), satHk = "user_hk", "t", s"$root/ckpt_sat",
-        graft.dv.HashGen.Md5)
-        .awaitTermination()
-    }
     try {
       spark.conf.set(graft.core.Confs.ProbePruneMinBytesKey, "0")
-      addBatch("b1", Seq((1L, "ann"), (2L, "bob")))
+      addFile(srcDir, "b1", Seq((1L, "ann"), (2L, "bob")).toDF("id", "name"))
       runOnce()
       // re-delivery + a change + a new key, pruned probes deciding all three
-      addBatch("b2", Seq((1L, "ann"), (2L, "bobby"), (3L, "cat")))
+      addFile(srcDir, "b2", Seq((1L, "ann"), (2L, "bobby"), (3L, "cat")).toDF("id", "name"))
       runOnce()
       val hub = lake.read("dv", "hub_user")
       assert(hub.select("id_bk").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
@@ -119,164 +198,102 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("crash between append and checkpoint commit: restart replays the batch, vault equals a no-crash run (run_id included)") {
-    // The crash-recovery proof (SURVEY §2 #16 posture): foreachBatch
-    // re-delivers a batch whose append landed but whose commit-log entry
-    // never did. The DV sinks' probes must make that replay EFFECTIVELY
-    // idempotent — the recovered vault must be row-identical (audit columns
-    // included) to a run that never crashed.
-    val loadDts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-    val satTransitions = transitions ++ Seq(
-      Transition("s", "name", "hsat_user", "name", "user_details", 1, raw = false, None, "f"))
-
-    // two mtime-ordered files → two micro-batches under maxFilesPerTrigger=1;
-    // batch 1 carries a re-delivery (1/ann), a changed payload (2/bobby) and
-    // a new key (3/cat) — all three replay decisions exercised
-    def mkSource(root: String): String = {
-      val srcDir = s"$root/src"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
-      val base = System.currentTimeMillis() - 3600000L
-      def add(name: String, rows: Seq[(Long, String)], mtime: Long): Unit = {
-        val stage = s"$root/stage_$name"
-        rows.toDF("id", "name").coalesce(1).write.parquet(stage)
-        val part = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-          .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-        val dst = java.nio.file.Paths.get(srcDir, s"$name.parquet")
-        java.nio.file.Files.move(part, dst)
-        assert(dst.toFile.setLastModified(mtime))
-      }
-      add("b0", Seq((1L, "ann"), (2L, "bob")), base)
-      add("b1", Seq((1L, "ann"), (2L, "bobby"), (3L, "cat")), base + 60000L)
-      srcDir
-    }
-
-    def staged(srcDir: String) = spark.readStream
-      .schema("id LONG, name STRING").option("maxFilesPerTrigger", "1").parquet(srcDir)
-
-    def hubOnce(lake: Lake, srcDir: String, ckpt: String) =
-      StreamingDv.hubSink(lake, staged(srcDir), satTransitions, "hub_user", "user",
-        Seq("id" -> "id_bk"), "crash-test", ckpt, graft.dv.HashGen.Md5,
-        loadDts = Some(loadDts))
-    def satOnce(lake: Lake, srcDir: String, ckpt: String) =
-      StreamingDv.satSink(lake, staged(srcDir), satTransitions, "hsat_user",
-        hkSource = "user_hk", hashdiffField = "user_details_hashdiff",
-        fields = Seq("name" -> "name"), satHk = "user_hk", "crash-test", ckpt,
-        graft.dv.HashGen.Md5, loadDts = Some(loadDts))
-
-    def crashOn(table: String): Unit = {
-      val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
-      StreamingDv.afterAppendHook = (t, b) =>
-        if (t == table && b == 1L && armed.getAndSet(false))
-          throw new RuntimeException(s"injected crash after $t batch $b append")
-    }
-    def commitExists(ckpt: String, batch: Long): Boolean =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(ckpt, "commits", batch.toString))
+    // foreachBatch re-delivers a batch whose appends landed but whose
+    // commit-log entry never did. The loads' probes must make that replay
+    // EFFECTIVELY idempotent — the recovered vault must be row-identical
+    // (audit columns included) to a run that never crashed.
+    // Batch 1 carries a re-delivery (1/ann), a changed payload (2/bobby)
+    // and a new key (3/cat) — all three replay decisions exercised.
+    val batches = Seq(
+      Seq((1L, "ann"), (2L, "bob")),
+      Seq((1L, "ann"), (2L, "bobby"), (3L, "cat"))).map(_.toDF("id", "name"))
+    def run(flow: FlowExecutor, root: String) =
+      flow.streamFlow("s", oneFilePerBatch("id LONG, name STRING", s"$root/src"),
+        "crash-test", s"$root/ckpt", Some(loadDts))
 
     val crashRoot = tmpDir("crashrun")
     val crashLake = new Lake(spark, crashRoot, buckets = 4)
-    val crashSrc = mkSource(crashRoot)
-    try {
-      // ---- hub: crash on batch 1 after its append landed ----
-      crashOn("hub_user")
-      val eh = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
-        hubOnce(crashLake, crashSrc, s"$crashRoot/ckpt_hub").awaitTermination())
-      assert(eh.getMessage.contains("injected crash"))
-      // the window is real: append durable (all 3 keys), batch 1 uncommitted
-      assert(crashLake.read("dv", "hub_user").count() == 3)
-      assert(commitExists(s"$crashRoot/ckpt_hub", 0) && !commitExists(s"$crashRoot/ckpt_hub", 1))
-      // restart from the checkpoint: batch 1 replays, anti-join dedups
-      hubOnce(crashLake, crashSrc, s"$crashRoot/ckpt_hub").awaitTermination()
-      assert(commitExists(s"$crashRoot/ckpt_hub", 1))
+    orderedSource(s"$crashRoot/src", batches)
+    val crashFlow = flowOf(crashLake, satTransitions)
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+    crashFlow.afterBatchHook = b =>
+      if (b == 1L && armed.getAndSet(false)) throw new RuntimeException(s"injected crash after batch $b")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      run(crashFlow, crashRoot).awaitTermination())
+    assert(e.getMessage.contains("injected crash"))
+    // the window is real: batch 1's appends durable, its commit not
+    assert(crashLake.read("dv", "hub_user").count() == 3)
+    assert(crashLake.read("dv", "hsat_user").count() == 4)
+    assert(commitExists(s"$crashRoot/ckpt", 0) && !commitExists(s"$crashRoot/ckpt", 1))
+    // restart from the checkpoint: batch 1 replays, the probes dedup it
+    run(crashFlow, crashRoot).awaitTermination()
+    assert(commitExists(s"$crashRoot/ckpt", 1))
 
-      // ---- satellite: same crash window ----
-      crashOn("hsat_user")
-      val es = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
-        satOnce(crashLake, crashSrc, s"$crashRoot/ckpt_sat").awaitTermination())
-      assert(es.getMessage.contains("injected crash"))
-      // batch-1 versions landed (bobby, cat) before the "crash"
-      assert(crashLake.read("dv", "hsat_user").count() == 4)
-      assert(!commitExists(s"$crashRoot/ckpt_sat", 1))
-      satOnce(crashLake, crashSrc, s"$crashRoot/ckpt_sat").awaitTermination()
-    } finally StreamingDv.afterAppendHook = (_, _) => ()
-
-    // ---- the no-crash control run ----
     val cleanRoot = tmpDir("cleanrun")
     val cleanLake = new Lake(spark, cleanRoot, buckets = 4)
-    val cleanSrc = mkSource(cleanRoot)
-    hubOnce(cleanLake, cleanSrc, s"$cleanRoot/ckpt_hub").awaitTermination()
-    satOnce(cleanLake, cleanSrc, s"$cleanRoot/ckpt_sat").awaitTermination()
+    orderedSource(s"$cleanRoot/src", batches)
+    run(flowOf(cleanLake, satTransitions), cleanRoot).awaitTermination()
 
     // row-identical vaults, audit columns included (run_id = replayed batchId)
-    def rowsOf(lake: Lake, table: String): Seq[String] =
-      lake.read("dv", table).drop("hk_bucket").collect()
-        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-    assert(rowsOf(crashLake, "hub_user") == rowsOf(cleanLake, "hub_user"))
-    assert(rowsOf(crashLake, "hsat_user") == rowsOf(cleanLake, "hsat_user"))
-    // and the recovered sat state is the expected 4 versions with batch ids
+    Seq("hub_user", "hsat_user").foreach(t => assert(rowsOf(crashLake, t) == rowsOf(cleanLake, t), t))
     val sat = crashLake.read("dv", "hsat_user")
       .select($"name", $"run_id".cast("long")).as[(String, Long)].collect().sorted.toSeq
     assert(sat == Seq(("ann", 0L), ("bob", 0L), ("bobby", 1L), ("cat", 1L)), sat)
   }
 
-  test("statePartitions sizes the micro-batch plans without changing results") {
-    val root = tmpDir("sizedstream")
-    val srcDir = s"$root/src"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
-    val lake = new Lake(spark, root, buckets = 4)
+  test("crash inside a micro-batch's satellite load claim, after its hub and link appends landed: replay equals a clean run") {
+    // The crash window between targets: batch 1's hubs and link are
+    // appended, its satellite is not, and its commit-log entry is missing.
+    // The restart replays the whole batch; the hub and link probes must
+    // dedup what already landed while the satellite loads for the first time.
+    val batches = orderBatches.map(_.toDF("cust_id", "order_id", "channel", "name"))
+    def run(flow: FlowExecutor, root: String) =
+      flow.streamFlow("s", oneFilePerBatch(orderSchema, s"$root/src"),
+        "crash-test", s"$root/ckpt", Some(loadDts))
+    val tables = Seq("hub_customer", "hub_order", "link_order_customer", "hsat_customer")
 
-    Seq((1L, "ann"), (2L, "bob"), (3L, "cat")).toDF("id", "name")
-      .coalesce(1).write.parquet(s"$root/stage")
-    val part = java.nio.file.Files.list(java.nio.file.Paths.get(s"$root/stage"))
-      .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-    java.nio.file.Files.move(part, java.nio.file.Paths.get(srcDir, "b1.parquet"))
+    val crashRoot = tmpDir("satclaimcrash")
+    val crashLake = new Lake(spark, crashRoot, buckets = 4)
+    orderedSource(s"$crashRoot/src", batches)
+    val crashFlow = flowOf(crashLake, orderTransitions)
+    val satLoads = new java.util.concurrent.atomic.AtomicInteger(0)
+    // the satellite's second load is batch 1's
+    crashFlow.insideLoadClaimHook = t =>
+      if (t == "hsat_customer" && satLoads.incrementAndGet() == 2)
+        throw new RuntimeException("injected crash inside hsat_customer's load claim")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      run(crashFlow, crashRoot).awaitTermination())
+    assert(e.getMessage.contains("injected crash"))
+    assert(crashLake.read("dv", "hub_customer").count() == 3) // batch 1's hub append landed
+    assert(crashLake.read("dv", "link_order_customer").count() == 3)
+    assert(crashLake.read("dv", "hsat_customer").count() == 2) // batch 0's versions only
+    assert(!commitExists(s"$crashRoot/ckpt", 1))
+    run(crashFlow, crashRoot).awaitTermination()
+    assert(commitExists(s"$crashRoot/ckpt", 1))
 
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val staged = spark.readStream.schema("id LONG, name STRING").parquet(srcDir)
-    val q = StreamingDv.hubSink(
-      lake, staged, transitions, "hub_user", "user",
-      Seq("id" -> "id_bk"), "stream-test", s"$root/ckpt",
-      graft.dv.HashGen.Md5, statePartitions = Some(2))
-    q.awaitTermination()
-
-    val hub = lake.read("dv", "hub_user")
-    assert(hub.count() == 3)
-    assert(hub.select("id_bk").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
-    // scoped to the stream's cloned session — the caller's conf is untouched
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
+    val cleanRoot = tmpDir("satclaimclean")
+    val cleanLake = new Lake(spark, cleanRoot, buckets = 4)
+    orderedSource(s"$cleanRoot/src", batches)
+    run(flowOf(cleanLake, orderTransitions), cleanRoot).awaitTermination()
+    tables.foreach(t => assert(rowsOf(crashLake, t) == rowsOf(cleanLake, t), t))
+    assert(rowsOf(crashLake, "hsat_customer").length == 4)
   }
 
   test("streaming satellite load versions changed payloads, skips unchanged") {
     val root = tmpDir("satstream")
     val srcDir = s"$root/src"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     val lake = new Lake(spark, root, buckets = 4)
-    val transitions = Seq(
-      Transition("s", "id", "hub_user", "id_bk", "user", 1, raw = false, None, "bk"),
-      Transition("s", "name", "hsat_user", "name", "user_details", 1, raw = false, None, "f"))
+    def runOnce(): Unit =
+      flowOf(lake, satTransitions).streamFlow("s",
+        spark.readStream.schema("id LONG, name STRING").parquet(srcDir), "stream-test", s"$root/ckpt")
+        .awaitTermination()
 
-    def addBatch(name: String, rows: Seq[(Long, String)]): Unit = {
-      val stage = s"$root/stage_$name"
-      rows.toDF("id", "name").coalesce(1).write.parquet(stage)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-        .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.move(part, java.nio.file.Paths.get(srcDir, s"$name.parquet"))
-    }
-    def runOnce(): Unit = {
-      val staged = spark.readStream.schema("id LONG, name STRING").parquet(srcDir)
-      val q = StreamingDv.satSink(
-        lake, staged, transitions, "hsat_user",
-        hkSource = "user_hk", hashdiffField = "user_details_hashdiff",
-        fields = Seq("name" -> "name"), satHk = "user_hk",
-        recordSource = "stream-test", checkpoint = s"$root/ckpt",
-        algo = graft.dv.HashGen.Md5)
-      q.awaitTermination()
-    }
-
-    addBatch("b1", Seq((1L, "ann"), (2L, "bob")))
+    addFile(srcDir, "b1", Seq((1L, "ann"), (2L, "bob")).toDF("id", "name"))
     runOnce()
     assert(lake.read("dv", "hsat_user").count() == 2)
 
     // batch 2: unchanged bob (skipped), changed ann (new version), new cat.
-    addBatch("b2", Seq((1L, "ann2"), (2L, "bob"), (3L, "cat")))
+    addFile(srcDir, "b2", Seq((1L, "ann2"), (2L, "bob"), (3L, "cat")).toDF("id", "name"))
     runOnce()
     val sat = lake.read("dv", "hsat_user")
     assert(sat.count() == 4)
@@ -287,39 +304,20 @@ class StreamingSpec extends SparkSpec {
   test("streaming link load matches batch backfill and dedups across micro-batches") {
     val root = tmpDir("linkstream")
     val srcDir = s"$root/src"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     val lake = new Lake(spark, root, buckets = 4)
-    val transitions = Seq(
-      Transition("s", "cust_id", "hub_customer", "cust_id_bk", "customer", 1, raw = false, None, "bk"),
-      Transition("s", "order_id", "hub_order", "order_id_bk", "order", 1, raw = false, None, "bk"),
-      Transition("s", "customer", "link_order_customer", "customer_hk", "oc", 1, raw = false, None, "ll"),
-      Transition("s", "order", "link_order_customer", "order_hk", "oc", 2, raw = false, None, "ll"),
-      Transition("s", "channel", "link_order_customer", "channel_dk", "oc", 3, raw = false, None, "dk"))
+    val linkTransitions = orderTransitions.filter(_.targetTable != "hsat_customer")
     val legs = Seq("customer_hk" -> "customer_hk", "order_hk" -> "order_hk", "channel" -> "channel_dk")
-
-    def addBatch(name: String, rows: Seq[(Long, Long, String)]): Unit = {
-      val stage = s"$root/stage_$name"
-      rows.toDF("cust_id", "order_id", "channel").coalesce(1).write.parquet(stage)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-        .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.move(part, java.nio.file.Paths.get(srcDir, s"$name.parquet"))
-    }
-    def runOnce(): Unit = {
-      val staged = spark.readStream
-        .schema("cust_id LONG, order_id LONG, channel STRING").parquet(srcDir)
-      val q = StreamingDv.linkSink(
-        lake, staged, transitions, "link_order_customer", "oc", legs,
-        hkName = "order_customer_hk", recordSource = "stream-test",
-        checkpoint = s"$root/ckpt", algo = graft.dv.HashGen.Md5)
-      q.awaitTermination()
-    }
+    def runOnce(): Unit =
+      flowOf(lake, linkTransitions).streamFlow("s",
+        spark.readStream.schema("cust_id LONG, order_id LONG, channel STRING").parquet(srcDir),
+        "stream-test", s"$root/ckpt").awaitTermination()
 
     val b1 = Seq((1L, 10L, "web"), (2L, 20L, "app"))
     val b2 = Seq((2L, 20L, "app"), (3L, 30L, "web")) // overlaps b1: only one new link
-    addBatch("b1", b1)
+    addFile(srcDir, "b1", b1.toDF("cust_id", "order_id", "channel"))
     runOnce()
     assert(lake.read("dv", "link_order_customer").count() == 2)
-    addBatch("b2", b2)
+    addFile(srcDir, "b2", b2.toDF("cust_id", "order_id", "channel"))
     runOnce()
     val streamed = lake.read("dv", "link_order_customer")
     assert(streamed.count() == 3)
@@ -327,80 +325,13 @@ class StreamingSpec extends SparkSpec {
     // Batch backfill over the full input produces identical vault state
     // (modulo the audit columns, which legitimately differ per micro-batch).
     val backfill = graft.dv.DvOps.newLinkRows(
-      graft.dv.HashView.build((b1 ++ b2).toDF("cust_id", "order_id", "channel"), transitions, graft.dv.HashGen.Md5),
+      graft.dv.HashView.build((b1 ++ b2).toDF("cust_id", "order_id", "channel"), linkTransitions, graft.dv.HashGen.Md5),
       streamed.limit(0), "oc", legs, "order_customer_hk",
-      graft.dv.LoadContext(java.sql.Timestamp.valueOf("2026-01-01 00:00:00"), "backfill", 1L))
+      graft.dv.LoadContext(loadDts, "backfill", 1L))
     val keyCols = Seq("order_customer_hk", "customer_hk", "order_hk", "channel_dk")
     assert(
       streamed.select(keyCols.map(col): _*).collect().map(_.toSeq).toSet ==
         backfill.select(keyCols.map(col): _*).collect().map(_.toSeq).toSet)
-  }
-
-  test("link sink crash between append and checkpoint commit: replay is idempotent (completes the sink-family proof)") {
-    // hub + sat are covered by the crash test above; the link sink's
-    // replay safety rests on the same anti-join but over composite legs +
-    // degenerate keys — pin it so the StreamingDv doc's "all three DV
-    // sinks" claim is tested, not asserted.
-    val loadDts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-    val linkTransitions = Seq(
-      Transition("s", "cust_id", "hub_customer", "cust_id_bk", "customer", 1, raw = false, None, "bk"),
-      Transition("s", "order_id", "hub_order", "order_id_bk", "order", 1, raw = false, None, "bk"),
-      Transition("s", "customer", "link_order_customer", "customer_hk", "oc", 1, raw = false, None, "ll"),
-      Transition("s", "order", "link_order_customer", "order_hk", "oc", 2, raw = false, None, "ll"),
-      Transition("s", "channel", "link_order_customer", "channel_dk", "oc", 3, raw = false, None, "dk"))
-    val legs = Seq("customer_hk" -> "customer_hk", "order_hk" -> "order_hk", "channel" -> "channel_dk")
-
-    def mkSource(root: String): String = {
-      val srcDir = s"$root/src"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
-      val base = System.currentTimeMillis() - 3600000L
-      def add(name: String, rows: Seq[(Long, Long, String)], mtime: Long): Unit = {
-        val stage = s"$root/stage_$name"
-        rows.toDF("cust_id", "order_id", "channel").coalesce(1).write.parquet(stage)
-        val part = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-          .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-        val dst = java.nio.file.Paths.get(srcDir, s"$name.parquet")
-        java.nio.file.Files.move(part, dst)
-        assert(dst.toFile.setLastModified(mtime))
-      }
-      add("b0", Seq((1L, 10L, "web"), (2L, 20L, "app")), base)
-      // batch 1: one re-delivery, one new relationship
-      add("b1", Seq((2L, 20L, "app"), (3L, 30L, "web")), base + 60000L)
-      srcDir
-    }
-    def linkOnce(lake: Lake, srcDir: String, ckpt: String) =
-      StreamingDv.linkSink(lake,
-        spark.readStream.schema("cust_id LONG, order_id LONG, channel STRING")
-          .option("maxFilesPerTrigger", "1").parquet(srcDir),
-        linkTransitions, "link_order_customer", "oc", legs,
-        hkName = "order_customer_hk", recordSource = "crash-test", checkpoint = ckpt,
-        algo = graft.dv.HashGen.Md5, loadDts = Some(loadDts))
-
-    val crashRoot = tmpDir("linkcrash")
-    val crashLake = new Lake(spark, crashRoot, buckets = 4)
-    val crashSrc = mkSource(crashRoot)
-    try {
-      val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
-      StreamingDv.afterAppendHook = (t, b) =>
-        if (t == "link_order_customer" && b == 1L && armed.getAndSet(false))
-          throw new RuntimeException(s"injected crash after $t batch $b append")
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
-        linkOnce(crashLake, crashSrc, s"$crashRoot/ckpt").awaitTermination())
-      assert(e.getMessage.contains("injected crash"))
-      assert(crashLake.read("dv", "link_order_customer").count() == 3) // batch-1 append landed
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$crashRoot/ckpt", "commits", "1")))
-      linkOnce(crashLake, crashSrc, s"$crashRoot/ckpt").awaitTermination()
-    } finally StreamingDv.afterAppendHook = (_, _) => ()
-
-    val cleanRoot = tmpDir("linkclean")
-    val cleanLake = new Lake(spark, cleanRoot, buckets = 4)
-    linkOnce(cleanLake, mkSource(cleanRoot), s"$cleanRoot/ckpt").awaitTermination()
-
-    def rowsOf(lake: Lake): Seq[String] =
-      lake.read("dv", "link_order_customer").drop("hk_bucket").collect()
-        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-    assert(rowsOf(crashLake) == rowsOf(cleanLake))
-    assert(rowsOf(crashLake).length == 3)
   }
 
   test("sessionize: a late-but-in-watermark event merges into a session a newer event had already 'closed'") {
