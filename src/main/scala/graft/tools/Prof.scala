@@ -29,7 +29,10 @@ import graft.core.{Json, Sessions}
   * `codegen_compiles` counts the Janino compiles during the query (the
   * JVM-wide `CodegenMetrics` compile count, so a concurrent query in the
   * same JVM is counted too): 0 on a warm rep means every generated class
-  * came from Spark's compiled-class cache. */
+  * came from Spark's compiled-class cache. `deser_cpu_s` (and each stage
+  * line's `deserCpu`) is the CPU tasks spent deserializing themselves before
+  * they ran, which `cpu_s` leaves out: a per-task fixed cost, so it grows
+  * with the task count, not with the data. */
 object Prof {
   type Query = (SparkSession, String) => DataFrame
 
@@ -46,6 +49,7 @@ object Prof {
       f"""{"q":${Json.str(query)},"side":"$side","rep":$rep,"sec":$sec%.3f,"ok":${err.isEmpty}""" +
         f""","jobs":$jobs,"codegen_compiles":$compiles,"stages":${stages.size},"tasks":$tasks""" +
         f""","run_s":${sum(_.runMs) / 1e3}%.2f,"cpu_s":${sum(_.cpuNs) / 1e9}%.2f""" +
+        f""","deser_cpu_s":${sum(_.deserCpuNs) / 1e9}%.3f""" +
         s""","input_mb":${mb(_.inputBytes)},"shuffle_write_mb":${mb(_.shuffleWriteBytes)}""" +
         s""","shuffle_read_mb":${mb(_.shuffleReadBytes)},"spill_mem_mb":${mb(_.memSpillBytes)}""" +
         s""","spill_disk_mb":${mb(_.diskSpillBytes)}""" +

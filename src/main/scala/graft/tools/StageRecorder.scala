@@ -71,11 +71,15 @@ final class StageRecorder(sc: SparkContext) extends SparkListener {
 }
 
 object StageRecorder {
-  /** Task totals of one stage, plus every task's run time for skew checks. */
+  /** Task totals of one stage, plus every task's run time for skew checks.
+    * `deserCpuNs` is the CPU tasks spent deserializing their task before it
+    * ran (`executorDeserializeCpuTime`, outside `cpuNs`): a write task
+    * deserializes its job's Hadoop configuration there, so the fixed cost
+    * of a task shows in it. */
   final class Stage(val id: Int) {
     var name = ""
-    var tasks, runMs, cpuNs, maxTaskMs, inputBytes, shuffleReadBytes, maxTaskShuffleReadBytes,
-      shuffleWriteBytes, memSpillBytes, diskSpillBytes = 0L
+    var tasks, runMs, cpuNs, deserCpuNs, maxTaskMs, inputBytes, shuffleReadBytes,
+      maxTaskShuffleReadBytes, shuffleWriteBytes, memSpillBytes, diskSpillBytes = 0L
     val taskMs = mutable.ArrayBuffer.empty[Long]
 
     def add(m: TaskMetrics): Unit = {
@@ -83,6 +87,7 @@ object StageRecorder {
       tasks += 1
       runMs += m.executorRunTime
       cpuNs += m.executorCpuTime
+      deserCpuNs += m.executorDeserializeCpuTime
       maxTaskMs = math.max(maxTaskMs, m.executorRunTime)
       inputBytes += m.inputMetrics.bytesRead
       shuffleReadBytes += read
@@ -97,6 +102,7 @@ object StageRecorder {
 
     def line: String =
       f"stage $id%4d: tasks=$tasks%5d run=${runMs / 1e3}%8.2f s cpu=${cpuNs / 1e9}%8.2f s " +
+        f"deserCpu=${deserCpuNs / 1e9}%6.2f s " +
         f"maxTask=${maxTaskMs / 1e3}%6.2f s input=${mb(inputBytes)}%8.1f MB " +
         f"shufRead=${mb(shuffleReadBytes)}%8.1f MB shufWrite=${mb(shuffleWriteBytes)}%8.1f MB " +
         f"spillMem=${mb(memSpillBytes)}%7.1f MB spillDisk=${mb(diskSpillBytes)}%7.1f MB  $name"

@@ -416,4 +416,17 @@ class FlowExecutorSpec extends SparkSpec {
         == DvError.Configuration("x"))
     } finally spark.conf.unset(graft.core.Confs.ClaimsRequireAtomicKey)
   }
+
+  test("the ledger check compiles once: a second alreadyIngested with another file compiles 0 classes") {
+    val root = tmpDir("lake_ledger")
+    val flow = new FlowExecutor(new Lake(spark, root, buckets = 4), meta, HashGen.Md5)
+    val f1 = s"$root/batch1.csv"
+    writeCsv(f1, Seq("1,ann,A"))
+    assert(flow.executeFlow("customer", "unit", Some(f1)).status == "success")
+    def compiles: Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(flow.alreadyIngested("customer", f1))
+    val c0 = compiles
+    assert(!flow.alreadyIngested("customer", s"$root/batch2.csv"))
+    assert(compiles - c0 == 0, "a repeat ledger check compiled new classes")
+  }
 }

@@ -545,6 +545,12 @@ class PlanSpec extends SparkSpec {
       assert(headers.size == 4 && headers.forall(_.contains(" codegen_compiles=")), headers)
       assert(rows.forall(r => r.json.contains(s""""codegen_compiles":${r.compiles},""")), rows.map(_.json))
       assert(rows.filter(_.rep == 2).map(_.compiles) == Seq(0L, 0L), rows.map(_.json))
+      // each row and stage line carries the tasks' deserialization CPU, which
+      // every task spends before it runs
+      assert(rows.forall(r => r.stages.map(_.deserCpuNs).sum > 0 &&
+        r.json.contains(f""""deser_cpu_s":${r.stages.map(_.deserCpuNs).sum / 1e9}%.3f,""")), rows.map(_.json))
+      val stageLines = printed.filter(_.startsWith("[prof]   stage "))
+      assert(stageLines.nonEmpty && stageLines.forall(_.contains(" deserCpu=")), printed)
     } finally spark.conf.unset(preset)
   }
 }

@@ -153,6 +153,48 @@ class ScratchSpec extends SparkSpec {
     assert(lake.readOr("dv", "t", s).count() == 1008)
   }
 
+  test("a few-row bucketed append writes in fewer tasks than buckets, one file per non-empty bucket") {
+    import org.apache.hadoop.fs.Path
+    import spark.implicits._
+    val keys = (1 to 40).map(i => s"k$i")
+    val rec = new graft.tools.StageRecorder(spark.sparkContext)
+    // One fresh 16-bucket table per arm, exchanged into 32 shuffle
+    // partitions: wider than the bucket count, so only AQE's coalescing can
+    // bring the write stage under it. Returns the write stage's task count,
+    // the expected bucket set and the parquet files of each bucket dir.
+    def append(coalesce: Boolean): (Long, Set[Long], Map[String, Int]) = {
+      val lake = new graft.core.Lake(spark, tmpDir("lake_few"), buckets = 16)
+      val confs = Seq("spark.sql.shuffle.partitions" -> "32",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> coalesce.toString)
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      rec.reset()
+      try {
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        assert(lake.appendBucketed(keys.map(k => (k, 1L)).toDF("hk", "v"), "dv", "t", "hk") == keys.size)
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      val dir = new Path(lake.dataPath("dv", "t"))
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val files = fs.listStatus(dir).filter(_.getPath.getName.startsWith("hk_bucket=")).map { b =>
+        b.getPath.getName -> fs.listStatus(b.getPath).count(_.getPath.getName.endsWith(".parquet"))
+      }.toMap
+      (rec.stages.last.tasks, keys.map(lake.bucketOfValue).toSet, files)
+    }
+    try {
+      val (coalescedTasks, buckets, coalescedFiles) = append(coalesce = true)
+      val (wideTasks, _, wideFiles) = append(coalesce = false)
+      assert(buckets.size > 8, buckets)
+      assert(coalescedTasks < 16, s"write stage ran $coalescedTasks tasks for 16 buckets")
+      assert(wideTasks == 32, s"uncoalesced write stage ran $wideTasks tasks")
+      for (files <- Seq(coalescedFiles, wideFiles)) {
+        assert(files.keySet == buckets.map(b => s"hk_bucket=$b"), files)
+        assert(files.values.forall(_ == 1), files)
+      }
+    } finally rec.close()
+  }
+
   test("concurrent counted appends to two tables: each returns only its own rows") {
     import spark.implicits._
     val lake = new graft.core.Lake(spark, tmpDir("lake_cnt2"), buckets = 4)
