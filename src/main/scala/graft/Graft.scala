@@ -37,8 +37,9 @@ final class Graft(
     val meta: MetaStore,
     val scriptsPath: Option[String] = None,
     val algo: HashGen.Algo = HashGen.Sha1,
-    // Lake.FromConf: resolve from the spark.graft.buckets session conf
-    // (default 16) unless the caller pins an explicit count.
+    // Lake.FromConf: the spark.graft.buckets session conf pins the count
+    // when set; unset, each new table's count follows its size (Lake's
+    // BUCKET-COUNT RESOLUTION). An explicit count pins it.
     val buckets: Int = Lake.FromConf
 ) {
 

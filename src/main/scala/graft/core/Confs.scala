@@ -55,7 +55,7 @@ object Confs {
     * tasks' worth of work: below this floor even a 100%-hot key is a
     * bounded single-task job, while the histogram's fixed per-plan cost
     * (sample scan + two actions; measured +14% on the full sf0.1 bench
-    * when UNgated — BASELINE.md r14 skew-guard table) dominates. Above it
+    * when UNgated — BASELINE.md skew-guard table) dominates. Above it
     * the histogram is noise against the load it protects. 0 = always
     * sample (tests pin detection on tiny frames this way). */
   def minBytes(conf: RuntimeConfig): Long = {
@@ -72,8 +72,14 @@ object Confs {
     * the extra driver action that computes the staged bucket set; above
     * it the probe's scan follows the BATCH's bucket span instead of vault
     * size — the difference between O(batch) and O(vault) per micro-batch
-    * at 100 TB. Appends never list the table, so the gate governs only the
-    * probe. 0 = always prune (tests). */
+    * at 100 TB. Appends never list the table.
+    *
+    * The same floor sizes an unpinned lake's new tables (`Lake`'s
+    * BUCKET-COUNT RESOLUTION): a table whose first increment is below it
+    * gets one bucket, since its probes read it whole anyway, and
+    * `Lake.compact` moves it to 16 buckets once its bytes reach the floor.
+    * 0 = always prune, and every new table of an unpinned lake gets 16
+    * buckets (tests). */
   def probePruneMinBytes(conf: RuntimeConfig): Long = {
     val b = long(conf, ProbePruneMinBytesKey, 256L << 20)
     require(b >= 0L, s"$ProbePruneMinBytesKey must be >= 0, got $b")
@@ -139,8 +145,8 @@ object Confs {
     * on driver memory — the distributed word-frequency aggregation stays
     * linear in corpus size regardless). The tail beyond the cap is DROPPED
     * from training; the frozen artifact's `_train_stats.json` records the
-    * dropped occurrence-mass fraction so token budgets carry an error bar
-    * (r19 verdict #4a: the truncation must never be silent). */
+    * dropped occurrence-mass fraction so token budgets carry an error bar:
+    * the truncation is never silent. */
   def bpeDictCap(conf: RuntimeConfig): Int = {
     val v = long(conf, BpeDictCapKey, 32768L)
     require(v >= 1L && v <= Int.MaxValue, s"$BpeDictCapKey must be in [1, 2^31), got $v")
@@ -156,8 +162,8 @@ object Confs {
   }
 
   /** Version of the frozen BPE merges artifact. A frozen table is permanent
-    * per (corpus dir, version) — the explicit retrain path (r19 verdict
-    * #4b, the same explicit posture as Lake.rebucket): bump the version to
+    * per (corpus dir, version) — the explicit retrain path (the same
+    * explicit posture as Lake.rebucket): bump the version to
     * retrain after the corpus or the caps above change materially; old
     * versions stay on disk for in-flight readers until cleaned. Default 1
     * keeps the historical artifact path. */
@@ -221,8 +227,8 @@ object Confs {
     * fallback serializes typed buffers per row, so it is only right when
     * per-task group counts stay bounded (pre-clustered inputs).
     *
-    * DEFAULT `auto` = each call site's MEASURED-best shape (r21
-    * adjudication, interleaved same-session A/B on the real sf10 lineitem
+    * DEFAULT `auto` = each call site's MEASURED-best shape (interleaved
+    * same-session A/B on the real sf10 lineitem
     * satellite — bench/r21_latest_sf10.log; the synthetic narrow-payload
     * BvProf shallow profile mis-ranked the clustered pair, so the real
     * rows decide):
@@ -239,7 +245,7 @@ object Confs {
     *    bench/r21_skew_sf10.log): a deployment whose satellites carry
     *    long or hostile histories should set `partial` globally.
     *
-    * BUILD-TIME LATCH (r21 ADVICE): the conf is read when the DataFrame is
+    * BUILD-TIME LATCH: the conf is read when the DataFrame is
     * BUILT, so `<sat>_cv` temp views registered by
     * registerCurrentView/currentView keep the shape active at registration
     * — set the conf BEFORE initVault/createSat, or call
@@ -256,7 +262,7 @@ object Confs {
   /** The `spark.graft.skewGuard` mode: off | auto (default) — see
     * [[SkewGuard]]. `auto` measured neutral on the full bench at both
     * scales once gated on real leaf bytes (off-vs-auto interleaved floors:
-    * sf0.1 -3.4%, sf1 -1.2% — `bench/r15{d,e,f}_*`); `off` is the
+    * sf0.1 -3.4%, sf1 -1.2% — the skew-guard runs under `bench/`); `off` is the
     * bit-identical-plans escape hatch. */
   def skewGuard(conf: RuntimeConfig): String =
     conf.getOption(SkewGuardKey).getOrElse("auto") match {

@@ -26,8 +26,15 @@ import graft.etl.{DvError, DvException}
   * column would scatter one key over two derivations, so it fails loudly.
   * `sortBy` records the within-file sort the last compact/rebucket applied
   * (informational: tells readers whether row-group pruning on e.g.
-  * load_dts can engage). */
-final case class TableLayout(bucketCount: Int, keyCol: String, sortBy: Seq[String])
+  * load_dts can engage).
+  *
+  * `sized` marks a count the lake chose from the table's size (an unpinned
+  * lake, see [[Lake]]'s BUCKET-COUNT RESOLUTION) rather than one pinned by
+  * configuration or [[Lake.rebucket]]: [[Lake.compact]] re-sizes a sized
+  * table, and no drift note fires for it. It is written as `"sized":true`
+  * and only when set, so a pinned record's bytes are unchanged and a
+  * record without the field reads as pinned. */
+final case class TableLayout(bucketCount: Int, keyCol: String, sortBy: Seq[String], sized: Boolean = false)
 
 /** Layered lake storage for the vault: `{root}/{layer}/{table}` parquet
   * tables, layers mirroring the reference's schemas
@@ -50,23 +57,42 @@ final case class TableLayout(bucketCount: Int, keyCol: String, sortBy: Seq[Strin
   * [[dataPath]]. A root holding data outside any generation was written by
   * the older flat layout and is refused — there is no migration.
   *
-  * BUCKET-COUNT RESOLUTION: the constructor arg / `spark.graft.buckets`
-  * conf / default-16 chain sets this lake's count for NEW tables only.
-  * Existing bucketed tables carry their count in a [[TableLayout]] record
-  * (`_graft_table.json`) inside the generation it describes, so one commit
-  * marker publishes data AND layout. All bucket-coupled operations (pruned
-  * probes, bucketed appends, point lookups) resolve the count from the
-  * record, so a session-conf drift can no longer mis-prune silently —
-  * it is noted once per table on stderr and the persisted count governs.
-  * [[rebucket]] is the explicit way to change a table's count.
+  * BUCKET-COUNT RESOLUTION: a lake's count is PINNED by the constructor
+  * arg or the `spark.graft.buckets` conf; a pinned lake gives every NEW
+  * table that count. An unpinned lake SIZES each new table instead: the
+  * first bucketed append into a table with no layout record reads the
+  * increment's known leaf bytes ([[Tables.estBytesKnown]]) and gives the
+  * table 1 bucket below `spark.graft.probePrune.minBytes` (the size under
+  * which its probes scan it whole anyway), and [[Lake.DefaultBuckets]] at
+  * or above it or when the size is unknown (a streaming micro-batch).
+  * [[compact]] re-sizes a sized table from its generation's bytes by the
+  * same rule, so a table moves to 16 buckets at the first compaction after
+  * it crosses the gate. Each decision is one DEBUG line on this class's
+  * logger, `graft.core.Lake`: `<site>(<layer>.<table>) knownBytes=<n|unknown>
+  * gate=<bytes> buckets=<n>`. Existing bucketed tables carry their count
+  * in a [[TableLayout]] record (`_graft_table.json`) inside the generation
+  * it describes, so one commit marker publishes data AND layout. All
+  * bucket-coupled operations (pruned probes, bucketed appends, point
+  * lookups) resolve the count from the record, so a session-conf drift
+  * can no longer mis-prune silently — for a pinned record it is noted once
+  * per table on stderr and the persisted count governs. [[rebucket]] is
+  * the explicit way to change a table's count, and it pins the count.
   */
 final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.FromConf) {
 
-  /** Bucket count in force for this lake's NEW tables (see class doc for
-    * resolution; existing tables' layout records govern themselves).
-    * Validated here so a malformed conf or a 0/negative count fails at
-    * lake construction with the offending key named, not later inside
-    * pmod/repartition with an opaque arithmetic error. */
+  /** True when this lake's bucket count is pinned: a `buckets` constructor
+    * arg or the `spark.graft.buckets` conf. An unpinned lake sizes each new
+    * table (class doc). */
+  val bucketsPinned: Boolean =
+    buckets != Lake.FromConf || spark.conf.getOption(Lake.BucketsKey).isDefined
+
+  /** The pinned bucket count, or [[Lake.DefaultBuckets]] on an unpinned
+    * lake — the count an unpinned lake gives a table of unknown or large
+    * size (see class doc for resolution; existing tables' layout records
+    * govern themselves). Validated here so a malformed conf or a
+    * 0/negative count fails at lake construction with the offending key
+    * named, not later inside pmod/repartition with an opaque arithmetic
+    * error. */
   val bucketCount: Int = {
     val resolved =
       if (buckets != Lake.FromConf) buckets
@@ -232,7 +258,10 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * bench/test-scale plans are bit-identical to [[readOr]]; above it the
     * bucket set is one tiny distinct-collect over the staged keys
     * (bounded by the table's bucket count). A batch spanning every bucket
-    * falls back to the unpruned scan. NOT for delete detection
+    * falls back to the unpruned scan, and a one-bucket table (a sized
+    * table until the compaction that re-sizes it) returns the unpruned
+    * scan without the job, whose only possible answer would be that one
+    * bucket. NOT for delete detection
     * (DvOps.satDeleteRows): there the ABSENT keys are the signal, and
     * pruning would mass-delete the unscanned buckets. Bucket derivation
     * uses the TABLE's persisted count ([[tableBuckets]]), so a
@@ -247,6 +276,7 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     SkewGuard.logGate(s"readOrProbe($layer.$name)", engaged, known)
     if (!engaged) return full
     val n = tableBuckets(layer, name)
+    if (n == 1) return full
     val buckets = staged.select(bucketOfN(stagedKey, n).as("__b")).distinct()
       .collect().map(_.getLong(0))
     if (buckets.length >= n) return full
@@ -352,8 +382,21 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
   private def bucketOfN(keyCol: Column, n: Int): Column =
     pmod(xxhash64(keyCol), lit(n))
 
-  /** Deterministic bucket of a key value under THIS LAKE's count — the
-    * derivation [[appendBucketed]] writes NEW tables with. For an existing
+  /** The size rule of an unpinned lake (class doc): 1 bucket below
+    * `spark.graft.probePrune.minBytes` known bytes, [[Lake.DefaultBuckets]]
+    * at or above it or when `bytes` is unknown. One DEBUG line per
+    * decision, naming the `site` and the table. */
+  private def sizedBuckets(site: String, layer: String, name: String, bytes: Option[BigInt]): Int = {
+    val gate = Confs.probePruneMinBytes(spark.conf)
+    val n = if (bytes.exists(_ < gate)) 1 else Lake.DefaultBuckets
+    if (Lake.log.isDebugEnabled)
+      Lake.log.debug(s"$site($layer.$name) knownBytes=${bytes.getOrElse("unknown")} gate=$gate buckets=$n")
+    n
+  }
+
+  /** Deterministic bucket of a key value under THIS LAKE's
+    * [[bucketCount]] — the derivation [[appendBucketed]] writes a pinned
+    * lake's NEW tables with (an unpinned lake sizes them). For an existing
     * table prefer [[tableBucketOf]], which resolves the table's own
     * persisted count. */
   def bucketOf(keyCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -378,12 +421,14 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * XxHash64 codepath Spark executes, evaluated without launching a job. */
   def bucketOfValue(value: String): Long = bucketOfValueN(value, bucketCount)
 
-  /** Once-per-table stderr note when a layout record's bucket count differs
-    * from this lake's configured count: not an error (the record governs,
-    * results stay correct), but drift usually means a misconfigured
-    * session and the operator should know. */
+  /** Once-per-table stderr note when a pinned layout record's bucket count
+    * differs from this lake's configured count: not an error (the record
+    * governs, results stay correct), but drift usually means a
+    * misconfigured session and the operator should know. A sized record's
+    * count follows the table's size, not configuration, so it never
+    * drifts. */
   private def noteDrift(layer: String, name: String, lo: TableLayout): Unit =
-    if (lo.bucketCount != bucketCount && Lake.notedDrift.add(qualifiedKey(layer, name)))
+    if (!lo.sized && lo.bucketCount != bucketCount && Lake.notedDrift.add(qualifiedKey(layer, name)))
       Console.err.println(
         s"[graft] NOTE: $layer.$name was written with ${lo.bucketCount} buckets (layout " +
           s"record) but this session's Lake is configured for $bucketCount — the table's " +
@@ -400,6 +445,14 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * data. So no generation holds `hk_bucket=` data without a record. An
     * append bucketing on a different KEY COLUMN than the record's fails
     * loudly — two derivations over one table would scatter keys.
+    *
+    * The record's count is this lake's pinned count, or on an unpinned
+    * lake the size rule's (class doc) over the increment's known leaf
+    * bytes: a daily increment into a small table writes one file, not one
+    * per bucket. Known limit: until the compaction that re-sizes it, a
+    * one-bucket table takes every append in one write task, so a
+    * multi-GB increment into a table that started small writes in one
+    * task; a deployment that loads such increments pins a count.
     *
     * The write is hash-exchanged on the bucket column first: `partitionBy`
     * alone makes every upstream task open a file per bucket it happens to
@@ -453,8 +506,11 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
             s"carry two bucket derivations (pruned probes and lookups would miss keys)"))
       noteDrift(layer, name, lo)
     }
-    val n = layout.map(_.bucketCount).getOrElse(bucketCount)
-    val record = TableLayout(n, keyCol, Nil)
+    val record = layout.getOrElse(
+      if (bucketsPinned) TableLayout(bucketCount, keyCol, Nil)
+      else TableLayout(sizedBuckets("appendBucketed", layer, name, Tables.estBytesKnown(df)),
+        keyCol, Nil, sized = true))
+    val n = record.bucketCount
     res.filter(_.layout.isEmpty).foreach { r =>
       val dir = new Path(r.dataDir)
       writeLayout(fsOf(dir), dir, record)
@@ -504,7 +560,8 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
         val node = Lake.jsonMapper.readTree(bytes)
         val sortBy = Option(node.get("sortBy"))
           .map(a => (0 until a.size).map(a.get(_).asText).toSeq).getOrElse(Nil)
-        val lo = TableLayout(node.get("bucketCount").asInt, node.get("keyCol").asText, sortBy)
+        val lo = TableLayout(node.get("bucketCount").asInt, node.get("keyCol").asText, sortBy,
+          sized = Option(node.get("sized")).exists(_.asBoolean))
         require(lo.bucketCount > 0 && lo.keyCol.nonEmpty)
         Some(lo)
       } catch {
@@ -522,7 +579,8 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       fs: org.apache.hadoop.fs.FileSystem, dir: Path, lo: TableLayout): Unit = {
     val json =
       s"""{"version":1,"bucketCount":${lo.bucketCount},"keyCol":${Json.str(lo.keyCol)},""" +
-        s""""sortBy":[${lo.sortBy.map(Json.str).mkString(",")}]}"""
+        s""""sortBy":[${lo.sortBy.map(Json.str).mkString(",")}]""" +
+        (if (lo.sized) ""","sized":true}""" else "}")
     // overwrite=true: only written inside single-writer windows (a staged
     // generation, or a record-less table's first bucketed append)
     val out = fs.create(new Path(dir, Lake.LayoutFile), true)
@@ -847,6 +905,12 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     * into the new generation (with the rewrite's sort). Returns (files
     * before, files after).
     *
+    * RE-SIZING: a SIZED table (layout record `sized`, written by an
+    * unpinned lake) gets the size rule's count (class doc) over the
+    * generation's leaf bytes; when that differs from its count, the
+    * rewrite is [[rebucket]]'s at the new count, under the same claim and
+    * commit, and the record stays sized. A pinned record keeps its count.
+    *
     * CLAIM: the whole operation runs under the table's compaction claim, so
     * a second concurrent compact/rebucket/expire gets a typed Concurrency
     * refusal instead of deleting this one's staged generation. A hard
@@ -888,7 +952,12 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
   def compact(layer: String, name: String, sortBy: Seq[String] = Nil): (Long, Long) =
     rewrite(layer, name, "compact") { (df, layout, leaves) =>
       val recorded = layout.map(lo => if (sortBy.nonEmpty) lo.copy(sortBy = sortBy) else lo)
-      if (df.columns.contains("hk_bucket")) {
+      val resized = recorded.filter(_.sized).flatMap { lo =>
+        val n = sizedBuckets("compact", layer, name, Some(BigInt(leaves.iterator.map(_.getLen).sum)))
+        if (n != lo.bucketCount) Some(lo.copy(bucketCount = n)) else None
+      }
+      if (resized.isDefined) rebucketed(layer, name, df, resized.get, leaves)
+      else if (df.columns.contains("hk_bucket")) {
         val target = Confs.compactTargetBytes(spark.conf)
         // per-bucket compressed bytes from the SAME leaves the file count
         // walked (a leaf's bucket = its parent dir's hk_bucket= value); an
@@ -924,8 +993,10 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     }
 
   /** Rewrite a bucketed table at a NEW bucket count, as a committed
-    * generation — the explicit (and only) way a table's bucket count
-    * changes. A 16-bucket vault that grows 100× otherwise keeps
+    * generation — the explicit way to change a table's bucket count (the
+    * other is [[compact]] re-sizing a sized table). The new count is
+    * pinned: the record drops `sized`, and later compactions keep it. A
+    * 16-bucket vault that grows 100× otherwise keeps
     * multi-TB-granularity probe pruning forever: bucket span is the unit
     * of probe/lookup cost, so the count must be able to
     * follow data volume. Same claim, staging, verify-then-marker commit,
@@ -942,28 +1013,37 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
       layer: String, name: String, newBuckets: Int,
       keyCol: Option[String] = None, sortBy: Seq[String] = Nil): (Long, Long) = {
     require(newBuckets > 0, s"rebucket($layer.$name): newBuckets must be > 0, got $newBuckets")
-    rewrite(layer, name, "rebucket") { (df0, layout, leaves) =>
+    rewrite(layer, name, "rebucket") { (df, layout, leaves) =>
       val key = keyCol.orElse(layout.map(_.keyCol)).getOrElse(
         throw new DvException(DvError.Configuration(
           s"rebucket($layer.$name): the table has no layout record to take the bucket " +
             s"key from (it was never bucket-appended) — pass keyCol explicitly")))
-      if (!df0.columns.contains(key))
-        throw new DvException(DvError.Configuration(
-          s"rebucket($layer.$name): bucket key column '$key' not present in the table " +
-            s"(columns: ${df0.columns.mkString(", ")})"))
-      val df = df0.drop("hk_bucket").withColumn("hk_bucket", bucketOfN(col(key), newBuckets))
-      val target = Confs.compactTargetBytes(spark.conf)
-      // xxhash64 keys spread bytes ~uniformly over the NEW buckets, so one
-      // chunk count serves all of them (the old per-bucket listing can't
-      // size new buckets — old dirs don't map to new assignments)
-      val totalBytes = leaves.iterator.map(_.getLen).sum
-      val chunksPerBucket = math.max(1L,
-        (totalBytes / math.max(1, newBuckets) + target - 1) / target).min(1L << 16).toInt
-      val totalChunks = (chunksPerBucket.toLong * newBuckets).max(1L).min(1L << 20).toInt
       val effSort = if (sortBy.nonEmpty) sortBy else layout.map(_.sortBy).getOrElse(Nil)
-      (chunked(df, lit(chunksPerBucket), totalChunks, effSort), Seq("hk_bucket"),
-        Some(TableLayout(newBuckets, key, effSort)))
+      rebucketed(layer, name, df, TableLayout(newBuckets, key, effSort), leaves)
     }
+  }
+
+  /** [[rewrite]]'s plan for a table re-derived at the bucket count and key
+    * of `layout`, the new generation's record: [[rebucket]]'s, and
+    * [[compact]]'s when it re-sizes a sized table. */
+  private def rebucketed(
+      layer: String, name: String, df0: DataFrame, layout: TableLayout,
+      leaves: Array[org.apache.hadoop.fs.FileStatus]): (DataFrame, Seq[String], Option[TableLayout]) = {
+    val TableLayout(newBuckets, key, sortBy, _) = layout
+    if (!df0.columns.contains(key))
+      throw new DvException(DvError.Configuration(
+        s"rebucket($layer.$name): bucket key column '$key' not present in the table " +
+          s"(columns: ${df0.columns.mkString(", ")})"))
+    val df = df0.drop("hk_bucket").withColumn("hk_bucket", bucketOfN(col(key), newBuckets))
+    val target = Confs.compactTargetBytes(spark.conf)
+    // xxhash64 keys spread bytes ~uniformly over the NEW buckets, so one
+    // chunk count serves all of them (the old per-bucket listing can't
+    // size new buckets — old dirs don't map to new assignments)
+    val totalBytes = leaves.iterator.map(_.getLen).sum
+    val chunksPerBucket = math.max(1L,
+      (totalBytes / math.max(1, newBuckets) + target - 1) / target).min(1L << 16).toInt
+    val totalChunks = (chunksPerBucket.toLong * newBuckets).max(1L).min(1L << 20).toInt
+    (chunked(df, lit(chunksPerBucket), totalChunks, sortBy), Seq("hk_bucket"), Some(layout))
   }
 
   /** The frame [[compact]] and [[rebucket]] share: under the table's
@@ -1197,10 +1277,12 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
 }
 
 object Lake {
-  /** Session-conf key for the default bucket count of lakes constructed
+  /** Session-conf key that pins the bucket count of lakes constructed
     * without an explicit `buckets` arg (SURVEY §4). Applies to NEW tables;
     * existing tables' layout records govern themselves. */
   val BucketsKey = "spark.graft.buckets"
+  /** The count of an unpinned lake's tables at or above the size gate, or
+    * of unknown size. */
   val DefaultBuckets = 16
   /** Sentinel default for the constructor arg: "resolve from conf". */
   val FromConf: Int = -1
@@ -1226,6 +1308,9 @@ object Lake {
   val LoadClaim = "_graft_loading"
 
   private[core] final case class Resolution(dataDir: String, layout: Option[TableLayout])
+
+  /** The logger of bucket-count decisions (class doc). */
+  private val log = org.apache.logging.log4j.LogManager.getLogger("graft.core.Lake")
 
   /** Walks executed plans through AQE wrappers and query stages. */
   private object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper

@@ -39,9 +39,10 @@ final case class FlowResult(
   * [[streamFlow]] runs the same hash view and loads on each micro-batch
   * of a stream.
   *
-  * Scale: the ledger is the only driver-side state (tiny, two actions per
-  * flow); every load is a pure DataFrame pipeline appended bucketed-by-hk,
-  * so increments shuffle only on uniformly distributed hash keys.
+  * Scale: the ledger is the only driver-side state (tiny: one aggregate
+  * read and two appends per flow); every load is a pure DataFrame
+  * pipeline appended bucketed-by-hk, so increments shuffle only on
+  * uniformly distributed hash keys.
   */
 final class FlowExecutor(
     val lake: Lake,
@@ -65,33 +66,39 @@ final class FlowExecutor(
 
   /** Reference GET_RUN_ID: coalesce(max(run_id), 0) + 1. Pure ledger read —
     * the id a run would get, NOT an allocation (see [[allocateRunId]]). */
-  def nextRunId(): Long =
-    runinfo.agg(coalesce(max(col("run_id")), lit(0L)) + 1L).head().getLong(0)
+  def nextRunId(): Long = ledgerState("", None)._2
 
   /** Allocate a run id safely under the concurrency the ingestion claim
     * supports: [[nextRunId]] is check-then-act over the ledger, so two
     * flows over DIFFERENT files can both read max+1 before either writes
     * its start row and stamp every vault audit column with the same
-    * run_id. The candidate id is therefore claimed (a permanent run-id
-    * marker, [[Lake.tryClaim]]); losers walk forward. A crash between
-    * claim and ledger start-row leaves a marker with no ledger row — later
-    * allocations skip that id rather than reuse one that may have
-    * partially stamped vault rows. */
-  private[graft] def allocateRunId(): Long = {
-    var id = nextRunId()
+    * run_id. The candidate id, starting at `from` (a [[nextRunId]] read),
+    * is therefore claimed (a permanent run-id marker, [[Lake.tryClaim]]);
+    * losers walk forward. A crash between claim and ledger start-row
+    * leaves a marker with no ledger row — later allocations skip that id
+    * rather than reuse one that may have partially stamped vault rows. */
+  private[graft] def allocateRunId(from: Long = nextRunId()): Long = {
+    var id = from
     while (!lake.tryClaim(lake.runIdClaimPath(id), "run-id")) id += 1
     id
   }
 
-  /** Reference CHECK_INGESTION: any ledger row for (file, table, status).
-    * `head(1)`, not `limit(1).count()`: the latter's generated code names
-    * its limit counter from a JVM-wide sequence, so its source never repeats
-    * and every call compiles; this plan's code repeats, and a later call
-    * with another file compiles nothing (FlowExecutorSpec). */
+  /** Reference CHECK_INGESTION: any ledger row for (file, table, status). */
   def alreadyIngested(sourceTable: String, filePath: String, status: String = "success"): Boolean =
-    runinfo
-      .filter(col("source_file") === filePath && col("source_table") === sourceTable && col("status") === status)
-      .head(1).nonEmpty
+    ledgerState(sourceTable, Some(filePath), status)._1
+
+  /** One aggregate over the ledger, two Spark jobs: whether `filePath` of
+    * `sourceTable` has a `status` row (false for None), and [[nextRunId]]'s
+    * id. A flow reads both at once. The file, table and status are
+    * literals the generated code binds by reference, so a read with
+    * another file compiles nothing (FlowExecutorSpec). */
+  private[graft] def ledgerState(
+      sourceTable: String, filePath: Option[String], status: String = "success"): (Boolean, Long) = {
+    val hit = filePath.fold(lit(false))(fp =>
+      col("source_file") === fp && col("source_table") === sourceTable && col("status") === status)
+    val r = runinfo.agg(max(hit), coalesce(max(col("run_id")), lit(0L)) + 1L).head()
+    (!r.isNullAt(0) && r.getBoolean(0), r.getLong(1))
+  }
 
   private def logRun(sourceTable: String, runId: Long, filePath: Option[String], status: String, message: String = ""): Unit = {
     val row = Row(sourceTable, runId, new Timestamp(System.currentTimeMillis()), filePath.orNull, status, message)
@@ -117,8 +124,19 @@ final class FlowExecutor(
       loadDtsOverwrite: Option[Timestamp] = None,
       forceLoad: Boolean = false
   ): FlowResult = {
-    if (!forceLoad && filePath.exists(alreadyIngested(sourceTable, _)))
-      return FlowResult(0L, "skipped", skipped = true, Nil, Map.empty)
+    // The ledger is read once, before the ingestion claim: the run id it
+    // names is only where allocateRunId starts walking, so a flow that
+    // allocates in between costs a step, never a duplicate id. A read that
+    // throws (a corrupt or unreachable ledger) is a failure before any run
+    // id exists.
+    val (ingested, firstRunId) =
+      try ledgerState(sourceTable, filePath.filterNot(_ => forceLoad))
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          return FlowResult(-1L, "failure", skipped = false,
+            Seq(DvError.from(e, s"flow $sourceTable: ledger read")), Map.empty)
+      }
+    if (ingested) return FlowResult(0L, "skipped", skipped = true, Nil, Map.empty)
     // Ingestion claim between the ledger check and any load work: the
     // check is check-then-act, so of two flows racing past it exactly one
     // proceeds and the loser reports a typed skip, not a double-ingest.
@@ -151,12 +169,12 @@ final class FlowExecutor(
     // (a leaked claim permanently blocks the file until forceLoad/manual
     // marker delete, even though no run ever touched the vault).
     // -1 = "no run id was ever allocated" — distinct from the run-id-0
-    // sentinel skipped results carry, so a nextRunId() failure can neither
+    // sentinel skipped results carry, so an allocation failure can neither
     // write a ledger row attributed to a run that never existed nor be
     // confused with a skip by callers inspecting FlowResult.runId.
     var runId = -1L
     try {
-      runId = allocateRunId()
+      runId = allocateRunId(firstRunId)
       logRun(sourceTable, runId, filePath, "start")
       val ctx = ctxOf(runId, recordSource, loadDtsOverwrite)
 
@@ -206,7 +224,7 @@ final class FlowExecutor(
           filePath.foreach(fp => scala.util.Try(lake.releaseClaim(lake.ingestionClaimPath(sourceTable, fp))))
         // Best-effort: when the lake is down the failure row can't land
         // anyway — the caller still gets the original error in the result.
-        // No ledger row at all when nextRunId() itself threw (runId still
+        // No ledger row at all when allocateRunId() itself threw (runId still
         // -1): there is no run to attribute the failure to.
         if (runId >= 0)
           scala.util.Try(logRun(sourceTable, runId, filePath, "failure",

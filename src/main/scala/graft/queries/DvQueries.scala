@@ -565,11 +565,14 @@ object DvQueries {
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = rootPath.getFileSystem(hconf)
     fs.mkdirs(rootPath)
-    // Bucket count sized to cores (cap 16): the bucketed append's write
-    // exchange has exactly `buckets` tasks, so 4 buckets serialized the
+    // Bucket count pinned to cores (cap 16): a bucket is written by one
+    // task, so the bucket count caps a large append's write parallelism
+    // (AQE coalesces only small partitions), and 4 buckets serialized the
     // sf1 replay's parquet encode into 4× ~35 MB tasks (~1.9 s stage wall,
-    // the row's largest). Bucket count is lake LAYOUT — result rows and
-    // oracle hashes are bucket-count-invariant.
+    // the row's largest). Pinned, not sized: a stream's micro-batch has no
+    // known size, so an unpinned lake would give it 16 buckets on any host.
+    // Bucket count is lake LAYOUT — result rows and oracle hashes are
+    // bucket-count-invariant.
     val lake = new graft.core.Lake(s, root,
       buckets = math.min(16, s.sparkContext.defaultParallelism))
     val srcDir = new org.apache.hadoop.fs.Path(rootPath, "src")

@@ -429,4 +429,51 @@ class FlowExecutorSpec extends SparkSpec {
     assert(!flow.alreadyIngested("customer", s"$root/batch2.csv"))
     assert(compiles - c0 == 0, "a repeat ledger check compiled new classes")
   }
+
+  test("one ledger read per flow: the combined read compiles 0 classes for another file, and a flow runs at most 2 ledger jobs") {
+    val root = tmpDir("lake_ledger_once")
+    val flow = new FlowExecutor(new Lake(spark, root, buckets = 4), meta, HashGen.Md5)
+    val f1 = s"$root/batch1.csv"
+    writeCsv(f1, Seq("1,ann,A"))
+    assert(flow.executeFlow("customer", "unit", Some(f1)).status == "success")
+    def compiles: Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(flow.ledgerState("customer", Some(f1)) == (true, 2L))
+    val c0 = compiles
+    assert(flow.ledgerState("customer", Some(s"$root/batch2.csv")) == (false, 2L))
+    assert(compiles - c0 == 0, "a ledger read with another file compiled new classes")
+    assert(flow.alreadyIngested("customer", f1) && flow.nextRunId() == 2L)
+    // a whole flow reads the ledger once: its jobs are the ledger's
+    // aggregate and the loads and appends, which run under Lake frames
+    val f3 = s"$root/batch3.csv"
+    writeCsv(f3, Seq("2,bob,B"))
+    val rec = new graft.tools.StageRecorder(spark.sparkContext)
+    try {
+      val r = flow.executeFlow("customer", "unit", Some(f3))
+      assert(r.status == "success" && r.runId == 2L, r)
+      val ledgerJobs = rec.jobs.filter(_.contains("graft.etl.FlowExecutor.ledgerState"))
+      assert(ledgerJobs.nonEmpty && ledgerJobs.size <= 2, rec.jobs.mkString("\n"))
+    } finally rec.close()
+  }
+
+  test("an unpinned lake's hub: one bucket when small, 16 after a compaction past the gate, and a pruned re-load inserts 0 rows") {
+    val root = tmpDir("lake_sized_flow")
+    val lake = new Lake(spark, root)
+    val flow = new FlowExecutor(lake, meta, HashGen.Md5)
+    val f1 = s"$root/batch1.csv"
+    writeCsv(f1, Seq("1,ann,A", "2,bob,B", "3,cat,C", "4,dan,D", "5,eve,E"))
+    assert(flow.executeFlow("customer", "unit", Some(f1),
+      Some(Timestamp.valueOf("2026-01-01 00:00:00"))).loaded("hub_customer") == 5L)
+    assert(lake.tableLayout("dv", "hub_customer").map(lo => (lo.bucketCount, lo.sized)).contains((1, true)))
+    try {
+      spark.conf.set(graft.core.Confs.ProbePruneMinBytesKey, "1")
+      lake.compact("dv", "hub_customer")
+      assert(lake.tableBuckets("dv", "hub_customer") == 16)
+      spark.conf.set(graft.core.Confs.ProbePruneMinBytesKey, "0")
+      val r = flow.executeFlow("customer", "unit", Some(f1),
+        Some(Timestamp.valueOf("2026-01-02 00:00:00")), forceLoad = true)
+      assert(r.status == "success" && r.loaded("hub_customer") == 0L, r)
+    } finally spark.conf.unset(graft.core.Confs.ProbePruneMinBytesKey)
+    assert(lake.read("dv", "hub_customer").select("c_custkey_bk").as[Long].collect().sorted.toSeq
+      == (1L to 5L))
+  }
 }

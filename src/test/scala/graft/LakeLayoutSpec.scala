@@ -535,6 +535,129 @@ class LakeLayoutSpec extends SparkSpec {
     assert(!eRoot.exists() || eRoot.list().isEmpty, eRoot.list().mkString(","))
   }
 
+  private def recordText(lake: Lake, layer: String, name: String): String =
+    java.nio.file.Files.readString(new java.io.File(localDir(lake.dataPath(layer, name)), Lake.LayoutFile).toPath)
+
+  private def filesIn(lake: Lake, layer: String, name: String, bucket: Long): Int =
+    localDir(s"${lake.dataPath(layer, name)}/hk_bucket=$bucket").list().count(_.endsWith(".parquet"))
+
+  test("an unpinned lake sizes a new table: one bucket while small, 16 after a compaction past the gate") {
+    val lake = new Lake(spark, tmpDir("lake_sized_"))
+    assert(!lake.bucketsPinned)
+    val keys = (1 to 40).map(i => s"key$i")
+    val err = new java.io.ByteArrayOutputStream
+    Console.withErr(err) {
+      lake.appendBucketed(keys.take(5).map(k => (k, k.length.toLong)).toDF("hk", "v"), "dv", "t", "hk")
+      assert(bucketDirs(lake, "dv", "t") == Set(0L))
+      assert(filesIn(lake, "dv", "t", 0L) == 1)
+      assert(lake.tableLayout("dv", "t").contains(TableLayout(1, "hk", Nil, sized = true)))
+      assert(recordText(lake, "dv", "t").contains("\"sized\":true"), recordText(lake, "dv", "t"))
+      lake.appendBucketed(keys.drop(5).map(k => (k, k.length.toLong)).toDF("hk", "v"), "dv", "t", "hk")
+      assert(bucketDirs(lake, "dv", "t") == Set(0L))
+      assert(lake.lookupBucketed("dv", "t", "hk", "key7").count() == 1L)
+    }
+    assert(!err.toString.contains("NOTE"), s"drift note for a sized table: $err")
+    val before = lake.read("dv", "t").drop("hk_bucket").as[(String, Long)].collect().sorted.toSeq
+    // the default gate keeps the KB-sized table at one bucket
+    lake.compact("dv", "t")
+    assert(lake.tableLayout("dv", "t").contains(TableLayout(1, "hk", Nil, sized = true)))
+    // a gate below the table's bytes re-sizes it through the rebucket rewrite
+    withConf(Confs.ProbePruneMinBytesKey, "1")(lake.compact("dv", "t", sortBy = Seq("hk")))
+    assert(lake.dataPath("dv", "t").endsWith(gen(3)))
+    assert(lake.tableLayout("dv", "t").contains(TableLayout(16, "hk", Seq("hk"), sized = true)))
+    assert(bucketDirs(lake, "dv", "t").exists(_ > 0L), bucketDirs(lake, "dv", "t"))
+    assert(lake.read("dv", "t").drop("hk_bucket").as[(String, Long)].collect().sorted.toSeq == before)
+    keys.foreach { k =>
+      assert(lake.lookupBucketed("dv", "t", "hk", k).select("v").as[Long].collect().toSeq
+        == Seq(k.length.toLong), k)
+    }
+  }
+
+  test("pinned counts keep their count through compact: constructor, conf, rebucket, and a record without sized") {
+    val rows = (1 to 30).map(i => (s"key$i", i.toLong)).toDF("hk", "v")
+    def compactPastGate(lake: Lake, name: String): Unit =
+      withConf(Confs.ProbePruneMinBytesKey, "1")(lake.compact("dv", name))
+    // constructor: the record is byte-identical to the pinned record format
+    val byArg = new Lake(spark, tmpDir("lake_pin_arg_"), buckets = 4)
+    assert(byArg.bucketsPinned)
+    byArg.appendBucketed(rows, "dv", "t", "hk")
+    assert(recordText(byArg, "dv", "t") == """{"version":1,"bucketCount":4,"keyCol":"hk","sortBy":[]}""")
+    compactPastGate(byArg, "t")
+    byArg.compact("dv", "t")
+    assert(byArg.tableLayout("dv", "t").contains(TableLayout(4, "hk", Nil)))
+    // conf
+    val byConf = withConf(Lake.BucketsKey, "16")(new Lake(spark, tmpDir("lake_pin_conf_")))
+    assert(byConf.bucketsPinned)
+    byConf.appendBucketed(rows, "dv", "t", "hk")
+    byConf.compact("dv", "t")
+    assert(byConf.tableLayout("dv", "t").contains(TableLayout(16, "hk", Nil)))
+    // an explicit rebucket pins the count of a sized table
+    val unpinned = new Lake(spark, tmpDir("lake_pin_rebucket_"))
+    unpinned.appendBucketed(rows, "dv", "t", "hk")
+    unpinned.rebucket("dv", "t", 4)
+    assert(unpinned.tableLayout("dv", "t").contains(TableLayout(4, "hk", Nil)))
+    unpinned.compact("dv", "t")
+    compactPastGate(unpinned, "t")
+    assert(unpinned.tableLayout("dv", "t").contains(TableLayout(4, "hk", Nil)))
+    // a record written without the field reads as pinned
+    unpinned.appendBucketed(rows, "dv", "h", "hk")
+    assert(unpinned.tableLayout("dv", "h").exists(_.sized))
+    val record = new Path(unpinned.dataPath("dv", "h"), Lake.LayoutFile)
+    val out = record.getFileSystem(spark.sparkContext.hadoopConfiguration).create(record, true)
+    try out.write("""{"version":1,"bucketCount":1,"keyCol":"hk","sortBy":[]}""".getBytes("UTF-8"))
+    finally out.close()
+    compactPastGate(unpinned, "h")
+    assert(unpinned.tableLayout("dv", "h").contains(TableLayout(1, "hk", Nil)))
+    assert(unpinned.read("dv", "h").count() == 30L)
+  }
+
+  test("an increment of unknown size (a DataFrame over an RDD) gives a new table 16 buckets") {
+    val lake = new Lake(spark, tmpDir("lake_sized_rdd_"))
+    val rows = (1 to 40).map(i => org.apache.spark.sql.Row(s"key$i", i.toLong))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      Seq(("a", 0L)).toDF("hk", "v").schema)
+    assert(graft.core.Tables.estBytesKnown(df).isEmpty)
+    lake.appendBucketed(df, "dv", "t", "hk")
+    assert(lake.tableLayout("dv", "t").contains(TableLayout(Lake.DefaultBuckets, "hk", Nil, sized = true)))
+    assert(bucketDirs(lake, "dv", "t").size > 1)
+  }
+
+  test("each bucket-count decision is one DEBUG line on graft.core.Lake; a pinned lake makes none") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graftLakeDebug", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.DEBUG) seen.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger("graft.core.Lake").asInstanceOf[CoreLogger]
+    val level = logger.getLevel
+    appender.start()
+    logger.addAppender(appender)
+    logger.setLevel(Level.DEBUG)
+    try {
+      val rows = (1 to 10).map(i => (s"key$i", i.toLong)).toDF("hk", "v")
+      new Lake(spark, tmpDir("lake_log_pinned_"), buckets = 4).appendBucketed(rows, "dv", "t", "hk")
+      assert(seen.isEmpty, seen.asScala.mkString("\n"))
+      val lake = new Lake(spark, tmpDir("lake_log_"))
+      lake.appendBucketed(rows, "dv", "t", "hk")
+      lake.appendBucketed(rows, "dv", "t", "hk") // the record decides: no line
+      withConf(Confs.ProbePruneMinBytesKey, "1")(lake.compact("dv", "t"))
+      val lines = seen.asScala.toSeq
+      assert(lines.size == 2, lines.mkString("\n"))
+      assert(lines(0).matches(
+        s"appendBucketed\\(dv\\.t\\) knownBytes=[0-9]+ gate=${256L << 20} buckets=1"), lines(0))
+      assert(lines(1).matches("compact\\(dv\\.t\\) knownBytes=[0-9]+ gate=1 buckets=16"), lines(1))
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+  }
+
   test("DvError.from keeps the caller's context on already-typed errors") {
     val typed = new DvException(DvError.Configuration("bucket drift"))
     DvError.from(typed, "flow customer") match {

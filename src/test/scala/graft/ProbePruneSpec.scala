@@ -137,4 +137,18 @@ class ProbePruneSpec extends SparkSpec {
       assert(pruned == changed.sorted.map(k => (k, s"d3_$k")), "only changed keys version")
     } finally spark.conf.unset(Confs.ProbePruneMinBytesKey)
   }
+
+  test("a one-bucket table runs no bucket-set job: the forced-open gate returns the full scan") {
+    val (lake, keys) = vault(buckets = 1, n = 20)
+    val full = lake.readOr("dv", "hub", hkSchema)
+    val staged = keys.take(3).toDF("hk")
+    try {
+      spark.conf.set(Confs.ProbePruneMinBytesKey, "0")
+      val j0 = TestJobs.count
+      val probe = lake.readOrProbe("dv", "hub", hkSchema, staged, col("hk"))
+      assert(TestJobs.count - j0 == 0, "readOrProbe ran a job on a one-bucket table")
+      assert(probe.as[String].collect().sorted.toSeq == full.as[String].collect().sorted.toSeq)
+    } finally spark.conf.unset(Confs.ProbePruneMinBytesKey)
+  }
 }
+

@@ -96,9 +96,12 @@ class ScratchSpec extends SparkSpec {
     import graft.core.Lake
     val root = tmpDir("graft_lake_conf_")
     assert(new Lake(spark, root).bucketCount == Lake.DefaultBuckets)
+    assert(!new Lake(spark, root).bucketsPinned)
+    assert(new Lake(spark, root, buckets = 16).bucketsPinned)
     try {
       spark.conf.set(Lake.BucketsKey, "32")
       assert(new Lake(spark, root).bucketCount == 32)
+      assert(new Lake(spark, root).bucketsPinned)
       assert(new Lake(spark, root, buckets = 4).bucketCount == 4)
     } finally spark.conf.unset(Lake.BucketsKey)
   }
