@@ -7,7 +7,7 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    graft.queries.Analytics.q1Pricing(spark, "/root/testdata/sf0.001")
+    graft.queries.Analytics.queries("q1_pricing")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
@@ -18,7 +18,10 @@ object SparkEntry {
       graft.queries.Ann.queries ++
       graft.queries.MediaOps.queries
 
-  /** DuckDB-runnable oracle SQL per query key (same parquet tables).
+  /** DuckDB-runnable oracle SQL per query key (same parquet tables). For a
+    * key whose query is its SQL text (`Analytics.sqlText`), the text is also
+    * the Spark plan, so the oracle compares Spark's run of the text with
+    * DuckDB's run of the same text.
     * Every registered query has an oracle except two rows-only-BY-DESIGN
     * entries whose core loop is iterative and not SQL-expressible:
     * `knn_ivf_kmeans` (float k-means training; driver rows-only check plus

@@ -19,10 +19,10 @@ object Verify {
     // replace the file between this dump and the driver's DuckDB compare,
     // and retraining under a different thread count can't shift the floats
     // the oracle reads. The dir must NOT be inside outDir — the driver
-    // sweeps outDir treating every subdirectory as a query result, and the
-    // r9 artifact carried a permanent crash row for the centroids parquet
-    // that used to land there. The oracle_sql substitution below resolves
-    // against the same property, so SQL and data always agree. Routed
+    // sweeps outDir treating every subdirectory as a query result, so a
+    // centroids parquet there reads as a crashed query. The oracle_sql
+    // substitution below resolves against the same property, so SQL and
+    // data always agree. Routed
     // through Scratch (cluster-portable root; local JVM tmpdir by default —
     // the DuckDB compare reads this path on the driver host, so only set
     // spark.graft.scratch.dir to a location the comparing process can see).
@@ -35,7 +35,7 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(_.split(',').map(_.trim).toSet)
     // Unknown names fail fast: a typo'd filter would dump zero results and
     // oracle_sql.json={} — preverify then prints 0/0 passed, a green gate
-    // over zero checked queries (r20 review finding).
+    // over zero checked queries.
     only.foreach { names =>
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty,
@@ -59,7 +59,7 @@ object Verify {
     }
     if (errors.nonEmpty) {
       // Loud summary at the end so a swallowed per-query failure can't hide
-      // in the scrollback (round-1 lesson: events_* failed silently).
+      // in the scrollback.
       System.err.println(s"[verify] ${errors.size} QUERIES FAILED: ${errors.keys.toSeq.sorted.mkString(", ")}")
     }
     def q(s: String): String = graft.core.Json.str(s)

@@ -554,9 +554,11 @@ final class Lake(val spark: SparkSession, val root: String, buckets: Int = Lake.
     val p = new Path(dir, Lake.LayoutFile)
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val bytes = try in.readAllBytes() finally in.close()
+      // the read sits inside the try: a checksum or I/O failure on the
+      // record is as unreadable as bad JSON
       try {
+        val in = fs.open(p)
+        val bytes = try in.readAllBytes() finally in.close()
         val node = Lake.jsonMapper.readTree(bytes)
         val sortBy = Option(node.get("sortBy"))
           .map(a => (0 until a.size).map(a.get(_).asText).toSeq).getOrElse(Nil)

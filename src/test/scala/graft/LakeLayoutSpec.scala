@@ -611,6 +611,24 @@ class LakeLayoutSpec extends SparkSpec {
     assert(unpinned.read("dv", "h").count() == 30L)
   }
 
+  test("a layout record with a stale checksum fails read and compact with the typed Configuration error") {
+    val lake = new Lake(spark, tmpDir("lake_crc_"), buckets = 4)
+    lake.appendBucketed((1 to 20).map(i => (s"key$i", i.toLong)).toDF("hk", "v"), "dv", "t", "hk")
+    val record = new java.io.File(localDir(lake.dataPath("dv", "t")), Lake.LayoutFile).toPath
+    assert(java.nio.file.Files.exists(record.resolveSibling(s".${Lake.LayoutFile}.crc")))
+    // same length, still valid JSON: only the checksum sidecar is now wrong
+    val text = java.nio.file.Files.readString(record)
+    java.nio.file.Files.writeString(record, text.replace("\"version\":1", "\"version\":2"))
+    def typed(what: String)(body: => Any): Unit = {
+      val e = intercept[DvException](body)
+      assert(e.error.isInstanceOf[DvError.Configuration], s"$what: ${e.error.render}")
+      assert(e.error.message.contains("unreadable table layout record"), s"$what: ${e.error.render}")
+    }
+    // taking a load claim drops the cached resolution, so the read re-reads the record
+    typed("read")(lake.withLoadClaim("dv", "t", "probe")(lake.read("dv", "t")))
+    typed("compact")(lake.compact("dv", "t"))
+  }
+
   test("an increment of unknown size (a DataFrame over an RDD) gives a new table 16 buckets") {
     val lake = new Lake(spark, tmpDir("lake_sized_rdd_"))
     val rows = (1 to 40).map(i => org.apache.spark.sql.Row(s"key$i", i.toLong))

@@ -46,7 +46,7 @@ class PlanSpec extends SparkSpec {
     nodes(df).collect { case j: BaseJoinExec => j.joinType }
 
   test("q6: predicates pushed to the parquet scan, columns pruned") {
-    val p = formatted(Analytics.q6Revenue(spark, dir))
+    val p = formatted(Analytics.queries("q6_revenue")(spark, dir))
     assert(p.contains("PushedFilters: [IsNotNull"), p)
     assert(p.contains("GreaterThanOrEqual(l_discount,0.03)"), p)
     assert(p.contains("LessThan(l_quantity,24.0)"), p)
@@ -85,7 +85,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q1: partial aggregation before the exchange (map-side combine)") {
-    val q = Analytics.q1Pricing(spark, dir)
+    val q = Analytics.queries("q1_pricing")(spark, dir)
     // a partial HashAggregate must sit BELOW the shuffle exchange
     val ex = nodes(q).collectFirst { case e: ShuffleExchangeLike => e }
     assert(ex.isDefined, plan(q))
@@ -93,7 +93,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q4: EXISTS planned as a semi join with the discount filter pushed") {
-    val q = Analytics.q4PriorityExists(spark, dir)
+    val q = Analytics.queries("q4_priority_exists")(spark, dir)
     val p = formatted(q)
     assert(joinTypes(q).contains(LeftSemi), p)
     assert(p.contains("GreaterThan(l_discount,0.08)"), p)
@@ -102,7 +102,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q19: disjunctive predicate still prunes scan columns; part joined equi") {
-    val q = Analytics.q19Disjunct(spark, dir)
+    val q = Analytics.queries("q19_disjunct")(spark, dir)
     val p = formatted(q)
     assert(
       count[BroadcastHashJoinExec](q) + count[ShuffledHashJoinExec](q) + count[SortMergeJoinExec](q) >= 1,
@@ -125,7 +125,7 @@ class PlanSpec extends SparkSpec {
     // fact-sized shuffle joins unless AQE happened to convert them — the
     // one plan graded perf-weak in the r10 verdict. Five hinted broadcasts
     // leave lineitem⨝orders as the only fact exchange.
-    val q = Analytics.q8MarketShare(spark, dir)
+    val q = Analytics.queries("q8_market_share")(spark, dir)
     assert(count[BroadcastHashJoinExec](q) >= 5, plan(q))
     assert("lineitem\\.parquet".r.findAllIn(plan(q)).size == 1, plan(q))
   }
@@ -183,7 +183,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("events_funnel: the three-stage chain shares ONE user_id shuffle") {
-    val q = Analytics.eventsFunnel(spark, dir)
+    val q = Analytics.queries("events_funnel")(spark, dir)
     // stacked window minima + per-user collapse reuse the user_id
     // partitioning; only the final one-row summary adds an exchange.
     assert(count[WindowExec](q) >= 1, plan(q))
@@ -202,7 +202,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("orders_running_total: running frame, one customer shuffle") {
-    val q = Analytics.ordersRunningTotal(spark, dir)
+    val q = Analytics.queries("orders_running_total")(spark, dir)
     assert(count[WindowExec](q) >= 1, plan(q))
     assert(count[Exchange](q) == 1, plan(q))
   }
@@ -219,7 +219,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q9: part LIKE filter prunes the fact BEFORE the orders join; 2-col part probe") {
-    val p = formatted(Analytics.q9Profit(spark, dir))
+    val p = formatted(Analytics.queries("q9_profit")(spark, dir))
     // the part side reads only partkey+name (pruned), and the lineitem scan
     // reads only the 5 referenced columns
     assert(p.contains("ReadSchema: struct<p_partkey:bigint,p_name:string>"), p)
@@ -267,7 +267,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q21: sole-supplier via one groupBy pass — NO lineitem self-join") {
-    val q = Analytics.q21SoleSupplier(spark, dir)
+    val q = Analytics.queries("q21_sole_supplier")(spark, dir)
     assert("lineitem\\.parquet".r.findAllIn(plan(q)).size == 1, plan(q))
     // top-k with limit plans as TakeOrdered, not a global sort
     assert(count[TakeOrderedAndProjectExec](q) >= 1, plan(q))
@@ -295,7 +295,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("events_pivot: explicit value list — ONE scan, no distinct-discovery job") {
-    val q = Analytics.eventsPivot(spark, dir)
+    val q = Analytics.queries("events_pivot")(spark, dir)
     assert("events\\.parquet".r.findAllIn(plan(q)).size == 1, plan(q))
     // conditional-agg matrix keeps map-side combine
     val ex = nodes(q).collectFirst { case e: ShuffleExchangeLike => e }
